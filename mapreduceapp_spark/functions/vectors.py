@@ -21,58 +21,21 @@ DuckDB twins are provided for the oracle SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 QUANT_SCALE = 1000
 
 
-def quantize(vec: Column | str) -> Column:
-    """``array<float>`` → ``array<bigint>`` via round(x * 1000)."""
-    v = F.col(vec) if isinstance(vec, str) else vec
-    return F.transform(
-        v, lambda x: F.round(x.cast("double") * QUANT_SCALE).cast("long")
-    )
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Exact int64 dot product of two quantized vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def sq_norm(a: Column) -> Column:
-    """Exact int64 squared norm of a quantized vector."""
-    return dot(a, a)
-
-
-def cosine(dot_ab: Column, sq_a: Column, sq_b: Column) -> Column:
-    """Deterministic double cosine from exact integer parts."""
-    return dot_ab.cast("double") / F.sqrt(sq_a.cast("double") * sq_b.cast("double"))
-
-
-# --------------------------------------------------- Spark SQL strings
-#
-# Single-round-trip twins of the Column builders above (r18, guide §4 /
-# VERDICT r17 "Next round" #1): every F.* call and every lambda in a
-# higher-order function is one or more py4j round-trips, and the ANN
-# family's builders were measured at 2,700-3,000 round-trips (≈2 s of
-# driver wall) per warm invocation — almost all of it these vector
-# expressions rebuilt Column-by-Column. A selectExpr/F.expr string
-# parses JVM-side in ONE round-trip and yields the semantically
-# identical expression tree (schema- and value-equality pinned by
-# tests/test_similarity.py::test_sql_string_forms_match_column_forms),
-# so the hot call sites build the same plan ~30× cheaper. Type traps
-# the strings avoid deliberately: SQL float literals are DECIMAL, so
-# doubles are always written CAST(x AS DOUBLE); integer literals stay
-# bare (INT, matching F.lit(int)).
+# Every expression is a Spark SQL string for selectExpr/F.expr: it
+# parses JVM-side in ONE py4j round-trip, where the Column-API
+# construction of the same tree costs one or more round-trips per F.*
+# call and per lambda (the ANN builders measured 2,700-3,000, ≈2 s of
+# driver wall, per warm invocation). Type traps the strings avoid
+# deliberately: SQL float literals are DECIMAL, so doubles are always
+# written CAST(x AS DOUBLE); integer literals stay bare (INT, matching
+# F.lit(int)).
 
 
 def quantize_sql(v: str) -> str:
-    """SQL twin of :func:`quantize` over column/expression ``v``."""
+    """``array<float>`` → ``array<bigint>`` via round(x * 1000)."""
     return (
         f"transform({v}, x -> CAST(round(CAST(x AS DOUBLE) * "
         f"{QUANT_SCALE}) AS BIGINT))"
@@ -80,7 +43,7 @@ def quantize_sql(v: str) -> str:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL twin of :func:`dot`."""
+    """Exact int64 dot product of two quantized vectors."""
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
@@ -88,12 +51,12 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def sq_norm_sql(a: str) -> str:
-    """SQL twin of :func:`sq_norm`."""
+    """Exact int64 squared norm of a quantized vector."""
     return dot_sql(a, a)
 
 
 def cosine_sql(dot_ab: str, sq_a: str, sq_b: str) -> str:
-    """SQL twin of :func:`cosine`."""
+    """Deterministic double cosine from exact integer parts."""
     return (
         f"CAST({dot_ab} AS DOUBLE) / "
         f"sqrt(CAST({sq_a} AS DOUBLE) * CAST({sq_b} AS DOUBLE))"

@@ -23,17 +23,19 @@ build-once / partition-pruned-probe lifecycle:
    (one (path, cell_bucket, lo, hi) cluster-range row per data file —
    the dedup index's ``sig_files`` chunking pattern).
 2. :func:`probe_ann_index` — per query batch: probe the ``nprobe``
-   nearest cells per query (same GEMM as the in-plan path), then scan
-   ONLY the probed cells' bytes: a partition filter on the touched
-   cell-bucket directories, the sidecar's cluster ranges selecting
-   exact files inside them, and (for bounded probe sets) the probed
-   cell ids pushed into the parquet scan as a VALUES predicate for
-   row-group/dictionary skipping below the file grid. ADC + top-k are
-   the in-plan stages verbatim, so the probe is ROW-EQUAL to
-   :func:`~mapreduceapp_spark.operators.similarity.ivfpq_residual_ann`
-   over the same lineage (the q_dedup_index_probe ≡
-   q_incremental_dedup precedent; pinned by tests/test_ann_index.py
-   and the shared driver oracle).
+   nearest cells per query, then scan ONLY the probed cells' bytes: a
+   partition filter on the touched cell-bucket directories, the
+   sidecar's cluster ranges selecting exact files inside them, and
+   (for bounded probe sets) the probed cell ids pushed into the
+   parquet scan as a VALUES predicate for row-group/dictionary
+   skipping below the file grid.
+
+The build and append derive cells, residuals, codebook and codes
+with :func:`~mapreduceapp_spark.operators.similarity.adc_corpus`, and
+the probe runs :func:`~mapreduceapp_spark.operators.similarity.adc_topk`
+over the persisted tables, so the probe is ROW-EQUAL to the in-plan
+residual IVFADC search over the same lineage by construction (pinned
+by tests/test_ann_index.py and the shared driver oracle).
 
 Why partition by ``pmod(cluster, n_buckets)`` and not ``cluster``:
 cells number ~√N — at 10¹¹ vectors that is ~316k directories (the
@@ -70,24 +72,21 @@ from mapreduceapp_spark.operators.dedup_index import (
     INDEX_MIN_BUCKETS,
     SIDECAR_MIN_FILES_PER_BUCKET,
 )
+from mapreduceapp_spark.functions.vectors import sq_norm_sql
 from mapreduceapp_spark.operators.similarity import (
+    _ANISO_OPQ,
+    ADC_IVFADC,
     IVF_NPROBE,
     KNN_K,
     KNN_QUERY_PRED,
     PQ_M,
-    _aniso,
-    _aniso_exact_slot,
-    _centroids,
-    _gemm_probe_topm,
+    AdcCorpus,
     _ivf_stride,
-    _opq_permute,
-    _pq_centroid_slices,
-    _pq_codes,
-    _pq_sub_dist_sql,
-    _pq_k,
+    _ladder_oracle,
     _recall_vs,
+    adc_corpus,
+    adc_topk,
 )
-from mapreduceapp_spark.plans.hints import broadcast_if_small
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.plans.staging import (
     stage,
@@ -146,18 +145,16 @@ def ann_index_meta(index_path: str) -> dict:
 
 
 def _mean_resid_sq(resid) -> float:
-    """Mean squared residual norm of a (vec_id, cluster, qv) residual
-    frame — the quantization-error scalar behind the compaction
-    trigger. One small agg over the already-staged residual bytes
-    (the assign GEMM never re-runs)."""
-    from mapreduceapp_spark.functions.vectors import sq_norm
-
+    """Mean squared residual norm of a (vec_id, qv) residual frame —
+    the quantization-error scalar behind the compaction trigger. One
+    small agg over the already-staged residual bytes (the assign GEMM
+    never re-runs)."""
     # UNROUNDED (ADVICE r16 #4): a well-quantized build baseline below
     # 5e-5 would flush to 0.0 under round(·, 4) and permanently disable
     # the drift trigger for that index (ann_index_drift_ratio's `not
     # build` division guard would read it as 'signal absent'). Stored
     # full-precision; display rounding happens in the ratio.
-    row = resid.agg(F.avg(sq_norm(F.col("qv"))).alias("m")).collect()[0]
+    row = resid.selectExpr(f"avg({sq_norm_sql('qv')}) AS m").collect()[0]
     return float(row["m"] or 0.0)
 
 
@@ -181,6 +178,24 @@ def ann_index_drift_ratio(index_path: str) -> float | None:
     return round(seg / build, 4)
 
 
+def _code_file_stats(scan: DataFrame, seg: str) -> DataFrame:
+    """One (path, cell_bucket, lo, hi, seg) cluster-range row per
+    codes/ data file of ``scan``, tagged with segment ``seg`` — the
+    append's unique id, or "build" for the build's rows."""
+    return (
+        scan.select(
+            "cluster",
+            "cell_bucket",
+            F.element_at(
+                F.split(F.input_file_name(), "/codes/"), -1
+            ).alias("path"),
+        )
+        .groupBy("path", "cell_bucket")
+        .agg(F.min("cluster").alias("lo"), F.max("cluster").alias("hi"))
+        .withColumn("seg", F.lit(seg))
+    )
+
+
 def write_code_file_stats(spark: SparkSession, path: str) -> int:
     """Derive and persist the ``code_files/`` stats sidecar — one
     (path, cell_bucket, lo, hi) cluster-range row per codes/ data
@@ -192,21 +207,8 @@ def write_code_file_stats(spark: SparkSession, path: str) -> int:
     would probe the old location after any move. Split on the last
     ``/codes/``: below the root the only segments are
     ``cell_bucket=N/part-*.parquet``, which cannot contain it."""
-    scan = spark.read.parquet(os.path.join(path, "codes"))
-    stats = (
-        scan.select(
-            "cluster",
-            "cell_bucket",
-            F.element_at(
-                F.split(F.input_file_name(), "/codes/"), -1
-            ).alias("path"),
-        )
-        .groupBy("path", "cell_bucket")
-        .agg(F.min("cluster").alias("lo"), F.max("cluster").alias("hi"))
-        # segment tag for manifest-committed visibility (r16): build
-        # rows belong to the "build" segment; appended rows carry
-        # their append's unique segment id (_append_code_file_stats)
-        .withColumn("seg", F.lit("build"))
+    stats = _code_file_stats(
+        spark.read.parquet(os.path.join(path, "codes")), "build"
     )
     stats.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "code_files")
@@ -364,19 +366,7 @@ def _append_code_file_stats(
     scan = spark.read.option("basePath", codes_root).parquet(
         *(os.path.join(codes_root, f) for f in sorted(new_files))
     )
-    stats = (
-        scan.select(
-            "cluster",
-            "cell_bucket",
-            F.element_at(
-                F.split(F.input_file_name(), "/codes/"), -1
-            ).alias("path"),
-        )
-        .groupBy("path", "cell_bucket")
-        .agg(F.min("cluster").alias("lo"), F.max("cluster").alias("hi"))
-        .withColumn("seg", F.lit(seg))
-    )
-    stats.coalesce(1).write.mode("append").parquet(
+    _code_file_stats(scan, seg).coalesce(1).write.mode("append").parquet(
         os.path.join(index_path, "code_files")
     )
 
@@ -450,6 +440,63 @@ def _committed_sidecar_rows(
     return scan.collect()
 
 
+def _index_corpus(
+    spark: SparkSession, index_path: str, meta: dict, codes=None
+) -> AdcCorpus:
+    """The persisted index as the corpus side of an IVFADC search:
+    its centroids and codebook read whole, ``codes`` as the caller
+    reads them."""
+    return AdcCorpus(
+        ADC_IVFADC,
+        spark.read.parquet(os.path.join(index_path, "centroids")),
+        spark.read.parquet(os.path.join(index_path, "codebook")),
+        codes,
+        meta["k_cent"],
+        None,
+    )
+
+
+def _write_codes(
+    codes: DataFrame, index_path: str, n_buckets: int, rows_per_file: int,
+    mode: str,
+) -> None:
+    """Write (vec_id, m, code, cluster) rows under ``codes/``,
+    partitioned by ``cell_bucket = pmod(cluster, n_buckets)`` and
+    cluster-sorted within files of ≤ ``rows_per_file`` rows. Each
+    bucket is written by exactly one task, so per-file cluster ranges
+    are tight and the sidecar grid is disjoint."""
+    (
+        codes.withColumn(
+            "cell_bucket",
+            F.pmod(F.col("cluster"), F.lit(n_buckets)).cast("int"),
+        )
+        .repartition(n_buckets, "cell_bucket")
+        .sortWithinPartitions("cluster", "vec_id", "m")
+        .write.mode(mode)
+        .option("maxRecordsPerFile", rows_per_file)
+        .partitionBy("cell_bucket")
+        .parquet(os.path.join(index_path, "codes"))
+    )
+
+
+def _code_files_scan(spark: SparkSession, codes_root: str, paths) -> DataFrame:
+    """Scan of the listed codes/ data files (sidecar paths, relative
+    ones resolved under ``codes_root``) without the partition column;
+    no files gives an empty scan with the codes schema."""
+    files = sorted(
+        {
+            p if ("://" in p or p.startswith("/"))
+            else os.path.join(codes_root, p)
+            for p in paths
+        }
+    )
+    if not files:
+        scan = spark.read.parquet(codes_root).filter(F.lit(False))
+    else:
+        scan = spark.read.option("basePath", codes_root).parquet(*files)
+    return scan.drop("cell_bucket")
+
+
 def write_ann_index(
     spark: SparkSession,
     e: DataFrame,
@@ -461,89 +508,45 @@ def write_ann_index(
     (vec_id, qv, sq) frame — quantized, optionally OPQ-permuted);
     returns ``path``.
 
-    The derivation stages are ``ivfpq_residual_ann``'s corpus-side
-    stages VERBATIM (same kernels, same stride/codebook constants
-    from ``n_rows``), so the persisted tables are bit-identical to
-    what the in-plan path derives — the probe's row-equality is by
-    construction, not by tolerance:
+    The derivation is :func:`adc_corpus` over the residual IVFADC
+    spec, the same call the in-plan search makes, so the persisted
+    tables are bit-identical to what the in-plan path derives — the
+    probe's row-equality is by construction, not by tolerance:
 
     - ``centroids/`` — (cent_id, c_qv, c_sq): the stride-sampled IVF
       coarse centroids, ~√N rows, one file, read whole per probe.
     - ``codebook/`` — (m, j, cv): the residual PQ codebook slices,
       ≤ 256×8 rows, one file, broadcast per probe.
-    - ``codes/`` — (cluster, vec_id, m, code) partitioned by
-      ``cell_bucket = pmod(cluster, n_buckets)``, cluster-sorted
-      within files of ≤ ``code_rows_per_file`` rows — each bucket is
-      written by exactly one task, so per-file cluster ranges are
-      tight and the sidecar grid is disjoint. The cell id rides the
-      table, so a probe needs NO separate assignment lookup: the
-      pruned codes scan IS the candidate set.
+    - ``codes/`` — (vec_id, m, code, cluster) written by
+      :func:`_write_codes`. The cell id rides the table, so a probe
+      needs NO separate assignment lookup: the pruned codes scan IS
+      the candidate set.
     - ``code_files/`` — the per-file cluster-range stats the probe
       prunes with (see :func:`write_code_file_stats`).
-    - ``_meta.json`` LAST with ``complete: true`` (the ADVICE r12
-      torn-build rule: its presence proves every table landed).
+    - ``_meta.json`` LAST with ``complete: true``: its presence
+      proves every table landed.
     """
-    stride = _ivf_stride(n_rows)
-    k_cent = _pq_k(n_rows)
-    pq_stride = max(1, n_rows // k_cent)
+    corpus = adc_corpus(e, n_rows, ADC_IVFADC)
     n_buckets = ann_index_bucket_count(n_rows)
-
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-
-    cents = _centroids(e, stride)
-    assigned = _gemm_assign(
-        e.selectExpr("vec_id", "qv AS x", "sq"),
-        cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
-        "int",
-        n_rows=n_rows,
-    ).selectExpr("vec_id", "x", "cid AS cluster")
-    resid = assigned.join(
-        F.broadcast(cents.selectExpr("cent_id AS cluster", "c_qv")),
-        "cluster",
-    ).selectExpr(
-        "vec_id", "cluster", "zip_with(x, c_qv, (a, b) -> a - b) AS qv"
-    )
-    # the residual frame feeds three build writes (codebook, codes'
-    # encode, codes' cell join) — staged so the assign GEMM runs once
-    # per build instead of once per consumer (values identical, so
-    # persisted tables still match the unstaged in-plan derivation)
-    resid = stage(resid, "ann_index_resid")
     # the corpus's mean squared residual norm — the quantization-error
     # baseline the compaction trigger compares appends against (the
     # r16 drift experiment, SCALE.md: appended-RATIO is not the
     # rebuild signal — control appends lose ≤0.02 recall even at 100%
     # of corpus size — appended DRIFT is, and residual norm measures
     # it for free off the already-staged residuals)
-    mean_resid_sq = _mean_resid_sq(resid)
-    cent_m = _pq_centroid_slices(
-        resid.select("vec_id", "qv"), k_cent, pq_stride
-    )
-    codes = _pq_codes(
-        resid.select("vec_id", "qv"), cent_m, n_rows=k_cent * pq_stride
-    )
-
+    mean_resid_sq = _mean_resid_sq(corpus.src)
     (
-        cents.coalesce(1)
+        corpus.cents.coalesce(1)
         .sortWithinPartitions("cent_id")
         .write.mode("overwrite")
         .parquet(os.path.join(path, "centroids"))
     )
     n_cells = spark.read.parquet(os.path.join(path, "centroids")).count()
-    cent_m.coalesce(1).write.mode("overwrite").parquet(
+    corpus.book.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebook")
     )
-    (
-        codes.join(resid.select("vec_id", "cluster"), "vec_id")
-        .withColumn(
-            "cell_bucket",
-            F.pmod(F.col("cluster"), F.lit(n_buckets)).cast("int"),
-        )
-        .repartition(n_buckets, "cell_bucket")
-        .sortWithinPartitions("cluster", "vec_id", "m")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", code_rows_per_file)
-        .partitionBy("cell_bucket")
-        .parquet(os.path.join(path, "codes"))
+    _write_codes(
+        corpus.codes, path, n_buckets, code_rows_per_file, "overwrite"
     )
     n_code_files = write_code_file_stats(spark, path)
     os.makedirs(path, exist_ok=True)
@@ -551,9 +554,9 @@ def write_ann_index(
         json.dump(
             {
                 "n_rows": n_rows,
-                "stride": stride,
-                "k_cent": k_cent,
-                "pq_stride": pq_stride,
+                "stride": _ivf_stride(n_rows),
+                "k_cent": corpus.k_cent,
+                "pq_stride": max(1, n_rows // corpus.k_cent),
                 "pq_m": PQ_M,
                 "n_buckets": n_buckets,
                 "n_cells": n_cells,
@@ -613,17 +616,16 @@ def append_ann_index(
     ``n_new`` sizes the assign/encode kernels' regime gates (pass the
     caller's footer-derived count; None = one bounded count job).
 
-    Atomicity (r16 — VERDICT r15 ask #2): on a transactional index
-    (any r16+ build: it has a ``_log/``) the whole append commits via
+    Atomicity: on a transactional index (one with a ``_log/``, as
+    every build writes) the whole append commits via
     ONE exclusive-create manifest (see the tx-log block above) —
     codes files and the segment-tagged sidecar rows land first but
     stay invisible to BOTH pruning grains until the manifest exists,
     so a crash anywhere mid-append serves exactly the pre-append
     view, and a retry (fresh segment id) can never resurrect the
-    orphaned attempt. Legacy indexes (pre-log) keep the r15
-    non-atomic path — full sidecar regen + meta rewrite, crash
-    healed by re-running the stats step — and should be rebuilt to
-    get transactional appends."""
+    orphaned attempt. Indexes without a log keep the non-atomic path —
+    full sidecar regen + meta rewrite, crash healed by re-running the
+    stats step — and should be rebuilt to get transactional appends."""
     state = ann_index_state(index_path)
     logged = state.get("segs") is not None
     meta = ann_index_meta(index_path)
@@ -631,39 +633,12 @@ def append_ann_index(
     if n_new is None:
         n_new = e_new.count()
 
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-
-    cents = spark.read.parquet(os.path.join(index_path, "centroids"))
-    cent_m = spark.read.parquet(os.path.join(index_path, "codebook"))
-    assigned = _gemm_assign(
-        e_new.selectExpr("vec_id", "qv AS x", "sq"),
-        cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
-        "int",
-        n_rows=n_new,
-    ).selectExpr("vec_id", "x", "cid AS cluster")
-    resid = stage(
-        assigned.join(
-            F.broadcast(cents.selectExpr("cent_id AS cluster", "c_qv")),
-            "cluster",
-        ).selectExpr(
-            "vec_id", "cluster", "zip_with(x, c_qv, (a, b) -> a - b) AS qv"
-        ),
-        "ann_index_append_resid",
+    corpus = adc_corpus(
+        e_new, n_new, ADC_IVFADC, frozen=_index_corpus(spark, index_path, meta)
     )
-    codes = _pq_codes(resid.select("vec_id", "qv"), cent_m, n_rows=n_new)
     before = _list_code_files(spark, index_path) if logged else set()
-    (
-        codes.join(resid.select("vec_id", "cluster"), "vec_id")
-        .withColumn(
-            "cell_bucket",
-            F.pmod(F.col("cluster"), F.lit(n_buckets)).cast("int"),
-        )
-        .repartition(n_buckets, "cell_bucket")
-        .sortWithinPartitions("cluster", "vec_id", "m")
-        .write.mode("append")
-        .option("maxRecordsPerFile", code_rows_per_file)
-        .partitionBy("cell_bucket")
-        .parquet(os.path.join(index_path, "codes"))
+    _write_codes(
+        corpus.codes, index_path, n_buckets, code_rows_per_file, "append"
     )
     if logged:
         import uuid
@@ -681,7 +656,7 @@ def append_ann_index(
             len(new_files),
             # per-segment quantization error off the staged residuals
             # — the compaction-trigger signal (ann_index_drift_ratio)
-            mean_resid_sq=_mean_resid_sq(resid),
+            mean_resid_sq=_mean_resid_sq(corpus.src),
         )
     else:
         meta["n_code_files"] = write_code_file_stats(spark, index_path)
@@ -726,11 +701,7 @@ def fetch_probed_codes(
     segs = state.get("segs")
     codes_root = os.path.join(index_path, "codes")
     if not cells:
-        return (
-            spark.read.parquet(codes_root)
-            .filter(F.lit(False))
-            .drop("cell_bucket")
-        )
+        return _code_files_scan(spark, codes_root, ())
     buckets = sorted({c % n_buckets for c in cells})
     use_sidecar = (
         state.get("n_code_files", 0)
@@ -751,31 +722,26 @@ def fetch_probed_codes(
         cells_by_bucket: dict[int, list[int]] = {}
         for c in cells:
             cells_by_bucket.setdefault(c % n_buckets, []).append(c)
-        files = sorted(
-            {
+        scan = _code_files_scan(
+            spark,
+            codes_root,
+            (
                 r["path"]
-                if ("://" in r["path"] or r["path"].startswith("/"))
-                else os.path.join(codes_root, r["path"])
                 for r in stats
                 if not use_sidecar
                 or any(
                     r["lo"] <= c <= r["hi"]
                     for c in cells_by_bucket.get(r["cell_bucket"], ())
                 )
-            }
+            ),
         )
-        if not files:
-            return (
-                spark.read.parquet(codes_root)
-                .filter(F.lit(False))
-                .drop("cell_bucket")
-            )
-        scan = spark.read.option("basePath", codes_root).parquet(*files)
     else:
-        scan = spark.read.parquet(codes_root).filter(
-            F.col("cell_bucket").isin(buckets)
+        scan = (
+            spark.read.parquet(codes_root)
+            .filter(F.col("cell_bucket").isin(buckets))
+            .drop("cell_bucket")
         )
-    return _push_values_filter(scan, "cluster", cells).drop("cell_bucket")
+    return _push_values_filter(scan, "cluster", cells)
 
 
 def probe_ann_index(
@@ -790,18 +756,24 @@ def probe_ann_index(
     """Probe a query batch (a (vec_id, qv, sq) frame on the SAME
     quantized/permuted lineage the index was built from) against a
     persisted ANN index; emit (query_id, neighbor_id, rnk, adc) —
-    row-equal to ``ivfpq_residual_ann`` over the corpus lineage.
+    row-equal to the in-plan residual IVFADC search over the corpus
+    lineage.
 
-    Query-side stages are the in-plan path verbatim (probe GEMM →
-    per-(query, probed cell) residual → ADC distance table, both
-    staged per the r14 convention); the CORPUS side — assignment,
-    codebook training, encoding, at 100 TB the dominant cost — is
-    replaced by three pruned reads: whole-file ``centroids/`` (~√N
-    rows, the structural-smallness broadcast class),
-    ``codebook/`` (≤ 2048 rows), and the probed cells' slice of
-    ``codes/`` via :func:`fetch_probed_codes`. Probed bytes track
+    The query side is :func:`adc_topk`, the in-plan search's own; the
+    CORPUS side — assignment, codebook training, encoding, at 100 TB
+    the dominant cost — is replaced by three pruned reads: whole-file
+    ``centroids/`` (~√N rows, the structural-smallness broadcast
+    class), ``codebook/`` (≤ 2048 rows), and the probed cells' slice
+    of ``codes/`` via :func:`fetch_probed_codes`. Probed bytes track
     probed cells — a small query batch reads a small fraction of the
     index no matter how large the corpus.
+
+    ``_stage`` swaps the multiply-consumed-intermediate strategy:
+    batch probes keep the process-memoized stage() slots; the
+    STREAMING runner passes a per-epoch persist-based stager instead
+    (a stage() slot per micro-batch lineage accumulates on the
+    staging disk for the stream's whole life — the unbounded-growth
+    class winnow_screen_stream documents; see ann_search_stream).
 
     The probed-cell set is collected driver-side from the staged
     probe table (ONE bounded job — the ``_probe_pruning_stats``
@@ -810,131 +782,53 @@ def probe_ann_index(
     316k-cell geometry keeps bucket-literal pruning only, with the
     bucket set pmod-collapsed to ≤ n_buckets ≤ 65,536)."""
     meta = ann_index_state(index_path)
-    k_cent = meta["k_cent"]
-    cents = spark.read.parquet(os.path.join(index_path, "centroids"))
-    cent_m = spark.read.parquet(os.path.join(index_path, "codebook"))
-    # ``_stage`` swaps the multiply-consumed-intermediate strategy:
-    # batch probes keep the process-memoized stage() slots; the
-    # STREAMING runner passes a per-epoch persist-based stager instead
-    # (a stage() slot per micro-batch lineage accumulates on the
-    # staging disk for the stream's whole life — the unbounded-growth
-    # class winnow_screen_stream documents; see ann_search_stream)
-    probes = _stage(
-        _gemm_probe_topm(
-            queries, cents, nprobe, metric="l2", n_queries=n_queries_bound
-        ).select("query_id", "q_qv", "probe"),
-        "ann_index_probes",
-    )
-    if meta["n_cells"] <= CELL_COLLECT_CAP:
-        # the probed-cell set: read the staged probe column driver-side
-        # when the slot is local and small (zero jobs — r18, VERDICT
-        # r17 ask #5); the distinct-collect job remains the fallback
-        # for remote staging roots / big probe batches / the streaming
-        # stager (whose frames are not stage() scans)
-        vals = staged_local_column(probes, "probe", 2_000_000)
-        if vals is not None:
-            cells = sorted(set(vals))
-        else:
-            cells = sorted(
-                r["probe"]
-                for r in probes.select("probe").distinct().collect()
-            )
-        codes = fetch_probed_codes(spark, index_path, cells)
-    else:
+
+    def probed_codes(probes: DataFrame) -> DataFrame:
+        if meta["n_cells"] <= CELL_COLLECT_CAP:
+            # read the staged probe column driver-side when the slot
+            # is local and small (zero jobs); the distinct-collect job
+            # remains the fallback for remote staging roots, big probe
+            # batches and the streaming stager (whose frames are not
+            # stage() scans)
+            vals = staged_local_column(probes, "probe", 2_000_000)
+            if vals is None:
+                vals = [
+                    r["probe"]
+                    for r in probes.select("probe").distinct().collect()
+                ]
+            return fetch_probed_codes(spark, index_path, sorted(set(vals)))
         # extreme-geometry fallback: bucket literals only (bounded by
-        # construction); the join below still restricts rows exactly
-        n_buckets = meta["n_buckets"]
+        # construction); the ADC join still restricts rows exactly
+        codes_root = os.path.join(index_path, "codes")
         buckets = sorted(
             r["b"]
-            for r in probes.select(
-                F.pmod(F.col("probe"), F.lit(n_buckets)).cast("int").alias("b")
+            for r in probes.selectExpr(
+                f"CAST(pmod(probe, {meta['n_buckets']}) AS INT) AS b"
             )
             .distinct()
             .collect()
         )
-        segs = meta.get("segs")
-        if segs is not None:
-            # transactional index: the directory grain must also read
-            # committed files only (the crash-rollback contract holds
-            # at EVERY geometry) — resolve the touched buckets' file
-            # list from the committed sidecar rows
-            codes_root = os.path.join(index_path, "codes")
-            rows = _committed_sidecar_rows(spark, index_path, buckets, segs)
-            files = sorted(
-                {
-                    r["path"]
-                    if ("://" in r["path"] or r["path"].startswith("/"))
-                    else os.path.join(codes_root, r["path"])
-                    for r in rows
-                }
-            )
-            codes = (
-                spark.read.option("basePath", codes_root)
-                .parquet(*files)
-                .drop("cell_bucket")
-                if files
-                else spark.read.parquet(codes_root)
-                .filter(F.lit(False))
-                .drop("cell_bucket")
-            )
-        else:
-            codes = (
-                spark.read.parquet(os.path.join(index_path, "codes"))
+        if meta.get("segs") is None:
+            return (
+                spark.read.parquet(codes_root)
                 .filter(F.col("cell_bucket").isin(buckets))
                 .drop("cell_bucket")
             )
-    rq = probes.join(
-        F.broadcast(cents.selectExpr("cent_id AS probe", "c_qv")),
-        "probe",
-    ).selectExpr(
-        "query_id", "probe", "zip_with(q_qv, c_qv, (a, b) -> a - b) AS rq"
-    )
-    n_queries = (
-        probes.select("query_id").distinct().count()
-        if n_queries_bound is None
-        else n_queries_bound
-    )
-    # dtab columns carry a d_ prefix so the ADC join condition can be
-    # one unambiguous F.expr string (r18 §4)
-    dtab = broadcast_if_small(
-        _stage(
-            rq.crossJoin(F.broadcast(cent_m)).selectExpr(
-                "query_id AS d_query_id",
-                "probe AS d_probe",
-                "m AS d_m",
-                "j AS d_j",
-                f"{_pq_sub_dist_sql('rq')} AS d",
-            ),
-            "ann_index_dtab",
-        ),
-        n_queries * nprobe * PQ_M * k_cent,
-    )
-    # the pruned codes scan IS the candidate set (cluster rides the
-    # table): Q·nprobe probe rows broadcast against it, self-matches
-    # excluded — algebraically the in-plan cand→codes join collapsed
-    # to one join, same (query, neighbor, m) row set
-    cand_codes = broadcast_if_small(
-        probes.select("query_id", "probe"), n_queries * nprobe
-    ).join(codes, F.expr("cluster = probe AND vec_id != query_id"))
-    adc = (
-        cand_codes.join(
-            dtab,
-            F.expr(
-                "d_query_id = query_id AND d_probe = probe"
-                " AND d_m = m AND d_j = code"
-            ),
+        # transactional index: the directory grain must also read
+        # committed files only (the crash-rollback contract holds at
+        # EVERY geometry)
+        rows = _committed_sidecar_rows(
+            spark, index_path, buckets, meta["segs"]
         )
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("adc"))
-    )
-    return (
-        adc.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY adc ASC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {k}")
-        .select("query_id", "neighbor_id", "rnk", "adc")
+        return _code_files_scan(spark, codes_root, (r["path"] for r in rows))
+
+    return adc_topk(
+        queries,
+        _index_corpus(spark, index_path, meta, probed_codes),
+        k,
+        nprobe,
+        n_queries_bound,
+        _stage,
     )
 
 
@@ -1013,22 +907,16 @@ def _ann_index_slot(spark: SparkSession, sf_dir: str) -> str:
     # its BUILD corpus, by contract).
     complete = meta.get("complete") and meta.get("n_rows") == n_rows
     if not (path.startswith(("hdfs://", "s3a://")) or complete):
-        write_ann_index(
-            spark,
-            _opq_permute(_aniso(spark, sf_dir)),
-            n_rows,
-            path,
-        )
+        write_ann_index(spark, _ANISO_OPQ.lineage(spark, sf_dir), n_rows, path)
     return path
 
 
 @register(
     "q_ann_index_probe",
-    # Same ground truth as q_opq_residual_recall_aniso: the index is
-    # a persisted re-layout of the identical IVF/codebook/codes
-    # derivation, the probe the identical ADC chain, so the recall
-    # frame is the same — oracle adopted verbatim below.
-    oracle=None,
+    # the index is a persisted re-layout of the composition rung's
+    # derivation and the probe runs its ADC, so the recall frame and
+    # its oracle are the same
+    oracle=_ladder_oracle(_ANISO_OPQ, ADC_IVFADC),
     doc="Probe of the persisted cell-partitioned ANN index (IVF + "
     "OPQ + residual PQ — the ladder's best configuration) — the "
     "corpus-scale similarity ingest path (C3 family).",
@@ -1042,30 +930,11 @@ def q_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ann_index.py's direct in-plan comparison."""
     from mapreduceapp_spark.sources.parquet import table_row_count
 
-    e_p = _opq_permute(_aniso(spark, sf_dir))
     n = table_row_count(spark, sf_dir, "embeddings")
     approx = probe_ann_index(
         spark,
         _ann_index_slot(spark, sf_dir),
-        e_p.filter(KNN_QUERY_PRED),
+        _ANISO_OPQ.lineage(spark, sf_dir).filter(KNN_QUERY_PRED),
         n_queries_bound=n // 100 + 1,
     )
-    return _recall_vs(_aniso_exact_slot(spark, sf_dir), approx)
-
-
-# Reuse the composition rung's oracle verbatim (single source of
-# truth for the OPQ+residual recall ground truth — the
-# q_dedup_index_probe adoption pattern).
-def _adopt_composition_oracle() -> None:
-    import dataclasses
-
-    from mapreduceapp_spark.plans.registry import _REGISTRY
-
-    q = _REGISTRY["q_ann_index_probe"]
-    src = _REGISTRY["q_opq_residual_recall_aniso"]
-    _REGISTRY["q_ann_index_probe"] = dataclasses.replace(
-        q, oracle=src.oracle
-    )
-
-
-_adopt_composition_oracle()
+    return _recall_vs(_ANISO_OPQ.exact(spark, sf_dir), approx)

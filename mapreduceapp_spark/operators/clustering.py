@@ -29,12 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduceapp_spark.functions.vectors import (
-    cosine,
-    dot,
     oracle_cosine,
     oracle_quantize,
-    quantize,
-    sq_norm,
+    quantize_sql,
+    sq_norm_sql,
 )
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.plans.staging import slot, stage
@@ -393,9 +391,9 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_row_count(spark, sf_dir, "embeddings")
     stride = _km_stride(n)
     e = tables(spark, sf_dir).embeddings
-    qs = e.select(
-        "vec_id", quantize("embedding").alias("x")
-    ).withColumn("sq", sq_norm(F.col("x")))
+    qs = e.selectExpr(
+        "vec_id", f"{quantize_sql('embedding')} AS x"
+    ).selectExpr("*", f"{sq_norm_sql('x')} AS sq")
     c0 = qs.filter(f"vec_id % {stride} = {KM_OFFSET}").select(
         F.col("vec_id").alias("cid"),
         F.col("x").alias("cx"),

@@ -658,7 +658,7 @@ def fetch_candidate_sigs(
         # size the sidecar broadcast from meta, falling back to the
         # sidecar's own footers (driver-side metadata, zero jobs),
         # then to one count job over the thin sidecar — never encode
-        # "unknown" as "fits" (the ADVICE r10 pq_ann class)
+        # "unknown" as "fits" (the class adc_topk gates)
         n_files = _footer_row_count(os.path.join(index_path, "sig_files"))
         if n_files is None:
             n_files = spark.read.parquet(

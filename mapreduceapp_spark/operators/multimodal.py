@@ -33,7 +33,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceapp_spark.functions.vectors import oracle_quantize, quantize, sq_norm
+from mapreduceapp_spark.functions.vectors import (
+    oracle_quantize,
+    quantize_sql,
+    sq_norm_sql,
+)
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.sources import spread_table, tables
 
@@ -61,8 +65,9 @@ def q_multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t.embeddings.select(
         "vec_id",
         "label",
-        (
-            F.sqrt(sq_norm(quantize("embedding")).cast("double")) / 1000.0
+        F.expr(
+            f"sqrt(CAST({sq_norm_sql(quantize_sql('embedding'))} AS DOUBLE))"
+            " / CAST(1000 AS DOUBLE)"
         ).alias("emb_norm"),
     )
     return (

@@ -35,6 +35,8 @@ Scale posture (100 TB):
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -227,6 +229,25 @@ def _recall_vs(exact: DataFrame, approx: DataFrame) -> DataFrame:
         "n_hit",
         f"round(n_hit / CAST({KNN_K} AS DOUBLE), 4) AS recall_at_k",
     )
+
+
+def _oracle_recall(exact_sql: str, approx_sql: str) -> str:
+    """DuckDB twin of :func:`_recall_vs` over two (query_id,
+    neighbor_id) oracle bodies — the one recall-comparison oracle."""
+    return f"""
+        WITH exact AS ({exact_sql}),
+        approx AS ({approx_sql}),
+        hits AS (
+            SELECT e.query_id, count(a.neighbor_id) AS n_hit
+            FROM exact e LEFT JOIN approx a
+              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+            GROUP BY e.query_id
+        )
+        SELECT query_id,
+               CAST(n_hit AS BIGINT) AS n_hit,
+               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
+        FROM hits
+    """
 
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1388,20 +1409,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_ivf_recall",
-    oracle=f"""
-        WITH exact AS ({_ORACLE_KNN}),
-        approx AS ({_ORACLE_IVF}),
-        hits AS (
-            SELECT e.query_id, count(a.neighbor_id) AS n_hit
-            FROM exact e LEFT JOIN approx a
-              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        )
-        SELECT query_id,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
-        FROM hits
-    """,
+    oracle=_oracle_recall(_ORACLE_KNN, _ORACLE_IVF),
     doc="ANN quality evaluation: per-query recall@k of the IVF index "
     "against the exact kNN ground truth (C3 consumer).",
 )
@@ -1428,20 +1436,7 @@ def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_lsh_recall",
-    oracle=f"""
-        WITH exact AS ({_ORACLE_KNN}),
-        approx AS ({_ann_lsh_oracle()}),
-        hits AS (
-            SELECT e.query_id, count(a.neighbor_id) AS n_hit
-            FROM exact e LEFT JOIN approx a
-              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        )
-        SELECT query_id,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
-        FROM hits
-    """,
+    oracle=_oracle_recall(_ORACLE_KNN, _ann_lsh_oracle()),
     doc="ANN quality evaluation: per-query recall@k of the multi-probe "
     "LSH search against the exact kNN ground truth (C3 consumer).",
 )
@@ -1492,25 +1487,11 @@ def _pq_k(n_rows: int) -> int:
     return max(PQ_MIN_K, min(PQ_MAX_K, int(math.floor(math.sqrt(n_rows)))))
 
 
-def _pq_sub_dist(vec, m):
-    """Exact int64 squared distance between subspace ``m``'s slice of
-    quantized vector ``vec`` and the centroid slice column ``cv``."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(vec, m * PQ_SUBDIM + 1, PQ_SUBDIM),
-            F.col("cv"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _pq_sub_dist_sql(vec: str, m: str = "m", cv: str = "cv") -> str:
-    """SQL twin of :func:`_pq_sub_dist` (r18 §4): the ADC chain's
-    hottest expression, rebuilt by every PQ-family builder invocation
-    — two lambdas plus slice cost ~80 ms of py4j per Column-API
-    construction; the string parses in one round-trip."""
+    """Exact int64 squared distance between subspace ``m``'s slice of
+    quantized vector ``vec`` and the centroid slice ``cv`` — the ADC
+    chain's hottest expression, as a SQL string so it parses in one
+    py4j round-trip."""
     return (
         f"aggregate(zip_with(slice({vec}, {m} * {PQ_SUBDIM} + 1,"
         f" {PQ_SUBDIM}), {cv}, (x, y) -> (x - y) * (x - y)),"
@@ -1521,8 +1502,7 @@ def _pq_sub_dist_sql(vec: str, m: str = "m", cv: str = "cv") -> str:
 def _pq_centroid_slices(e: DataFrame, k_cent: int, stride: int) -> DataFrame:
     """(m, j, cv): ``k_cent`` stride-sampled codebook rows exploded
     into PQ_M subspace slices — ≤ 256×8 = 2048 thin rows, broadcast
-    everywhere. Shared by pq_ann and the IVF+PQ composition.
-    SQL-string form (r18 §4), same window/explode/slice tree."""
+    everywhere — the codebook of every ADC search (:func:`adc_corpus`)."""
     cent = (
         e.filter(f"vec_id % {stride} = 0")
         .selectExpr(
@@ -1675,66 +1655,159 @@ def _pq_codes_gemm(
     )
 
 
-def _pq_dtab(qs: DataFrame, cent_m: DataFrame) -> DataFrame:
-    """(query_id, m, j, d): each query's exact int64 distance to every
-    codebook slice — the Q×M×K asymmetric-distance lookup table."""
-    return qs.crossJoin(F.broadcast(cent_m)).selectExpr(
-        "query_id", "m", "j", f"{_pq_sub_dist_sql('q_qv')} AS d"
+_PQ_DIST_SQL = """list_reduce(list_transform(generate_series(1, 8),
+    i -> (list_slice({v}, c.m * 8 + 1, c.m * 8 + 8)[i] - c.cv[i])
+         * (list_slice({v}, c.m * 8 + 1, c.m * 8 + 8)[i] - c.cv[i])),
+    (x, y) -> x + y)"""
+
+
+# ------------------------------------------------------------ ADC search
+
+
+class AdcSpec(NamedTuple):
+    """One asymmetric-distance (ADC) product-quantization search
+    (Jégou et al., TPAMI 2011) as a point on two axes. ``cells``: no
+    coarse cells, so every query scores every code, or IVF cells —
+    ~√N stride-sampled centroids take each vector by argmin-L2 and a
+    query scores only its IVF_NPROBE nearest cells. ``residual``: the
+    codebook encodes the raw vector or, with cells, the vector minus
+    its cell centroid, and then each query's distance table is built
+    per probed cell from its residual against that cell. Every
+    distance is exact int64 on the quantized grid, every argmin and
+    rank breaks ties to the lower id, and the DuckDB oracle
+    (:func:`_oracle_adc`) is composed from the same spec, so the two
+    engines agree row for row. :func:`adc_corpus` and :func:`adc_topk`
+    are the only implementation, shared by the in-plan searches and
+    the persisted index (operators/ann_index.py)."""
+
+    cells: bool
+    residual: bool
+
+
+ADC_PQ = AdcSpec(cells=False, residual=False)
+ADC_IVFPQ = AdcSpec(cells=True, residual=False)
+ADC_IVFADC = AdcSpec(cells=True, residual=True)
+
+
+class AdcCorpus(NamedTuple):
+    """The corpus side of an ADC search. ``codes`` is (vec_id, m,
+    code), plus ``cluster`` with cells — or a function of the staged
+    probe table returning that frame (the persisted index's pruned
+    read). ``src`` is the encoded (vec_id, qv): raw or residual."""
+
+    spec: AdcSpec
+    cents: DataFrame | None
+    book: DataFrame
+    codes: DataFrame | Callable[[DataFrame], DataFrame]
+    k_cent: int
+    src: DataFrame | None
+
+
+def adc_corpus(
+    e: DataFrame, n_rows: int, spec: AdcSpec, frozen: AdcCorpus | None = None
+) -> AdcCorpus:
+    """Cells → (residual) → codebook → codes over a (vec_id, qv, sq)
+    lineage of ``n_rows`` vectors: centroids every ``_ivf_stride(N)``-th
+    vector, ``_pq_k(N)`` codebook rows at stride N div K of the encoded
+    source. ``frozen`` reuses a built corpus's centroids and codebook
+    (the index append). The cell assignment, carrying what is
+    encoded, and the codes are staged: the codebook and the encode
+    both read the first, every consumer reads the second."""
+    from mapreduceapp_spark.operators.clustering import _gemm_assign
+
+    k_cent = frozen.k_cent if frozen else _pq_k(n_rows)
+    cents = frozen.cents if frozen else (
+        _centroids(e, _ivf_stride(n_rows)) if spec.cells else None
     )
+    src = e.select("vec_id", "qv")
+    if spec.cells:
+        src = _gemm_assign(
+            e.selectExpr("vec_id", "qv AS x", "sq"),
+            cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
+            "int",
+            n_rows=n_rows,
+        ).selectExpr("vec_id", "cid AS cluster", "x AS qv")
+        if spec.residual:
+            src = src.join(
+                F.broadcast(cents.selectExpr("cent_id AS cluster", "c_qv")),
+                "cluster",
+            ).selectExpr(
+                "vec_id",
+                "cluster",
+                "zip_with(qv, c_qv, (a, b) -> a - b) AS qv",
+            )
+        src = stage(src, "adc_cells")
+    book = frozen.book if frozen else _pq_centroid_slices(
+        src, k_cent, max(1, n_rows // k_cent)
+    )
+    codes = _pq_codes(src, book, n_rows=n_rows)
+    if spec.cells:
+        codes = codes.join(src.select("vec_id", "cluster"), "vec_id")
+    return AdcCorpus(spec, cents, book, codes, k_cent, src)
 
 
-def pq_ann(
-    e: DataFrame,
-    k_cent: int,
-    stride: int,
-    top_k: int = KNN_K,
+def adc_topk(
+    queries: DataFrame,
+    corpus: AdcCorpus,
+    k: int = KNN_K,
+    nprobe: int = IVF_NPROBE,
     n_queries_bound: int | None = None,
+    _stage=stage,
 ) -> DataFrame:
-    """Top-``top_k`` per query by asymmetric PQ distance.
-
-    Plan shape, stage by stage:
-    - centroids: ``k_cent`` stride-sampled rows exploded into
-      PQ_M slices — ≤ 256×8 = 2048 thin rows, broadcast everywhere.
-    - encode: corpus × centroid-slices (a bounded-broadcast BNLJ, the
-      fragment-replicate class) scored with exact int64 distances,
-      folded to one code per (vector, subspace) via a partial-
-      aggregable min(struct(d, j)) — map-side combine, never a
-      full-sort window. This is the one O(N·K·M) pass, PQ's standard
-      one-time encode cost; at 100 TB it is embarrassingly parallel
-      and the codes it emits are the asset (PQ_M ints per vector).
-    - search: the query set's distance TABLE (Q×M×K rows, broadcast)
-      joins the codes on (m, code) — a lookup, not arithmetic — and
-      one partial-aggregated sum per (query, vector) plus the
-      standard top-k window finishes. Shuffle volume is O(N·M) thin
-      rows per query batch, with the tail pruned map-side by the
-      combine.
-    """
-    cent_m = _pq_centroid_slices(e, k_cent, stride)
-    # k_cent·stride ≈ N by construction (stride = max(1, N div K)) —
-    # a footer-free row-count estimate for the encode regime gate
-    codes = _pq_codes(e, cent_m, n_rows=k_cent * stride)
-    qs = e.filter(KNN_QUERY_PRED).selectExpr(
-        "vec_id AS query_id", "qv AS q_qv"
+    """Top-``k`` (query_id, neighbor_id, rnk, adc) per query of a
+    (vec_id, qv, sq) batch by ADC over ``corpus``: the codes join the
+    query's distance table on (m, code), the sum over subspaces ranks
+    by (adc, neighbor_id). With cells the probe GEMM's output is
+    staged, and so is the per-(query, cell) residual table, each read
+    by several consumers; ``_stage`` lets the streaming probe swap in a
+    per-epoch stager. Runtime-sized broadcasts are gated on
+    ``n_queries_bound`` (None: one count job)."""
+    spec = corpus.spec
+    n_queries = queries.count() if n_queries_bound is None else n_queries_bound
+    codes, on, n_tab = corpus.codes, "d_m = m AND d_j = code", n_queries
+    if spec.cells:
+        probes = _stage(
+            _gemm_probe_topm(
+                queries, corpus.cents, nprobe, metric="l2", n_queries=n_queries
+            ).select("query_id", "q_qv", "probe"),
+            "adc_probes",
+        )
+        if callable(codes):
+            codes = codes(probes)
+        codes = broadcast_if_small(
+            probes.select("query_id", "probe"), n_queries * nprobe
+        ).join(codes, F.expr("cluster = probe AND vec_id != query_id"))
+        on += " AND d_query_id = query_id"
+    else:
+        on += " AND vec_id != d_query_id"
+    if spec.residual:
+        qv = probes.join(
+            F.broadcast(corpus.cents.selectExpr("cent_id AS probe", "c_qv")),
+            "probe",
+        ).selectExpr(
+            "query_id AS d_query_id",
+            "probe AS d_probe",
+            "zip_with(q_qv, c_qv, (a, b) -> a - b) AS rq",
+        )
+        on += " AND d_probe = probe"
+        n_tab *= nprobe
+    else:
+        qv = queries.selectExpr("vec_id AS d_query_id", "qv AS rq")
+    dtab = qv.crossJoin(F.broadcast(corpus.book)).selectExpr(
+        *[c for c in qv.columns if c != "rq"],
+        "m AS d_m",
+        "j AS d_j",
+        f"{_pq_sub_dist_sql('rq')} AS d",
     )
-    dtab = _pq_dtab(qs, cent_m)
-    # the distance table is Q x M x K rows — size-gate its broadcast
-    # on the caller's query bound (registered callers derive it from
-    # the footer: contiguous ids => Q = N div 100 + 1); a huge query
-    # set falls back to a shuffle lookup join, correct at any size.
-    # With no caller bound, MEASURE: one count job over the thin
-    # query projection beats encoding "unknown" as "fits", which
-    # would hand an external caller with a corpus-scale query set an
-    # ungated Q×M×K broadcast (ADVICE r10)
-    n_queries = qs.count() if n_queries_bound is None else n_queries_bound
-    dtab_bound = n_queries * PQ_M * k_cent
+    if spec.residual:
+        dtab = _stage(dtab, "adc_dtab")
     adc = (
         codes.join(
-            broadcast_if_small(dtab, dtab_bound),
-            (codes["m"] == dtab["m"]) & (codes["code"] == dtab["j"]),
+            broadcast_if_small(dtab, n_tab * PQ_M * corpus.k_cent), F.expr(on)
         )
-        .filter(codes["vec_id"] != dtab["query_id"])
-        .groupBy("query_id", codes["vec_id"].alias("neighbor_id"))
-        .agg(F.sum("d").alias("adc"))
+        .selectExpr("d_query_id AS query_id", "vec_id AS neighbor_id", "d")
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.expr("sum(d) AS adc"))
     )
     return (
         adc.selectExpr(
@@ -1742,25 +1815,86 @@ def pq_ann(
             "row_number() OVER (PARTITION BY query_id"
             " ORDER BY adc ASC, neighbor_id ASC) AS rnk",
         )
-        .filter(f"rnk <= {top_k}")
+        .filter(f"rnk <= {k}")
         .select("query_id", "neighbor_id", "rnk", "adc")
     )
 
 
-_PQ_DIST_SQL = """list_reduce(list_transform(generate_series(1, 8),
-    i -> (list_slice({v}, c.m * 8 + 1, c.m * 8 + 8)[i] - c.cv[i])
-         * (list_slice({v}, c.m * 8 + 1, c.m * 8 + 8)[i] - c.cv[i])),
-    (x, y) -> x + y)"""
-
-def _oracle_pq_ctes(src: str | None = None) -> str:
-    """The PQ oracle's CTE chain (p → kk → cent → codes → qd),
-    parameterized on the quantized source (vec_id, qv) so the
-    normalized and IVF+PQ variants reuse it verbatim."""
-    p_body = src or (
-        f"SELECT vec_id, {oracle_quantize('embedding')} AS qv "
-        f"FROM embeddings"
+def adc_search(
+    e: DataFrame, n_rows: int, spec: AdcSpec, k: int = KNN_K
+) -> DataFrame:
+    """The in-plan ADC search: ``e``'s query set (KNN_QUERY_PRED over
+    contiguous ids, so N div 100 + 1 queries) against its own corpus."""
+    return adc_topk(
+        e.filter(KNN_QUERY_PRED),
+        adc_corpus(e, n_rows, spec),
+        k,
+        n_queries_bound=n_rows // 100 + 1,
     )
-    return f"""p AS MATERIALIZED ({p_body}),
+
+
+_RESID_SQL = (
+    "list_transform(generate_series(1, 64), i -> {v}.qv[i] - c.c_qv[i])"
+)
+
+
+def _oracle_adc(src: str, spec: AdcSpec, limit: int = KNN_K) -> str:
+    """DuckDB twin of :func:`adc_search` over a (vec_id, qv) source
+    query: (query_id, neighbor_id, rnk, adc). No cells is one cell 0
+    that holds every vector and that every query probes."""
+    l2 = "{a}.sq + c.c_sq - 2 * list_dot_product({a}.qv, c.c_qv), c.cent_id"
+    if spec.cells:
+        cells = f"""
+        ist AS (
+            SELECT greatest({IVF_MIN_STRIDE},
+                       CAST(floor(sqrt(count(*))) AS BIGINT)) AS s
+            FROM p
+        ),
+        icent AS MATERIALIZED (
+            SELECT vec_id AS cent_id, qv AS c_qv, sq AS c_sq
+            FROM p, ist WHERE vec_id % s = {IVF_OFFSET}
+        ),
+        assigned AS MATERIALIZED (
+            SELECT vec_id, cent_id AS cluster FROM (
+                SELECT v.vec_id, c.cent_id,
+                       row_number() OVER (PARTITION BY v.vec_id
+                           ORDER BY {l2.format(a='v')}) AS rn
+                FROM p v, icent c
+            ) WHERE rn = 1
+        ),
+        probes AS MATERIALIZED (
+            SELECT query_id, cent_id AS probe FROM (
+                SELECT q.vec_id AS query_id, c.cent_id,
+                       row_number() OVER (PARTITION BY q.vec_id
+                           ORDER BY {l2.format(a='q')}) AS rn
+                FROM p q, icent c WHERE q.{KNN_QUERY_PRED}
+            ) WHERE rn <= {IVF_NPROBE}
+        ),"""
+    else:
+        cells = f"""
+        assigned AS (SELECT vec_id, 0 AS cluster FROM p),
+        probes AS (
+            SELECT vec_id AS query_id, 0 AS probe FROM p
+            WHERE {KNN_QUERY_PRED}
+        ),"""
+    if spec.residual:
+        enc = f"""SELECT a.vec_id, {_RESID_SQL.format(v='v')} AS qv
+            FROM assigned a
+            JOIN p v ON v.vec_id = a.vec_id
+            JOIN icent c ON c.cent_id = a.cluster"""
+        qvec = f"""SELECT pr.query_id, pr.probe,
+                   {_RESID_SQL.format(v='q')} AS qv
+            FROM probes pr
+            JOIN p q ON q.vec_id = pr.query_id
+            JOIN icent c ON c.cent_id = pr.probe"""
+    else:
+        enc = "SELECT vec_id, qv FROM p"
+        qvec = """SELECT pr.query_id, pr.probe, q.qv
+            FROM probes pr JOIN p q ON q.vec_id = pr.query_id"""
+    return f"""
+        WITH p AS MATERIALIZED (
+            SELECT vec_id, qv, list_dot_product(qv, qv) AS sq FROM ({src})
+        ),
         kk AS MATERIALIZED (
             SELECT greatest({PQ_MIN_K}, least({PQ_MAX_K},
                        CAST(floor(sqrt(count(*))) AS BIGINT))) AS k,
@@ -1768,11 +1902,12 @@ def _oracle_pq_ctes(src: str | None = None) -> str:
                        least({PQ_MAX_K},
                            CAST(floor(sqrt(count(*))) AS BIGINT)))) AS stride
             FROM p
-        ),
+        ),{cells}
+        enc AS MATERIALIZED ({enc}),
         cent0 AS MATERIALIZED (
             SELECT vec_id, qv,
                    row_number() OVER (ORDER BY vec_id) - 1 AS j
-            FROM p, kk WHERE vec_id % stride = 0
+            FROM enc, kk WHERE vec_id % stride = 0
         ),
         cent AS MATERIALIZED (
             SELECT m, j, list_slice(qv, m * 8 + 1, m * 8 + 8) AS cv
@@ -1786,25 +1921,22 @@ def _oracle_pq_ctes(src: str | None = None) -> str:
                            PARTITION BY v.vec_id, c.m
                            ORDER BY {_PQ_DIST_SQL.format(v='v.qv')}, c.j
                        ) AS rn
-                FROM p v, cent c
+                FROM enc v, cent c
             ) WHERE rn = 1
         ),
+        qvec AS MATERIALIZED ({qvec}),
         qd AS MATERIALIZED (
-            SELECT q.vec_id AS query_id, c.m, c.j,
+            SELECT q.query_id, q.probe, c.m, c.j,
                    {_PQ_DIST_SQL.format(v='q.qv')} AS d
-            FROM p q, cent c WHERE q.{KNN_QUERY_PRED}
-        )"""
-
-
-def _oracle_pq(limit: int, src: str | None = None) -> str:
-    return f"""
-        WITH {_oracle_pq_ctes(src)},
+            FROM qvec q, cent c
+        ),
         adc AS MATERIALIZED (
-            SELECT qd.query_id, codes.vec_id AS neighbor_id,
-                   sum(qd.d) AS adc
-            FROM codes JOIN qd
-              ON qd.m = codes.m AND qd.j = codes.code
-            WHERE codes.vec_id <> qd.query_id
+            SELECT pr.query_id, a.vec_id AS neighbor_id, sum(qd.d) AS adc
+            FROM probes pr
+            JOIN assigned a ON a.cluster = pr.probe AND a.vec_id <> pr.query_id
+            JOIN codes ON codes.vec_id = a.vec_id
+            JOIN qd ON qd.query_id = pr.query_id AND qd.probe = pr.probe
+                   AND qd.m = codes.m AND qd.j = codes.code
             GROUP BY 1, 2
         )
         SELECT query_id, neighbor_id, rnk, CAST(adc AS BIGINT) AS adc
@@ -1817,56 +1949,18 @@ def _oracle_pq(limit: int, src: str | None = None) -> str:
 """
 
 
-_ORACLE_PQ = _oracle_pq(KNN_K)
-
-
 @register(
     "q_pq_ann",
-    oracle=_ORACLE_PQ,
+    oracle=_oracle_adc(_ORACLE_QUANTIZED, ADC_PQ),
     doc="Product-quantization ANN: stride-sampled integer codebooks, "
     "asymmetric-distance top-k via a broadcast distance-table lookup "
     "join — the 32-64x memory-compression member of the C3 family.",
 )
 def q_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k neighbors by asymmetric PQ distance over the embeddings
-    table — see :func:`pq_ann`. K derives from the parquet footer row
-    count (√N clamped to [8, 256], the IVF convention — no job at
-    build time); every distance is an int64 on the quantized grid, so
-    codes and ADC scores hash-match the oracle exactly."""
+    """Top-k neighbors by asymmetric PQ distance over the quantized
+    embeddings — :func:`adc_search` with no cells and raw codes."""
     n = table_row_count(spark, sf_dir, "embeddings")
-    return pq_ann(
-        _quantized(spark, sf_dir), _pq_k(n), max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-    )
-
-
-def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the registry in r15 (VERDICT r14 "Next round"
-    #2, the r14 retire-into-twin pattern): folded into
-    q_pq_recall_aniso — the isotropic fixture's raw-PQ recall is the
-    ladder's documented parity finding (see q_pq_recall_aniso's
-    ladder table, which records both fixtures), so the two driver
-    rows were redundant evidence for one claim, and the freed slot
-    registers q_ann_index_probe (the persisted ANN index — VERDICT
-    r14 "Next round" #1). The function stays as library surface
-    (still pytest-covered: rerank-dominance and IVF+PQ-subset
-    invariants consume this frame directly); its last green driver
-    row is CORRECTNESS_r13.
-
-    Original doc — recall@k of the PQ code search vs exact L2 kNN — the number
-    that sizes the rerank window a PQ deployment keeps (fetch top-R
-    by ADC, rerank survivors at full precision; R grows until recall
-    holds). The ground truth is the L2 twin (q_knn_l2), because ADC
-    approximates EUCLIDEAN distance: measured against the cosine
-    truth this table's unnormalized vectors score near zero — an
-    apples-to-oranges artifact, not quantization loss. Same
-    comparison shape as q_ivf_recall: both sides are registered
-    plans, the join is k·Q rows; the exact side rides its own staged
-    slot so repeat consumers run one L2 search per process."""
-    return _recall_vs(
-        slot(spark, "knn_l2_topk", sf_dir, lambda: q_knn_l2(spark, sf_dir)),
-        q_pq_ann(spark, sf_dir),
-    )
+    return adc_search(_quantized(spark, sf_dir), n, ADC_PQ)
 
 
 # Exact L2 kNN — the metric PQ's ADC approximates (cosine users
@@ -1919,6 +2013,12 @@ def q_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_knn_l2",
         n_rows=table_row_count(spark, sf_dir, "embeddings"),
     )
+
+
+def _l2_exact_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The q_knn_l2 result staged once per process — the isotropic
+    ground truth every PQ recall evaluation compares against."""
+    return slot(spark, "knn_l2_topk", sf_dir, lambda: q_knn_l2(spark, sf_dir))
 
 
 def _knn_l2_topk(
@@ -2077,12 +2177,6 @@ def _knn_l2_topk_gemm(
     )
 
 
-# (q_pq_recall's post-hoc oracle binding — the q_dedup_index_probe
-# adoption pattern over _ORACLE_PQ + _ORACLE_KNN_L2 — left with its
-# registration in r15; the aniso twin's declared oracle carries the
-# recall ground truth now.)
-
-
 # The production PQ pattern: codes give a cheap shortlist, full
 # vectors rerank it. R = 5k keeps the rerank window a constant
 # multiple of the answer size — the knob recall tunes in deployment.
@@ -2091,40 +2185,25 @@ PQ_RERANK_R = 5 * KNN_K
 
 @register(
     "q_pq_rerank_recall",
-    oracle=f"""
-        WITH exact AS ({_ORACLE_KNN_L2}),
-        cand AS ({_oracle_pq(PQ_RERANK_R)}),
-        p2 AS (
-            SELECT vec_id, {oracle_quantize('embedding')} AS qv,
-                   list_dot_product({oracle_quantize('embedding')},
-                                    {oracle_quantize('embedding')}) AS sq
-            FROM embeddings
-        ),
-        rer AS (
-            SELECT query_id, neighbor_id, rnk2 AS rnk FROM (
-                SELECT c.query_id, c.neighbor_id,
-                       row_number() OVER (
-                           PARTITION BY c.query_id
-                           ORDER BY a.sq + b.sq
-                                    - 2 * list_dot_product(a.qv, b.qv),
-                                    c.neighbor_id
-                       ) AS rnk2
-                FROM cand c
-                JOIN p2 a ON a.vec_id = c.query_id
-                JOIN p2 b ON b.vec_id = c.neighbor_id
-            ) WHERE rnk2 <= {KNN_K}
-        ),
-        hits AS (
-            SELECT e.query_id, count(r.neighbor_id) AS n_hit
-            FROM exact e LEFT JOIN rer r
-              ON r.query_id = e.query_id AND r.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        )
-        SELECT query_id,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
-        FROM hits
-    """,
+    oracle=_oracle_recall(
+        _ORACLE_KNN_L2,
+        f"""
+        WITH cand AS ({_oracle_adc(_ORACLE_QUANTIZED, ADC_PQ, PQ_RERANK_R)}),
+        p2 AS ({_ORACLE_QUANTIZED})
+        SELECT query_id, neighbor_id FROM (
+            SELECT c.query_id, c.neighbor_id,
+                   row_number() OVER (
+                       PARTITION BY c.query_id
+                       ORDER BY a.sq + b.sq
+                                - 2 * list_dot_product(a.qv, b.qv),
+                                c.neighbor_id
+                   ) AS rnk2
+            FROM cand c
+            JOIN p2 a ON a.vec_id = c.query_id
+            JOIN p2 b ON b.vec_id = c.neighbor_id
+        ) WHERE rnk2 <= {KNN_K}
+        """,
+    ),
     doc="PQ shortlist + exact rerank: recall@k of the top-5k ADC "
     "candidates reranked at full precision — the deployed PQ shape "
     "(codes shortlist from RAM, vectors rerank from storage).",
@@ -2137,15 +2216,11 @@ def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank touches R·Q full vectors, not the corpus: at 100 TB that
     is the difference between reading 50 rows per query from storage
     and scanning 100 TB per query — the memory/IO shape PQ exists
-    for. Raw-code recall (q_pq_recall) and reranked recall published
-    side by side is exactly how a deployment tunes R."""
+    for."""
     e = _quantized(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")
     n_queries = n // 100 + 1  # KNN_QUERY_PRED on contiguous ids
-    cand = pq_ann(
-        e, _pq_k(n), max(1, n // _pq_k(n)),
-        top_k=PQ_RERANK_R, n_queries_bound=n_queries,
-    )
+    cand = adc_search(e, n, ADC_PQ, k=PQ_RERANK_R)
     # query-set rows ONLY, size-gated: broadcasting the unfiltered
     # corpus here would be exactly the unbounded-broadcast class
     # plans/hints.py exists to prevent
@@ -2174,9 +2249,7 @@ def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(f"rnk <= {KNN_K}")
         .select("query_id", "neighbor_id")
     )
-    return _recall_vs(
-        slot(spark, "knn_l2_topk", sf_dir, lambda: q_knn_l2(spark, sf_dir)), rer10
-    )
+    return _recall_vs(_l2_exact_slot(spark, sf_dir), rer10)
 
 
 # ------------------------------------------------- L2-normalized PQ
@@ -2186,21 +2259,6 @@ def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ≤ 1e8 and 64-dim sums ≤ 6.4e9 — exact in int64 AND in doubles, the
 # same headroom argument as functions/vectors.QUANT_SCALE.
 NORM_SCALE = 10_000
-
-
-def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, qv, sq) with qv L2-normalized ON THE INTEGER GRID:
-    nqv_i = round(qv_i · NORM_SCALE / √sq) — one multiply, one
-    correctly-rounded IEEE sqrt, one correctly-rounded divide, one
-    round, each deterministic and mirrored verbatim by the DuckDB
-    twin, so the normalized table is bit-identical cross-engine (the
-    deployment shape: cosine users normalize upstream, after which
-    cosine and L2 rankings coincide and PQ's ADC approximates the
-    metric users actually rank by). greatest(sq, 1) keeps an all-zero
-    vector an all-zero vector instead of a division error; row count
-    is preserved so the footer-derived codebook constants still
-    agree with the oracle's count(*)."""
-    return _l2_normalize(_quantized(spark, sf_dir))
 
 
 def _l2_normalize(e: DataFrame) -> DataFrame:
@@ -2224,583 +2282,6 @@ def _oracle_norm_qv(src: str) -> str:
                    / sqrt(greatest(sq, 1)::DOUBLE)) AS BIGINT)) AS qv
         FROM ({src})
 """
-
-
-_ORACLE_NORM_QV = _oracle_norm_qv(_ORACLE_QUANTIZED)
-_ORACLE_NORM_QUANTIZED = f"""
-        SELECT vec_id, qv, list_dot_product(qv, qv) AS sq
-        FROM ({_ORACLE_NORM_QV})
-"""
-
-
-def q_pq_recall_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED from the registry in r14 (VERDICT r13 "Next round" #1):
-    folded into q_pq_recall_normalized_aniso, which carries the same
-    normalization rung on the fixture where the finding is
-    corroborated rather than vacuous — this isotropic twin's own
-    measured result below records that normalization is a no-op on
-    the isotropic fixture (recall EQUALS the unnormalized number),
-    so the two queries' driver rows were redundant evidence for one
-    claim. The slot freed funds q_opq_residual_recall_aniso, the
-    ladder's best measured configuration. The function stays as
-    library surface (still pytest-covered for grid-unit-norm
-    invariants via _normalized); its last green driver row is
-    CORRECTNESS_r11 (the name's final rotation window before
-    retirement; r12/r13 windows covered other groups).
-
-    Original doc — recall@k of PQ code search over the L2-NORMALIZED table vs
-    exact L2 kNN over the same table — the number a deployment sees
-    (VERDICT r10 ask #4: raw-code recall on unnormalized uniform
-    synthetic was 0.1-0.4 with the L2-vs-cosine mismatch diagnosed;
-    this closes the family with the apples-to-apples variant). Both
-    sides are the existing machinery pointed at :func:`_normalized`;
-    the exact side rides its own staged slot.
-
-    Honest finding: measured recall EQUALS the unnormalized number
-    (0.20/0.26 at sf0.001/0.01) — on isotropic uniform-random
-    synthetic vectors the norms already concentrate (high-dim), so
-    normalizing barely moves the geometry and the r10 hypothesis
-    that the low raw-code recall was a metric artifact is REFUTED:
-    it is genuine quantization loss from √N stride-sampled codebooks
-    on isotropic data, which is exactly why the deployed path is
-    shortlist+rerank (q_pq_rerank_recall, 0.62) rather than raw
-    codes. Real embedding corpora are anisotropic (low intrinsic
-    dimension) — measured on the r12 anisotropic fixture in
-    q_pq_recall_normalized_aniso: normalization stays a wash there
-    too (the recall lever on clustered data is the residual rung,
-    not normalization), so this parity finding is now corroborated
-    rather than unfalsifiable."""
-    e_n = _normalized(spark, sf_dir)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    exact = stage(
-        _knn_l2_topk(e_n, "q_pq_recall_normalized", n_rows=n),
-        "knn_l2_norm_topk",
-    )
-    approx = pq_ann(
-        e_n, _pq_k(n), max(1, n // _pq_k(n)), n_queries_bound=n // 100 + 1
-    )
-    return _recall_vs(exact, approx)
-
-
-# ------------------------------------------------------------ IVF+PQ
-
-def ivfpq_ann(
-    e: DataFrame,
-    ivf_stride: int,
-    k_cent: int,
-    pq_stride: int,
-    k: int = KNN_K,
-    nprobe: int = IVF_NPROBE,
-    n_queries_bound: int | None = None,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Coarse cells + in-cell ADC — the corpus-scale ANN shape
-    (VERDICT r10 ask #3; Jégou et al., TPAMI 2011's IVFADC, public
-    knowledge): IVF probing cuts the scan to ~nprobe/C of the
-    corpus, PQ codes cut the bytes per scanned vector 32-64×, so
-    the per-query cost is (nprobe/C)·N code lookups — the only
-    full-precision work is the coarse probe against C ≈ √N
-    centroids. All on the L2 metric end to end (assignment, probe,
-    ADC), exact int64 throughout, so the whole composition is
-    SQL-expressible and oracle-checked like its two halves.
-
-    Stages, each reusing a proven piece:
-    - assign: argmin-L2 centroid per vector via the fragment-
-      replicate Arrow GEMM (``_gemm_assign`` "int" mode — k-means'
-      assignment kernel; N + P·C shuffle rows, no N·C row set).
-    - probe: each query's ``nprobe`` best cells via the same GEMM
-      with ``metric="l2"`` top-m.
-    - search: the (query × probed-cell) set joins the assigned table
-      to produce candidates — (nprobe/C)·N per query — which join
-      the STAGED pq codes (thin ints) and the broadcast Q×M×K
-      distance table; sum over subspaces, top-k window. Raw codes,
-      not residual codes: residual PQ needs per-cell codebooks
-      (a trained model), which would break the oracle-checkable
-      stride-sampling convention — documented trade, not an
-      oversight.
-    """
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-
-    cents = _centroids(e, ivf_stride)
-    # staged (r17): the SAME _gemm_assign call — identical plan, so
-    # identical slot — backs q_ivfpq_recall AND q_ivfpq_residual_recall
-    # (and their aniso twins, each lineage hashing to its own slot);
-    # one assign GEMM per (lineage, process) instead of one per query
-    # execution. The ivfpq_residual_ann staging note (r14) explains the
-    # multi-consumer rationale; this extends it across the query pair.
-    assigned = stage(
-        _gemm_assign(
-            e.selectExpr("vec_id", "qv AS x", "sq"),
-            cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
-            "int",
-            n_rows=n_rows,
-        ),
-        "ivf_assign_int",
-    ).selectExpr("vec_id", "cid AS cluster")
-    qs = e.filter(KNN_QUERY_PRED).selectExpr(
-        "vec_id AS query_id", "qv AS q_qv"
-    )
-    n_queries = qs.count() if n_queries_bound is None else n_queries_bound
-    # staged with the residual variant's exact projection so both
-    # ivfpq rungs hash-share one probe-GEMM slot per lineage
-    probes = stage(
-        _gemm_probe_topm(
-            e.filter(KNN_QUERY_PRED), cents, nprobe, metric="l2",
-            n_queries=n_queries,
-        ).select("query_id", "q_qv", "probe"),
-        "resid_probes",
-    ).select("query_id", "probe")
-    # Q × nprobe rows — gated like every runtime-sized broadcast
-    # (ADVICE r11: an external caller with a corpus-scale query set
-    # must fall back to a shuffle join, not get an ungated hint)
-    cand = (
-        broadcast_if_small(probes, n_queries * nprobe)
-        .join(assigned, F.expr("cluster = probe AND vec_id != query_id"))
-        .selectExpr("query_id", "vec_id AS neighbor_id")
-    )
-    cent_m = _pq_centroid_slices(e, k_cent, pq_stride)
-    codes = _pq_codes(e, cent_m, n_rows=k_cent * pq_stride)
-    # dtab columns carry a d_ prefix so the ADC join condition can be
-    # one unambiguous F.expr string (r18 §4)
-    dtab = broadcast_if_small(
-        qs.crossJoin(F.broadcast(cent_m)).selectExpr(
-            "query_id AS d_query_id", "m AS d_m", "j AS d_j",
-            f"{_pq_sub_dist_sql('q_qv')} AS d",
-        ),
-        n_queries * PQ_M * k_cent,
-    )
-    adc = (
-        cand.join(codes, F.expr("neighbor_id = vec_id"))
-        .join(
-            dtab,
-            F.expr("d_query_id = query_id AND d_m = m AND d_j = code"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc"))
-    )
-    return (
-        adc.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY adc ASC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {k}")
-        .select("query_id", "neighbor_id", "rnk", "adc")
-    )
-
-
-def _oracle_ivfpq_approx(src: str | None = None) -> str:
-    """IVF+PQ approx-side oracle, parameterized on the quantized
-    (vec_id, qv) source so the anisotropic-fixture variant reuses it
-    verbatim (the _oracle_pq_ctes convention)."""
-    return f"""
-        WITH {_oracle_pq_ctes(src)},
-        p2 AS MATERIALIZED (
-            SELECT vec_id, qv, list_dot_product(qv, qv) AS sq FROM p
-        ),
-        ist AS (
-            SELECT greatest({IVF_MIN_STRIDE},
-                       CAST(floor(sqrt(count(*))) AS BIGINT)) AS s
-            FROM p2
-        ),
-        icent AS MATERIALIZED (
-            SELECT vec_id AS cent_id, qv AS c_qv, sq AS c_sq
-            FROM p2, ist WHERE vec_id % s = {IVF_OFFSET}
-        ),
-        assigned AS MATERIALIZED (
-            SELECT vec_id, cent_id AS cluster FROM (
-                SELECT v.vec_id, c.cent_id,
-                       row_number() OVER (PARTITION BY v.vec_id
-                           ORDER BY v.sq + c.c_sq
-                                    - 2 * list_dot_product(v.qv, c.c_qv),
-                                    c.cent_id) AS rn
-                FROM p2 v, icent c
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT query_id, cent_id AS probe FROM (
-                SELECT q.vec_id AS query_id, c.cent_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY q.sq + c.c_sq
-                                    - 2 * list_dot_product(q.qv, c.c_qv),
-                                    c.cent_id) AS rn
-                FROM p2 q, icent c WHERE q.{KNN_QUERY_PRED}
-            ) WHERE rn <= {IVF_NPROBE}
-        ),
-        cand AS (
-            SELECT pr.query_id, a.vec_id AS neighbor_id
-            FROM probes pr JOIN assigned a ON a.cluster = pr.probe
-            WHERE a.vec_id <> pr.query_id
-        ),
-        iadc AS (
-            SELECT cd.query_id, cd.neighbor_id, sum(qd.d) AS adc
-            FROM cand cd
-            JOIN codes ON codes.vec_id = cd.neighbor_id
-            JOIN qd ON qd.query_id = cd.query_id
-                   AND qd.m = codes.m AND qd.j = codes.code
-            GROUP BY 1, 2
-        )
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc, neighbor_id) AS rnk
-            FROM iadc
-        ) WHERE rnk <= {KNN_K}
-"""
-
-
-_ORACLE_IVFPQ_APPROX = _oracle_ivfpq_approx()
-
-
-@register(
-    "q_ivfpq_recall",
-    oracle=f"""
-        WITH exact AS ({_ORACLE_KNN_L2}),
-        approx AS ({_ORACLE_IVFPQ_APPROX}),
-        hits AS (
-            SELECT e.query_id, count(a.neighbor_id) AS n_hit
-            FROM exact e LEFT JOIN approx a
-              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        )
-        SELECT query_id,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
-        FROM hits
-    """,
-    doc="IVF+PQ composed ANN (coarse cells + in-cell ADC — the "
-    "corpus-scale deployment shape): per-query recall@k vs the exact "
-    "L2 truth, scan fraction ~nprobe/C at 32-64x compressed bytes "
-    "per scanned vector (C3).",
-)
-def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of the IVF+PQ composition against the exact L2 slot —
-    the same comparison convention as q_ivf_recall / q_pq_recall, so
-    the three numbers published side by side read as the ANN ladder:
-    IVF (full-precision candidates), PQ (full scan of compressed
-    codes), IVF+PQ (compressed scan of probed cells only).
-
-    Scan-fraction datum (sf0.1, N=2000, C=40, Q=20): 2,956 candidate
-    pairs = 7.39% of Q·(N−1), against the nprobe/C model's 7.50% —
-    the composition scans what the model says it scans, and each
-    scanned row is PQ_M ints, not the 512-byte vector. Recall equals
-    raw-PQ recall on this fixture (0.20/0.26 at sf0.001/0.01): the
-    probed cells retain essentially all of ADC's top-k here, so the
-    composition costs no extra recall at a 13.5× candidate cut."""
-    e = _quantized(spark, sf_dir)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = ivfpq_ann(
-        e,
-        _ivf_stride(n),
-        _pq_k(n),
-        max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-        n_rows=n,
-    )
-    return _recall_vs(
-        slot(spark, "knn_l2_topk", sf_dir, lambda: q_knn_l2(spark, sf_dir)),
-        approx,
-    )
-
-
-# ------------------------------------------------- residual IVF+PQ
-
-def ivfpq_residual_ann(
-    e: DataFrame,
-    ivf_stride: int,
-    k_cent: int,
-    pq_stride: int,
-    k: int = KNN_K,
-    nprobe: int = IVF_NPROBE,
-    n_queries_bound: int | None = None,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """True IVFADC (Jégou et al., TPAMI 2011 §III-C): PQ codebooks
-    trained on RESIDUALS (vector − its cell centroid) instead of raw
-    vectors — the variant deployments actually run, because residual
-    magnitudes are a fraction of vector magnitudes, so the same
-    codebook budget quantizes a much smaller cube and ADC error
-    drops. The classic obstacle to oracle-checking it is the trained
-    per-cell codebooks; here the engine's stride-sampling convention
-    applies verbatim to the residual TABLE (sample rows vec_id %
-    stride = 0 of the residuals, which are themselves exact int64
-    differences), so the whole pipeline stays integer-exact and
-    SQL-expressible.
-
-    Deltas vs :func:`ivfpq_ann` (same assign/probe stages):
-    - residuals: rv = qv − c_qv(assigned cell), elementwise int64.
-    - codebook + codes over rv (same _pq_* machinery, staged).
-    - the distance table is PER (query, probed cell): the query's
-      residual against THAT cell feeds the lookup — Q × nprobe × M ×
-      K rows, still a broadcast (gate scaled by nprobe).
-    - a candidate's ADC joins on (query, ITS cell, m, code): each
-      vector lives in exactly one cell, so no pair duplication.
-
-    r14 (VERDICT r13 ask #7): the probe table and the residual dtab
-    are STAGED. The probe GEMM's output feeds THREE consumers — the
-    rq residuals behind the dtab broadcast, the candidate join's own
-    broadcast, and (transitively) the dtab's crossJoin — and each
-    broadcast evaluates its lineage independently, so the unstaged
-    plan ran the probe GEMM per consumer and rebuilt the Q·nprobe·M·K
-    distance table on every invocation. Both slots are thin
-    (Q·nprobe and Q·nprobe·M·K int rows; ≈3.3 M at sf1) and keyed by
-    semanticHash, so each fixture lineage (isotropic / aniso /
-    OPQ-permuted) stages its own pair exactly once per process.
-    Measured A/B (3 reps, calm, rows_equal=True): sf0.1 warm
-    3.1 → 1.4 s, sf1 warm 7.0 → 2.2 s; staging only one of the two
-    is strictly worse than both (sf1: probes-only 4.5, dtab-only
-    2.7, both 2.2).
-    """
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-
-    cents = _centroids(e, ivf_stride)
-    # staged under the SAME slot as ivfpq_ann's assign (identical
-    # _gemm_assign plan → identical hash): one assign GEMM per
-    # (lineage, process) serves both ivfpq rungs — see ivfpq_ann
-    assigned = stage(
-        _gemm_assign(
-            e.selectExpr("vec_id", "qv AS x", "sq"),
-            cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
-            "int",
-            n_rows=n_rows,
-        ),
-        "ivf_assign_int",
-    ).selectExpr("vec_id", "x", "cid AS cluster")
-    cents_b = F.broadcast(
-        cents.selectExpr("cent_id AS cluster", "c_qv")
-    )
-    resid = assigned.join(cents_b, "cluster").selectExpr(
-        "vec_id", "cluster", "zip_with(x, c_qv, (a, b) -> a - b) AS qv"
-    )
-    cent_m = _pq_centroid_slices(
-        resid.select("vec_id", "qv"), k_cent, pq_stride
-    )
-    codes = _pq_codes(
-        resid.select("vec_id", "qv"), cent_m, n_rows=k_cent * pq_stride
-    )
-    probes = stage(
-        _gemm_probe_topm(
-            e.filter(KNN_QUERY_PRED), cents, nprobe, metric="l2",
-            n_queries=n_queries_bound,
-        ).select("query_id", "q_qv", "probe"),
-        "resid_probes",
-    )
-    rq = probes.join(
-        F.broadcast(cents.selectExpr("cent_id AS probe", "c_qv")),
-        "probe",
-    ).selectExpr(
-        "query_id", "probe", "zip_with(q_qv, c_qv, (a, b) -> a - b) AS rq"
-    )
-    n_queries = (
-        probes.select("query_id").distinct().count()
-        if n_queries_bound is None
-        else n_queries_bound
-    )
-    # dtab columns carry a d_ prefix so the ADC join condition can be
-    # one unambiguous F.expr string (r18 §4)
-    dtab = broadcast_if_small(
-        stage(
-            rq.crossJoin(F.broadcast(cent_m)).selectExpr(
-                "query_id AS d_query_id",
-                "probe AS d_probe",
-                "m AS d_m",
-                "j AS d_j",
-                f"{_pq_sub_dist_sql('rq')} AS d",
-            ),
-            "resid_dtab",
-        ),
-        n_queries * nprobe * PQ_M * k_cent,
-    )
-    # Q × nprobe rows — gated like every runtime-sized broadcast
-    # (ADVICE r11: same class as the dtab gate two lines up)
-    cand = (
-        broadcast_if_small(probes.select("query_id", "probe"), n_queries * nprobe)
-        .join(
-            assigned.select("vec_id", "cluster"),
-            F.expr("cluster = probe AND vec_id != query_id"),
-        )
-        .selectExpr("query_id", "probe", "vec_id AS neighbor_id")
-    )
-    adc = (
-        cand.join(codes, F.expr("neighbor_id = vec_id"))
-        .join(
-            dtab,
-            F.expr(
-                "d_query_id = query_id AND d_probe = probe"
-                " AND d_m = m AND d_j = code"
-            ),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc"))
-    )
-    return (
-        adc.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY adc ASC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {k}")
-        .select("query_id", "neighbor_id", "rnk", "adc")
-    )
-
-
-_RESID_SQL = (
-    "list_transform(generate_series(1, 64), i -> {v}.qv[i] - {c}.c_qv[i])"
-)
-
-def _oracle_ivfpq_residual_approx(src: str | None = None) -> str:
-    """Residual-IVFADC approx-side oracle, parameterized on the
-    quantized (vec_id, qv) source (the _oracle_pq_ctes convention)."""
-    return f"""
-        WITH {_oracle_pq_ctes(src)},
-        p2 AS MATERIALIZED (
-            SELECT vec_id, qv, list_dot_product(qv, qv) AS sq FROM p
-        ),
-        ist AS (
-            SELECT greatest({IVF_MIN_STRIDE},
-                       CAST(floor(sqrt(count(*))) AS BIGINT)) AS s
-            FROM p2
-        ),
-        icent AS MATERIALIZED (
-            SELECT vec_id AS cent_id, qv AS c_qv, sq AS c_sq
-            FROM p2, ist WHERE vec_id % s = {IVF_OFFSET}
-        ),
-        assigned AS MATERIALIZED (
-            SELECT vec_id, cent_id AS cluster FROM (
-                SELECT v.vec_id, c.cent_id,
-                       row_number() OVER (PARTITION BY v.vec_id
-                           ORDER BY v.sq + c.c_sq
-                                    - 2 * list_dot_product(v.qv, c.c_qv),
-                                    c.cent_id) AS rn
-                FROM p2 v, icent c
-            ) WHERE rn = 1
-        ),
-        resid AS MATERIALIZED (
-            SELECT a.vec_id, {_RESID_SQL.format(v='v', c='c')} AS qv
-            FROM assigned a
-            JOIN p2 v ON v.vec_id = a.vec_id
-            JOIN icent c ON c.cent_id = a.cluster
-        ),
-        rcent0 AS MATERIALIZED (
-            SELECT vec_id, qv,
-                   row_number() OVER (ORDER BY vec_id) - 1 AS j
-            FROM resid, kk WHERE vec_id % stride = 0
-        ),
-        rcent AS MATERIALIZED (
-            SELECT m, j, list_slice(qv, m * 8 + 1, m * 8 + 8) AS cv
-            FROM (SELECT * FROM rcent0, kk WHERE j < k),
-                 (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)
-        ),
-        rcodes AS MATERIALIZED (
-            SELECT vec_id, m, j AS code FROM (
-                SELECT r.vec_id, c.m, c.j,
-                       row_number() OVER (
-                           PARTITION BY r.vec_id, c.m
-                           ORDER BY {_PQ_DIST_SQL.format(v='r.qv')}, c.j
-                       ) AS rn
-                FROM resid r, rcent c
-            ) WHERE rn = 1
-        ),
-        probes AS (
-            SELECT query_id, cent_id AS probe FROM (
-                SELECT q.vec_id AS query_id, c.cent_id,
-                       row_number() OVER (PARTITION BY q.vec_id
-                           ORDER BY q.sq + c.c_sq
-                                    - 2 * list_dot_product(q.qv, c.c_qv),
-                                    c.cent_id) AS rn
-                FROM p2 q, icent c WHERE q.{KNN_QUERY_PRED}
-            ) WHERE rn <= {IVF_NPROBE}
-        ),
-        rqv AS MATERIALIZED (
-            SELECT pr.query_id, pr.probe,
-                   {_RESID_SQL.format(v='q', c='c')} AS qv
-            FROM probes pr
-            JOIN p2 q ON q.vec_id = pr.query_id
-            JOIN icent c ON c.cent_id = pr.probe
-        ),
-        rqd AS MATERIALIZED (
-            SELECT rqv.query_id, rqv.probe, c.m, c.j,
-                   {_PQ_DIST_SQL.format(v='rqv.qv')} AS d
-            FROM rqv, rcent c
-        ),
-        cand AS (
-            SELECT pr.query_id, pr.probe, a.vec_id AS neighbor_id
-            FROM probes pr JOIN assigned a ON a.cluster = pr.probe
-            WHERE a.vec_id <> pr.query_id
-        ),
-        radc AS (
-            SELECT cd.query_id, cd.neighbor_id, sum(q.d) AS adc
-            FROM cand cd
-            JOIN rcodes ON rcodes.vec_id = cd.neighbor_id
-            JOIN rqd q ON q.query_id = cd.query_id
-                      AND q.probe = cd.probe
-                      AND q.m = rcodes.m AND q.j = rcodes.code
-            GROUP BY 1, 2
-        )
-        SELECT query_id, neighbor_id FROM (
-            SELECT query_id, neighbor_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY adc, neighbor_id) AS rnk
-            FROM radc
-        ) WHERE rnk <= {KNN_K}
-"""
-
-
-_ORACLE_IVFPQ_RESIDUAL_APPROX = _oracle_ivfpq_residual_approx()
-
-
-@register(
-    "q_ivfpq_residual_recall",
-    oracle=f"""
-        WITH exact AS ({_ORACLE_KNN_L2}),
-        approx AS ({_ORACLE_IVFPQ_RESIDUAL_APPROX}),
-        hits AS (
-            SELECT e.query_id, count(a.neighbor_id) AS n_hit
-            FROM exact e LEFT JOIN approx a
-              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        )
-        SELECT query_id,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
-        FROM hits
-    """,
-    doc="Residual IVF+PQ (true IVFADC): PQ codebooks over exact "
-    "integer residuals (vector - cell centroid), per-(query, cell) "
-    "distance tables — the deployed corpus-scale shape, fully "
-    "oracle-checked via stride-sampled residual codebooks (C3).",
-)
-def q_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of residual IVFADC vs the exact L2 slot — completes
-    the ANN ladder's top rung: raw-code IVF+PQ (q_ivfpq_recall) vs
-    this residual variant published side by side shows what residual
-    quantization buys at the same codebook budget.
-
-    Honest finding (the q_pq_recall_normalized convention): on THIS
-    fixture residual recall is parity-to-slightly-below raw
-    (0.18/0.20 vs 0.20/0.26 at sf0.001/0.01) — isotropic
-    uniform-random vectors give stride-sampled cells almost no
-    variance to absorb, so residual magnitudes ≈ vector magnitudes
-    and the residual codebook buys nothing. On clustered data the
-    win is real and now MEASURED (r12, q_ivfpq_residual_recall_aniso
-    on the deterministic anisotropic fixture): 0.58 / 0.555 recall
-    vs raw codes' 0.48 / 0.30 at sf0.01 / sf0.1 — the isotropic
-    parity here and the clustered win there are the two halves of
-    one correct story."""
-    e = _quantized(spark, sf_dir)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = ivfpq_residual_ann(
-        e,
-        _ivf_stride(n),
-        _pq_k(n),
-        max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-        n_rows=n,
-    )
-    return _recall_vs(
-        slot(spark, "knn_l2_topk", sf_dir, lambda: q_knn_l2(spark, sf_dir)),
-        approx,
-    )
 
 
 # ------------------------------------------- anisotropic ANN fixture
@@ -2890,13 +2371,6 @@ ANISO_SQMOD = 1_000_003       # prime: scrambles h² before the span mod
 ANISO_WNUM = 512          # w(j) numerator: per-dim noise decay
 
 
-def _midsquare(a, b):
-    """mix(a, b) = h² mod SQMOD with h = (a + b) mod PREMOD — the
-    Column form of the section comment's mid-square mix."""
-    h = (a + b) % ANISO_PREMOD
-    return (h * h) % ANISO_SQMOD
-
-
 def _aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, qv, sq) anisotropic int64 vectors derived from the
     embeddings table's vec_id space — see the section comment."""
@@ -2904,8 +2378,9 @@ def _aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spark_midsquare_sql(h: str) -> str:
-    """Spark SQL twin of :func:`_midsquare` — h appears twice (no
-    let-binding in SQL lambdas), same value either way."""
+    """The section comment's mid-square mix h² mod SQMOD, with h
+    reduced mod PREMOD, as Spark SQL — h appears twice (no let-binding
+    in SQL lambdas), same value either way."""
     return (
         f"((({h}) % {ANISO_PREMOD}) * (({h}) % {ANISO_PREMOD}))"
         f" % {ANISO_SQMOD}"
@@ -2991,26 +2466,6 @@ _ORACLE_ANISO_QUANTIZED = f"""
 """
 
 
-def _oracle_recall(exact_sql: str, approx_sql: str) -> str:
-    """The recall@k comparison oracle shared by the aniso ladder —
-    same shape as the five inline copies the isotropic queries
-    registered before this helper existed."""
-    return f"""
-        WITH exact AS ({exact_sql}),
-        approx AS ({approx_sql}),
-        hits AS (
-            SELECT e.query_id, count(a.neighbor_id) AS n_hit
-            FROM exact e LEFT JOIN approx a
-              ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-            GROUP BY e.query_id
-        )
-        SELECT query_id,
-               CAST(n_hit AS BIGINT) AS n_hit,
-               round(n_hit / {KNN_K}.0, 4) AS recall_at_k
-        FROM hits
-    """
-
-
 def _aniso_exact_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact L2 kNN over the aniso table, staged once per process —
     the shared ground-truth side of the aniso ladder (one guard
@@ -3087,222 +2542,149 @@ _ORACLE_OPQ_ANISO_QV = f"""
 """
 
 
-@register(
-    "q_opq_recall_aniso",
-    oracle=_oracle_recall(
-        _oracle_knn_l2(_ORACLE_ANISO_QUANTIZED),
-        _oracle_pq(KNN_K, src=_ORACLE_OPQ_ANISO_QV),
-    ),
-    doc="OPQ-permuted PQ recall on the anisotropic fixture — the "
-    "rotation rung of the rankable ANN ladder (C3; VERDICT r12 "
-    "ask #5).",
-)
-def q_opq_recall_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of raw-code PQ over the TRANSPOSE-PERMUTED aniso
-    table vs the unpermuted exact L2 truth — valid because a
-    permutation is orthogonal (exact kNN sets are identical either
-    side, so the staged ground-truth slot is reused as-is; pinned by
-    test_opq_permutation_preserves_exact_knn).
-
-    Measured (mean recall@10, sf0.01 N=500 / sf0.1 N=2000): see the
-    ladder table in q_pq_recall_aniso — allocation alone lifts raw
-    PQ 0.48 / 0.30 → 0.56 / 0.565, closing essentially the whole
-    raw-vs-residual gap (residual IVFADC: 0.58 / 0.555) at zero
-    runtime cost: same codebook budget, same scan, one map-side
-    array shuffle. The fixture's noise spectrum decays (j+1)⁻², so
-    the natural layout hands ALL eight high-noise dims to subspace 0
-    whose codebook then carries ~the entire quantization error;
-    spreading them one-per-subspace lets every subspace's sampled
-    codebook resolve its one noisy dim."""
-    e_p = _opq_permute(_aniso(spark, sf_dir))
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = pq_ann(
-        e_p, _pq_k(n), max(1, n // _pq_k(n)), n_queries_bound=n // 100 + 1
-    )
-    return _recall_vs(_aniso_exact_slot(spark, sf_dir), approx)
+# ------------------------------------------------------- the ADC ladder
+#
+# The recall@k evaluations are rows of one (fixture × search) table;
+# each row's builder and oracle are generated from the same fixture
+# and AdcSpec. Measured mean recall@10, sf0.01 / sf0.1 (N = 500 /
+# 2000; sf0.001 shares N = 500):
+#
+#   isotropic   IVF+PQ 0.26 (sf0.01)   residual IVFADC 0.20 (sf0.01)
+#   aniso       PQ 0.48 / 0.300        IVF+PQ 0.48 / 0.305
+#               normalized PQ 0.54 / 0.285   residual 0.58 / 0.555
+#   aniso OPQ   PQ 0.56 / 0.565        residual 0.68 / 0.840
+#
+# Uniform-random vectors leave cells and residual codebooks nothing
+# to exploit, so the isotropic rungs sit at parity. On the clustered
+# fixture probing cells costs no recall, normalization is a wash,
+# and residual codebooks and the OPQ allocation each remove a
+# different error term, so together they compound.
 
 
-@register(
-    "q_opq_residual_recall_aniso",
-    oracle=_oracle_recall(
-        _oracle_knn_l2(_ORACLE_ANISO_QUANTIZED),
-        _oracle_ivfpq_residual_approx(src=_ORACLE_OPQ_ANISO_QV),
-    ),
-    doc="OPQ allocation + residual codebooks composed — the top rung "
-    "of the rankable ANN ladder (C3; registered r14 in the slot "
-    "freed by retiring the isotropic normalized-recall twin).",
-)
-def q_opq_residual_recall_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ladder's composition rung — residual IVFADC over the
-    TRANSPOSE-PERMUTED aniso table: does balanced allocation stack
-    with residual codebooks? Valid against the unpermuted exact slot
-    for the same orthogonality reason as q_opq_recall_aniso, and the
-    IVF stage is untouched by the permutation (coarse assignment is
-    full-64-dim L2, which a permutation preserves, and the
-    stride-sampled centroid set depends on vec_id only — so cells,
-    probes and residual magnitudes are identical; ONLY the residual
-    PQ's dim→subspace allocation changes).
+class AdcFixture(NamedTuple):
+    """A lineage the ladder searches, its staged exact-L2 top-k slot,
+    and the DuckDB twins of both."""
 
-    Shipped unregistered in r13 (rotation saturation, NOTES_r13 §10);
-    REGISTERED in r14 with the declared oracle — the
-    q_ivfpq_residual_recall_aniso SQL over the _ORACLE_OPQ_ANISO_QV
-    source — in the window slot freed by folding
-    q_pq_recall_normalized into its aniso twin (VERDICT r13 "Next
-    round" #1). Measured (mean recall@10, N=500 / N=2000):
-    **0.68 / 0.84** — allocation and residual COMPOSE, and
-    super-additively at N=2000 (residual-only 0.58 / 0.555, OPQ-only
-    0.56 / 0.565, raw 0.48 / 0.30): residuals shrink the cube every
-    codebook must cover while the balanced allocation stops subspace
-    0 from hoarding the fixture's (j+1)⁻² noise octaves — each fix
-    removes a DIFFERENT error term, so together they compound
-    (pinned by test_opq_residual_composition_rung)."""
-    e_p = _opq_permute(_aniso(spark, sf_dir))
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = ivfpq_residual_ann(
-        e_p,
-        _ivf_stride(n),
-        _pq_k(n),
-        max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-        n_rows=n,
-    )
-    return _recall_vs(_aniso_exact_slot(spark, sf_dir), approx)
+    lineage: Callable[[SparkSession, str], DataFrame]
+    exact: Callable[[SparkSession, str], DataFrame]
+    src_sql: str
+    exact_sql: str
 
 
-@register(
-    "q_pq_recall_aniso",
-    oracle=_oracle_recall(
-        _oracle_knn_l2(_ORACLE_ANISO_QUANTIZED),
-        _oracle_pq(KNN_K, src=_ORACLE_ANISO_QV),
-    ),
-    doc="PQ recall on the anisotropic fixture — the raw-code rung of "
-    "the rankable ANN ladder (C3; VERDICT r11 ask #1).",
-)
-def q_pq_recall_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of raw-code PQ over the anisotropic table vs its
-    exact L2 truth — the ladder's baseline rung.
-
-    Measured ladder (mean recall@10, sf0.01 N=500 / sf0.1 N=2000 —
-    sf0.001 and sf0.01 share N=500 and therefore the fixture, which
-    depends on vec_id only):
-        raw PQ          0.48 / 0.300   (this query)
-        normalized PQ   0.54 / 0.285
-        IVF+PQ          0.48 / 0.305
-        OPQ-permuted PQ 0.56 / 0.565   (r13 rung)
-        residual IVFADC 0.58 / 0.555
-        OPQ + residual  0.68 / 0.840   (r13, unregistered — §10)
-    The r11 isotropic parity is BROKEN, in the direction theory
-    predicts: residual codebooks win decisively on clustered data
-    (+0.10 / +0.25 over raw at the same codebook budget) because
-    cells absorb the lattice span and the codebook quantizes only
-    the noise cube; IVF probing costs ~nothing next to full-scan
-    codes; integer-grid normalization is a wash on this geometry
-    (+0.06 / −0.015 — its real job is the cosine/L2 metric bridge,
-    not recall). The r13 OPQ rung shows the gap was an ALLOCATION
-    artifact more than a residual win: transpose-permuting dims
-    one-noisy-per-subspace recovers nearly all of residual's edge at
-    N=500 (0.56 vs 0.58) and EXCEEDS it at N=2000 (0.565 vs 0.555)
-    — at zero extra runtime or storage (see q_opq_recall_aniso)."""
-    e_a = _aniso(spark, sf_dir)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = pq_ann(
-        e_a, _pq_k(n), max(1, n // _pq_k(n)), n_queries_bound=n // 100 + 1
-    )
-    return _recall_vs(_aniso_exact_slot(spark, sf_dir), approx)
+def _aniso_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _opq_permute(_aniso(spark, sf_dir))
 
 
-@register(
-    "q_pq_recall_normalized_aniso",
-    oracle=_oracle_recall(
-        _oracle_knn_l2(
-            f"SELECT vec_id, qv, list_dot_product(qv, qv) AS sq "
-            f"FROM ({_oracle_norm_qv(_ORACLE_ANISO_QUANTIZED)})"
-        ),
-        _oracle_pq(KNN_K, src=_oracle_norm_qv(_ORACLE_ANISO_QUANTIZED)),
-    ),
-    doc="PQ recall on the L2-normalized anisotropic fixture — the "
-    "normalization rung of the rankable ANN ladder (C3).",
-)
-def q_pq_recall_normalized_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of PQ over the integer-grid-normalized aniso table
-    vs exact L2 truth over the same table. Measured 0.54 / 0.285
-    (sf0.01 / sf0.1) vs raw 0.48 / 0.300 — a wash either side of
-    raw: on clustered data normalization's value is the metric
-    bridge (cosine ≡ L2 post-norm), not a recall lever; the ladder's
-    recall lever is the residual rung (see q_pq_recall_aniso for the
-    full measured table)."""
-    e_na = _l2_normalize(_aniso(spark, sf_dir))
-    n = table_row_count(spark, sf_dir, "embeddings")
-    exact = slot(
+def _aniso_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _l2_normalize(_aniso(spark, sf_dir))
+
+
+def _aniso_norm_exact_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return slot(
         spark,
         "knn_l2_aniso_norm_topk",
         sf_dir,
-        lambda: _knn_l2_topk(e_na, "knn_l2_aniso_norm", n_rows=n),
+        lambda: _knn_l2_topk(
+            _aniso_norm(spark, sf_dir),
+            "knn_l2_aniso_norm",
+            n_rows=table_row_count(spark, sf_dir, "embeddings"),
+        ),
     )
-    approx = pq_ann(
-        e_na, _pq_k(n), max(1, n // _pq_k(n)), n_queries_bound=n // 100 + 1
-    )
-    return _recall_vs(exact, approx)
 
 
-@register(
-    "q_ivfpq_recall_aniso",
-    oracle=_oracle_recall(
-        _oracle_knn_l2(_ORACLE_ANISO_QUANTIZED),
-        _oracle_ivfpq_approx(src=_ORACLE_ANISO_QV),
-    ),
-    doc="IVF+PQ recall on the anisotropic fixture — the "
-    "probed-cells rung of the rankable ANN ladder (C3).",
+_ORACLE_ANISO_KNN_L2 = _oracle_knn_l2(_ORACLE_ANISO_QUANTIZED)
+_ORACLE_ANISO_NORM_QV = _oracle_norm_qv(_ORACLE_ANISO_QUANTIZED)
+
+_ISO = AdcFixture(
+    _quantized, _l2_exact_slot, _ORACLE_QUANTIZED, _ORACLE_KNN_L2
 )
-def q_ivfpq_recall_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of the IVF+PQ composition over the aniso table vs
-    its exact L2 truth — raw codes scanned in probed cells only.
-    Measured 0.48 / 0.305 (sf0.01 / sf0.1) vs full-scan raw PQ's
-    0.48 / 0.300: on clustered data the nprobe cells hold
-    essentially all of ADC's top-k, so the ~nprobe/C candidate cut
-    is recall-free — the result that justifies IVF+PQ as the
-    deployment default (see q_pq_recall_aniso for the full table)."""
-    e_a = _aniso(spark, sf_dir)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = ivfpq_ann(
-        e_a,
-        _ivf_stride(n),
-        _pq_k(n),
-        max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-        n_rows=n,
-    )
-    return _recall_vs(_aniso_exact_slot(spark, sf_dir), approx)
-
-
-@register(
-    "q_ivfpq_residual_recall_aniso",
-    oracle=_oracle_recall(
-        _oracle_knn_l2(_ORACLE_ANISO_QUANTIZED),
-        _oracle_ivfpq_residual_approx(src=_ORACLE_ANISO_QV),
-    ),
-    doc="Residual IVFADC recall on the anisotropic fixture — the "
-    "residual-codebook rung of the rankable ANN ladder (C3).",
+_ANISO = AdcFixture(
+    _aniso, _aniso_exact_slot, _ORACLE_ANISO_QV, _ORACLE_ANISO_KNN_L2
 )
-def q_ivfpq_residual_recall_aniso(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """recall@k of residual IVFADC over the aniso table vs its exact
-    L2 truth — the rung residual codebooks exist for: cells absorb
-    the lattice span, the codebook quantizes only the noise cube.
-    Measured 0.58 / 0.555 (sf0.01 / sf0.1) — the ladder's decisive
-    top, +0.10 / +0.25 recall over raw codes at the SAME codebook
-    budget, and at sf0.1 it holds 0.555 while every raw-code rung
-    drops to ~0.30 as the candidate pool densifies. This is the
-    measurement the r11 isotropic fixture could not produce (see
-    q_pq_recall_aniso for the full table and
-    q_ivfpq_residual_recall for the isotropic parity finding)."""
-    e_a = _aniso(spark, sf_dir)
-    n = table_row_count(spark, sf_dir, "embeddings")
-    approx = ivfpq_residual_ann(
-        e_a,
-        _ivf_stride(n),
-        _pq_k(n),
-        max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-        n_rows=n,
+# a permutation is orthogonal, so exact kNN is unchanged: the OPQ rows
+# keep the unpermuted aniso ground truth
+_ANISO_OPQ = AdcFixture(
+    _aniso_opq, _aniso_exact_slot, _ORACLE_OPQ_ANISO_QV, _ORACLE_ANISO_KNN_L2
+)
+_ANISO_NORM = AdcFixture(
+    _aniso_norm,
+    _aniso_norm_exact_slot,
+    _ORACLE_ANISO_NORM_QV,
+    _oracle_knn_l2(
+        "SELECT vec_id, qv, list_dot_product(qv, qv) AS sq "
+        f"FROM ({_ORACLE_ANISO_NORM_QV})"
+    ),
+)
+
+
+def _ladder_recall(fixture: AdcFixture, spec: AdcSpec):
+    """Builder: recall@k of ``spec``'s search over ``fixture`` against
+    the fixture's exact slot."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        n = table_row_count(spark, sf_dir, "embeddings")
+        approx = adc_search(fixture.lineage(spark, sf_dir), n, spec)
+        return _recall_vs(fixture.exact(spark, sf_dir), approx)
+
+    return build
+
+
+def _ladder_oracle(fixture: AdcFixture, spec: AdcSpec) -> str:
+    return _oracle_recall(
+        fixture.exact_sql, _oracle_adc(fixture.src_sql, spec)
     )
-    return _recall_vs(_aniso_exact_slot(spark, sf_dir), approx)
+
+
+_ADC_LADDER = (
+    (
+        "q_ivfpq_recall", _ISO, ADC_IVFPQ,
+        "IVF+PQ composed ANN (coarse cells + in-cell ADC — the "
+        "corpus-scale deployment shape): per-query recall@k vs the exact "
+        "L2 truth, scan fraction ~nprobe/C at 32-64x compressed bytes "
+        "per scanned vector (C3).",
+    ),
+    (
+        "q_ivfpq_residual_recall", _ISO, ADC_IVFADC,
+        "Residual IVF+PQ (true IVFADC): PQ codebooks over exact "
+        "integer residuals (vector - cell centroid), per-(query, cell) "
+        "distance tables — the deployed corpus-scale shape, fully "
+        "oracle-checked via stride-sampled residual codebooks (C3).",
+    ),
+    (
+        "q_pq_recall_aniso", _ANISO, ADC_PQ,
+        "PQ recall on the anisotropic fixture — the raw-code rung of "
+        "the rankable ANN ladder (C3; VERDICT r11 ask #1).",
+    ),
+    (
+        "q_pq_recall_normalized_aniso", _ANISO_NORM, ADC_PQ,
+        "PQ recall on the L2-normalized anisotropic fixture — the "
+        "normalization rung of the rankable ANN ladder (C3).",
+    ),
+    (
+        "q_ivfpq_recall_aniso", _ANISO, ADC_IVFPQ,
+        "IVF+PQ recall on the anisotropic fixture — the "
+        "probed-cells rung of the rankable ANN ladder (C3).",
+    ),
+    (
+        "q_ivfpq_residual_recall_aniso", _ANISO, ADC_IVFADC,
+        "Residual IVFADC recall on the anisotropic fixture — the "
+        "residual-codebook rung of the rankable ANN ladder (C3).",
+    ),
+    (
+        "q_opq_recall_aniso", _ANISO_OPQ, ADC_PQ,
+        "OPQ-permuted PQ recall on the anisotropic fixture — the "
+        "rotation rung of the rankable ANN ladder (C3; VERDICT r12 "
+        "ask #5).",
+    ),
+    (
+        "q_opq_residual_recall_aniso", _ANISO_OPQ, ADC_IVFADC,
+        "OPQ allocation + residual codebooks composed — the top rung "
+        "of the rankable ANN ladder (C3; registered r14 in the slot "
+        "freed by retiring the isotropic normalized-recall twin).",
+    ),
+)
+
+for _name, _fixture, _spec, _doc in _ADC_LADDER:
+    register(_name, oracle=_ladder_oracle(_fixture, _spec), doc=_doc)(
+        _ladder_recall(_fixture, _spec)
+    )

@@ -70,12 +70,12 @@ def _batch(spark, sf_dir, ratio: float, drift: bool, id_offset: int):
     ratio slice is hash-uniform over the (arbitrary) id space, not
     a prefix — prefix slicing assumes contiguous ids, which the
     rehearsal table does not have."""
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.similarity import (
         ANISO_HALF,
         ANISO_SCALE,
         _aniso_from,
         _opq_permute,
-        sq_norm,
     )
     from mapreduceapp_spark.sources import load_table
 
@@ -87,10 +87,9 @@ def _batch(spark, sf_dir, ratio: float, drift: bool, id_offset: int):
     a = _aniso_from(e)
     if drift:
         delta = (ANISO_HALF * ANISO_SCALE) // 2
-        a = a.select(
-            "vec_id",
-            F.transform("qv", lambda x: x + F.lit(delta)).alias("qv"),
-        ).withColumn("sq", sq_norm(F.col("qv")))
+        a = a.selectExpr(
+            "vec_id", f"transform(qv, x -> x + {delta}) AS qv"
+        ).selectExpr("*", f"{sq_norm_sql('qv')} AS sq")
     b = _opq_permute(a)
     return b, b.count()
 

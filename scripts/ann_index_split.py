@@ -3,7 +3,7 @@
 The number the persisted format exists for: the BUILD (assign GEMM +
 residual codebook + encode + partitioned write — the corpus-compaction
 event) paid once, against the steady-state PROBE wall (query-side GEMM
-+ pruned reads + ADC), read beside the in-plan `ivfpq_residual_ann`
++ pruned reads + ADC), read beside the in-plan `adc_search`
 wall that re-derives the corpus side every process.
 
 Runs against the sf1 rehearsal data (build it first via
@@ -43,12 +43,11 @@ def main() -> None:
         write_ann_index,
     )
     from mapreduceapp_spark.operators.similarity import (
+        ADC_IVFADC,
         KNN_QUERY_PRED,
         _aniso,
-        _ivf_stride,
         _opq_permute,
-        _pq_k,
-        ivfpq_residual_ann,
+        adc_search,
     )
     from mapreduceapp_spark.session import get_spark
     from mapreduceapp_spark.sources.parquet import table_row_count
@@ -99,14 +98,7 @@ def main() -> None:
         # the in-plan twin, same lineage: first call = its own cold
         # (kernel warm-in shared with the build above), then warm reps
         def inplan():
-            return ivfpq_residual_ann(
-                e_p,
-                _ivf_stride(n),
-                _pq_k(n),
-                max(1, n // _pq_k(n)),
-                n_queries_bound=nq_bound,
-                n_rows=n,
-            )
+            return adc_search(e_p, n, ADC_IVFADC)
 
         t0 = time.perf_counter()
         inplan_rows = sorted(map(tuple, inplan().collect()))

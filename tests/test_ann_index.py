@@ -21,13 +21,14 @@ from mapreduceapp_spark.operators.ann_index import (
     write_ann_index,
 )
 from mapreduceapp_spark.operators.similarity import (
+    ADC_IVFADC,
     KNN_QUERY_PRED,
     PQ_M,
     _aniso,
     _ivf_stride,
     _opq_permute,
     _pq_k,
-    ivfpq_residual_ann,
+    adc_search,
 )
 from mapreduceapp_spark.sources.parquet import table_row_count
 
@@ -61,14 +62,7 @@ def test_probe_equals_inplan_twin(spark, sf_dir):
     twin and the adopted oracle identity."""
     e_p = _lineage(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")
-    inplan = ivfpq_residual_ann(
-        e_p,
-        _ivf_stride(n),
-        _pq_k(n),
-        max(1, n // _pq_k(n)),
-        n_queries_bound=n // 100 + 1,
-        n_rows=n,
-    )
+    inplan = adc_search(e_p, n, ADC_IVFADC)
     probed = probe_ann_index(
         spark,
         _ann_index_slot(spark, sf_dir),
@@ -598,7 +592,7 @@ def test_drift_ratio_separates_drifted_appends(spark, sf_dir, tmp_path):
     same-distribution appends cost ≤0.02 recall even at 100% of
     corpus size — appended DRIFT is; this pins that the recorded
     signal actually separates the two regimes on the fixture."""
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.ann_index import (
         ann_index_drift_ratio,
         append_ann_index,
@@ -625,7 +619,7 @@ def test_drift_ratio_separates_drifted_appends(spark, sf_dir, tmp_path):
     shifted = batch.select(
         "vec_id",
         F.transform("qv", lambda x: x + F.lit(delta)).alias("qv"),
-    ).withColumn("sq", sq_norm(F.col("qv")))
+    ).withColumn("sq", F.expr(sq_norm_sql("qv")))
     append_ann_index(spark, drifted, shifted)
     r_drift = ann_index_drift_ratio(drifted)
 
@@ -644,7 +638,7 @@ def test_recompact_invalidates_meta_before_rebuild(
     of a half-overwritten index whose stale complete:true meta (and
     stale manifests over deleted files) still validates."""
     import mapreduceapp_spark.operators.ann_index as amod
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.ann_index import (
         _meta_path,
         append_ann_index,
@@ -664,7 +658,7 @@ def test_recompact_invalidates_meta_before_rebuild(
     delta = (ANISO_HALF * ANISO_SCALE) // 2
     shifted = batch.select(
         "vec_id", F.transform("qv", lambda x: x + F.lit(delta)).alias("qv")
-    ).withColumn("sq", sq_norm(F.col("qv")))
+    ).withColumn("sq", F.expr(sq_norm_sql("qv")))
     append_ann_index(spark, path, shifted)
 
     def boom(*a, **k):
@@ -695,7 +689,7 @@ def test_maybe_recompact_consumes_drift_trigger(spark, sf_dir, tmp_path):
     NOT trigger recompaction; a drifted append (ratio >> 2) must —
     and the rebuild over the current full corpus restores a fresh
     log, a unit drift baseline, and serves the union."""
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.ann_index import (
         ann_index_drift_ratio,
         ann_index_state,
@@ -723,7 +717,7 @@ def test_maybe_recompact_consumes_drift_trigger(spark, sf_dir, tmp_path):
     shifted = batch.select(
         (F.col("vec_id") + 200_000).alias("vec_id"),
         F.transform("qv", lambda x: x + F.lit(delta)).alias("qv"),
-    ).withColumn("sq", sq_norm(F.col("qv")))
+    ).withColumn("sq", F.expr(sq_norm_sql("qv")))
     append_ann_index(spark, path, shifted)
     assert ann_index_drift_ratio(path) > 2.0
     full = union.unionByName(shifted)

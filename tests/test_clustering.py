@@ -34,7 +34,7 @@ def test_kmeans_round2_reduces_inertia(spark, sf_dir):
     vectors, as an independent check of the two-round plan)."""
     import numpy as np
 
-    from mapreduceapp_spark.functions.vectors import quantize
+    from mapreduceapp_spark.functions.vectors import quantize_sql
     from mapreduceapp_spark.operators.clustering import KM_OFFSET, _km_stride
     from mapreduceapp_spark.sources import tables
     from mapreduceapp_spark.sources.parquet import table_row_count
@@ -43,7 +43,7 @@ def test_kmeans_round2_reduces_inertia(spark, sf_dir):
 
     e = (
         tables(spark, sf_dir)
-        .embeddings.select("vec_id", quantize("embedding").alias("x"))
+        .embeddings.selectExpr("vec_id", f"{quantize_sql('embedding')} AS x")
         .collect()
     )
     ids = np.array([r["vec_id"] for r in e])
@@ -75,7 +75,7 @@ def test_semantic_prune_sound_and_nonvacuous(spark, sf_dir):
     pruned."""
     import numpy as np
 
-    from mapreduceapp_spark.functions.vectors import quantize
+    from mapreduceapp_spark.functions.vectors import quantize_sql
     from mapreduceapp_spark.operators.clustering import SEM_COS_THRESHOLD
     from mapreduceapp_spark.plans.registry import get_query
     from mapreduceapp_spark.sources import tables
@@ -94,7 +94,7 @@ def test_semantic_prune_sound_and_nonvacuous(spark, sf_dir):
 
     e = (
         tables(spark, sf_dir)
-        .embeddings.select("vec_id", quantize("embedding").alias("x"))
+        .embeddings.selectExpr("vec_id", f"{quantize_sql('embedding')} AS x")
         .collect()
     )
     ids = np.array([r["vec_id"] for r in e])

@@ -500,12 +500,12 @@ def test_knn_gemm_parity_law(spark, vecs):
     predicate, so seed vec_ids across the 0/100/200… boundary)."""
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.similarity import _knn_l2_topk
 
     rows = [(i * 50, v) for i, v in enumerate(vecs)]  # half are queries
     df = spark.createDataFrame(rows, "vec_id long, qv array<long>")
-    e = df.withColumn("sq", sq_norm(F.col("qv")))
+    e = df.withColumn("sq", F.expr(sq_norm_sql("qv")))
     a = sorted(map(tuple, _knn_l2_topk(e, "prop_sql", n_rows=None).collect()))
     b = sorted(map(tuple, _knn_l2_topk(e, "prop_gemm", n_rows=10**9).collect()))
     assert a == b

@@ -480,12 +480,16 @@ def test_pq_rerank_dominates_raw_codes(spark, sf_dir):
     R-candidate shortlist, so exact reranking can only add hits."""
     from mapreduceapp_spark.plans.registry import get_query
 
-    from mapreduceapp_spark.operators.similarity import q_pq_recall
+    from mapreduceapp_spark.operators.similarity import (
+        _ISO,
+        ADC_PQ,
+        _ladder_recall,
+    )
 
-    # q_pq_recall is library surface since its r15 retirement — the
-    # invariant it feeds here is unchanged, so call it directly
+    # raw-code recall: the ladder's isotropic × PQ row (unregistered)
     raw = {
-        r.query_id: r.n_hit for r in q_pq_recall(spark, sf_dir).collect()
+        r.query_id: r.n_hit
+        for r in _ladder_recall(_ISO, ADC_PQ)(spark, sf_dir).collect()
     }
     rer = {
         r.query_id: r.n_hit
@@ -540,7 +544,7 @@ def test_pq_code_is_argmin_of_subspace_distances(spark, sf_dir):
     # recompute the plan's codes for 3 vectors via the same pq plan
     from pyspark.sql import functions as F
     from mapreduceapp_spark.operators.similarity import (
-        _pq_sub_dist,
+        _pq_sub_dist_sql,
         _quantized,
     )
     from pyspark.sql import Window
@@ -560,7 +564,7 @@ def test_pq_code_is_argmin_of_subspace_distances(spark, sf_dir):
     )
     some = qdf.filter(F.col("vec_id").isin([1, 7, 13])).select("vec_id", "qv")
     scored = some.crossJoin(F.broadcast(cent_m)).select(
-        "vec_id", "m", "j", _pq_sub_dist(F.col("qv"), F.col("m")).alias("d")
+        "vec_id", "m", "j", F.expr(_pq_sub_dist_sql("qv")).alias("d")
     )
     got = {
         (r.vec_id, r.m): r.code
@@ -593,11 +597,11 @@ def test_normalized_vectors_are_unit_on_the_grid(spark, sf_dir):
 
     from mapreduceapp_spark.operators.similarity import (
         NORM_SCALE,
-        _normalized,
+        _l2_normalize,
         _quantized,
     )
 
-    e_n = _normalized(spark, sf_dir)
+    e_n = _l2_normalize(_quantized(spark, sf_dir))
     n0 = _quantized(spark, sf_dir).count()
     stats = e_n.agg(
         F.count(F.lit(1)).alias("n"),
@@ -619,10 +623,15 @@ def test_ivfpq_recall_bounded_by_pq(spark, sf_dir):
     from mapreduceapp_spark.operators.similarity import KNN_K
     from mapreduceapp_spark.plans.registry import get_query
 
-    from mapreduceapp_spark.operators.similarity import q_pq_recall
+    from mapreduceapp_spark.operators.similarity import (
+        _ISO,
+        ADC_PQ,
+        _ladder_recall,
+    )
 
     pq = {
-        r.query_id: r.n_hit for r in q_pq_recall(spark, sf_dir).collect()
+        r.query_id: r.n_hit
+        for r in _ladder_recall(_ISO, ADC_PQ)(spark, sf_dir).collect()
     }
     comp = {
         r.query_id: r.n_hit
@@ -683,15 +692,16 @@ def test_aniso_fixture_geometry(spark, sf_dir):
         ANISO_CLUSTERS,
         ANISO_GMUL,
         ANISO_GSEED,
+        ANISO_PREMOD,
+        ANISO_SQMOD,
         _aniso,
         _knn_l2_topk,
-        _midsquare,
     )
 
     e = _aniso(spark, sf_dir)
     assert dict(e.dtypes)["qv"] == "array<bigint>"
-    g = (_midsquare((F.col("vec_id") + 1) * ANISO_GMUL, F.lit(ANISO_GSEED))
-         % ANISO_CLUSTERS).alias("g")
+    h = ((F.col("vec_id") + 1) * ANISO_GMUL + ANISO_GSEED) % ANISO_PREMOD
+    g = ((h * h) % ANISO_SQMOD % ANISO_CLUSTERS).alias("g")
     occupancy = e.select(g).distinct().count()
     assert occupancy == ANISO_CLUSTERS
     top1 = (
@@ -942,12 +952,12 @@ def test_knn_cosine_zero_norm_fails_on_both_plans(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.similarity import _knn_cos_topk
 
     rows = [(0, [0] * 64), (1, [1] * 64), (2, [2] * 64), (3, [5] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, qv array<long>")
-    e = df.withColumn("sq", sq_norm(F.col("qv")))
+    e = df.withColumn("sq", F.expr(sq_norm_sql("qv")))
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         _knn_cos_topk(e, "z_sql", "x", n_rows=None).collect()
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
@@ -970,13 +980,13 @@ def test_knn_l2_gemm_overflow_guard(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.similarity import _knn_l2_topk
 
     big = 3 * 10**8  # sq fits int64; > 1.89e8 kernel headroom bound
     rows = [(0, [big] * 64), (1, [1] * 64), (2, [2] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, qv array<long>")
-    e = df.withColumn("sq", sq_norm(F.col("qv")))
+    e = df.withColumn("sq", F.expr(sq_norm_sql("qv")))
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
         _knn_l2_topk(e, "ovf_gemm", n_rows=10**9).collect()
 
@@ -993,13 +1003,13 @@ def test_knn_l2_gemm_headroom_boundary_exact(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.similarity import _knn_l2_topk
 
     b = 189_000_000
     rows = [(0, [b] * 64), (1, [-b] * 64), (2, [1] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, qv array<long>")
-    e = df.withColumn("sq", sq_norm(F.col("qv")))
+    e = df.withColumn("sq", F.expr(sq_norm_sql("qv")))
     sql_rows = sorted(
         map(tuple, _knn_l2_topk(e, "hb_sql", n_rows=None).collect())
     )
@@ -1010,7 +1020,7 @@ def test_knn_l2_gemm_headroom_boundary_exact(spark):
 
     rows_over = [(0, [b + 1] + [b] * 63), (1, [-b] * 64), (2, [1] * 64)]
     df_o = spark.createDataFrame(rows_over, "vec_id long, qv array<long>")
-    e_o = df_o.withColumn("sq", sq_norm(F.col("qv")))
+    e_o = df_o.withColumn("sq", F.expr(sq_norm_sql("qv")))
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
         _knn_l2_topk(e_o, "hb_gemm_over", n_rows=10**9).collect()
 
@@ -1026,12 +1036,12 @@ def test_knn_cosine_gemm_overflow_guard(spark):
     import pytest
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.vectors import sq_norm
+    from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.similarity import _knn_cos_topk
 
     rows = [(0, [10**9] + [1] * 63), (1, [1] * 64), (2, [2] * 64)]
     df = spark.createDataFrame(rows, "vec_id long, qv array<long>")
-    e = df.withColumn("sq", sq_norm(F.col("qv")))
+    e = df.withColumn("sq", F.expr(sq_norm_sql("qv")))
     with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
         _knn_cos_topk(e, "cos_ovf_gemm", "x", n_rows=10**9).collect()
 
@@ -1125,13 +1135,13 @@ def test_opq_residual_composition_rung(spark, sf_dir):
     measured 0.68 vs 0.58/0.56 at N=500 (and 0.84 vs 0.555/0.565 at
     N=2000). Pinned as strict total-hit inequalities like the other
     ladder pins."""
-    from mapreduceapp_spark.operators.similarity import (
-        q_opq_residual_recall_aniso,
-    )
     from mapreduceapp_spark.plans.registry import get_query
 
     both = sum(
-        r.n_hit for r in q_opq_residual_recall_aniso(spark, sf_dir).collect()
+        r.n_hit
+        for r in get_query("q_opq_residual_recall_aniso")
+        .builder(spark, sf_dir)
+        .collect()
     )
     residual_only = sum(
         r.n_hit
@@ -1145,3 +1155,33 @@ def test_opq_residual_composition_rung(spark, sf_dir):
     )
     assert both >= residual_only + 2, (both, residual_only)
     assert both >= opq_only + 2, (both, opq_only)
+
+
+# (row count, sum(n_hit)) per ADC-family query at sf0.001 — sum(adc)
+# for q_pq_ann, which returns neighbors, not recall. A change that
+# moves a Spark plan and its composed oracle together passes the
+# oracle check; it cannot pass these pins.
+_ADC_FAMILY_SF0001 = {
+    "q_ivfpq_recall": (5, 10),
+    "q_ivfpq_residual_recall": (5, 9),
+    "q_pq_recall_aniso": (5, 24),
+    "q_pq_recall_normalized_aniso": (5, 27),
+    "q_ivfpq_recall_aniso": (5, 24),
+    "q_ivfpq_residual_recall_aniso": (5, 29),
+    "q_opq_recall_aniso": (5, 28),
+    "q_opq_residual_recall_aniso": (5, 34),
+    "q_pq_ann": (50, 58_133_561),
+    "q_pq_rerank_recall": (5, 31),
+    "q_ann_index_probe": (5, 34),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_ADC_FAMILY_SF0001))
+def test_adc_family_pinned_results(spark, sf_dir, name):
+    from mapreduceapp_spark.plans.registry import get_query
+
+    if not sf_dir.rstrip("/").endswith("sf0.001"):
+        pytest.skip("pins are recorded at sf0.001")
+    rows = get_query(name).builder(spark, sf_dir).collect()
+    col = "adc" if name == "q_pq_ann" else "n_hit"
+    assert (len(rows), sum(r[col] for r in rows)) == _ADC_FAMILY_SF0001[name]

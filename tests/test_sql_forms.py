@@ -12,16 +12,55 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mapreduceapp_spark.functions.vectors import (
-    cosine,
+    QUANT_SCALE,
     cosine_sql,
-    dot,
     dot_sql,
-    quantize,
-    sq_norm,
-    sq_norm_sql,
 )
 from mapreduceapp_spark.operators import similarity as S
 from mapreduceapp_spark.sources import tables
+
+
+# The Column-API forms the SQL strings replaced, verbatim.
+def quantize(vec):
+    v = F.col(vec) if isinstance(vec, str) else vec
+    return F.transform(
+        v, lambda x: F.round(x.cast("double") * QUANT_SCALE).cast("long")
+    )
+
+
+def dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def sq_norm(a):
+    return dot(a, a)
+
+
+def cosine(dot_ab, sq_a, sq_b):
+    return dot_ab.cast("double") / F.sqrt(
+        sq_a.cast("double") * sq_b.cast("double")
+    )
+
+
+def midsquare(a, b):
+    h = (a + b) % S.ANISO_PREMOD
+    return (h * h) % S.ANISO_SQMOD
+
+
+def pq_sub_dist(vec, m):
+    return F.aggregate(
+        F.zip_with(
+            F.slice(vec, m * S.PQ_SUBDIM + 1, S.PQ_SUBDIM),
+            F.col("cv"),
+            lambda x, y: (x - y) * (x - y),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
 
 
 def _rows(df):
@@ -59,14 +98,14 @@ def test_aniso_sql_form_matches_column_form(spark, sf_dir):
             F.lit(0).cast("long"), (F.size("embedding") - 1).cast("long")
         )
         g = (
-            S._midsquare((vid + 1) * S.ANISO_GMUL, F.lit(S.ANISO_GSEED))
+            midsquare((vid + 1) * S.ANISO_GMUL, F.lit(S.ANISO_GSEED))
             % S.ANISO_CLUSTERS
         )
         qv = F.transform(
             j_seq,
             lambda j: (
                 (
-                    S._midsquare(
+                    midsquare(
                         (g + 1) * S.ANISO_MIX_A, (j + 1) * S.ANISO_MIX_BJ
                     )
                     % S.ANISO_SPAN
@@ -74,7 +113,7 @@ def test_aniso_sql_form_matches_column_form(spark, sf_dir):
                 )
                 * S.ANISO_SCALE
                 + (
-                    S._midsquare(
+                    midsquare(
                         (vid + 1) * S.ANISO_MIX_C, (j + 1) * S.ANISO_MIX_CJ
                     )
                     % S.ANISO_NOISE_SPAN
@@ -205,7 +244,7 @@ def test_pq_sub_dist_sql_matches_column_form(spark, sf_dir):
     base = e.limit(30).crossJoin(cent_m)
     old = base.select(
         "vec_id", "m", "j",
-        S._pq_sub_dist(F.col("qv"), F.col("m")).alias("d"),
+        pq_sub_dist(F.col("qv"), F.col("m")).alias("d"),
     )
     new = base.selectExpr(
         "vec_id", "m", "j", f"{S._pq_sub_dist_sql('qv')} AS d"
