@@ -57,11 +57,11 @@ WRITE_COUNT = 0
 HIT_COUNT = 0
 
 # (name, plan semanticHash) -> lazy scan over that plan's slot, for
-# slots written by THIS process. Lets stage() skip both the rewrite
-# AND the re-read's schema-inference job when re-invoked with an
-# equivalent plan (bench re-invokes every builder 3x; pipelines may
-# call a staged builder twice). Process-local by construction: a slot
-# inherited from a previous process is never trusted.
+# slots written by THIS process. Lets stage() skip the rewrite when
+# re-invoked with an equivalent plan (bench re-invokes every builder
+# 3x; pipelines may call a staged builder twice). Process-local by
+# construction: a slot inherited from a previous process is never
+# trusted.
 _STAGED_PLANS: dict[tuple[str, int], DataFrame] = {}
 
 
@@ -88,7 +88,8 @@ def stage(df: DataFrame, name: str) -> DataFrame:
     The write is an eager Spark job (snappy parquet, the engine's
     shuffle-spill-grade codec); the returned DataFrame is a plain
     lazy parquet scan, so downstream branches each read the staged
-    bytes instead of re-deriving the lineage.
+    bytes instead of re-deriving the lineage. The read-back passes
+    ``df.schema``, so it costs no schema-inference job.
 
     Idempotent per plan: if this process already staged a
     semantically-equal plan under this name, the write is skipped and
@@ -136,7 +137,7 @@ def stage(df: DataFrame, name: str) -> DataFrame:
     WRITE_COUNT += 1
     print(f"[stage] write {name} -> {os.path.basename(path)}", file=sys.stderr)
     df.write.mode("overwrite").parquet(path)
-    scan = df.sparkSession.read.parquet(path)
+    scan = df.sparkSession.read.schema(df.schema).parquet(path)
     scan._mrapp_staged_path = path  # enables staged_row_count()
     _STAGED_PLANS[key] = scan
     return scan

@@ -12,9 +12,10 @@ pattern published in the Delta Lake paper (Armbrust et al., VLDB
 
 A manifest is the COMMIT: it lists the data files the version adds
 and removes (paths relative to the root), per-file row counts and
-min/max stats for declared columns, the snapshot version the writer
-read, and an optional (app, batch) idempotency key. Readers replay
-manifests; writers race to create the next manifest file.
+min/max stats for declared columns, the version's columns, the
+snapshot version the writer read, and an optional (app, batch)
+idempotency key. Readers replay manifests; writers race to create the
+next manifest file.
 
 Why each piece is the way it is:
 
@@ -41,6 +42,13 @@ Why each piece is the way it is:
   and a full listing — and correctness never depends on it (the
   stats columns are physically present in every file; pruning is
   pure I/O avoidance, tested by result-equality with it disabled).
+- **The log carries the schema.** Every manifest records the table's
+  declared columns as of its commit (name → Spark type JSON, copied
+  from ``_table.json``'s ``types``), so a read of version N scans its
+  files with version N's schema and never runs a footer-inference
+  job; after additive evolution, older versions keep their narrower
+  column list. Tables created before ``types`` existed write no
+  columns and keep the mergeSchema read.
 - **Exactly-once streaming.** ``txlog_foreach_batch_append`` stamps
   each commit with (app, batch_id); a replayed micro-batch (the
   foreachBatch at-least-once contract after a failure) finds its
@@ -63,6 +71,7 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from mapreduceapp_spark.plans.hints import broadcast_if_small
 from mapreduceapp_spark.plans.registry import register
@@ -143,23 +152,29 @@ def txlog_checkpoint(root: str) -> int:
     (exactly the published formats' checkpoint contract). Returns the
     checkpointed version."""
     version = txlog_versions(root)[-1]
-    live = _live_files(root, version)
+    live, columns = _live_files(root, version)
     tmp = _checkpoint_path(root, version) + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump({"version": version, "live": live}, fh)
+        json.dump({"version": version, "live": live, "columns": columns}, fh)
     os.replace(tmp, _checkpoint_path(root, version))
     return version
 
 
-def _live_files(root: str, version: int) -> dict[str, dict]:
-    """Live set at ``version``: newest checkpoint ≤ version, plus a
-    replay of the manifest tail after it."""
+def _live_files(
+    root: str, version: int
+) -> tuple[dict[str, dict], dict[str, object] | None]:
+    """Live set and columns at ``version``: newest checkpoint ≤
+    version, plus a replay of the manifest tail after it. The columns
+    are those of the newest manifest replayed (None when it predates
+    the field)."""
     live: dict[str, dict] = {}
+    columns = None
     start = 0
     ckpt = _latest_checkpoint(root, version)
     if ckpt is not None:
         start, snap = ckpt
         live = dict(snap["live"])
+        columns = snap.get("columns")
     for v in txlog_versions(root):
         if v <= start:
             continue
@@ -170,7 +185,8 @@ def _live_files(root: str, version: int) -> dict[str, dict]:
             live.pop(rel, None)
         for add in m["adds"]:
             live[add["path"]] = add
-    return live
+        columns = m.get("columns")
+    return live, columns
 
 
 # File-level bloom filters: 8192 bits (1 KiB hex in the manifest) and
@@ -334,6 +350,7 @@ def _commit(
     # during it never collides with our manifest create, so the
     # collision handler alone would miss it
     version = (txlog_versions(root) or [0])[-1] + 1
+    columns = _table_meta(root).get("types")
     ours = set(removes)
     for v in txlog_versions(root):
         # txn duplicates are checked against every version the CALLER
@@ -365,6 +382,7 @@ def _commit(
             "read_version": read_version,
             "adds": adds,
             "removes": removes,
+            "columns": columns,
             "txn": list(txn) if txn else None,
         }
         try:
@@ -418,19 +436,36 @@ def txlog_create(
         "stats_cols": stats_cols,
         "bloom_cols": bloom_cols,
         "columns": {f.name: f.dataType.simpleString() for f in df.schema},
+        "types": _types(df),
     }
     with open(os.path.join(_log_dir(root), "_table.json"), "w") as fh:
         json.dump(meta, fh)
     return _commit(root, adds, [], "create", 0)
 
 
-def _scan(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """All txlog file scans merge schemas: after additive evolution
-    the live set legitimately mixes file schemas, and rows from
-    pre-evolution files must surface the new columns as nulls. The
-    cost is per-file footer reads at planning — the file list is
-    already manifest-pruned."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
+def _types(df: DataFrame) -> dict[str, object]:
+    """Column name → Spark type as JSON: the form the log records, so
+    a read rebuilds the exact schema (nested field names included)."""
+    return {f.name: f.dataType.jsonValue() for f in df.schema}
+
+
+def _scan(
+    spark: SparkSession, paths: list[str], columns: dict[str, object] | None
+) -> DataFrame:
+    """Scan txlog data files with the columns the log recorded for the
+    version being read. After additive evolution the files mix
+    schemas; an explicit schema makes rows from pre-evolution files
+    surface the new columns as nulls, and planning runs no Spark job.
+    Logs whose manifests predate the ``columns`` field (``None``) fall
+    back to a mergeSchema read, which runs one job over the footers of
+    every selected file."""
+    if columns is None:
+        return spark.read.option("mergeSchema", "true").parquet(*paths)
+    schema = StructType.fromJson({"fields": [
+        {"name": name, "type": dtype, "nullable": True, "metadata": {}}
+        for name, dtype in columns.items()
+    ]})
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class TxSchemaMismatch(TypeError):
@@ -443,12 +478,13 @@ def _validate_schema(root: str, df: DataFrame, evolve: bool) -> None:
     """Enforce the evolution contract: writes must carry every
     declared column at its declared type; NEW nullable columns are
     admitted only under ``evolve=True``, which widens the declared
-    set (old files simply lack the column — readers merge schemas
-    and surface nulls, the standard additive-evolution semantics;
-    renames and type changes are rewrites, not evolution). The
-    declared-column update is a plain meta rewrite: schema changes
-    are table-admin operations, serialized by the pipeline owner,
-    not racing commits."""
+    set (old files simply lack the column — readers scan with the
+    version's recorded columns and surface nulls, the standard
+    additive-evolution semantics; renames and type changes are
+    rewrites, not evolution). The next commit copies the widened set
+    into its manifest. The declared-column update is a plain meta
+    rewrite: schema changes are table-admin operations, serialized by
+    the pipeline owner, not racing commits."""
     meta = _table_meta(root)
     declared = meta.get("columns")
     if declared is None:  # pre-evolution table: nothing to enforce
@@ -469,6 +505,9 @@ def _validate_schema(root: str, df: DataFrame, evolve: bool) -> None:
         )
     if new:
         meta["columns"] = {**declared, **{c: have[c] for c in new}}
+        if "types" in meta:
+            types = _types(df)
+            meta["types"] = {**meta["types"], **{c: types[c] for c in new}}
         with open(os.path.join(_log_dir(root), "_table.json"), "w") as fh:
             json.dump(meta, fh)
 
@@ -548,7 +587,7 @@ def txlog_read(
             f"(latest is {versions[-1]})"
         )
     v = versions[-1] if version is None else version
-    live = _live_files(root, v)
+    live, columns = _live_files(root, v)
     selected = []
     for rel, add in sorted(live.items()):
         if prune and _skippable(add.get("stats", {}), prune):
@@ -558,8 +597,8 @@ def txlog_read(
         selected.append(rel)
     # fail fast on time travel past the vacuum horizon: the scan list
     # is already in hand, so the existence sweep is one driver-side
-    # stat per file — cheap next to the footer reads the scan does
-    # anyway, and it turns a raw executor FileNotFound mid-scan into a
+    # stat per file — cheap next to opening the files in the scan,
+    # and it turns a raw executor FileNotFound mid-scan into a
     # named error before any job starts. The sweep runs AFTER the
     # skip-filters: only files the scan will actually open are
     # checked, so a pruned read whose stats window excludes every
@@ -592,8 +631,8 @@ def txlog_read(
                     f"retention horizon"
                 )
             raise FileNotFoundError(f"version {v} of {root} has no files")
-        return _scan(spark, [os.path.join(root, any_rel)]).limit(0)
-    return _scan(spark, [os.path.join(root, rel) for rel in selected])
+        return _scan(spark, [os.path.join(root, any_rel)], columns).limit(0)
+    return _scan(spark, [os.path.join(root, rel) for rel in selected], columns)
 
 
 def _skippable(stats: dict[str, list], prune: dict[str, tuple]) -> bool:
@@ -641,7 +680,7 @@ def txlog_upsert(
     _validate_schema(root, updates, evolve)
     versions = txlog_versions(root)
     read_version = versions[-1]
-    live = _live_files(root, read_version)
+    live, columns = _live_files(root, read_version)
     stats_cols = _stats_cols(root)
 
     # one aggregate job serves both the file-pruning window and the
@@ -667,7 +706,7 @@ def txlog_upsert(
         ]
     if candidates:
         base = _scan(
-            spark, [os.path.join(root, rel) for rel in candidates]
+            spark, [os.path.join(root, rel) for rel in candidates], columns
         )
         # CDC micro-batches broadcast; a bulk backfill through the
         # same API exceeds the key budget and anti-joins by shuffle
@@ -710,7 +749,7 @@ def txlog_delete(
     idempotency key all ride the same ``_commit``."""
     versions = txlog_versions(root)
     read_version = versions[-1]
-    live = _live_files(root, read_version)
+    live, columns = _live_files(root, read_version)
     stats_cols = _stats_cols(root)
 
     agg_exprs = [F.count(F.lit(1)).alias("n")]
@@ -739,7 +778,9 @@ def txlog_delete(
             # contract must hold on the no-op path too)
             return _commit(root, [], [], "delete", read_version, txn=txn)
         return read_version  # nothing can match: no-op, no commit
-    base = _scan(spark, [os.path.join(root, rel) for rel in candidates])
+    base = _scan(
+        spark, [os.path.join(root, rel) for rel in candidates], columns
+    )
     survivors = base.join(
         broadcast_if_small(keys.select(*key_cols), n_keys),
         key_cols, "left_anti",
@@ -778,14 +819,20 @@ def txlog_changes(
     same file) cancels out for any consumer that folds by key. File-
     granular CDC is what the log can answer WITHOUT persisting row
     diffs; exact row CDC is a key-join of the two snapshots, which
-    the caller can build from two txlog_read calls."""
+    the caller can build from two txlog_read calls.
+
+    Both sides scan with ``v_to``'s columns, so across additive
+    evolution the deleted pre-evolution rows surface the new columns
+    as nulls and the two sides union by name."""
     added: list[str] = []
     removed: list[str] = []
+    columns = None
     for v in txlog_versions(root):
         if v_from < v <= v_to:
             m = _read_manifest(root, v)
             added += [a["path"] for a in m["adds"]]
             removed += m["removes"]
+            columns = m.get("columns")
     # a file added then removed inside the window contributed nothing
     net_added = [p for p in added if p not in set(removed)]
     net_removed = [p for p in removed if p not in set(added)]
@@ -793,7 +840,7 @@ def txlog_changes(
     def scan(paths: list[str], tag: str) -> DataFrame | None:
         if not paths:
             return None
-        df = _scan(spark, [os.path.join(root, p) for p in paths])
+        df = _scan(spark, [os.path.join(root, p) for p in paths], columns)
         return df.withColumn("_change_type", F.lit(tag))
 
     ins = scan(net_added, "insert")
@@ -817,7 +864,7 @@ def txlog_vacuum(root: str, retain_versions: int = 1) -> int:
     versions = txlog_versions(root)
     keep: set[str] = set()
     for v in versions[-retain_versions:]:
-        keep |= set(_live_files(root, v))
+        keep |= set(_live_files(root, v)[0])
     deleted = 0
     data_root = os.path.join(root, _DATA_DIR)
     for token in sorted(os.listdir(data_root)):
@@ -861,7 +908,7 @@ def txlog_compact(
     Compaction is exactly when that trade is bought: a write-once
     shuffle every later scan amortizes."""
     version = txlog_versions(root)[-1]
-    live = _live_files(root, version)
+    live, columns = _live_files(root, version)
     smalls = [
         rel
         for rel in sorted(live)
@@ -869,7 +916,7 @@ def txlog_compact(
     ]
     if len(smalls) < 2:
         return None
-    df = _scan(spark, [os.path.join(root, rel) for rel in smalls])
+    df = _scan(spark, [os.path.join(root, rel) for rel in smalls], columns)
     if zorder_cols:
         from mapreduceapp_spark.sources.formats import zorder_value
 

@@ -270,6 +270,28 @@ def test_stage_slots_match_pinned_manifest(spark, sf_dir, monkeypatch):
         )
 
 
+def test_cold_stage_runs_only_its_write_jobs(spark, tmp_path, monkeypatch):
+    """A cold stage() runs the jobs of its parquet write and nothing
+    else: the read-back takes ``df.schema`` instead of inferring it
+    from the footers, and still yields the footer-inferred (nullable)
+    schema and the written rows."""
+    from mapreduceapp_spark.plans import staging
+    from tests.conftest import jobs_run
+
+    monkeypatch.setattr(staging, "_STAGING_ROOT", str(tmp_path / "stage"))
+    monkeypatch.setattr(staging, "_STAGED_PLANS", {})
+    df = spark.range(40).selectExpr("id", "id % 7 AS m")
+    plain = str(tmp_path / "plain")
+    write_jobs = jobs_run(spark, lambda: df.write.parquet(plain))
+    staged = []
+    stage_jobs = jobs_run(
+        spark, lambda: staged.append(staging.stage(df, "cold_slot"))
+    )
+    assert write_jobs >= 1 and stage_jobs == write_jobs
+    assert staged[0].schema == spark.read.parquet(plain).schema
+    assert sorted(staged[0].collect()) == sorted(df.collect())
+
+
 def test_sink_written_schemas_match_loader(spark, sf_dir, tmp_path):
     """Both sinks must write byte-faithful schemas: reading back what
     write_sorted_parquet / compact_parquet wrote must reproduce the

@@ -23,6 +23,7 @@ from mapreduceapp_spark.sources.txlog import (
     txlog_versions,
     _manifest_path,
 )
+from tests.conftest import jobs_run
 
 
 def _orders(spark, sf_dir):
@@ -444,7 +445,7 @@ def test_incremental_agg_reads_only_changed_files(spark, table):
     )
     shared = {
         os.path.join(root, rel)
-        for rel in set(_live_files(root, 1)) & set(_live_files(root, 2))
+        for rel in set(_live_files(root, 1)[0]) & set(_live_files(root, 2)[0])
     }
     assert shared, "narrow upsert should transfer some files untouched"
     inputs = set(refreshed.inputFiles())
@@ -516,6 +517,135 @@ def test_additive_schema_evolution(spark, table):
     after = txlog_read(spark, root)
     assert after.count() == n0 + 6
     assert after.filter(F.col("quality") == 0.9).count() == 4
+
+
+def _evolved(spark, table):
+    """create (v1) → evolve=True append adding ``quality`` (v2) →
+    upsert carrying it (v3); returns (root, rows at v1)."""
+    root, base = table
+    n0 = txlog_read(spark, root).count()
+    extra = base.limit(6).withColumn(
+        "o_orderkey", F.col("o_orderkey") + 70_000_000
+    ).withColumn("quality", F.lit(0.5))
+    txlog_append(spark, root, extra, evolve=True)
+    upd = base.limit(4).withColumn("o_totalprice", F.lit(5.0)).withColumn(
+        "quality", F.lit(0.9)
+    )
+    txlog_upsert(spark, root, upd, ["o_orderkey"])
+    return root, n0
+
+
+def test_time_travel_reads_the_versions_own_columns(spark, table):
+    """The schema comes from the manifest of the version read, not
+    the table's latest declaration: version 1 of an evolved table
+    keeps its pre-evolution columns."""
+    root, base = table
+    _evolved(spark, table)
+    assert txlog_read(spark, root, version=1).columns == base.columns
+    assert txlog_read(spark, root, version=2).columns == (
+        base.columns + ["quality"]
+    )
+    assert txlog_read(spark, root).columns == base.columns + ["quality"]
+
+
+def test_changes_across_additive_evolution(spark, table):
+    """The change feed over create → evolve append → upsert: both
+    sides scan with the end version's columns, so deleted
+    pre-evolution rows surface the new column as null and the feed
+    folds to the snapshot difference."""
+    root, base = table
+    _evolved(spark, table)
+    feed = txlog_changes(spark, root, 1, 3)
+    assert feed.columns == base.columns + ["quality", "_change_type"]
+    rows = feed.collect()
+    dels = [r for r in rows if r["_change_type"] == "delete"]
+    ins = [r for r in rows if r["_change_type"] == "insert"]
+    assert dels and all(r["quality"] is None for r in dels)
+    assert len(ins) - len(dels) == (
+        txlog_read(spark, root, version=3).count()
+        - txlog_read(spark, root, version=1).count()
+    )
+    assert sum(r["quality"] == 0.9 for r in ins) == 4
+    assert sum(r["quality"] == 0.5 for r in ins) == 6
+
+
+def test_manifests_without_columns_read_through_merge_schema(
+    spark, table
+):
+    """A log written before manifests carried ``columns`` reads the
+    same rows through the mergeSchema path, evolved column included."""
+    from mapreduceapp_spark.sources.txlog import txlog_checkpoint
+
+    root, _ = table
+    _evolved(spark, table)
+    txlog_checkpoint(root)
+
+    def snapshot(version):
+        df = txlog_read(spark, root, version=version)
+        return sorted(df.columns), sorted(
+            tuple(sorted(r.asDict().items(), key=lambda kv: kv[0]))
+            for r in df.collect()
+        )
+
+    want = {v: snapshot(v) for v in (1, 2, 3)}
+    log = os.path.join(root, "_txlog")
+    for name in os.listdir(log):
+        if name.startswith("_"):
+            continue
+        path = os.path.join(log, name)
+        with open(path) as fh:
+            m = json.load(fh)
+        assert "columns" in m
+        del m["columns"]
+        with open(path, "w") as fh:
+            json.dump(m, fh)
+    assert {v: snapshot(v) for v in (1, 2, 3)} == want
+
+
+def test_manifest_columns_roundtrip_rich_types(spark, tmp_path):
+    """Decimal, date, timestamp, array and struct columns survive the
+    manifest's recorded types, struct field names a DDL string would
+    have to quote included: the read schema and rows equal the
+    written frame's."""
+    root = str(tmp_path / "rich")
+    df = spark.range(12).selectExpr(
+        "id AS k",
+        "CAST(id * 1.25 AS DECIMAL(12, 2)) AS d",
+        "date_add(DATE'2024-02-27', CAST(id AS INT)) AS dt",
+        "TIMESTAMP'2024-02-27 23:59:00' + make_interval(0, 0, 0, 0, 0, 0, id)"
+        " AS ts",
+        "array(id, id * 2) AS arr",
+        "named_struct('a', id, 'b', CAST(id AS STRING)) AS st",
+        "named_struct('a b', id, 'c:d', array(named_struct('e,f', id)))"
+        " AS odd",
+    )
+    txlog_create(spark, root, df, stats_cols=["k"], files=2)
+    with open(_manifest_path(root, 1)) as fh:
+        assert list(json.load(fh)["columns"]) == df.columns
+    got = txlog_read(spark, root)
+    assert got.schema.simpleString() == df.schema.simpleString()
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, df.collect())
+    )
+
+
+def test_building_reads_runs_no_spark_jobs(spark, table):
+    """Building a txlog_read (plain, pruned, time travel) or a
+    txlog_changes frame is manifest work only: zero Spark jobs."""
+    root, base = table
+    updates = base.limit(5).withColumn("o_totalprice", F.lit(7.0))
+    txlog_upsert(spark, root, updates, ["o_orderkey"])
+    lo = base.agg(F.min("o_orderkey")).collect()[0][0]
+    builds = {
+        "plain": lambda: txlog_read(spark, root),
+        "pruned": lambda: txlog_read(
+            spark, root, prune={"o_orderkey": (lo, lo)}
+        ),
+        "time_travel": lambda: txlog_read(spark, root, version=1),
+        "changes": lambda: txlog_changes(spark, root, 1, 2),
+    }
+    for name, build in builds.items():
+        assert jobs_run(spark, build) == 0, name
 
 
 def test_incremental_scan_returns_only_new_rows(spark, table):
@@ -870,7 +1000,7 @@ def test_compact_zorder_multi_column_skipping(spark, sf_dir, tmp_path):
     assert txlog_read(spark, root, version=1).count() == n0  # history
 
     # per-file min/max from footers on BOTH curve columns
-    live = sorted(_live_files(root, v))
+    live = sorted(_live_files(root, v)[0])
     spans: dict[str, list[tuple]] = {"o_orderkey": [], "o_custkey": []}
     for rel in live:
         md = pq.ParquetFile(os.path.join(root, rel)).metadata
