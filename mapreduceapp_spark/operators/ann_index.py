@@ -1,56 +1,46 @@
 """Persisted, cell-partitioned ANN index (IVF + OPQ + residual PQ).
 
-The C3 family's production ingest shape (VERDICT r14 "Next round"
-#1): every in-plan ANN query re-derives centroids, codebooks and
-codes per process, amortized only by the in-process ``stage()`` memo
-— at 100 TB those artifacts are exactly what a deployment persists
-once per corpus compaction and probes per query batch. The engine
-already proved the pattern twice (band index r9 —
-operators/dedup_index.py; winnow index r11 —
-operators/winnow_index.py); this module gives the ANN ladder's best
-measured configuration — the OPQ+residual composition rung, 0.68/0.84
-recall@10 vs 0.48/0.30 raw (q_opq_residual_recall_aniso) — the same
-build-once / partition-pruned-probe lifecycle:
+The C3 family's production ingest shape: every in-plan ANN query
+re-derives centroids, codebooks and codes per process, amortized only
+by the in-process ``stage()`` memo — at corpus scale those artifacts
+are what a deployment persists once per compaction and probes per
+query batch. This module gives the ANN ladder's best measured
+configuration — the OPQ+residual composition rung, 0.68/0.84
+recall@10 vs 0.48/0.30 raw (q_opq_residual_recall_aniso) — the
+build-once / pruned-probe lifecycle of the band and winnow indexes:
 
-1. :func:`write_ann_index` — ONCE per corpus compaction: stride-
-   sampled IVF centroids, exact-int64 cell assignment (the
-   ``_gemm_assign`` kernel), residual PQ codebook + codes (the
-   ``_pq_codes`` kernel over vector − centroid residuals), persisted
-   as four tables — tiny ``centroids/`` and ``codebook/`` read whole
-   at probe time, ``codes/`` partitioned by
-   ``cell_bucket = pmod(cluster, n_buckets)`` with cluster-sorted
-   files of bounded row count, and a ``code_files/`` stats sidecar
-   (one (path, cell_bucket, lo, hi) cluster-range row per data file —
-   the dedup index's ``sig_files`` chunking pattern).
+1. :func:`write_ann_index` — once per corpus compaction: stride-
+   sampled IVF centroids, exact-int64 cell assignment, residual PQ
+   codebook and codes, persisted as tiny ``centroids/`` and
+   ``codebook/`` tables read whole at probe time, the ``codes/``
+   table and its ``code_files/`` sidecar.
 2. :func:`probe_ann_index` — per query batch: probe the ``nprobe``
-   nearest cells per query, then scan ONLY the probed cells' bytes: a
-   partition filter on the touched cell-bucket directories, the
-   sidecar's cluster ranges selecting exact files inside them, and
-   (for bounded probe sets) the probed cell ids pushed into the
-   parquet scan as a VALUES predicate for row-group/dictionary
-   skipping below the file grid.
+   nearest cells per query, then scan only the probed cells' bytes:
+   the touched cell-bucket directories, the sidecar's cluster ranges
+   selecting exact files inside them, and (for bounded probe sets)
+   the probed cell ids pushed into the parquet scan as a VALUES
+   predicate.
 
-The build and append derive cells, residuals, codebook and codes
-with :func:`~mapreduceapp_spark.operators.similarity.adc_corpus`, and
-the probe runs :func:`~mapreduceapp_spark.operators.similarity.adc_topk`
-over the persisted tables, so the probe is ROW-EQUAL to the in-plan
-residual IVFADC search over the same lineage by construction (pinned
+The index sits on disk in the layout of
+:mod:`~mapreduceapp_spark.operators.index_layout`: ``codes/`` holds
+(vec_id, m, code, cluster) rows partitioned by
+``cell_bucket = pmod(cluster, n_buckets)``, written one task per
+bucket in cluster-sorted files of bounded row count; ``code_files/``
+records each file's (cell_bucket, lo, hi) cluster range and its
+segment, with paths relative to ``codes/``; ``_meta.json``
+(``n_buckets``, ``source_rows`` = the build corpus's row count, the
+codebook geometry) is written last. Cells number ~√N, so one
+directory per cell would over-partition; inside a bucket the
+cluster-sorted files and their ranges carry the pruning, so probed
+bytes track probed cells, not bucket width.
+
+The build and append derive cells, residuals, codebook and codes with
+:func:`~mapreduceapp_spark.operators.similarity.adc_corpus`, and the
+probe runs :func:`~mapreduceapp_spark.operators.similarity.adc_topk`
+over the persisted tables. Everything persisted is exact int64, so
+the probe is row-equal to the in-plan residual IVFADC search over the
+same lineage, ties included, whatever process built the index (pinned
 by tests/test_ann_index.py and the shared driver oracle).
-
-Why partition by ``pmod(cluster, n_buckets)`` and not ``cluster``:
-cells number ~√N — at 10¹¹ vectors that is ~316k directories (the
-over-partitioning failure the band index documents), and the probe's
-partition literals must stay a modest plan constant. ``n_buckets``
-(power of two in [64, 65536], derived from the corpus footer count at
-build and persisted in ``_meta.json``) keeps directory counts flat;
-inside a bucket the cluster-sorted files + the sidecar's per-file
-cluster ranges carry the pruning, so probed bytes track probed cells,
-not bucket width.
-
-Everything persisted is exact int64 (quantized vectors, stride-
-sampled codebooks), so a probe against the on-disk tables is
-bit-identical to the in-plan derivation — including argmin/rank ties
-— whatever process built the index.
 
 Reference grounding: the reference has no persistence at all (one
 in-memory job, ``MapReduceFramework.cpp:140``); this is the
@@ -66,13 +56,21 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceapp_spark.operators.dedup_index import (
-    INDEX_ENTRIES_PER_BUCKET,
-    INDEX_MAX_BUCKETS,
-    INDEX_MIN_BUCKETS,
-    SIDECAR_MIN_FILES_PER_BUCKET,
-)
 from mapreduceapp_spark.functions.vectors import sq_norm_sql
+from mapreduceapp_spark.operators.index_layout import (
+    SIDECAR_MIN_FILES_PER_BUCKET,
+    bucket_count,
+    index_slot,
+    list_files,
+    meta_path,
+    push_values,
+    read_meta,
+    scan_files,
+    staged_counts,
+    write_bucketed,
+    write_file_ranges,
+    write_meta,
+)
 from mapreduceapp_spark.operators.similarity import (
     _ANISO_OPQ,
     ADC_IVFADC,
@@ -88,166 +86,80 @@ from mapreduceapp_spark.operators.similarity import (
     adc_topk,
 )
 from mapreduceapp_spark.plans.registry import register
-from mapreduceapp_spark.plans.staging import (
-    stage,
-    staged_local_column,
-    staging_root,
-)
+from mapreduceapp_spark.plans.staging import stage
 
 # Rows per codes/ data file. codes are thin (vec_id, m, code ≈ 20
 # bytes/row, PQ_M rows per vector) so the healthy 32-64 MB scan unit
 # is a few million rows; tests and the scaling script pass smaller
-# values to make file-grain skipping observable at fixture scale
-# (the SIG_ROWS_PER_FILE convention).
+# values to make file-grain skipping observable at fixture scale.
 CODE_ROWS_PER_FILE = 2_097_152
 
 # Bounded-literal cap for pushing the probed cell ids into the codes
-# scan as a parquet VALUES predicate (the DOC_PUSH_CAP class from the
-# band index — same measured parquet-mr limits apply, so the values
-# threshold raise is shared via _push_values_filter). Probe batches
-# touch ≤ Q·nprobe distinct cells; above the cap the file/directory
-# grain already bounds the scan and the join supplies the row filter.
+# scan (the band index's DOC_PUSH_CAP class). Probe batches touch
+# ≤ Q·nprobe distinct cells; above the cap the file/directory grain
+# bounds the scan and the join supplies the row filter.
 CELL_PUSH_CAP = 4096
 
-# Driver-side collect bound for the probed-cell set. The set is
-# bounded by min(Q·nprobe, n_cells) and n_cells ≈ √N — modest at any
-# rehearsal scale, but at 10¹¹ vectors √N ≈ 316k ids exceeds the
-# plan-literal class, so past this cap the probe keeps directory
-# pruning only (bucket literals are pmod-collapsed to ≤ n_buckets ≤
-# 65,536 — always bounded) and skips the file grid + values push.
+# Driver-side bound for the probed-cell set, ≤ min(Q·nprobe, n_cells)
+# with n_cells ≈ √N — modest at any rehearsal scale, but at 10¹¹
+# vectors √N ≈ 316k ids exceeds the plan-literal class, so past this
+# cap the probe keeps bucket pruning only (≤ n_buckets ≤ 65,536
+# literals) and skips the file grid and the values push.
 CELL_COLLECT_CAP = 65_536
-
-
-def ann_index_bucket_count(n_rows: int) -> int:
-    """Power-of-two codes/ directory count for an ``n_rows``-vector
-    corpus: smallest b in [MIN, MAX] with b × ENTRIES_PER_BUCKET ≥
-    n_rows × PQ_M (the band index's derivation with code rows for
-    band entries). Pure integer arithmetic — identical in every
-    process that derives it."""
-    entries = max(1, n_rows) * PQ_M
-    b = INDEX_MIN_BUCKETS
-    while b < INDEX_MAX_BUCKETS and b * INDEX_ENTRIES_PER_BUCKET < entries:
-        b <<= 1
-    return b
-
-
-def _meta_path(index_path: str) -> str:
-    return os.path.join(index_path, "_meta.json")
-
-
-def ann_index_meta(index_path: str) -> dict:
-    """Layout + codebook-geometry metadata the probe must agree with
-    the build on. Unlike the band index there is no pre-metadata
-    generation to default for — an ANN index without meta is not an
-    index."""
-    with open(_meta_path(index_path)) as fh:
-        return json.load(fh)
 
 
 def _mean_resid_sq(resid) -> float:
     """Mean squared residual norm of a (vec_id, qv) residual frame —
     the quantization-error scalar behind the compaction trigger. One
-    small agg over the already-staged residual bytes (the assign GEMM
-    never re-runs)."""
-    # UNROUNDED (ADVICE r16 #4): a well-quantized build baseline below
-    # 5e-5 would flush to 0.0 under round(·, 4) and permanently disable
-    # the drift trigger for that index (ann_index_drift_ratio's `not
-    # build` division guard would read it as 'signal absent'). Stored
-    # full-precision; display rounding happens in the ratio.
+    small agg over the already-staged residual bytes. Unrounded: a
+    well-quantized baseline below 5e-5 would round to 0.0 and disable
+    the trigger."""
     row = resid.selectExpr(f"avg({sq_norm_sql('qv')}) AS m").collect()[0]
     return float(row["m"] or 0.0)
 
 
 def ann_index_drift_ratio(index_path: str) -> float | None:
-    """The compaction-trigger signal (r16, VERDICT r15 ask #3): the
-    latest appended segment's mean squared residual norm over the
-    BUILD's — how much worse the frozen corpus centroids quantize the
-    newest arrivals than they quantized the corpus. Measured bands
-    (ann_append_drift_sf1_r16.json + SCALE.md): same-distribution
-    appends sit at ~1.0 and cost ≤0.02 recall even at 100% of corpus
-    size; the drifted batches that cost 0.33-0.66 recall sit far
-    above. Returns None when the index has no appends yet or predates
-    the signal."""
+    """The compaction-trigger signal: the latest appended segment's
+    mean squared residual norm over the build's — how much worse the
+    frozen corpus centroids quantize the newest arrivals than they
+    quantized the corpus. Measured (ann_append_drift_sf1_r16.json,
+    SCALE.md): same-distribution appends sit at ~1.0 and cost ≤0.02
+    recall even at 100% of corpus size; drifted batches that cost
+    0.33-0.66 recall sit far above. None until the index has an
+    appended segment."""
     state = ann_index_state(index_path)
-    build = ann_index_meta(index_path).get("mean_resid_sq")
-    seg = state.get("mean_resid_sq")
+    build = read_meta(index_path)["mean_resid_sq"]
     # state overlays meta, so a never-appended index echoes the build
-    # value back — only an actual appended segment carries the signal
-    if not build or seg is None or len(state.get("segs") or []) < 2:
+    # value back — only an appended segment carries the signal
+    if not build or len(state["segs"]) < 2:
         return None
-    return round(seg / build, 4)
-
-
-def _code_file_stats(scan: DataFrame, seg: str) -> DataFrame:
-    """One (path, cell_bucket, lo, hi, seg) cluster-range row per
-    codes/ data file of ``scan``, tagged with segment ``seg`` — the
-    append's unique id, or "build" for the build's rows."""
-    return (
-        scan.select(
-            "cluster",
-            "cell_bucket",
-            F.element_at(
-                F.split(F.input_file_name(), "/codes/"), -1
-            ).alias("path"),
-        )
-        .groupBy("path", "cell_bucket")
-        .agg(F.min("cluster").alias("lo"), F.max("cluster").alias("hi"))
-        .withColumn("seg", F.lit(seg))
-    )
-
-
-def write_code_file_stats(spark: SparkSession, path: str) -> int:
-    """Derive and persist the ``code_files/`` stats sidecar — one
-    (path, cell_bucket, lo, hi) cluster-range row per codes/ data
-    file — and return the file count. Distributed, column-pruned
-    (cluster + the partition column only; codes never decode), the
-    ``write_sig_file_stats`` pattern including RELATIVE paths: an
-    index directory is a durable per-compaction asset that may be
-    moved or re-mounted, and absolute ``input_file_name()`` URIs
-    would probe the old location after any move. Split on the last
-    ``/codes/``: below the root the only segments are
-    ``cell_bucket=N/part-*.parquet``, which cannot contain it."""
-    stats = _code_file_stats(
-        spark.read.parquet(os.path.join(path, "codes")), "build"
-    )
-    stats.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "code_files")
-    )
-    return spark.read.parquet(os.path.join(path, "code_files")).count()
+    return round(state["mean_resid_sq"] / build, 4)
 
 
 # ------------------------------------------------------------ tx log
 #
-# Transactional appends (VERDICT r15 ask #2, closing ADVICE r15 #1):
-# the r15 append was non-atomic — codes files landed before the
-# sidecar + meta rewrite, so a crash mid-append left sidecar-pruned
-# probes serving the pre-append view while directory-pruned probes
-# saw the new rows. The fix is the TxLog format's commit discipline
-# (sources/txlog.py:361 — exclusive-create versioned manifests as the
-# single serialization point) applied to the index directory:
+# Appends commit with the TxLog format's discipline (sources/txlog.py
+# — exclusive-create versioned manifests as the single serialization
+# point) applied to the index directory:
 #
-# - the index grows a ``_log/`` of numbered JSON manifests; a
-#   manifest is COMMITTED iff its exclusive create succeeded and its
-#   content parses (a torn write — the crash window of the create —
-#   squats its slot number but is skipped by readers and never
-#   resurrects).
-# - every sidecar row carries a segment id; the latest committed
-#   manifest lists the LIVE segment ids. Probes — BOTH pruning
-#   grains — resolve their file set from committed sidecar rows
-#   only, so data files and sidecar rows from an uncommitted append
-#   are invisible everywhere at once: a crash anywhere before the
-#   manifest create serves exactly the pre-append view, and the
-#   orphaned bytes are reclaimed at the next compaction (the vacuum
-#   boundary, as in TxLog).
-# - a RETRIED append uses a fresh random segment id, so the crashed
-#   attempt's orphan rows can never become visible when the retry
-#   commits — without unique ids, duplicate code rows would inflate
-#   every ADC sum they appear in (wrong distances, not just wasted
-#   bytes).
+# - the index has a ``_log/`` of numbered JSON manifests, the first
+#   (the build segment) written by the build before its meta; a
+#   manifest is committed iff its exclusive create succeeded and its
+#   content parses (a torn write squats its slot number but is
+#   skipped by readers).
+# - every sidecar row carries a segment id and the latest committed
+#   manifest lists the live ones. Probes at every pruning grain
+#   resolve their file set from committed sidecar rows only, so files
+#   and sidecar rows of an uncommitted append are invisible: a crash
+#   anywhere before the manifest create serves the pre-append view,
+#   and the orphaned bytes are reclaimed at the next compaction.
+# - a retried append uses a fresh random segment id, so the crashed
+#   attempt's orphan rows never become visible — duplicate code rows
+#   would inflate every ADC sum they appear in.
 #
-# Appends assume a single writer per index (the ingest-pipeline
-# contract shared with the band index); the commit loop itself
-# tolerates races by re-resolving and retrying at the next slot.
+# Appends assume a single writer per index (the contract shared with
+# the band index); the commit loop tolerates races by re-resolving and
+# retrying at the next slot.
 
 _LOG_DIR = "_log"
 
@@ -269,33 +181,21 @@ def _log_slots(index_path: str) -> list[int]:
 
 
 def ann_index_state(index_path: str) -> dict:
-    """Layout meta overlaid with the latest COMMITTED ``_log``
-    manifest. ``segs`` is the committed-segment list (the probe's
-    visibility filter); ``None`` marks a legacy index with no log —
-    probes then trust the sidecar/directories as-is (the r15
-    behavior). Unparseable manifests (torn commit writes) are
-    skipped, not errors."""
-    meta = ann_index_meta(index_path)
-    slots = _log_slots(index_path)
-    if not slots:
-        meta["segs"] = None
-        return meta
-    # newest slot first, stop at the first parseable manifest: each
-    # manifest carries the full cumulative state, so older slots are
-    # redundant — the ascending full scan was O(appends) driver-side
-    # reads PER probe/commit, growing linearly under streaming
-    # admission (ADVICE r16 #3)
-    latest = None
-    for v in reversed(slots):
+    """Layout meta overlaid with the latest committed ``_log``
+    manifest; ``segs`` is the committed-segment list (the probe's
+    visibility filter). Each manifest carries the full cumulative
+    state, so the newest parseable one is enough; torn manifests are
+    skipped, and with none parseable the state is the build segment's
+    (committed before the meta was written)."""
+    meta = read_meta(index_path)
+    for v in reversed(_log_slots(index_path)):
         try:
             with open(_manifest_file(index_path, v)) as fh:
-                latest = json.load(fh)
-            break
+                meta.update(json.load(fh))
+            return meta
         except (json.JSONDecodeError, OSError):
             continue
-    if latest is None:  # log dir exists, every slot torn: build view
-        latest = {"segs": ["build"], "appended_rows": 0}
-    meta.update(latest)
+    meta.update(segs=["build"], appended_rows=0)
     return meta
 
 
@@ -317,7 +217,7 @@ def _commit_index_manifest(
         version = (_log_slots(index_path) or [0])[-1] + 1
         manifest = {
             "log_version": version,
-            "segs": list(state.get("segs") or ["build"]) + [new_seg],
+            "segs": state["segs"] + [new_seg],
             "appended_rows": int(state.get("appended_rows", 0)) + seg_rows,
             "n_code_files": int(state.get("n_code_files", 0)) + seg_files,
         }
@@ -331,58 +231,16 @@ def _commit_index_manifest(
             continue
 
 
-def _list_code_files(spark: SparkSession, index_path: str) -> set[str]:
-    """Relative paths of every data file under ``codes/`` — the
-    append's before/after diff source (the band index's
-    ``_list_sig_files``, codes side): Hadoop FileSystem recursive
-    listing, driver-side metadata only."""
-    codes_root = os.path.join(index_path, "codes")
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(codes_root)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return set()
-    out: set[str] = set()
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        p = it.next().getPath().toString()
-        name = p.rsplit("/", 1)[-1]
-        if name.startswith(("_", ".")):
-            continue
-        out.add(p.split("/codes/")[-1])
-    return out
-
-
-def _append_code_file_stats(
-    spark: SparkSession, index_path: str, new_files: set[str], seg: str
-) -> None:
-    """Cluster-range sidecar rows for ONLY the files an append just
-    wrote, tagged with the append's segment id and parquet-appended
-    to ``code_files/`` — incremental, so append cost tracks the
-    batch: the r15 append's full :func:`write_code_file_stats` regen
-    re-scanned the whole corpus's thin columns per append, a
-    per-epoch fixed cost proportional to the CORPUS under streaming
-    ingest."""
-    codes_root = os.path.join(index_path, "codes")
-    scan = spark.read.option("basePath", codes_root).parquet(
-        *(os.path.join(codes_root, f) for f in sorted(new_files))
-    )
-    _code_file_stats(scan, seg).coalesce(1).write.mode("append").parquet(
-        os.path.join(index_path, "code_files")
-    )
-
-
-# Driver-read bound for the sidecar (r18, VERDICT r17 ask #5): below
-# this many total sidecar rows (= data files; footer metadata, zero
-# jobs) the filter runs in-process over a pyarrow read instead of a
-# full Spark job — the probe's sidecar resolution was a scheduled job
-# with AQE overhead to collect a handful of rows this process often
-# just wrote. Above the bound (or on remote storage) the Spark scan
-# remains the right tool.
+# Driver-read bound for the sidecar: below this many sidecar rows
+# (= data files) the touched-bucket filter runs in-process over a
+# pyarrow read instead of a Spark job that collects a handful of rows
+# this process often just wrote. Above the bound (or on remote
+# storage) the Spark scan remains the right tool.
 SIDECAR_LOCAL_MAX_ROWS = 262_144
 
 
 def _local_sidecar_rows(
-    index_path: str, buckets: list[int], segs
+    index_path: str, buckets: list[int], segs: list[str]
 ) -> list | None:
     """Driver-side pyarrow twin of the sidecar scan+collect — None
     (caller falls back to the Spark job) for remote roots, oversized
@@ -403,41 +261,34 @@ def _local_sidecar_rows(
             > SIDECAR_LOCAL_MAX_ROWS
         ):
             return None
-        bset = set(buckets)
-        sset = set(segs) if segs is not None else None
-        out: list[dict] = []
-        for f in files:
-            tbl = pq.read_table(f)
-            has_seg = "seg" in tbl.column_names
-            for row in tbl.to_pylist():
-                if row["cell_bucket"] not in bset:
-                    continue
-                if sset is not None and has_seg and row["seg"] not in sset:
-                    continue
-                out.append(row)
-        return out
+        bset, sset = set(buckets), set(segs)
+        return [
+            row
+            for f in files
+            for row in pq.read_table(f).to_pylist()
+            if row["cell_bucket"] in bset and row["seg"] in sset
+        ]
     except Exception:
         return None
 
 
 def _committed_sidecar_rows(
-    spark: SparkSession, index_path: str, buckets: list[int], segs
+    spark: SparkSession, index_path: str, buckets: list[int], segs: list[str]
 ) -> list:
     """Sidecar rows for the touched buckets, restricted to committed
-    segments when the index is transactional (``segs`` not None) —
-    the shared visibility resolver for BOTH pruning grains. Driver-
-    bounded by files-in-touched-buckets, the same quantity any scan
-    of those buckets reads. Local small sidecars resolve in-process
-    (zero jobs — see :func:`_local_sidecar_rows`)."""
+    segments — the visibility resolver for every pruning grain.
+    Driver-bounded by files-in-touched-buckets, the same quantity any
+    scan of those buckets reads. Local small sidecars resolve
+    in-process (zero jobs — see :func:`_local_sidecar_rows`)."""
     local = _local_sidecar_rows(index_path, buckets, segs)
     if local is not None:
         return local
-    scan = spark.read.parquet(os.path.join(index_path, "code_files")).filter(
-        F.col("cell_bucket").isin(buckets)
+    return (
+        spark.read.parquet(os.path.join(index_path, "code_files"))
+        .filter(F.col("cell_bucket").isin(buckets))
+        .filter(F.col("seg").isin(list(segs)))
+        .collect()
     )
-    if segs is not None and "seg" in scan.columns:
-        scan = scan.filter(F.col("seg").isin(list(segs)))
-    return scan.collect()
 
 
 def _index_corpus(
@@ -457,44 +308,26 @@ def _index_corpus(
 
 
 def _write_codes(
-    codes: DataFrame, index_path: str, n_buckets: int, rows_per_file: int,
+    index_path: str, codes: DataFrame, n_buckets: int, rows_per_file: int,
     mode: str,
 ) -> None:
-    """Write (vec_id, m, code, cluster) rows under ``codes/``,
-    partitioned by ``cell_bucket = pmod(cluster, n_buckets)`` and
-    cluster-sorted within files of ≤ ``rows_per_file`` rows. Each
-    bucket is written by exactly one task, so per-file cluster ranges
-    are tight and the sidecar grid is disjoint."""
-    (
-        codes.withColumn(
-            "cell_bucket",
-            F.pmod(F.col("cluster"), F.lit(n_buckets)).cast("int"),
-        )
-        .repartition(n_buckets, "cell_bucket")
-        .sortWithinPartitions("cluster", "vec_id", "m")
-        .write.mode(mode)
-        .option("maxRecordsPerFile", rows_per_file)
-        .partitionBy("cell_bucket")
-        .parquet(os.path.join(index_path, "codes"))
+    """Write (vec_id, m, code, cluster) rows under ``codes/`` in the
+    index's bucket layout, cluster-sorted within files."""
+    write_bucketed(
+        codes, os.path.join(index_path, "codes"), "cluster", "cell_bucket",
+        n_buckets, ("cluster", "vec_id", "m"), mode, rows_per_file,
     )
 
 
-def _code_files_scan(spark: SparkSession, codes_root: str, paths) -> DataFrame:
-    """Scan of the listed codes/ data files (sidecar paths, relative
-    ones resolved under ``codes_root``) without the partition column;
-    no files gives an empty scan with the codes schema."""
-    files = sorted(
-        {
-            p if ("://" in p or p.startswith("/"))
-            else os.path.join(codes_root, p)
-            for p in paths
-        }
+def _write_code_ranges(
+    spark: SparkSession, index_path: str, seg: str, files=None
+) -> int:
+    """Record the cluster ranges of ``codes/`` files under segment
+    ``seg`` in the ``code_files/`` sidecar (see write_file_ranges)."""
+    return write_file_ranges(
+        spark, index_path, "codes", "code_files", "cluster", "cell_bucket",
+        files, seg,
     )
-    if not files:
-        scan = spark.read.parquet(codes_root).filter(F.lit(False))
-    else:
-        scan = spark.read.option("basePath", codes_root).parquet(*files)
-    return scan.drop("cell_bucket")
 
 
 def write_ann_index(
@@ -505,35 +338,29 @@ def write_ann_index(
     code_rows_per_file: int = CODE_ROWS_PER_FILE,
 ) -> str:
     """Build and persist the ANN index for lineage ``e`` (a
-    (vec_id, qv, sq) frame — quantized, optionally OPQ-permuted);
-    returns ``path``.
+    (vec_id, qv, sq) frame — quantized, optionally OPQ-permuted) of
+    ``n_rows`` vectors; returns ``path``.
 
     The derivation is :func:`adc_corpus` over the residual IVFADC
     spec, the same call the in-plan search makes, so the persisted
-    tables are bit-identical to what the in-plan path derives — the
-    probe's row-equality is by construction, not by tolerance:
+    tables are bit-identical to what the in-plan path derives:
 
-    - ``centroids/`` — (cent_id, c_qv, c_sq): the stride-sampled IVF
-      coarse centroids, ~√N rows, one file, read whole per probe.
-    - ``codebook/`` — (m, j, cv): the residual PQ codebook slices,
-      ≤ 256×8 rows, one file, broadcast per probe.
-    - ``codes/`` — (vec_id, m, code, cluster) written by
-      :func:`_write_codes`. The cell id rides the table, so a probe
-      needs NO separate assignment lookup: the pruned codes scan IS
-      the candidate set.
-    - ``code_files/`` — the per-file cluster-range stats the probe
-      prunes with (see :func:`write_code_file_stats`).
-    - ``_meta.json`` LAST with ``complete: true``: its presence
-      proves every table landed.
+    - ``centroids/`` — (cent_id, c_qv, c_sq), ~√N rows, one file.
+    - ``codebook/`` — (m, j, cv), ≤ 256×8 rows, one file.
+    - ``codes/`` — (vec_id, m, code, cluster). The cell id rides the
+      table, so the pruned codes scan is the candidate set with no
+      separate assignment lookup.
+    - ``code_files/`` — each codes file's cluster range, segment
+      "build".
+    - ``_log/`` manifest 1 commits the build segment (a rebuild over
+      an existing path starts a fresh log), then ``_meta.json``.
     """
+    import shutil
+
     corpus = adc_corpus(e, n_rows, ADC_IVFADC)
-    n_buckets = ann_index_bucket_count(n_rows)
-    # the corpus's mean squared residual norm — the quantization-error
-    # baseline the compaction trigger compares appends against (the
-    # r16 drift experiment, SCALE.md: appended-RATIO is not the
-    # rebuild signal — control appends lose ≤0.02 recall even at 100%
-    # of corpus size — appended DRIFT is, and residual norm measures
-    # it for free off the already-staged residuals)
+    n_buckets = bucket_count(n_rows * PQ_M)
+    # the build corpus's quantization-error baseline for the
+    # compaction trigger, measured off the already-staged residuals
     mean_resid_sq = _mean_resid_sq(corpus.src)
     (
         corpus.cents.coalesce(1)
@@ -545,34 +372,8 @@ def write_ann_index(
     corpus.book.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebook")
     )
-    _write_codes(
-        corpus.codes, path, n_buckets, code_rows_per_file, "overwrite"
-    )
-    n_code_files = write_code_file_stats(spark, path)
-    os.makedirs(path, exist_ok=True)
-    with open(_meta_path(path), "w") as fh:
-        json.dump(
-            {
-                "n_rows": n_rows,
-                "stride": _ivf_stride(n_rows),
-                "k_cent": corpus.k_cent,
-                "pq_stride": max(1, n_rows // corpus.k_cent),
-                "pq_m": PQ_M,
-                "n_buckets": n_buckets,
-                "n_cells": n_cells,
-                "n_code_files": n_code_files,
-                "mean_resid_sq": mean_resid_sq,
-                "complete": True,
-            },
-            fh,
-        )
-    # bootstrap the tx log (r16): manifest 1 commits the build
-    # segment, making every later append atomic (see the tx-log block
-    # above). Meta stays the layout/completeness record; the log is
-    # the append-visibility record. A REBUILD over an existing path
-    # starts a fresh log — the old manifests describe dead bytes.
-    import shutil
-
+    _write_codes(path, corpus.codes, n_buckets, code_rows_per_file, "overwrite")
+    n_code_files = _write_code_ranges(spark, path, "build")
     log = os.path.join(path, _LOG_DIR)
     shutil.rmtree(log, ignore_errors=True)
     os.makedirs(log)
@@ -586,6 +387,18 @@ def write_ann_index(
             },
             fh,
         )
+    write_meta(
+        path,
+        n_buckets=n_buckets,
+        source_rows=n_rows,
+        stride=_ivf_stride(n_rows),
+        k_cent=corpus.k_cent,
+        pq_stride=max(1, n_rows // corpus.k_cent),
+        pq_m=PQ_M,
+        n_cells=n_cells,
+        n_code_files=n_code_files,
+        mean_resid_sq=mean_resid_sq,
+    )
     return path
 
 
@@ -596,152 +409,89 @@ def append_ann_index(
     n_new: int | None = None,
     code_rows_per_file: int = CODE_ROWS_PER_FILE,
 ) -> str:
-    """Append a vector batch to an existing index WITHOUT retraining —
-    the incremental-ingest half of the compaction lifecycle (the
-    q_incremental_dedup ↔ band-index relationship, on the ANN side):
-    between corpus compactions, new vectors are assigned to the
-    FROZEN centroids and encoded against the FROZEN codebook, and only
-    thin code rows land on disk. Returns ``index_path``.
+    """Append a vector batch to an existing index without retraining:
+    new vectors are assigned to the frozen centroids and encoded
+    against the frozen codebook, and only thin code rows land on disk.
+    Returns ``index_path``.
 
     Semantics: the appended rows are exactly what a full build over
-    (corpus ∪ batch) would emit for the batch ids IF the build's
-    stride sampling had still picked the corpus's centroids/codebook —
-    i.e. quantization quality for the batch is the corpus codebook's
-    (the standard IVF ingest contract; recall drifts only as the data
-    distribution drifts, which is what the next compaction absorbs).
-    Appends are segmentation-invariant (one batch ≡ any split of it —
-    pinned by test) because every row's cell and code depend only on
-    the frozen artifacts.
+    (corpus ∪ batch) would emit for the batch ids if its stride
+    sampling had still picked the corpus's centroids and codebook (the
+    standard IVF ingest contract; recall drifts only as the data
+    distribution drifts, which the next compaction absorbs). Appends
+    are segmentation-invariant (one batch ≡ any split of it).
 
     ``n_new`` sizes the assign/encode kernels' regime gates (pass the
     caller's footer-derived count; None = one bounded count job).
 
-    Atomicity: on a transactional index (one with a ``_log/``, as
-    every build writes) the whole append commits via
-    ONE exclusive-create manifest (see the tx-log block above) —
-    codes files and the segment-tagged sidecar rows land first but
-    stay invisible to BOTH pruning grains until the manifest exists,
-    so a crash anywhere mid-append serves exactly the pre-append
-    view, and a retry (fresh segment id) can never resurrect the
-    orphaned attempt. Indexes without a log keep the non-atomic path —
-    full sidecar regen + meta rewrite, crash healed by re-running the
-    stats step — and should be rebuilt to get transactional appends."""
+    Atomicity: codes files and segment-tagged sidecar rows land first
+    but stay invisible to every pruning grain until the one
+    exclusive-create manifest commits the segment (see the tx-log
+    block above), so a crash anywhere mid-append serves the
+    pre-append view and a retry can never resurrect the orphans."""
+    import uuid
+
     state = ann_index_state(index_path)
-    logged = state.get("segs") is not None
-    meta = ann_index_meta(index_path)
-    n_buckets = meta["n_buckets"]
     if n_new is None:
         n_new = e_new.count()
-
     corpus = adc_corpus(
-        e_new, n_new, ADC_IVFADC, frozen=_index_corpus(spark, index_path, meta)
+        e_new, n_new, ADC_IVFADC, frozen=_index_corpus(spark, index_path, state)
     )
-    before = _list_code_files(spark, index_path) if logged else set()
+    before = list_files(spark, index_path, "codes")
     _write_codes(
-        corpus.codes, index_path, n_buckets, code_rows_per_file, "append"
+        index_path, corpus.codes, state["n_buckets"], code_rows_per_file,
+        "append",
     )
-    if logged:
-        import uuid
-
-        seg = uuid.uuid4().hex
-        new_files = _list_code_files(spark, index_path) - before
-        if new_files:
-            _append_code_file_stats(spark, index_path, new_files, seg)
-        # the one serialization point: everything above is invisible
-        # to probes until this create succeeds
-        _commit_index_manifest(
-            index_path,
-            seg,
-            n_new,
-            len(new_files),
-            # per-segment quantization error off the staged residuals
-            # — the compaction-trigger signal (ann_index_drift_ratio)
-            mean_resid_sq=_mean_resid_sq(corpus.src),
-        )
-    else:
-        meta["n_code_files"] = write_code_file_stats(spark, index_path)
-        meta["appended_rows"] = meta.get("appended_rows", 0) + n_new
-        with open(_meta_path(index_path), "w") as fh:
-            json.dump(meta, fh)
+    seg = uuid.uuid4().hex
+    n_files = _write_code_ranges(
+        spark, index_path, seg, list_files(spark, index_path, "codes") - before
+    )
+    # the one serialization point: everything above is invisible to
+    # probes until this create succeeds; the segment's quantization
+    # error is the compaction-trigger signal
+    _commit_index_manifest(
+        index_path, seg, n_new, n_files, mean_resid_sq=_mean_resid_sq(corpus.src)
+    )
     return index_path
-
-
-def _push_values_filter(scan: DataFrame, col: str, ids: list[int]) -> DataFrame:
-    """Push a bounded id list into a parquet scan as a VALUES
-    predicate — the band index's ``_push_doc_filter`` with the column
-    and id source generalized (same measured parquet-mr limits, same
-    session-level threshold raise, shared bound constants)."""
-    from mapreduceapp_spark.operators.dedup_index import (
-        DOC_PUSH_VALUES_MAX,
-    )
-
-    if not 0 < len(ids) <= CELL_PUSH_CAP:
-        return scan
-    spark = scan.sparkSession
-    thresh_key = "spark.sql.parquet.pushdown.inFilterThreshold"
-    if int(spark.conf.get(thresh_key, "10")) < DOC_PUSH_VALUES_MAX:
-        spark.conf.set(thresh_key, str(DOC_PUSH_VALUES_MAX))
-    return scan.filter(F.col(col).isin(ids))
 
 
 def fetch_probed_codes(
     spark: SparkSession, index_path: str, cells: list[int]
 ) -> DataFrame:
     """Pruned scan of the index's ``codes/`` table for a probed-cell
-    set: partition filter on the touched cell-bucket directories,
-    exact-file selection via the ``code_files`` cluster-range sidecar
-    (engaged when the file grid is finer than the directory grid —
-    the band index's regime gate), and the cell ids pushed as a
-    parquet VALUES predicate below whichever grid chose the files.
-    ``cells`` is a plan-literal-bounded driver list (the caller
-    enforces CELL_COLLECT_CAP); an empty list short-circuits to an
-    empty scan with the full schema."""
+    set: the committed files of the touched cell buckets, narrowed to
+    the files whose cluster range holds a probed cell when the file
+    grid is finer than the directory grid (SIDECAR_MIN_FILES_PER_BUCKET),
+    with the cell ids pushed as a parquet VALUES predicate below
+    either grid. ``cells`` is a plan-literal-bounded driver list (the
+    caller enforces CELL_COLLECT_CAP); an empty list gives an empty
+    scan with the full schema."""
     state = ann_index_state(index_path)
     n_buckets = state["n_buckets"]
-    segs = state.get("segs")
-    codes_root = os.path.join(index_path, "codes")
     if not cells:
-        return _code_files_scan(spark, codes_root, ())
-    buckets = sorted({c % n_buckets for c in cells})
-    use_sidecar = (
-        state.get("n_code_files", 0)
-        > SIDECAR_MIN_FILES_PER_BUCKET * n_buckets
+        return scan_files(spark, index_path, "codes", "cell_bucket", ())
+    by_bucket: dict[int, list[int]] = {}
+    for c in cells:
+        by_bucket.setdefault(c % n_buckets, []).append(c)
+    use_ranges = (
+        state["n_code_files"] > SIDECAR_MIN_FILES_PER_BUCKET * n_buckets
     )
-    if use_sidecar or segs is not None:
-        # the sidecar is small (one row per data file) and the match
-        # is driver-side over the touched buckets only — bounded by
-        # files-in-touched-buckets, the same quantity the scan reads.
-        # Transactional indexes take this path at EVERY geometry:
-        # the committed sidecar rows are the visibility manifest, so
-        # uncommitted append bytes can never reach a probe — the
-        # regime gate then only decides whether the cluster-range
-        # match prunes the committed list further (file grid finer
-        # than the directory grid) or the whole touched-bucket slice
-        # is read (directory-grain, where ranges buy nothing).
-        stats = _committed_sidecar_rows(spark, index_path, buckets, segs)
-        cells_by_bucket: dict[int, list[int]] = {}
-        for c in cells:
-            cells_by_bucket.setdefault(c % n_buckets, []).append(c)
-        scan = _code_files_scan(
-            spark,
-            codes_root,
-            (
-                r["path"]
-                for r in stats
-                if not use_sidecar
-                or any(
-                    r["lo"] <= c <= r["hi"]
-                    for c in cells_by_bucket.get(r["cell_bucket"], ())
-                )
-            ),
-        )
-    else:
-        scan = (
-            spark.read.parquet(codes_root)
-            .filter(F.col("cell_bucket").isin(buckets))
-            .drop("cell_bucket")
-        )
-    return _push_values_filter(scan, "cluster", cells)
+    rows = _committed_sidecar_rows(
+        spark, index_path, sorted(by_bucket), state["segs"]
+    )
+    scan = scan_files(
+        spark,
+        index_path,
+        "codes",
+        "cell_bucket",
+        (
+            r["path"]
+            for r in rows
+            if not use_ranges
+            or any(r["lo"] <= c <= r["hi"] for c in by_bucket[r["cell_bucket"]])
+        ),
+    )
+    return push_values(scan, "cluster", cells) if len(cells) <= CELL_PUSH_CAP else scan
 
 
 def probe_ann_index(
@@ -753,74 +503,40 @@ def probe_ann_index(
     n_queries_bound: int | None = None,
     _stage=stage,
 ) -> DataFrame:
-    """Probe a query batch (a (vec_id, qv, sq) frame on the SAME
+    """Probe a query batch (a (vec_id, qv, sq) frame on the same
     quantized/permuted lineage the index was built from) against a
     persisted ANN index; emit (query_id, neighbor_id, rnk, adc) —
     row-equal to the in-plan residual IVFADC search over the corpus
     lineage.
 
     The query side is :func:`adc_topk`, the in-plan search's own; the
-    CORPUS side — assignment, codebook training, encoding, at 100 TB
-    the dominant cost — is replaced by three pruned reads: whole-file
-    ``centroids/`` (~√N rows, the structural-smallness broadcast
-    class), ``codebook/`` (≤ 2048 rows), and the probed cells' slice
-    of ``codes/`` via :func:`fetch_probed_codes`. Probed bytes track
-    probed cells — a small query batch reads a small fraction of the
-    index no matter how large the corpus.
+    corpus side — assignment, codebook training, encoding — is
+    replaced by three pruned reads: whole-file ``centroids/`` and
+    ``codebook/``, and the probed cells' slice of ``codes/`` via
+    :func:`fetch_probed_codes`. Probed bytes track probed cells.
 
     ``_stage`` swaps the multiply-consumed-intermediate strategy:
     batch probes keep the process-memoized stage() slots; the
-    STREAMING runner passes a per-epoch persist-based stager instead
-    (a stage() slot per micro-batch lineage accumulates on the
-    staging disk for the stream's whole life — the unbounded-growth
-    class winnow_screen_stream documents; see ann_search_stream).
+    streaming runner passes a per-epoch persist-based stager (a
+    stage() slot per micro-batch lineage would accumulate on the
+    staging disk for the stream's whole life; see ann_search_stream).
 
-    The probed-cell set is collected driver-side from the staged
-    probe table (ONE bounded job — the ``_probe_pruning_stats``
-    class: ≤ min(Q·nprobe, n_cells) ints, and meta's n_cells is
-    checked against CELL_COLLECT_CAP first; a hypothetical
-    316k-cell geometry keeps bucket-literal pruning only, with the
-    bucket set pmod-collapsed to ≤ n_buckets ≤ 65,536)."""
+    The probed-cell set (≤ min(Q·nprobe, n_cells) ints) is read from
+    the staged probe table; past CELL_COLLECT_CAP cells the probe
+    keeps bucket literals only."""
     meta = ann_index_state(index_path)
 
     def probed_codes(probes: DataFrame) -> DataFrame:
         if meta["n_cells"] <= CELL_COLLECT_CAP:
-            # read the staged probe column driver-side when the slot
-            # is local and small (zero jobs); the distinct-collect job
-            # remains the fallback for remote staging roots, big probe
-            # batches and the streaming stager (whose frames are not
-            # stage() scans)
-            vals = staged_local_column(probes, "probe", 2_000_000)
-            if vals is None:
-                vals = [
-                    r["probe"]
-                    for r in probes.select("probe").distinct().collect()
-                ]
-            return fetch_probed_codes(spark, index_path, sorted(set(vals)))
-        # extreme-geometry fallback: bucket literals only (bounded by
-        # construction); the ADC join still restricts rows exactly
-        codes_root = os.path.join(index_path, "codes")
-        buckets = sorted(
-            r["b"]
-            for r in probes.selectExpr(
-                f"CAST(pmod(probe, {meta['n_buckets']}) AS INT) AS b"
-            )
-            .distinct()
-            .collect()
+            cells = sorted(staged_counts(probes, "probe"))
+            return fetch_probed_codes(spark, index_path, cells)
+        # extreme geometry: bucket literals only, committed files only;
+        # the ADC join still restricts rows exactly
+        buckets = sorted(staged_counts(probes, "probe", meta["n_buckets"]))
+        rows = _committed_sidecar_rows(spark, index_path, buckets, meta["segs"])
+        return scan_files(
+            spark, index_path, "codes", "cell_bucket", (r["path"] for r in rows)
         )
-        if meta.get("segs") is None:
-            return (
-                spark.read.parquet(codes_root)
-                .filter(F.col("cell_bucket").isin(buckets))
-                .drop("cell_bucket")
-            )
-        # transactional index: the directory grain must also read
-        # committed files only (the crash-rollback contract holds at
-        # EVERY geometry)
-        rows = _committed_sidecar_rows(
-            spark, index_path, buckets, meta["segs"]
-        )
-        return _code_files_scan(spark, codes_root, (r["path"] for r in rows))
 
     return adc_topk(
         queries,
@@ -832,12 +548,12 @@ def probe_ann_index(
     )
 
 
-# The measured trigger threshold (SCALE.md r16 drift experiment +
+# The measured trigger threshold (SCALE.md drift experiment,
 # ann_append_drift_sf1_r16.json): same-distribution appends sit at
-# drift_ratio 0.999-1.007 and cost <=0.02 recall@10 even at 100% of
+# drift_ratio 0.999-1.007 and cost ≤0.02 recall@10 even at 100% of
 # corpus size; the drifted batches that cost 0.33-0.66 recall sit at
-# 163.5. 2.0 is orders of magnitude inside the gap on BOTH sides -
-# a milder real drift scales the ratio and the recall loss down
+# 163.5. 2.0 is orders of magnitude inside the gap on both sides — a
+# milder real drift scales the ratio and the recall loss down
 # together (both are the same residual mass).
 ANN_REBUILD_DRIFT_RATIO = 2.0
 
@@ -849,66 +565,41 @@ def maybe_recompact_ann_index(
     n_rows: int,
     threshold: float = ANN_REBUILD_DRIFT_RATIO,
 ) -> bool:
-    """Consume the compaction trigger (closing the r15 'nothing
-    consumes appended_rows' gap with the signal the r16 experiment
-    showed actually matters): rebuild the index over ``e`` (the
-    CURRENT full corpus — corpus ∪ every appended batch; the index
-    itself stores only lossy codes, so recompaction needs the source
-    table, exactly as a deployment's compaction job reads the lake)
-    when the latest appended segment quantized ≥ ``threshold``× worse
-    than the build corpus did. Returns True when a rebuild ran —
+    """Consume the compaction trigger: rebuild the index over ``e``
+    (the current full corpus — corpus ∪ every appended batch; the
+    index stores only lossy codes, so recompaction needs the source
+    table) when the latest appended segment quantized ≥ ``threshold``×
+    worse than the build corpus did. Returns True when a rebuild ran —
     the fresh build starts a new ``_log`` and a unit drift baseline.
-    Never-appended (or legacy) indexes never trigger."""
+    Never-appended indexes never trigger."""
     ratio = ann_index_drift_ratio(index_path)
     if ratio is None or ratio <= threshold:
         return False
-    # Invalidate BEFORE the destructive rebuild (ADVICE r16 #1):
-    # write_ann_index overwrites codes/, the sidecar, and _log in
-    # place while the old _meta.json (complete:true, n_rows equal to
-    # the corpus footer count) would otherwise stay on disk until the
-    # final meta rewrite — a crash mid-rebuild would leave a
-    # half-overwritten index that _ann_index_slot's fingerprint
-    # accepts as complete. With meta and _log removed first, a crash
-    # anywhere mid-rebuild leaves an index that readers refuse loudly
-    # (no meta) and the slot/compaction path rebuilds from source —
-    # write_ann_index itself still writes meta LAST, restoring the
-    # commit-last discipline for the fresh build.
-    try:
-        os.remove(_meta_path(index_path))
-    except FileNotFoundError:
-        pass
+    # Invalidate before the destructive rebuild: write_ann_index
+    # overwrites codes/, the sidecar and _log in place, and the old
+    # complete meta (with a fingerprint that may match the source)
+    # would otherwise validate a half-overwritten index after a crash.
+    # With meta and _log removed first, readers refuse the index and
+    # the slot rebuilds it; the fresh build writes meta last again.
     import shutil
 
+    try:
+        os.remove(meta_path(index_path))
+    except FileNotFoundError:
+        pass
     shutil.rmtree(os.path.join(index_path, _LOG_DIR), ignore_errors=True)
     write_ann_index(spark, e, n_rows, index_path)
     return True
 
 
-def _ann_index_slot(spark: SparkSession, sf_dir: str) -> str:
-    """Deterministic per-(process, sf_dir) index path under the
-    staging root; built on first use from the OPQ-permuted aniso
-    lineage (the ladder's best measured configuration), reused after
-    — the build is the 'corpus compaction' event, probes the steady
-    state (the ``_index_slot`` convention, including the
-    meta-written-last completeness rule)."""
+def write_fixture_ann_index(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """The registered query's index: built from the OPQ-permuted aniso
+    lineage of ``sf_dir``'s embeddings (the ladder's best measured
+    configuration)."""
     from mapreduceapp_spark.sources.parquet import table_row_count
 
-    safe = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join(staging_root(), f"ann_index_{safe}")
     n_rows = table_row_count(spark, sf_dir, "embeddings")
-    meta = ann_index_meta(path) if os.path.exists(_meta_path(path)) else {}
-    # Reuse demands BOTH the completeness flag and a fingerprint match
-    # (ADVICE r15 #3): with SPARK_GRAFT_STAGING_DIR on persistent
-    # shared storage, a regenerated fixture at the same sf_dir path
-    # would otherwise silently probe a stale index and return wrong
-    # recall. The corpus row count comes from parquet footers — a
-    # driver-side metadata read, zero jobs — and build-time
-    # appended_rows is excluded (an appended slot's n_rows is still
-    # its BUILD corpus, by contract).
-    complete = meta.get("complete") and meta.get("n_rows") == n_rows
-    if not (path.startswith(("hdfs://", "s3a://")) or complete):
-        write_ann_index(spark, _ANISO_OPQ.lineage(spark, sf_dir), n_rows, path)
-    return path
+    return write_ann_index(spark, _ANISO_OPQ.lineage(spark, sf_dir), n_rows, path)
 
 
 @register(
@@ -933,7 +624,7 @@ def q_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table_row_count(spark, sf_dir, "embeddings")
     approx = probe_ann_index(
         spark,
-        _ann_index_slot(spark, sf_dir),
+        index_slot(spark, "ann_index", sf_dir, "embeddings", write_fixture_ann_index),
         _ANISO_OPQ.lineage(spark, sf_dir).filter(KNN_QUERY_PRED),
         n_queries_bound=n // 100 + 1,
     )

@@ -1086,15 +1086,9 @@ INCR_BATCH_MOD = 10
 INCR_BATCH_RESIDUE = 8
 
 
-@register(
-    "q_incremental_dedup",
-    # Same exact-Jaccard ground truth as q_minhash_neardup, restricted
-    # to cross-split pairs and re-keyed as (corpus_doc, new_doc). The
-    # LSH-miss / cap-headroom argument carries over unchanged (the
-    # split sides band the SAME signatures into buckets that are
-    # subsets of the full corpus's, so every headroom measured for
-    # q_minhash_neardup bounds this query's too).
-    oracle=f"""
+# The cross-split exact-Jaccard ground truth: q_incremental_dedup's
+# oracle, shared verbatim by q_dedup_index_probe (dedup_index.py).
+INCREMENTAL_DEDUP_ORACLE = f"""
         WITH {ORACLE_JACCARD_PAIR_CTES}
         SELECT CASE WHEN doc_a % {INCR_BATCH_MOD} < {INCR_BATCH_RESIDUE}
                     THEN doc_a ELSE doc_b END AS corpus_doc,
@@ -1104,7 +1098,18 @@ INCR_BATCH_RESIDUE = 8
         FROM jpairs
         WHERE (doc_a % {INCR_BATCH_MOD} < {INCR_BATCH_RESIDUE})
            <> (doc_b % {INCR_BATCH_MOD} < {INCR_BATCH_RESIDUE})
-    """,
+    """
+
+
+@register(
+    "q_incremental_dedup",
+    # Same exact-Jaccard ground truth as q_minhash_neardup, restricted
+    # to cross-split pairs and re-keyed as (corpus_doc, new_doc). The
+    # LSH-miss / cap-headroom argument carries over unchanged (the
+    # split sides band the SAME signatures into buckets that are
+    # subsets of the full corpus's, so every headroom measured for
+    # q_minhash_neardup bounds this query's too).
+    oracle=INCREMENTAL_DEDUP_ORACLE,
     doc="Incremental near-dup: a new-batch split LSH-probed against the "
     "existing corpus only — the crawl-ingest dedup shape (C2 family).",
 )

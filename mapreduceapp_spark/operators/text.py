@@ -670,9 +670,9 @@ def winnow_fingerprint_pairs(
     )
 
 
-@register(
-    "q_winnowing",
-    oracle=f"""
+# q_winnowing's ground truth, shared verbatim by q_winnowing_indexed
+# (winnow_index.py).
+WINNOWING_ORACLE = f"""
         WITH pos AS MATERIALIZED (
             -- scalar generate_series (list form): the table-function
             -- form cannot correlate with length(text)
@@ -715,7 +715,12 @@ def winnow_fingerprint_pairs(
           ON a.fp = b.fp AND a.doc_id < b.doc_id
         GROUP BY 1, 2
         HAVING count(*) >= {WINNOW_MIN_SHARED}
-    """,
+    """
+
+
+@register(
+    "q_winnowing",
+    oracle=WINNOWING_ORACLE,
     doc=f"Winnowing (MOSS) fingerprint dedup: window-min of rolling "
     f"k-gram hashes; doc pairs sharing >={WINNOW_MIN_SHARED} selected "
     f"fingerprints (substring-level, position-robust; df-capped).",
@@ -1007,15 +1012,18 @@ def q_winnowing_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     join fan-out is bounded by the PROBE's fingerprint set, and a
     boilerplate fingerprint shared with the probe IS contamination
     evidence for exactly the run the guarantee covers."""
+    from mapreduceapp_spark.operators.index_layout import index_slot
     from mapreduceapp_spark.operators.winnow_index import (
-        _index_slot,
         probe_winnow_index,
         read_winnow_index,
+        write_winnow_index,
     )
     from mapreduceapp_spark.plans.hints import broadcast_if_small
     from mapreduceapp_spark.plans.staging import slot, staged_row_count
 
-    idx_path = _index_slot(spark, sf_dir)
+    idx_path = index_slot(
+        spark, "winnow_index", sf_dir, "documents", write_winnow_index
+    )
     idx = read_winnow_index(spark, idx_path)
     probe = slot(
         spark,

@@ -1,37 +1,33 @@
 """Persisted winnowing fingerprint index + pruned probe.
 
 The char-gram HOF derivation behind q_winnowing /
-q_winnowing_contamination is the engine's single most expensive
-kernel (4.26 s at sf0.1 in BENCH_r10; byte-proportional, 15× at sf1)
-and BOTH consumers re-derive it from raw chars on every call —
-fine for one-shot registered queries, wrong at corpus scale, where
-fingerprints are an asset you persist once per corpus compaction and
-probe forever (the band-index lesson, VERDICT r10 'Wrong' #2 /
-'Next round' #6; operators/dedup_index.py is the template).
+q_winnowing_contamination is the engine's most expensive kernel
+(4.26 s at sf0.1, byte-proportional), and both consumers re-derive it
+from raw chars on every call — fine for one-shot queries, wrong at
+corpus scale, where fingerprints are an asset persisted once per
+corpus compaction and probed forever.
 
-Layout under ``path``:
-- ``fps/`` — one thin (doc_id, fp, df) row per selected fingerprint,
-  partitioned by ``bucket = pmod(fp, n_buckets)`` and fp-sorted
-  within files. ``df`` (the fingerprint's corpus document frequency)
-  is computed once at build — it is fp-local, so it rides the same
-  layout — letting the dedup consumer apply the boilerplate cap as a
-  row filter instead of a window, and the contamination consumer
-  ignore it (its guarantee covers boilerplate overlap by design).
-- ``_meta.json`` — ``n_buckets``, probe-side agreement (the
-  dedup_index convention: the probe must bucket by the SAME modulus
-  the build used, whatever process built it).
+The index sits on disk in the layout of
+:mod:`~mapreduceapp_spark.operators.index_layout`: ``fps/`` holds one
+thin (doc_id, fp, df) row per selected fingerprint, partitioned by
+``bucket = pmod(fp, n_buckets)``, written one task per bucket and
+fp-sorted within files; ``_meta.json`` (``n_buckets``,
+``source_rows`` = the documents footer count) is written last.
+``df``, the fingerprint's corpus document frequency, is computed once
+at build — it is fp-local, so it rides the same layout — letting the
+dedup consumer apply the boilerplate cap as a row filter instead of a
+window, and the contamination consumer ignore it (its guarantee covers
+boilerplate overlap by design).
 
 What each consumer saves:
 - dedup (q_winnowing_indexed): the entire derivation; the capped
   self-join runs over persisted thin int64 rows. Row-equal to
   q_winnowing by construction (same capped fingerprint set, same
   join + HAVING) — pinned by the shared oracle and pytest.
-- decontamination (:func:`probe_winnow_index`): the corpus side
-  becomes a PARTITION-PRUNED read — a benchmark probe's fingerprints
-  touch ≤ |probe fps| buckets, so corpus bytes read scale with the
-  probe, not the corpus (the band-index probe property, here for
-  substring screening; also the streaming ingest path's substring
-  screen, matching its MinHash one).
+- decontamination (:func:`probe_winnow_index`): the corpus side is a
+  partition-pruned read — a probe's fingerprints touch ≤ |probe fps|
+  buckets, so corpus bytes read scale with the probe, not the corpus
+  (also the streaming ingest path's substring screen).
 
 Reference grounding: the reference persists nothing
 (``MapReduceFramework.cpp:140`` keeps phase outputs in process
@@ -41,158 +37,92 @@ at any real corpus size.
 
 from __future__ import annotations
 
-import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduceapp_spark.operators.index_layout import (
+    bucket_count,
+    index_slot,
+    read_meta,
+    staged_counts,
+    write_bucketed,
+    write_meta,
+)
 from mapreduceapp_spark.operators.text import (
     WINNOW_DF_CAP,
     WINNOW_MIN_SHARED,
+    WINNOWING_ORACLE,
     winnow_fingerprints,
 )
 from mapreduceapp_spark.plans.registry import register
-from mapreduceapp_spark.plans.staging import staging_root
 from mapreduceapp_spark.sources import spread_table
 
-# Directory sizing, footer-derived at build time (the dedup_index
-# convention). Winnowing emits ~2/(W+1) of the gram count — dozens to
-# hundreds of fingerprints per document, far denser than the 16-band
-# MinHash index — so the per-doc estimate is the only constant that
-# differs from dedup_index's derivation.
+# Winnowing emits ~2/(W+1) of the gram count — dozens to hundreds of
+# fingerprints per document — so entries are sized at this estimate
+# per document.
 WINNOW_FPS_PER_DOC_EST = 256
-WINNOW_ENTRIES_PER_BUCKET = 4_000_000
-WINNOW_MIN_BUCKETS = 64
-WINNOW_MAX_BUCKETS = 65_536
-
-
-def winnow_bucket_count(n_docs: int) -> int:
-    """Power-of-two directory count: smallest b in [MIN, MAX] with
-    b × ENTRIES_PER_BUCKET ≥ n_docs × FPS_PER_DOC_EST. Pure integer
-    arithmetic — identical in every process that derives it."""
-    entries = max(1, n_docs) * WINNOW_FPS_PER_DOC_EST
-    b = WINNOW_MIN_BUCKETS
-    while b < WINNOW_MAX_BUCKETS and b * WINNOW_ENTRIES_PER_BUCKET < entries:
-        b <<= 1
-    return b
-
-
-def _meta_path(index_path: str) -> str:
-    return os.path.join(index_path, "_meta.json")
-
-
-def winnow_index_meta(index_path: str) -> dict:
-    with open(_meta_path(index_path)) as fh:
-        return json.load(fh)
 
 
 def write_winnow_index(spark: SparkSession, sf_dir: str, path: str) -> str:
-    """Derive and persist the corpus's winnowing fingerprints —
-    the one run of the char-gram kernel this index exists to
-    amortize. SINGLE-shuffle build (VERDICT r11 ask #3; the r11 form
-    shuffled its largest table twice — a window over ``fp``, then a
-    repartition by ``bucket``): since ``bucket = pmod(fp, B)`` is a
-    function of ``fp``, repartitioning by bucket FIRST colocates
-    equal fingerprints, and df is then computed with a window
-    partitioned by ``(bucket, fp)`` — Catalyst recognizes that
-    HashPartitioning(bucket) satisfies ClusteredDistribution(bucket,
-    fp) (the hash keys are a subset of the clustering keys), so the
-    window plans WITHOUT a second exchange, and counting per
-    (bucket, fp) ≡ counting per fp because bucket is determined by
-    fp. The one shuffle moves only (doc_id, fp) int64 pairs, never
-    text; pinned by tests/test_winnow_index.py's single-exchange
-    plan gate."""
+    """Derive and persist the corpus's winnowing fingerprints — the one
+    run of the char-gram kernel this index amortizes. Single-shuffle
+    build: ``bucket = pmod(fp, B)`` is a function of ``fp``, so the
+    bucket shuffle already co-locates equal fingerprints, and df is a
+    window over ``(bucket, fp)`` computed after it — Catalyst sees
+    HashPartitioning(bucket) satisfy ClusteredDistribution(bucket, fp)
+    and plans no second exchange. The one shuffle moves (doc_id, fp)
+    int64 pairs, never text; pinned by tests/test_winnow_index.py's
+    single-exchange plan gate."""
     from mapreduceapp_spark.sources.parquet import table_row_count
 
     n_docs = table_row_count(spark, sf_dir, "documents")
-    n_buckets = winnow_bucket_count(n_docs)
+    n_buckets = bucket_count(n_docs * WINNOW_FPS_PER_DOC_EST)
     fps = winnow_fingerprints(
         spread_table(spark, sf_dir, "documents"), n_docs=n_docs
     )
-    entries = (
-        fps.withColumn(
-            "bucket", F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int")
-        )
-        .repartition(n_buckets, "bucket")
-        .withColumn(
-            "df",
-            F.count(F.lit(1)).over(Window.partitionBy("bucket", "fp")),
-        )
+    write_bucketed(
+        fps, os.path.join(path, "fps"), "fp", "bucket", n_buckets, ("fp",),
+        per_bucket=lambda parts: parts.selectExpr(
+            "*", "count(1) OVER (PARTITION BY bucket, fp) AS df"
+        ),
     )
-    (
-        entries.sortWithinPartitions("fp")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(os.path.join(path, "fps"))
-    )
-    os.makedirs(path, exist_ok=True)
-    with open(_meta_path(path), "w") as fh:
-        json.dump({"n_buckets": n_buckets}, fh)
+    write_meta(path, n_buckets=n_buckets, source_rows=n_docs)
     return path
 
 
 def read_winnow_index(spark: SparkSession, index_path: str) -> DataFrame:
     """(doc_id, fp, df) scan over the whole persisted index (bucket
     column dropped) — the dedup consumer's input."""
+    read_meta(index_path)
     return spark.read.parquet(os.path.join(index_path, "fps")).drop("bucket")
 
 
 def probe_winnow_index(
     spark: SparkSession, index_path: str, probe_fps: DataFrame
 ) -> DataFrame:
-    """Corpus (doc_id, fp) rows whose fingerprint appears in
+    """Corpus (doc_id, fp, df) rows whose fingerprint appears in
     ``probe_fps`` (a frame with an ``fp`` column) — the
     decontamination primitive, partition-pruned: the probe's distinct
-    buckets collect as plan-time literals (bounded at n_buckets ints,
-    the touched_buckets contract) and only those directories are
-    scanned, so corpus index bytes scale with the probe's fingerprint
+    buckets (≤ n_buckets ints, read driver-side from a staged probe
+    frame) become plan-time literals and only those directories are
+    scanned, so corpus bytes read scale with the probe's fingerprint
     spread, not the corpus."""
-    n_buckets = winnow_index_meta(index_path)["n_buckets"]
-    # staged probe slots resolve their bucket set driver-side (zero
-    # jobs — r18, the staged_local_column convention; pmod mirrored
-    # exactly); non-staged/remote/oversized frames keep the collect job
-    from mapreduceapp_spark.plans.staging import staged_local_column
-
-    vals = staged_local_column(probe_fps, "fp", 2_000_000)
-    if vals is not None:
-        buckets = sorted({((v % n_buckets) + n_buckets) % n_buckets for v in vals})
-    else:
-        buckets = sorted(
-            r["b"]
-            for r in probe_fps.select(
-                F.pmod(F.col("fp"), F.lit(n_buckets)).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
+    n_buckets = read_meta(index_path)["n_buckets"]
+    buckets = sorted(staged_counts(probe_fps, "fp", n_buckets))
     idx = spark.read.parquet(os.path.join(index_path, "fps"))
     if not buckets:
         return idx.filter(F.lit(False)).drop("bucket")
     return idx.filter(F.col("bucket").isin(buckets)).drop("bucket")
 
 
-def _index_slot(spark: SparkSession, sf_dir: str) -> str:
-    """Deterministic per-(process, sf_dir) index path under the
-    staging root; built on first use, reused after (the build is the
-    'corpus compaction' event — probes are the steady state; the
-    q_dedup_index_probe convention)."""
-    safe = sf_dir.strip("/").replace("/", "_")
-    path = os.path.join(staging_root(), f"winnow_index_{safe}")
-    marker = _meta_path(path)
-    if not (path.startswith(("hdfs://", "s3a://")) or os.path.exists(marker)):
-        write_winnow_index(spark, sf_dir, path)
-    return path
-
-
 @register(
     "q_winnowing_indexed",
-    # Same ground truth as q_winnowing: the index is a persisted
-    # re-layout of the same selected fingerprints with df
-    # materialized, the consumer the same capped self-join — the
-    # oracle is adopted verbatim below (the q_dedup_index_probe
-    # pattern).
-    oracle=None,  # set below — reuses q_winnowing's SQL verbatim
+    # the index is a persisted re-layout of the same selected
+    # fingerprints with df materialized, the consumer the same capped
+    # self-join, so the ground truth is q_winnowing's
+    oracle=WINNOWING_ORACLE,
     doc="Winnowing dedup off the PERSISTED fingerprint index — the "
     "corpus-scale form: probe reads thin persisted int64 rows, the "
     "char-gram kernel runs once per corpus compaction (C2 family).",
@@ -203,8 +133,12 @@ def q_winnowing_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join on fp, count shared fingerprints. The expensive part of
     q_winnowing — deriving fingerprints from raw chars — does not
     appear in this plan at all."""
-    idx = read_winnow_index(spark, _index_slot(spark, sf_dir))
-    capped = idx.filter(F.col("df") <= WINNOW_DF_CAP).select("doc_id", "fp")
+    path = index_slot(spark, "winnow_index", sf_dir, "documents", write_winnow_index)
+    capped = (
+        read_winnow_index(spark, path)
+        .filter(F.col("df") <= WINNOW_DF_CAP)
+        .select("doc_id", "fp")
+    )
     return (
         capped.alias("a")
         .join(capped.alias("b"), ["fp"])
@@ -216,18 +150,3 @@ def q_winnowing_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= WINNOW_MIN_SHARED)
     )
-
-
-def _adopt_winnowing_oracle() -> None:
-    import dataclasses
-
-    from mapreduceapp_spark.plans.registry import _REGISTRY
-
-    q = _REGISTRY["q_winnowing_indexed"]
-    src = _REGISTRY["q_winnowing"]
-    _REGISTRY["q_winnowing_indexed"] = dataclasses.replace(
-        q, oracle=src.oracle
-    )
-
-
-_adopt_winnowing_oracle()

@@ -18,8 +18,9 @@ stats sidecar), then timing:
   range holds a candidate — the r11 point-skipping rung), vs
 - the same 1-doc probe with directory pruning ONLY (the r10 floor:
   sig bytes = min(n_cand, B)/B of the corpus), vs
-- the same 1-doc probe with pruning DISABLED (both scans full) —
-  the cost every probe would pay without the partitioned layout.
+- the same 1-doc probe with band pruning DISABLED (the band scan
+  reads every bucket; sigs keep directory pruning) — the cost every
+  probe would pay without the partitioned band layout.
 
 Wall-clock trustworthiness (r10 'Next round' #2): every point runs
 behind bench.py's contamination sentinel (absolute-calibrated
@@ -75,6 +76,7 @@ def main() -> None:
 
     import bench
     from mapreduceapp_spark.operators import dedup_index as DI
+    from mapreduceapp_spark.operators import index_layout as L
     from mapreduceapp_spark.operators.dedup import (
         INCR_BATCH_MOD,
         INCR_BATCH_RESIDUE,
@@ -101,7 +103,8 @@ def main() -> None:
     t0 = time.monotonic()
     DI.write_band_index(spark, sf_dir, base_idx)
     build_s = time.monotonic() - t0
-    n_buckets = DI.index_meta(base_idx)["n_buckets"]
+    base_meta = L.read_meta(base_idx)
+    n_buckets = base_meta["n_buckets"]
 
     # ---- inflate the index REPL× with salted replicas --------------
     big_idx = os.path.join(tmp, "band_index_big")
@@ -139,16 +142,21 @@ def main() -> None:
         .partitionBy("sig_bucket")
         .parquet(os.path.join(big_idx, "sigs"))
     )
-    n_sig_files = DI.write_sig_file_stats(spark, big_idx)
-
-    def _write_meta(**extra) -> None:
-        with open(os.path.join(big_idx, "_meta.json"), "w") as fh:
-            json.dump({"n_buckets": n_buckets, **extra}, fh)
-
-    META_FULL = dict(
-        sigs_partitioned=True, sig_files=True, n_sig_files=n_sig_files
+    n_sig_files = L.write_file_ranges(
+        spark, big_idx, "sigs", "sig_files", "doc_id", "sig_bucket"
     )
-    _write_meta(**META_FULL)
+
+    def _write_meta(n_files: int) -> None:
+        # n_sig_files routes the sigs fetch: 0 forces directory
+        # pruning (fetch_candidate_sigs' file-count regime gate)
+        L.write_meta(
+            big_idx,
+            n_buckets=n_buckets,
+            source_rows=base_meta["source_rows"] * REPL,
+            n_sig_files=n_files,
+        )
+
+    _write_meta(n_sig_files)
     big_bands_bytes = _tree_bytes(os.path.join(big_idx, "bands"))
     big_sigs_bytes = _tree_bytes(os.path.join(big_idx, "sigs"))
 
@@ -172,8 +180,14 @@ def main() -> None:
         matched sig files (read off the probe plan's own input-file
         list). The behavioral tests prove unmatched files are never
         read, so matched-bytes IS the probe's sigs IO."""
-        bands = DI._band_entries(probe_sh, n_buckets)
-        touched = DI.touched_buckets(bands)
+        bands = DI._band_entries(probe_sh).withColumn(
+            "bucket", L.bucket_of("band_key", n_buckets)
+        )
+        # the probe's own pruning literals (patched by the no-prune
+        # control below)
+        touched = DI._probe_pruning_stats(
+            bands.withColumnRenamed("doc_id", "new_doc")
+        )[0]
         probe_s, canary_s, hot = bench._probe_slot(spark, label)
         walls, n_pairs = [], 0
         plan = None
@@ -249,34 +263,28 @@ def main() -> None:
         points.append(measure(staged_batches[n_docs], f"pruned_{n_docs}doc"))
 
     # ---- dir-prune control: 1-doc probe, directory pruning only ----
-    _write_meta(sigs_partitioned=True)
+    _write_meta(0)
     points.append(measure(staged_batches[1], "dirprune_1doc", file_grain=False))
 
-    # ---- no-prune control: same 1-doc probe, full scans -------------
-    real_touched = DI.touched_buckets
+    # ---- no-prune control: same 1-doc probe, band scan unpruned -----
+    # probe_band_index reads its band pruning literals through
+    # _probe_pruning_stats (one job also carrying the sig_n
+    # broadcast-gate estimate), so patching it alone turns band
+    # pruning off. The estimate is computed by the real agg; only the
+    # bucket list is overridden. The sigs side keeps directory
+    # pruning: the index has no full-scan reader.
     real_stats = DI._probe_pruning_stats
     try:
-        DI.touched_buckets = lambda pb: list(range(n_buckets))
-        # r14: probe_band_index reads its pruning literals through
-        # _probe_pruning_stats (one job also carrying the sig_n
-        # broadcast-gate estimate) — patch it too or the control
-        # silently keeps band pruning on. The estimate is computed by
-        # the REAL agg (ADVICE r14: a hardcoded 1 forced the sig_n
-        # broadcasts unconditionally — right for a 1-doc control,
-        # brittle if reused with a larger batch); only the bucket
-        # list is overridden to defeat pruning.
         DI._probe_pruning_stats = lambda pb: (
             list(range(n_buckets)),
             real_stats(pb)[1],
         )
-        _write_meta()  # neither sigs pruning flag
         points.append(
             measure(staged_batches[1], "noprune_1doc", file_grain=False)
         )
     finally:
-        DI.touched_buckets = real_touched
         DI._probe_pruning_stats = real_stats
-        _write_meta(**META_FULL)
+        _write_meta(n_sig_files)
 
     # ---- planted-candidate point-fetch curve ------------------------
     # The probe points above inherit the inflation's locality: salted
@@ -400,18 +408,15 @@ def main() -> None:
         .partitionBy("sig_bucket")
         .parquet(os.path.join(coarse_idx, "sigs"))
     )
-    n_coarse_files = DI.write_sig_file_stats(spark, coarse_idx)
-    with open(os.path.join(coarse_idx, "_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "n_buckets": n_buckets,
-                "sigs_partitioned": True,
-                "sig_files": True,
-                "n_sig_files": n_coarse_files,
-                "complete": True,
-            },
-            fh,
-        )
+    n_coarse_files = L.write_file_ranges(
+        spark, coarse_idx, "sigs", "sig_files", "doc_id", "sig_bucket"
+    )
+    L.write_meta(
+        coarse_idx,
+        n_buckets=n_buckets,
+        source_rows=base_meta["source_rows"] * REPL,
+        n_sig_files=n_coarse_files,
+    )
     import pyarrow.parquet as pq
 
     # Two candidate regimes: n_cand=4 is the UNSATURATED one (each

@@ -152,11 +152,13 @@ def dedup_index_regimes(spark) -> dict:
         _doc_shingles_with_minhash,
     )
     from mapreduceapp_spark.operators.dedup_index import (
-        SIDECAR_MIN_FILES_PER_BUCKET,
         SIG_ROWS_PER_FILE,
-        index_meta,
         probe_band_index,
         write_band_index,
+    )
+    from mapreduceapp_spark.operators.index_layout import (
+        SIDECAR_MIN_FILES_PER_BUCKET,
+        read_meta,
     )
     from mapreduceapp_spark.plans.staging import stage, staging_root
 
@@ -172,7 +174,7 @@ def dedup_index_regimes(spark) -> dict:
         t0 = _time.perf_counter()
         write_band_index(spark, OUT_DIR, path, sig_rows_per_file=rows_per_file)
         build_sec = round(_time.perf_counter() - t0, 2)
-        meta = index_meta(path)
+        meta = read_meta(path)
         sidecar_live = (
             meta["n_sig_files"]
             > SIDECAR_MIN_FILES_PER_BUCKET * meta["n_buckets"]

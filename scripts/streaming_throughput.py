@@ -255,7 +255,7 @@ def measure(
             )
             q.awaitTermination()
             wall = time.perf_counter() - t0
-            from mapreduceapp_spark.operators.dedup_index import index_meta
+            from mapreduceapp_spark.operators.index_layout import read_meta
 
             results["ingest_dedup_admit"] = {
                 "batches": aout2["batches"],
@@ -265,7 +265,7 @@ def measure(
                 "rows_per_sec": round(n_probe_docs / wall),
                 "index_build_sec": abuild_sec2,
                 "probe_docs": n_probe_docs,
-                "admitted_segments": index_meta(idx_path_a).get(
+                "admitted_segments": read_meta(idx_path_a).get(
                     "appended_segments", 0
                 ),
             }

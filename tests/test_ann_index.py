@@ -12,13 +12,16 @@ from pyspark.sql import functions as F
 
 from mapreduceapp_spark.operators import ann_index as ai
 from mapreduceapp_spark.operators.ann_index import (
-    _ann_index_slot,
-    ann_index_bucket_count,
-    ann_index_meta,
     fetch_probed_codes,
     probe_ann_index,
     q_ann_index_probe,
     write_ann_index,
+    write_fixture_ann_index,
+)
+from mapreduceapp_spark.operators.index_layout import (
+    bucket_count,
+    index_slot,
+    read_meta,
 )
 from mapreduceapp_spark.operators.similarity import (
     ADC_IVFADC,
@@ -41,19 +44,6 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_bucket_count_derivation_regimes():
-    """Derived from corpus size like the band index: floor of 64
-    directories at fixture scale, growing in powers of two, capped at
-    65,536 — where per-bucket file ranges take over."""
-    assert ann_index_bucket_count(100) == 64
-    # 1e8 vectors × 8 = 8e8 code rows → 256 buckets of ≤4M entries
-    assert ann_index_bucket_count(10**8) == 256
-    assert ann_index_bucket_count(10**8) * 4_000_000 >= 10**8 * PQ_M
-    assert ann_index_bucket_count(10**12) == 65_536
-    b = ann_index_bucket_count(10**9)
-    assert b & (b - 1) == 0 and 64 <= b <= 65_536
-
-
 def test_probe_equals_inplan_twin(spark, sf_dir):
     """The headline contract (VERDICT r14 ask #1): the persisted-
     index probe is ROW-EQUAL to the in-plan residual IVFADC over the
@@ -65,7 +55,9 @@ def test_probe_equals_inplan_twin(spark, sf_dir):
     inplan = adc_search(e_p, n, ADC_IVFADC)
     probed = probe_ann_index(
         spark,
-        _ann_index_slot(spark, sf_dir),
+        index_slot(
+            spark, "ann_index", sf_dir, "embeddings", write_fixture_ann_index
+        ),
         e_p.filter(KNN_QUERY_PRED),
         n_queries_bound=n // 100 + 1,
     )
@@ -92,11 +84,11 @@ def test_index_layout(spark, sf_dir, tmp_path):
     e_p = _lineage(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")
     write_ann_index(spark, e_p, n, path)
-    meta = ann_index_meta(path)
-    assert meta["complete"] and meta["n_rows"] == n
+    meta = read_meta(path)
+    assert meta["complete"] and meta["source_rows"] == n
     assert meta["stride"] == _ivf_stride(n)
     assert meta["k_cent"] == _pq_k(n)
-    assert meta["n_buckets"] == ann_index_bucket_count(n)
+    assert meta["n_buckets"] == bucket_count(n * PQ_M)
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     assert cents.count() == meta["n_cells"] > 0
     book = spark.read.parquet(os.path.join(path, "codebook"))
@@ -135,12 +127,12 @@ def test_probe_prunes_partitions(spark, tmp_path, monkeypatch):
     from tests.conftest import SF_DIR_MID
 
     sf_dir = SF_DIR_MID
-    monkeypatch.setattr(ai, "ann_index_bucket_count", lambda n: 4)
+    monkeypatch.setattr(ai, "bucket_count", lambda entries: 4)
     path = str(tmp_path / "ann_index_small")
     e_p = _lineage(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")
     write_ann_index(spark, e_p, n, path, code_rows_per_file=64)
-    meta = ann_index_meta(path)
+    meta = read_meta(path)
     assert meta["n_buckets"] == 4
     assert meta["n_code_files"] > 2 * meta["n_buckets"]  # sidecar engaged
 
@@ -217,7 +209,7 @@ def test_directory_pruning_regime_and_plan_filter(spark, sf_dir, tmp_path):
     e_p = _lineage(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")
     write_ann_index(spark, e_p, n, path)
-    meta = ann_index_meta(path)
+    meta = read_meta(path)
     assert (
         meta["n_code_files"]
         <= ai.SIDECAR_MIN_FILES_PER_BUCKET * meta["n_buckets"]
@@ -446,43 +438,6 @@ def test_ann_search_stream_equals_batch_probe(spark, tmp_path):
     assert sorted(got) == want and want
 
 
-def test_meta_is_required(tmp_path):
-    """No pre-metadata generation exists for this index — a directory
-    without _meta.json is not an index and must fail loudly."""
-    with pytest.raises(FileNotFoundError):
-        ann_index_meta(str(tmp_path / "nowhere"))
-
-
-def test_ann_slot_staleness_fingerprint(spark, sf_dir, tmp_path, monkeypatch):
-    """ADVICE r15 #3: slot reuse keyed on path + complete alone would
-    silently probe a stale index when a persistent staging root
-    outlives a regenerated fixture — reuse must also match meta's
-    n_rows against the CURRENT footer-derived corpus count (zero
-    jobs) and rebuild on mismatch; a matching fingerprint must not
-    rebuild."""
-    import json
-
-    from mapreduceapp_spark.operators import ann_index as ai
-    from mapreduceapp_spark.plans import staging
-
-    monkeypatch.setattr(staging, "_STAGING_ROOT", str(tmp_path / "stage"))
-    monkeypatch.setattr(staging, "_STAGED_PLANS", {})
-
-    path = ai._ann_index_slot(spark, sf_dir)
-    meta_file = os.path.join(path, "_meta.json")
-    built_at = os.path.getmtime(meta_file)
-    assert ai._ann_index_slot(spark, sf_dir) == path
-    assert os.path.getmtime(meta_file) == built_at, "fresh slot rebuilt"
-
-    meta = ann_index_meta(path)
-    true_rows = meta["n_rows"]
-    meta["n_rows"] = true_rows + 7  # simulate a regenerated fixture
-    with open(meta_file, "w") as fh:
-        json.dump(meta, fh)
-    ai._ann_index_slot(spark, sf_dir)
-    assert ann_index_meta(path)["n_rows"] == true_rows, "stale slot kept"
-
-
 @pytest.mark.slow
 def test_ann_append_crash_rolls_back_on_both_pruning_grains(
     spark, sf_dir, tmp_path, monkeypatch
@@ -509,7 +464,7 @@ def test_ann_append_crash_rolls_back_on_both_pruning_grains(
 
     # crash #1: codes landed, sidecar rows never written
     monkeypatch.setattr(
-        ai, "_append_code_file_stats",
+        ai, "write_file_ranges",
         lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash-1")),
     )
     with pytest.raises(RuntimeError, match="crash-1"):
@@ -640,10 +595,10 @@ def test_recompact_invalidates_meta_before_rebuild(
     import mapreduceapp_spark.operators.ann_index as amod
     from mapreduceapp_spark.functions.vectors import sq_norm_sql
     from mapreduceapp_spark.operators.ann_index import (
-        _meta_path,
         append_ann_index,
         maybe_recompact_ann_index,
     )
+    from mapreduceapp_spark.operators.index_layout import meta_path
     from mapreduceapp_spark.operators.similarity import (
         ANISO_HALF,
         ANISO_SCALE,
@@ -670,7 +625,7 @@ def test_recompact_invalidates_meta_before_rebuild(
     monkeypatch.undo()
     # the stale meta/log are gone: readers fail loudly, the slot's
     # completeness gate rebuilds from source
-    assert not os.path.exists(_meta_path(path))
+    assert not os.path.exists(meta_path(path))
     assert not os.path.isdir(os.path.join(path, "_log"))
     # and a retried recompaction... has no drift signal (no meta), so
     # the caller rebuilds via write_ann_index — the fresh build below
@@ -678,7 +633,7 @@ def test_recompact_invalidates_meta_before_rebuild(
     write_ann_index(
         spark, corpus.unionByName(shifted), n_c + n_b, path
     )
-    assert ann_index_meta(path)["complete"]
+    assert read_meta(path)["complete"]
     got = probe_ann_index(spark, path, shifted.filter("vec_id % 100 = 8"))
     assert got.count() > 0
 
@@ -726,7 +681,7 @@ def test_maybe_recompact_consumes_drift_trigger(spark, sf_dir, tmp_path):
     state = ann_index_state(path)
     assert state["segs"] == ["build"] and state["appended_rows"] == 0
     assert ann_index_drift_ratio(path) is None
-    assert ann_index_meta(path)["n_rows"] == n_full
+    assert read_meta(path)["source_rows"] == n_full
     # the recompacted index serves the whole corpus including the
     # formerly-drifted vectors (their ids are ≡ 8,9 mod 10, so pick
     # a small deterministic slice of them as queries)

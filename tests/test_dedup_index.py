@@ -9,14 +9,15 @@ import pyspark.sql.functions as F
 import pytest
 
 from mapreduceapp_spark.operators.dedup_index import (
-    INDEX_MAX_BUCKETS,
-    INDEX_MIN_BUCKETS,
     _band_entries,
-    index_bucket_count,
-    index_meta,
     probe_band_index,
-    touched_buckets,
     write_band_index,
+)
+from mapreduceapp_spark.operators.index_layout import (
+    MAX_BUCKETS,
+    MIN_BUCKETS,
+    bucket_of,
+    read_meta,
 )
 from mapreduceapp_spark.plans.registry import get_query
 
@@ -25,20 +26,14 @@ def _pairs(rows):
     return sorted((r["corpus_doc"], r["new_doc"], r["inter"], r["uni"], r["jac"]) for r in rows)
 
 
-def test_bucket_count_derivation_regimes():
-    """Footer-derived layout (VERDICT r9 ask #4): floor at fixture
-    scale, linear growth in the middle, capped at the bounded-
-    driver-literal ceiling in the 100 TB regime; powers of two
-    throughout."""
-    assert index_bucket_count(0) == INDEX_MIN_BUCKETS
-    assert index_bucket_count(60_000) == INDEX_MIN_BUCKETS  # fixtures
-    # 16M docs × 16 bands = 256M entries = exactly 64 × 4M
-    assert index_bucket_count(16_000_000) == 64
-    assert index_bucket_count(16_000_001) == 128
-    assert index_bucket_count(10**11) == INDEX_MAX_BUCKETS  # 100 TB
-    for n in (1, 10**6, 10**9, 10**11):
-        b = index_bucket_count(n)
-        assert b & (b - 1) == 0  # power of two
+def _bucketed_bands(sh, n_buckets):
+    """A batch's band entries with their index bucket, and the sorted
+    distinct buckets they touch."""
+    bands = _band_entries(sh).withColumn("bucket", bucket_of("band_key", n_buckets))
+    touched = sorted(
+        r["bucket"] for r in bands.select("bucket").distinct().collect()
+    )
+    return bands, touched
 
 
 def test_probe_equals_incremental_twin(spark, sf_dir):
@@ -49,33 +44,6 @@ def test_probe_equals_incremental_twin(spark, sf_dir):
     want = _pairs(get_query("q_incremental_dedup").builder(spark, sf_dir).collect())
     assert got == want
     assert len(got) > 0  # fixture has cross-split duplicates
-
-
-def test_legacy_prometadata_index_keeps_payload_shape(spark, sf_dir, tmp_path):
-    """A pre-metadata index (no _meta.json: full sigs scan, candidate
-    count unknown) routes to the single-pass PAYLOAD prefilter
-    (ADVICE r14: the thin form would rescan the unpruned corpus sigs
-    table twice more — sig prefilter + shingle join-back — with no
-    candidate bound to justify the fixed costs) and still emits the
-    modern probe's exact verified pair set."""
-    from mapreduceapp_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        INCR_BATCH_RESIDUE,
-        _doc_shingles_with_minhash,
-    )
-    from mapreduceapp_spark.plans.staging import stage
-
-    path = str(tmp_path / "legacy_index")
-    write_band_index(spark, sf_dir, path)
-    os.remove(os.path.join(path, "_meta.json"))
-    assert index_meta(path) == {"n_buckets": INDEX_MIN_BUCKETS}
-    sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
-    batch = sh.filter((F.col("doc_id") % INCR_BATCH_MOD) >= INCR_BATCH_RESIDUE)
-    legacy = _pairs(probe_band_index(spark, path, batch).collect())
-    modern = _pairs(
-        get_query("q_dedup_index_probe").builder(spark, sf_dir).collect()
-    )
-    assert legacy == modern and legacy
 
 
 def test_probe_prefilter_regimes_row_equal(spark, sf_dir, monkeypatch):
@@ -101,8 +69,8 @@ def test_index_layout(spark, sf_dir, tmp_path):
     within files (the row-group pruning contract)."""
     path = str(tmp_path / "band_index")
     write_band_index(spark, sf_dir, path, corpus_only=False)
-    n_buckets = index_meta(path)["n_buckets"]
-    assert INDEX_MIN_BUCKETS <= n_buckets <= INDEX_MAX_BUCKETS
+    n_buckets = read_meta(path)["n_buckets"]
+    assert MIN_BUCKETS <= n_buckets <= MAX_BUCKETS
     bands_dir = os.path.join(path, "bands")
     dirs = {d for d in os.listdir(bands_dir) if d.startswith("bucket=")}
     assert dirs  # at least one populated bucket
@@ -136,8 +104,7 @@ def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
     sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
     # one-document batch: touches ≤16 band keys → ≤16 buckets
     one = sh.orderBy("doc_id").limit(1)
-    bands = _band_entries(one, index_meta(path)["n_buckets"])
-    touched = touched_buckets(bands)
+    bands, touched = _bucketed_bands(one, read_meta(path)["n_buckets"])
     assert 1 <= len(touched) <= 16
     probe = probe_band_index(spark, path, one)
     # band scan must carry a partition filter on the touched buckets.
@@ -155,7 +122,7 @@ def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
     # input files on the sigs side must be exactly the files whose
     # (lo, hi) doc range holds a candidate, re-derived here from the
     # sidecar the build wrote
-    nb = index_meta(path)["n_buckets"]
+    nb = read_meta(path)["n_buckets"]
     idx_bands = (
         spark.read.parquet(os.path.join(path, "bands"))
         .filter(F.col("bucket").isin(touched))
@@ -241,7 +208,7 @@ def test_sig_bytes_proportional_to_candidates(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "band_index")
     write_band_index(spark, sf_dir, path, sig_rows_per_file=2)
-    nb = index_meta(path)["n_buckets"]
+    nb = read_meta(path)["n_buckets"]
     sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
     one = sh.orderBy("doc_id").limit(1)
     probe = probe_band_index(spark, path, one)
@@ -251,10 +218,10 @@ def test_sig_bytes_proportional_to_candidates(spark, sf_dir, tmp_path):
     sig_files = [urlparse(f).path for f in probe.inputFiles() if "/sigs/" in f]
     file_bytes = sum(os.path.getsize(f) for f in sig_files)
     # distinct candidate corpus docs and their buckets, re-derived
-    bands = _band_entries(one, nb)
+    bands, touched = _bucketed_bands(one, nb)
     idx_bands = (
         spark.read.parquet(os.path.join(path, "bands"))
-        .filter(F.col("bucket").isin(touched_buckets(bands)))
+        .filter(F.col("bucket").isin(touched))
         .select(F.col("doc_id").alias("corpus_doc"), "band_key")
     )
     cand_docs = [
@@ -296,7 +263,7 @@ def test_fetch_regime_gate_and_point_push(spark, sf_dir, tmp_path):
 
     coarse = str(tmp_path / "idx_coarse")
     write_band_index(spark, sf_dir, coarse)
-    meta = index_meta(coarse)
+    meta = read_meta(coarse)
     assert (
         meta["n_sig_files"]
         <= SIDECAR_MIN_FILES_PER_BUCKET * meta["n_buckets"]
@@ -324,7 +291,7 @@ def test_fetch_regime_gate_and_point_push(spark, sf_dir, tmp_path):
 
     fine = str(tmp_path / "idx_fine")
     write_band_index(spark, sf_dir, fine, sig_rows_per_file=2)
-    meta_f = index_meta(fine)
+    meta_f = read_meta(fine)
     assert (
         meta_f["n_sig_files"]
         > SIDECAR_MIN_FILES_PER_BUCKET * meta_f["n_buckets"]
@@ -432,37 +399,29 @@ def test_indexed_stream_equals_batch_twin(spark, sf_dir, tmp_path):
 def test_slot_completeness_survives_missing_success_marker(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """ADVICE r12 (low): a current build records complete=true in
-    _meta.json (written last), so stripping sigs/_SUCCESS — disabled
-    committer markers, cleanup tooling — must NOT trigger a silent
-    full rebuild on every probe. Legacy slots (meta without the flag)
-    keep the stricter r11 rule: no _SUCCESS ⇒ rebuild, because their
-    build order allowed a torn sigs table behind the meta marker."""
-    import json
-
-    from mapreduceapp_spark.operators import dedup_index as di
+    """A build records complete=true in _meta.json, written last, so
+    stripping sigs/_SUCCESS — disabled committer markers, cleanup
+    tooling — must NOT trigger a silent full rebuild on every probe."""
+    from mapreduceapp_spark.operators.index_layout import index_slot
     from mapreduceapp_spark.plans import staging
 
     monkeypatch.setattr(staging, "_STAGING_ROOT", str(tmp_path / "stage"))
     monkeypatch.setattr(staging, "_STAGED_PLANS", {})
 
-    path = di._index_slot(spark, sf_dir)  # first use: builds
+    def band_slot():
+        return index_slot(
+            spark, "band_index", sf_dir, "documents", write_band_index
+        )
+
+    path = band_slot()  # first use: builds
     meta_file = os.path.join(path, "_meta.json")
-    assert index_meta(path).get("complete") is True
+    assert read_meta(path).get("complete") is True
     success = os.path.join(path, "sigs", "_SUCCESS")
     os.remove(success)
 
     built_at = os.path.getmtime(meta_file)
-    assert di._index_slot(spark, sf_dir) == path
+    assert band_slot() == path
     assert os.path.getmtime(meta_file) == built_at, "flagged slot rebuilt"
-
-    # legacy slot: same bytes, meta WITHOUT the flag, no _SUCCESS
-    meta = index_meta(path)
-    meta.pop("complete")
-    with open(meta_file, "w") as fh:
-        json.dump(meta, fh)
-    di._index_slot(spark, sf_dir)
-    assert index_meta(path).get("complete") is True, "legacy slot not rebuilt"
 
 
 def test_doc_push_raises_parquet_in_filter_threshold(spark, sf_dir, tmp_path):
@@ -471,16 +430,16 @@ def test_doc_push_raises_parquet_in_filter_threshold(spark, sf_dir, tmp_path):
     converts to a min/max RANGE parquet predicate — which spans the
     whole corpus for scattered candidates, so the reader decodes
     every row of every matched file and the 'point push' is theater.
-    _push_doc_filter must raise the threshold to DOC_PUSH_VALUES_MAX
+    _push_doc_filter must raise the threshold to VALUES_PUSH_MAX
     so moderate candidate sets actually reach the reader's
     stats/dictionary filters (NOT to DOC_PUSH_CAP: parquet-mr gets
     the list as a binary OR tree — 4,096 values StackOverflow
     executor tasks, measured r13)."""
     from mapreduceapp_spark.operators.dedup_index import (
         DOC_PUSH_CAP,
-        DOC_PUSH_VALUES_MAX,
         fetch_candidate_sigs,
     )
+    from mapreduceapp_spark.operators.index_layout import VALUES_PUSH_MAX
 
     key = "spark.sql.parquet.pushdown.inFilterThreshold"
     before = spark.conf.get(key)
@@ -499,7 +458,7 @@ def test_doc_push_raises_parquet_in_filter_threshold(spark, sf_dir, tmp_path):
         )
         sigs, n_cand = fetch_candidate_sigs(spark, path, cand)
         assert n_cand == len(docs)
-        assert int(spark.conf.get(key)) == DOC_PUSH_VALUES_MAX
+        assert int(spark.conf.get(key)) == VALUES_PUSH_MAX
         got = sorted(r["doc_id"] for r in sigs.select("doc_id").collect())
         assert got == sorted(docs)  # push is semantics-preserving
     finally:
@@ -549,11 +508,11 @@ def test_band_append_placement_and_sidecar_consistency(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "band_idx_app")
     write_band_index(spark, sf_dir, path)
-    meta0 = index_meta(path)
+    meta0 = read_meta(path)
     _, sh8, _ = _split_sigs(spark, sf_dir)
     n8 = sh8.count()
     append_band_index(spark, path, sh8)
-    meta = index_meta(path)
+    meta = read_meta(path)
     assert meta["appended_segments"] == 1
     assert not os.path.exists(os.path.join(path, "_pending.json"))
     sigs = spark.read.parquet(os.path.join(path, "sigs"))
@@ -712,7 +671,7 @@ def test_band_append_crash_heal(spark, sf_dir, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("injected crash before sidecar rewrite")
 
-    monkeypatch.setattr(dmod, "_append_sig_file_stats", boom)
+    monkeypatch.setattr(dmod, "write_file_ranges", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         append_band_index(spark, torn, sh8)
     monkeypatch.undo()
@@ -722,7 +681,7 @@ def test_band_append_crash_heal(spark, sf_dir, tmp_path, monkeypatch):
     got = _pairs(probe_band_index(spark, torn, sh9).collect())
     assert got == want and got
     assert not os.path.exists(os.path.join(torn, "_pending.json"))
-    meta = index_meta(torn)
+    meta = read_meta(torn)
     sidecar = spark.read.parquet(os.path.join(torn, "sig_files"))
     assert sidecar.count() == meta["n_sig_files"]
     n_disk = len(
@@ -753,7 +712,7 @@ def test_band_append_after_crash_heals_at_entry(
     def boom(*a, **k):
         raise RuntimeError("injected crash before sidecar rewrite")
 
-    monkeypatch.setattr(dmod, "_append_sig_file_stats", boom)
+    monkeypatch.setattr(dmod, "write_file_ranges", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         append_band_index(spark, torn, sh8)
     monkeypatch.undo()
@@ -770,16 +729,17 @@ def test_band_append_after_crash_heals_at_entry(
 
 
 def test_band_append_requires_current_format(spark, sf_dir, tmp_path):
-    """No silent appends into a legacy (pre-sidecar) index — its
-    pruning contract cannot cover appended files."""
+    """No silent appends into a legacy index — one whose meta lacks
+    the current-format source_rows fingerprint (every older writer's
+    meta does): its pruning contract cannot cover appended files."""
     import json as _json
 
     from mapreduceapp_spark.operators.dedup_index import append_band_index
 
     path = str(tmp_path / "legacy")
     write_band_index(spark, sf_dir, path)
-    meta = index_meta(path)
-    meta.pop("sig_files")
+    meta = read_meta(path)
+    meta.pop("source_rows")
     with open(os.path.join(path, "_meta.json"), "w") as fh:
         _json.dump(meta, fh)
     _, sh8, _ = _split_sigs(spark, sf_dir)
@@ -852,34 +812,3 @@ def test_indexed_stream_admit_finds_cross_batch_dups(spark, sf_dir, tmp_path):
     assert not [
         (c, n) for c, n in without if c in b1_ids and n >= 50_000_000
     ]
-
-
-def test_slot_staleness_fingerprint_forces_rebuild(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """ADVICE r15 #3 (band side): a persistent staging root can
-    outlive a regenerated fixture at the same sf_dir path — the slot
-    must compare its recorded corpus fingerprint (n_docs, a zero-job
-    footer read) and rebuild on mismatch instead of silently probing
-    a stale index. A matching fingerprint must NOT rebuild."""
-    import json
-
-    from mapreduceapp_spark.operators import dedup_index as di
-    from mapreduceapp_spark.plans import staging
-
-    monkeypatch.setattr(staging, "_STAGING_ROOT", str(tmp_path / "stage"))
-    monkeypatch.setattr(staging, "_STAGED_PLANS", {})
-
-    path = di._index_slot(spark, sf_dir)
-    meta_file = os.path.join(path, "_meta.json")
-    built_at = os.path.getmtime(meta_file)
-    assert di._index_slot(spark, sf_dir) == path
-    assert os.path.getmtime(meta_file) == built_at, "fresh slot rebuilt"
-
-    meta = index_meta(path)
-    true_docs = meta["n_docs"]
-    meta["n_docs"] = true_docs + 1  # simulate a regenerated fixture
-    with open(meta_file, "w") as fh:
-        json.dump(meta, fh)
-    di._index_slot(spark, sf_dir)
-    assert index_meta(path)["n_docs"] == true_docs, "stale slot kept"

@@ -9,28 +9,17 @@ import shutil
 
 import pyspark.sql.functions as F
 
+from mapreduceapp_spark.operators.index_layout import (
+    MAX_BUCKETS,
+    MIN_BUCKETS,
+    read_meta,
+)
 from mapreduceapp_spark.operators.winnow_index import (
-    WINNOW_MAX_BUCKETS,
-    WINNOW_MIN_BUCKETS,
     probe_winnow_index,
     read_winnow_index,
-    winnow_bucket_count,
-    winnow_index_meta,
     write_winnow_index,
 )
 from mapreduceapp_spark.plans.registry import get_query
-
-
-def test_bucket_count_derivation_regimes():
-    assert winnow_bucket_count(0) == WINNOW_MIN_BUCKETS
-    assert winnow_bucket_count(60_000) == WINNOW_MIN_BUCKETS  # fixtures
-    # 1M docs × 256 fps = 256M entries = exactly 64 × 4M
-    assert winnow_bucket_count(1_000_000) == 64
-    assert winnow_bucket_count(1_000_001) == 128
-    assert winnow_bucket_count(10**11) == WINNOW_MAX_BUCKETS  # 100 TB
-    for n in (1, 10**6, 10**9, 10**11):
-        b = winnow_bucket_count(n)
-        assert b & (b - 1) == 0
 
 
 def test_indexed_equals_derive_twin(spark, sf_dir):
@@ -59,8 +48,8 @@ def test_index_layout_and_df_column(spark, sf_dir, tmp_path):
     consumer no longer needs)."""
     path = str(tmp_path / "winnow_index")
     write_winnow_index(spark, sf_dir, path)
-    nb = winnow_index_meta(path)["n_buckets"]
-    assert WINNOW_MIN_BUCKETS <= nb <= WINNOW_MAX_BUCKETS
+    nb = read_meta(path)["n_buckets"]
+    assert MIN_BUCKETS <= nb <= MAX_BUCKETS
     idx = spark.read.parquet(os.path.join(path, "fps"))
     bad = idx.filter(
         F.pmod(F.col("fp"), F.lit(nb)).cast("int") != F.col("bucket")
@@ -122,7 +111,7 @@ def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
     be unchanged."""
     path = str(tmp_path / "winnow_index")
     write_winnow_index(spark, sf_dir, path)
-    nb = winnow_index_meta(path)["n_buckets"]
+    nb = read_meta(path)["n_buckets"]
     # a small probe: one document's fingerprints
     idx = read_winnow_index(spark, path)
     doc0 = idx.agg(F.min("doc_id")).collect()[0][0]
