@@ -358,7 +358,9 @@ def write_ann_index(
     import shutil
 
     corpus = adc_corpus(e, n_rows, ADC_IVFADC)
-    n_buckets = bucket_count(n_rows * PQ_M)
+    n_buckets = bucket_count(
+        n_rows * PQ_M, spark.sparkContext.defaultParallelism
+    )
     # the build corpus's quantization-error baseline for the
     # compaction trigger, measured off the already-staged residuals
     mean_resid_sq = _mean_resid_sq(corpus.src)

@@ -141,7 +141,9 @@ def write_band_index(
     from mapreduceapp_spark.sources.parquet import table_row_count
 
     n_docs = table_row_count(spark, sf_dir, "documents")
-    n_buckets = bucket_count(n_docs * LSH_BANDS)
+    n_buckets = bucket_count(
+        n_docs * LSH_BANDS, spark.sparkContext.defaultParallelism
+    )
     sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
     if corpus_only:
         sh = sh.filter((F.col("doc_id") % INCR_BATCH_MOD) < INCR_BATCH_RESIDUE)

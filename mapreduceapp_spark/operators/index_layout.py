@@ -12,16 +12,18 @@ index modules own only their rows and their probe logic.
 Invariants every index keeps:
 
 - **A pmod bucket per key.** ``n_buckets`` comes from
-  :func:`bucket_count` over the index's entry count at build time and
-  is recorded in the meta file, so a probe buckets its keys with the
-  modulus the table on disk was written with, whatever process built
-  it.
+  :func:`bucket_count` over the index's entry count and the building
+  session's parallelism, and is recorded in the meta file, so a probe,
+  append or heal buckets its keys with the modulus the table on disk
+  was written with, whatever process or box built it.
 - **One write task per bucket.** :func:`write_bucketed` repartitions
   by the bucket column into ``n_buckets`` partitions before the write,
-  so every row of a bucket is written by one task: inside a bucket,
-  files are key-sorted chunks and the (lo, hi) key ranges of one
-  write's files are disjoint. An append's files may overlap earlier
-  ones; probes that prune by range are overlap-safe.
+  so every row of a bucket is written by one task: the bucket count
+  is the build's write parallelism, which is why it never starts
+  below the session's cores. Inside a bucket, files are key-sorted
+  chunks and the (lo, hi) key ranges of one write's files are
+  disjoint. An append's files may overlap earlier ones; probes that
+  prune by range are overlap-safe.
 - **Sidecar paths are relative to the table root.** The file-range
   sidecar (:func:`write_file_ranges`) records ``bucket=N/part-*``
   paths that are rejoined to the current root on read
@@ -51,21 +53,30 @@ from pyspark.sql import functions as F
 
 from mapreduceapp_spark.plans.staging import staged_local_column, staging_root
 
-# Bucket sizing, one rule for every index:
+# Bucket sizing, one rule for every index. The bucket count is also
+# the build's write parallelism (one task per bucket), which sets both
+# ends of the rule:
+# - The floor is the session's parallelism: fewer buckets than cores
+#   idles cores (one bucket for a 250k-document band index built in
+#   31.1 s vs 23.7 s on 4 cores), and more buckets than the data needs
+#   only add near-empty directories every build writes and every probe
+#   lists.
+# - FINE_ENTRIES_PER_BUCKET below FINE_MAX_BUCKETS buckets: while the
+#   build has few tasks, a bucket holds at most 250k entries, so a
+#   growing index spreads its write over more, smaller tasks before
+#   its directories fill (a 250k-document band index on 4 cores, one
+#   session, built in 20-25 s at 4 buckets, 13.6 s at 16, 16-17.5 s
+#   at 64).
 # - ENTRIES_PER_BUCKET: ~4M thin rows ≈ 64 MB per bucket directory, a
 #   single well-formed parquet file, the unit row-group pruning works
 #   best on.
-# - MIN_BUCKETS 64: below 64 directories a probe loses pruning
-#   resolution and saves nothing (a listing is already trivial). The
-#   bucket count is also the build's write parallelism (one task per
-#   bucket): without the floor a 200k-document band index is one
-#   bucket, and its build measured 23.7 → 31.1 s on 4 cores.
 # - MAX_BUCKETS 65,536: probes collect touched buckets to the driver as
 #   plan-time literals, so the IN-list must stay a modest constant;
 #   past the cap, key-sorted row groups inside each directory carry
 #   the pruning.
+FINE_ENTRIES_PER_BUCKET = 250_000
+FINE_MAX_BUCKETS = 64
 ENTRIES_PER_BUCKET = 4_000_000
-MIN_BUCKETS = 64
 MAX_BUCKETS = 65_536
 
 # The file-range sidecar pays for itself only while the file grid is
@@ -92,16 +103,22 @@ LOCAL_READ_MAX_ROWS = 2_000_000
 _REMOTE_ROOTS = ("hdfs://", "s3a://")
 
 
-def bucket_count(entries: int) -> int:
-    """Directory count for an index of ``entries`` rows: the smallest
-    power of two b in [MIN_BUCKETS, MAX_BUCKETS] with
-    b × ENTRIES_PER_BUCKET ≥ entries. Callers pass their entry
-    estimate (rows × entries per row); pure integer arithmetic, so
-    every process derives the same count."""
-    b = MIN_BUCKETS
-    while b < MAX_BUCKETS and b * ENTRIES_PER_BUCKET < entries:
+def bucket_count(entries: int, parallelism: int) -> int:
+    """Directory count for an index of ``entries`` rows built by a
+    session of ``parallelism`` cores (``defaultParallelism``): the
+    smallest b = parallelism × 2^k with b × ENTRIES_PER_BUCKET ≥
+    entries and, below FINE_MAX_BUCKETS, b × FINE_ENTRIES_PER_BUCKET
+    ≥ entries; capped at MAX_BUCKETS. Callers pass their entry
+    estimate (rows × entries per row); pure integer arithmetic, and
+    the count is recorded in the meta, so readers never re-derive
+    it."""
+    b = max(1, parallelism)
+    while b < MAX_BUCKETS and (
+        b * ENTRIES_PER_BUCKET < entries
+        or (b < FINE_MAX_BUCKETS and b * FINE_ENTRIES_PER_BUCKET < entries)
+    ):
         b <<= 1
-    return b
+    return min(b, MAX_BUCKETS)
 
 
 def bucket_of(key: str, n_buckets: int) -> Column:

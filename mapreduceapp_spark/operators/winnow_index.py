@@ -78,7 +78,9 @@ def write_winnow_index(spark: SparkSession, sf_dir: str, path: str) -> str:
     from mapreduceapp_spark.sources.parquet import table_row_count
 
     n_docs = table_row_count(spark, sf_dir, "documents")
-    n_buckets = bucket_count(n_docs * WINNOW_FPS_PER_DOC_EST)
+    n_buckets = bucket_count(
+        n_docs * WINNOW_FPS_PER_DOC_EST, spark.sparkContext.defaultParallelism
+    )
     fps = winnow_fingerprints(
         spread_table(spark, sf_dir, "documents"), n_docs=n_docs
     )

@@ -133,10 +133,11 @@ DEFAULT_QUERIES = [
 def dedup_index_regimes(spark) -> dict:
     """Regime-gate evidence at rehearsal scale (VERDICT r12 ask #4):
     build the sf1 corpus's band index on TWO file grids — the default
-    (sf1's 40k corpus docs over 64 buckets = 625 rows/bucket, one
-    file each → the gate must route to DIRECTORY pruning) and a
-    40-rows/file grid reproducing the CORPUS regime's
-    files-per-bucket ratio (16 files/bucket — what a 16M-doc corpus
+    (sf1's 40k corpus docs over one bucket per core, 10k rows/bucket
+    on local[4], under the 16,384-row file size: one file each → the
+    gate must route to DIRECTORY pruning) and a
+    40-rows/file grid reaching the CORPUS regime's files-per-bucket
+    ratio (≥16 files/bucket up to 64 cores — what a 16M-doc corpus
     puts on the production 16,384-row grid → the gate must route to
     the SIDECAR point-fetch) — probe the same batch against both,
     and require row-equal results. The gate itself is a zero-job
@@ -168,7 +169,7 @@ def dedup_index_regimes(spark) -> dict:
     rows_by_regime: dict[str, list] = {}
     for label, rows_per_file in (
         ("directory_pruning", SIG_ROWS_PER_FILE),
-        ("sidecar_point_fetch", 40),  # 625/40 → 16 files/bucket
+        ("sidecar_point_fetch", 40),  # 10k/40 → 250 files/bucket on 4 cores
     ):
         path = os.path.join(staging_root(), f"regime_idx_{label}")
         t0 = _time.perf_counter()

@@ -88,7 +88,9 @@ def test_index_layout(spark, sf_dir, tmp_path):
     assert meta["complete"] and meta["source_rows"] == n
     assert meta["stride"] == _ivf_stride(n)
     assert meta["k_cent"] == _pq_k(n)
-    assert meta["n_buckets"] == bucket_count(n * PQ_M)
+    assert meta["n_buckets"] == bucket_count(
+        n * PQ_M, spark.sparkContext.defaultParallelism
+    )
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     assert cents.count() == meta["n_cells"] > 0
     book = spark.read.parquet(os.path.join(path, "codebook"))
@@ -127,7 +129,7 @@ def test_probe_prunes_partitions(spark, tmp_path, monkeypatch):
     from tests.conftest import SF_DIR_MID
 
     sf_dir = SF_DIR_MID
-    monkeypatch.setattr(ai, "bucket_count", lambda entries: 4)
+    monkeypatch.setattr(ai, "bucket_count", lambda entries, parallelism: 4)
     path = str(tmp_path / "ann_index_small")
     e_p = _lineage(spark, sf_dir)
     n = table_row_count(spark, sf_dir, "embeddings")
@@ -266,7 +268,7 @@ def test_index_survives_relocation(spark, sf_dir, tmp_path):
     n = table_row_count(spark, sf_dir, "embeddings")
     # small files so the sidecar path (the one that stores paths) is
     # the regime under test (sf0.001: 800 code rows / 2 per file =
-    # 400 files > 2 × 64 buckets)
+    # 400 files > 2 files per bucket × local[4]'s 4 buckets)
     write_ann_index(spark, e_p, n, path, code_rows_per_file=2)
     queries = e_p.filter(KNN_QUERY_PRED)
     before = _rows(probe_ann_index(spark, path, queries))

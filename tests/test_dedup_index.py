@@ -8,18 +8,20 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+import mapreduceapp_spark.operators.dedup_index as DI
+from mapreduceapp_spark.operators.dedup import LSH_BANDS
 from mapreduceapp_spark.operators.dedup_index import (
     _band_entries,
     probe_band_index,
     write_band_index,
 )
 from mapreduceapp_spark.operators.index_layout import (
-    MAX_BUCKETS,
-    MIN_BUCKETS,
+    bucket_count,
     bucket_of,
     read_meta,
 )
 from mapreduceapp_spark.plans.registry import get_query
+from mapreduceapp_spark.sources.parquet import table_row_count
 
 
 def _pairs(rows):
@@ -53,8 +55,6 @@ def test_probe_prefilter_regimes_row_equal(spark, sf_dir, monkeypatch):
     attach — both shapes must emit the identical verified pair set.
     The fixture's candidate count sits on one side of the real gate,
     so the other shape is forced by pinning the gate to 0."""
-    import mapreduceapp_spark.operators.dedup_index as DI
-
     builder = get_query("q_dedup_index_probe").builder
     monkeypatch.setattr(DI, "THIN_PREFILTER_MIN_CAND", 10**9)  # payload
     payload = _pairs(builder(spark, sf_dir).collect())
@@ -70,7 +70,10 @@ def test_index_layout(spark, sf_dir, tmp_path):
     path = str(tmp_path / "band_index")
     write_band_index(spark, sf_dir, path, corpus_only=False)
     n_buckets = read_meta(path)["n_buckets"]
-    assert MIN_BUCKETS <= n_buckets <= MAX_BUCKETS
+    n_docs = table_row_count(spark, sf_dir, "documents")
+    assert n_buckets == bucket_count(
+        n_docs * LSH_BANDS, spark.sparkContext.defaultParallelism
+    )
     bands_dir = os.path.join(path, "bands")
     dirs = {d for d in os.listdir(bands_dir) if d.startswith("bucket=")}
     assert dirs  # at least one populated bucket
@@ -86,21 +89,25 @@ def test_index_layout(spark, sf_dir, tmp_path):
     assert sigs.count() == sigs.select("doc_id").distinct().count()
 
 
-def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
+def test_probe_prunes_partitions(spark, sf_dir, tmp_path, monkeypatch):
     """The scale contract: a probe's index scan must carry a
     partition filter on the touched buckets — planning-time directory
     pruning, not a full-index read with a post-filter. Built with a
     tiny sig_rows_per_file so the file grid is finer than the
     directory grid and the sidecar path stays engaged (the r12 regime
     gate routes a coarse grid to directory pruning — covered by
-    test_fetch_regime_gate)."""
+    test_fetch_regime_gate), and with 64 buckets, more than a
+    one-document batch's ≤16 band keys touch, so deleting the
+    untouched directories proves something."""
     from mapreduceapp_spark.operators.dedup import (
         _doc_shingles_with_minhash,
     )
     from mapreduceapp_spark.plans.staging import stage
 
+    monkeypatch.setattr(DI, "bucket_count", lambda entries, parallelism: 64)
     path = str(tmp_path / "band_index")
     write_band_index(spark, sf_dir, path, sig_rows_per_file=2)
+    assert read_meta(path)["n_buckets"] == 64
     sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
     # one-document batch: touches ≤16 band keys → ≤16 buckets
     one = sh.orderBy("doc_id").limit(1)

@@ -8,6 +8,7 @@ import os
 
 import pytest
 
+from mapreduceapp_spark.operators import ann_index, dedup_index, winnow_index
 from mapreduceapp_spark.operators.ann_index import (
     probe_ann_index,
     write_fixture_ann_index,
@@ -19,8 +20,9 @@ from mapreduceapp_spark.operators.dedup_index import (
 )
 from mapreduceapp_spark.operators.index_layout import (
     ENTRIES_PER_BUCKET,
+    FINE_ENTRIES_PER_BUCKET,
+    FINE_MAX_BUCKETS,
     MAX_BUCKETS,
-    MIN_BUCKETS,
     bucket_count,
     index_slot,
     meta_path,
@@ -32,6 +34,7 @@ from mapreduceapp_spark.operators.winnow_index import (
     probe_winnow_index,
     write_winnow_index,
 )
+from tests.conftest import jobs_run
 
 # kind → (slot name, source table, slot builder, direct probe)
 KINDS = {
@@ -46,53 +49,134 @@ KINDS = {
     [
         pytest.param(
             LSH_BANDS,
-            [
-                (0, MIN_BUCKETS),
-                (60_000, MIN_BUCKETS),  # fixtures
-                # 16M docs × 16 bands = 256M entries = exactly 64 × 4M
-                (16_000_000, 64),
-                (16_000_001, 128),
-                (10**11, MAX_BUCKETS),  # 100 TB
-            ],
+            {
+                64: [
+                    (0, 64),
+                    (60_000, 64),  # fixtures
+                    # 16M docs × 16 bands = 256M entries = exactly 64 × 4M
+                    (16_000_000, 64),
+                    (16_000_001, 128),
+                    (10**11, MAX_BUCKETS),  # 100 TB
+                ],
+                4: [
+                    (0, 4),
+                    (60_000, 4),  # fixtures
+                    # 62.5k docs × 16 bands = 1M entries = exactly 4 × 250k
+                    (62_500, 4),
+                    (62_501, 8),
+                    (250_000, 16),  # 4M entries: 16 × 250k
+                    (16_000_000, 64),
+                    (16_000_001, 128),
+                    (10**11, MAX_BUCKETS),
+                ],
+                6: [
+                    (0, 6),
+                    # 93,750 docs × 16 bands = 1.5M entries = exactly 6 × 250k
+                    (93_750, 6),
+                    (93_751, 12),
+                    # 24M docs × 16 bands = 384M entries = exactly 96 × 4M
+                    (24_000_000, 96),
+                    (24_000_001, 192),
+                    (10**11, MAX_BUCKETS),
+                ],
+            },
             id="band",
         ),
         pytest.param(
             WINNOW_FPS_PER_DOC_EST,
-            [
-                (0, MIN_BUCKETS),
-                (60_000, MIN_BUCKETS),  # fixtures
-                # 1M docs × 256 fps = 256M entries = exactly 64 × 4M
-                (1_000_000, 64),
-                (1_000_001, 128),
-                (10**11, MAX_BUCKETS),  # 100 TB
-            ],
+            {
+                64: [
+                    (0, 64),
+                    (60_000, 64),  # fixtures
+                    # 1M docs × 256 fps = 256M entries = exactly 64 × 4M
+                    (1_000_000, 64),
+                    (1_000_001, 128),
+                    (10**11, MAX_BUCKETS),  # 100 TB
+                ],
+                4: [
+                    (500, 4),  # fixtures
+                    # 3,906 docs × 256 fps = 999,936 entries ≤ 4 × 250k
+                    (3_906, 4),
+                    (3_907, 8),
+                    (60_000, 64),
+                    (1_000_000, 64),
+                    (1_000_001, 128),
+                    (10**11, MAX_BUCKETS),
+                ],
+                6: [
+                    (500, 6),
+                    # 5,859 docs × 256 fps = 1,499,904 entries ≤ 6 × 250k
+                    (5_859, 6),
+                    (5_860, 12),
+                    (60_000, 96),
+                    # 1.5M docs × 256 fps = 384M entries = exactly 96 × 4M
+                    (1_500_000, 96),
+                    (1_500_001, 192),
+                    (10**11, MAX_BUCKETS),
+                ],
+            },
             id="winnow",
         ),
         pytest.param(
             PQ_M,
-            [
-                (100, 64),
-                # 1e8 vectors × 8 = 8e8 code rows → 256 buckets of ≤4M
-                (10**8, 256),
-                (10**12, 65_536),
-            ],
+            {
+                64: [
+                    (100, 64),
+                    # 1e8 vectors × 8 = 8e8 code rows → 256 buckets of ≤4M
+                    (10**8, 256),
+                    (10**12, 65_536),
+                ],
+                4: [
+                    (100, 4),
+                    # 125k vectors × 8 = 1M code rows = exactly 4 × 250k
+                    (125_000, 4),
+                    (125_001, 8),
+                    (10**8, 256),
+                    (10**12, 65_536),
+                ],
+                6: [
+                    (100, 6),
+                    (187_500, 6),
+                    (187_501, 12),
+                    # 8e8 code rows → 6 × 2^6 = 384 buckets of ≤4M
+                    (10**8, 384),
+                    (10**12, 65_536),
+                ],
+            },
             id="ann",
         ),
     ],
 )
 def test_bucket_count_derivation_regimes(per_row, cases):
-    """Footer-derived layout: a floor of 64 directories at fixture
-    scale, doubling with the entry count, capped at 65,536 (the
-    bounded-driver-literal ceiling) in the 100 TB regime; powers of
-    two throughout, each bucket holding at most ENTRIES_PER_BUCKET
-    entries below the cap."""
-    assert (MIN_BUCKETS, MAX_BUCKETS) == (64, 65_536)
-    for n, want in cases:
-        assert bucket_count(n * per_row) == want, n
-    for n in (1, 10**6, 10**8, 10**9, 10**11):
-        b = bucket_count(n * per_row)
-        assert b & (b - 1) == 0 and MIN_BUCKETS <= b <= MAX_BUCKETS
-        assert b == MAX_BUCKETS or b * ENTRIES_PER_BUCKET >= n * per_row
+    """Footer-derived layout: as many directories as the building
+    session has cores at fixture scale, doubling with the entry count
+    (at most 250k entries a bucket below 64 buckets, 4M beyond),
+    capped at 65,536 (the bounded-driver-literal ceiling) in the 100 TB
+    regime; below the cap the count is the parallelism times a power
+    of two, the smallest one that holds the entries. Pinned at a
+    64-core session (the old fixed floor's values), at local[4], and
+    at a non-power-of-two parallelism."""
+    assert (FINE_ENTRIES_PER_BUCKET, FINE_MAX_BUCKETS) == (250_000, 64)
+    assert (ENTRIES_PER_BUCKET, MAX_BUCKETS) == (4_000_000, 65_536)
+
+    def holds(b, entries):
+        return b * ENTRIES_PER_BUCKET >= entries and (
+            b >= FINE_MAX_BUCKETS or b * FINE_ENTRIES_PER_BUCKET >= entries
+        )
+
+    for p, want_by_n in cases.items():
+        for n, want in want_by_n:
+            assert bucket_count(n * per_row, p) == want, (p, n)
+        for n in (0, 1, 10**4, 10**6, 10**8, 10**9, 10**11):
+            entries = n * per_row
+            b = bucket_count(entries, p)
+            assert p <= b <= MAX_BUCKETS, (p, n)
+            if b == MAX_BUCKETS:
+                continue
+            q = b // p
+            assert b % p == 0 and q & (q - 1) == 0, (p, n)
+            assert holds(b, entries), (p, n)
+            assert b == p or not holds(b // 2, entries), (p, n)
 
 
 @pytest.fixture
@@ -155,3 +239,40 @@ def test_meta_is_required(spark, sf_dir, staging_tmp, kind):
             probe(spark, path, spark.range(0))
         assert _slot(spark, sf_dir, kind) == path
         assert read_meta(path)["source_rows"] == current["source_rows"], tamper
+
+
+@pytest.mark.parametrize("forced", [None, 64], ids=["session", "forced_64"])
+def test_index_scans_list_without_jobs(spark, sf_dir, tmp_path, monkeypatch, forced):
+    """At the session's own layout (local[4]: 4 buckets) building the
+    bands, sigs, fps and codes scans of a fresh index runs no Spark
+    job: 4 bucket directories sit below Spark's parallel
+    partition-discovery threshold (32 paths), so the listing stays on
+    the driver. Forced to 64 buckets the same scans run a listing
+    job, which shows the count can fail. Each scan is given the
+    schema it was written with, read beforehand, so the count is the
+    partition discovery alone, not the footer read that infers a
+    schema."""
+    if forced is not None:
+        for mod in (dedup_index, winnow_index, ann_index):
+            monkeypatch.setattr(mod, "bucket_count", lambda entries, parallelism: forced)
+    roots = {kind: str(tmp_path / kind) for kind in KINDS}
+    for kind, root in roots.items():
+        KINDS[kind][2](spark, sf_dir, root)
+    tables = [
+        os.path.join(roots["band"], "bands"),
+        os.path.join(roots["band"], "sigs"),
+        os.path.join(roots["winnow"], "fps"),
+        os.path.join(roots["ann"], "codes"),
+    ]
+    n_buckets = {read_meta(root)["n_buckets"] for root in roots.values()}
+    assert n_buckets == {forced or spark.sparkContext.defaultParallelism}
+    schemas = [spark.read.parquet(t).schema for t in tables]
+
+    jobs = jobs_run(
+        spark,
+        lambda: [spark.read.schema(s).parquet(t) for s, t in zip(schemas, tables)],
+    )
+    if forced is None:
+        assert jobs == 0
+    else:
+        assert jobs >= 1

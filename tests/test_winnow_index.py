@@ -9,17 +9,16 @@ import shutil
 
 import pyspark.sql.functions as F
 
-from mapreduceapp_spark.operators.index_layout import (
-    MAX_BUCKETS,
-    MIN_BUCKETS,
-    read_meta,
-)
+import mapreduceapp_spark.operators.winnow_index as WI
+from mapreduceapp_spark.operators.index_layout import bucket_count, read_meta
 from mapreduceapp_spark.operators.winnow_index import (
+    WINNOW_FPS_PER_DOC_EST,
     probe_winnow_index,
     read_winnow_index,
     write_winnow_index,
 )
 from mapreduceapp_spark.plans.registry import get_query
+from mapreduceapp_spark.sources.parquet import table_row_count
 
 
 def test_indexed_equals_derive_twin(spark, sf_dir):
@@ -49,7 +48,10 @@ def test_index_layout_and_df_column(spark, sf_dir, tmp_path):
     path = str(tmp_path / "winnow_index")
     write_winnow_index(spark, sf_dir, path)
     nb = read_meta(path)["n_buckets"]
-    assert MIN_BUCKETS <= nb <= MAX_BUCKETS
+    n_docs = table_row_count(spark, sf_dir, "documents")
+    assert nb == bucket_count(
+        n_docs * WINNOW_FPS_PER_DOC_EST, spark.sparkContext.defaultParallelism
+    )
     idx = spark.read.parquet(os.path.join(path, "fps"))
     bad = idx.filter(
         F.pmod(F.col("fp"), F.lit(nb)).cast("int") != F.col("bucket")
@@ -104,14 +106,18 @@ def test_build_plan_single_shuffle(spark, sf_dir):
     assert len(got) > 0
 
 
-def test_probe_prunes_partitions(spark, sf_dir, tmp_path):
+def test_probe_prunes_partitions(spark, sf_dir, tmp_path, monkeypatch):
     """The decontamination primitive's scale contract: a probe only
     reads the buckets its fingerprints hash to. Behavioral proof:
     delete every untouched bucket directory — the probe result must
-    be unchanged."""
+    be unchanged. Built with 64 buckets, more than one document's
+    fingerprints touch (at the session's own few buckets every bucket
+    is touched and the proof would be vacuous)."""
+    monkeypatch.setattr(WI, "bucket_count", lambda entries, parallelism: 64)
     path = str(tmp_path / "winnow_index")
     write_winnow_index(spark, sf_dir, path)
     nb = read_meta(path)["n_buckets"]
+    assert nb == 64
     # a small probe: one document's fingerprints
     idx = read_winnow_index(spark, path)
     doc0 = idx.agg(F.min("doc_id")).collect()[0][0]
