@@ -34,6 +34,7 @@ from mapreduceapp_spark.functions.vectors import (
     quantize_sql,
     sq_norm_sql,
 )
+from mapreduceapp_spark.operators.similarity import L2, RATIONAL_L2, _assign
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.plans.staging import slot, stage
 from mapreduceapp_spark.sources import tables
@@ -164,17 +165,16 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. *Seed* — centroids are the deterministic 1-in-stride sample
        at the k ≈ √N balance (see the ``_km_stride`` note).
     2. *Assign (int)* — fragment-replicate Arrow GEMM
-       (:func:`_gemm_assign`): each vector keeps its argmin
-       squared-Euclidean centroid on the exact integer distance
-       |x|² − 2⟨x,c⟩ + |c|². No N·k row set ever materializes — the
-       r5 rehearsal measured the old broadcast-join fan-out as 32 s
-       at 10× data (k ∝ N makes N·k rows quadratic), vs ~6 s
-       vectorized.
+       (similarity ``_assign``, metric ``L2``): each vector keeps its
+       argmin squared-Euclidean centroid on the exact integer distance
+       |x|² − 2⟨x,c⟩ + |c|². No N·k row set ever materializes (a
+       broadcast-join fan-out of N·k rows is quadratic when k ∝ N).
     3. *Update* — per-cluster mean as (per-dim int sums, count): 64
        ``sum`` columns, all partial-aggregated map-side; k rows out.
-    4. *Re-assign (rational)* — the same GEMM with the exact-rational
-       distance Σ(x_i − s_i/c)², folded in index order for
-       bit-parity with the SQL oracle; argmin with cid tiebreak.
+    4. *Re-assign (rational)* — the same GEMM with metric
+       ``RATIONAL_L2``, the exact-rational distance Σ(x_i − s_i/c)²
+       folded in index order for bit-parity with the SQL oracle;
+       argmin with cid tiebreak.
     5. Emit per-cluster membership stats.
 
     More rounds = repeat steps 3–4; two rounds keeps the demo plan
@@ -186,7 +186,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     N²/stride, retired round 7) against SemDeDup's within-cluster
     pair work (clusters average √N members, absorbed by the sub-cell
     cap past ~10⁶ rows); a hierarchical coarse→fine assignment —
-    only ``_gemm_assign``'s centroid input changes — remains the rung
+    only the assign's centroid input changes — remains the rung
     beyond that.
 
     Floats appear only in round 2's distance: means are exact
@@ -206,185 +206,11 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Fragment-replicate floor for the GEMM assign: vectors hash into
-# max(this, defaultParallelism) groups, centroids replicate to each —
-# a fixed count would cap a 1000-executor cluster at 32-way assign.
-# Results are independent of the grouping (each vector's argmin is
-# computed alone), so the fragment count is purely a throughput knob.
-KM_ASSIGN_PARTS = 32
-# Memory ceiling twin of similarity.FRAGMENT_GROUP_ROWS (r14, the
-# VERDICT r13 "What's wrong" #1 class): a hash group materializes as
-# ONE pandas frame, so cap it at ~16 MB of 64-dim int64 vectors and
-# let P grow with the caller's footer row count past ~1.05 M rows.
-# Own constant (not imported) to keep clustering → similarity
-# import-free; the derivation is documented once at
-# similarity._fragment_replicate.
-KM_GROUP_ROWS = 32_768
-
-
-def _gemm_assign(
-    vectors: DataFrame, centroids: DataFrame, mode: str,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Argmin-centroid assignment as a fragment-replicate Arrow GEMM.
-
-    The r5 sf1 rehearsal measured the old broadcast-join form — N·k
-    joined rows each evaluating a 64-term expression fold — at 32 s
-    for 20k vectors × 200 centroids (k ∝ N makes that row volume
-    quadratic in N). Dense argmin is the same regime every other
-    vector operator here vectorizes: vectors hash into
-    ≤ KM_ASSIGN_PARTS groups, the (small: k×(64+2) ints) centroid
-    table replicates to each group via a range cross join, and one
-    ``applyInPandas`` per group runs the distance matmul. Shuffle is
-    N + P·k rows; no N·k row set ever exists.
-
-    Bit-parity with the expression form it replaced (and with the
-    unchanged SQL oracles) is engineered per mode:
-
-    - ``mode="int"``: d = |x|² − 2⟨x,c⟩ + |c|² in exact int64 matmul.
-    - ``mode="rational"``: per element the SAME IEEE ops in the SAME
-      order as the old ``F.aggregate`` fold — (x_double − s/c)²
-      elementwise, then a LEFT-TO-RIGHT running sum (``np.cumsum`` is
-      sequential; ``np.sum``'s pairwise reassociation would round
-      differently) — so even near-tie argmins agree.
-    - ``mode="cosine"``: argMAX of dot_f64 / sqrt(sq_f64 · csq_f64) —
-      the exact-int64 dot cast to double, then the same two IEEE ops
-      as ``functions.vectors.cosine`` — the coarse-quantization
-      assignment q_ann_ivf uses (its r5 verdict flagged the old
-      broadcast-join form as the quadratic N·C row fan-out; this is
-      the same fix k-means got, with the ranking inverted).
-    - ties: centroid columns iterate in ascending cid with strict
-      updates, reproducing the lexicographic (dist, cid) /
-      (cos DESC, cid) order both oracles use.
-
-    ``vectors`` carries (vec_id, x, sq); ``centroids`` carries
-    (cid, cx, csq) for "int"/"cosine" or (cid, c, sx) for "rational".
-    Returns (vec_id, x, sq, cid).
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = vectors.sparkSession
-    p = max(KM_ASSIGN_PARTS, spark.sparkContext.defaultParallelism)
-    if n_rows is not None:
-        p = max(p, -(-n_rows // KM_GROUP_ROWS))
-    # selectExpr strings (r18 §4): one py4j round-trip per side instead
-    # of one per column/lit/cast — see similarity._fragment_replicate
-    v = vectors.selectExpr(
-        "0 AS side",
-        f"pmod(xxhash64('kmassign:', vec_id), {p}) AS pid",
-        "vec_id",
-        "x",
-        "sq",
-        "CAST(NULL AS BIGINT) AS cid",
-        "CAST(NULL AS ARRAY<BIGINT>) AS cv",
-        "CAST(NULL AS BIGINT) AS cs",
-    )
-    # replicate via explode(sequence(0..p-1)) — a pure projection with
-    # the same |centroids|·P output rows as the old crossJoin(range(p))
-    # form, minus its BroadcastNestedLoopJoin node and per-call
-    # broadcast-build job (see similarity._fragment_replicate)
-    cv_src, cs_src = ("cx", "csq") if mode in ("int", "cosine") else ("sx", "c")
-    c = centroids.selectExpr(
-        "1 AS side",
-        f"explode(sequence(CAST(0 AS BIGINT), CAST({p - 1} AS BIGINT)))"
-        " AS pid",
-        "CAST(NULL AS BIGINT) AS vec_id",
-        "CAST(NULL AS ARRAY<BIGINT>) AS x",
-        "CAST(NULL AS BIGINT) AS sq",
-        "cid",
-        f"{cv_src} AS cv",
-        f"{cs_src} AS cs",
-    )
-
-    def assign_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        vec = pdf[pdf["side"] == 0]
-        cen = pdf[pdf["side"] == 1].sort_values("cid")  # ascending: tie rule
-        # the array column must be object-dtyped even when empty —
-        # Arrow can't cast an empty float64 ndarray to list<int64>
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "x": pd.Series([], dtype="object"),
-                "sq": pd.Series([], dtype="int64"),
-                "cid": pd.Series([], dtype="int64"),
-            }
-        )
-        if not len(vec) or not len(cen):
-            return empty
-        X = np.stack(vec["x"].values).astype(np.int64)  # n × 64
-        sq = vec["sq"].to_numpy(np.int64)
-        cids = cen["cid"].to_numpy(np.int64)
-        C = np.stack(cen["cv"].values).astype(np.int64)  # k × 64
-        cs = cen["cs"].to_numpy(np.int64)
-        best_d = None
-        best_c = np.zeros(len(X), dtype=np.int64)
-        if mode == "int":
-            # chunk centroids so the distance block stays small
-            for s in range(0, len(C), 4096):
-                t = min(s + 4096, len(C))
-                d = (
-                    sq[:, None] - 2 * (X @ C[s:t].T) + cs[None, s:t]
-                )  # exact int64
-                jmin = d.argmin(axis=1)  # first min = lowest cid ✓
-                dmin = d[np.arange(len(X)), jmin]
-                if best_d is None:
-                    best_d, best_c = dmin, cids[s + jmin]
-                else:
-                    upd = dmin < best_d  # strict: earlier cid wins ties
-                    best_d[upd] = dmin[upd]
-                    best_c[upd] = cids[s + jmin][upd]
-        elif mode == "cosine":
-            sqf = sq.astype(np.float64)
-            csf = cs.astype(np.float64)
-            for s in range(0, len(C), 4096):
-                t = min(s + 4096, len(C))
-                # exact int64 dot, then the same two IEEE ops as the
-                # cosine() SQL expression: dot::DOUBLE / sqrt(a*b)
-                cos = (X @ C[s:t].T).astype(np.float64) / np.sqrt(
-                    sqf[:, None] * csf[None, s:t]
-                )
-                jmax = cos.argmax(axis=1)  # first max = lowest cid ✓
-                dmax = cos[np.arange(len(X)), jmax]
-                if best_d is None:
-                    best_d, best_c = dmax, cids[s + jmax]
-                else:
-                    upd = dmax > best_d  # strict: earlier cid wins ties
-                    best_d[upd] = dmax[upd]
-                    best_c[upd] = cids[s + jmax][upd]
-        else:
-            Xf = X.astype(np.float64)
-            for j in range(len(C)):
-                # same IEEE ops, same order as the old F.aggregate
-                # fold: (x - s/c)² per element, then sequential sum
-                term = Xf - C[j].astype(np.float64) / np.float64(cs[j])
-                d = np.cumsum(term * term, axis=1)[:, -1]
-                if best_d is None:
-                    best_d = d
-                    best_c = np.full(len(X), cids[j], dtype=np.int64)
-                else:
-                    upd = d < best_d
-                    best_d[upd] = d[upd]
-                    best_c[upd] = cids[j]
-        return pd.DataFrame(
-            {
-                "vec_id": vec["vec_id"].to_numpy(np.int64),
-                "x": vec["x"].values,
-                "sq": sq,
-                "cid": best_c,
-            }
-        )
-
-    return v.unionByName(c).groupBy("pid").applyInPandas(
-        assign_group, "vec_id long, x array<long>, sq long, cid long"
-    )
-
-
 def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, x, sq, cluster_id) after the two Lloyd rounds — the
     shared assignment plan behind :func:`q_kmeans` (membership stats)
     and :func:`q_semantic_prune` (within-cluster dedup). Both rounds'
-    argmins run as fragment-replicate GEMMs (:func:`_gemm_assign`);
+    argmins run as fragment-replicate GEMMs (similarity ``_assign``);
     the centroid-update aggregate stays a JVM map-side partial agg."""
     from mapreduceapp_spark.sources.parquet import table_row_count
 
@@ -399,15 +225,17 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("x").alias("cx"),
         F.col("sq").alias("csq"),
     )
-    a1 = _gemm_assign(qs, c0, "int", n_rows=n)
+    a1 = _assign(qs, c0, L2, n)
+    # (cid, sx, c): the rational mean's int sums and count, in the
+    # (id, vector, norm) places of an assign candidate
     m1 = a1.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("c"),
         F.array(
             *[F.sum(F.element_at("x", i + 1)).alias(f"s{i}") for i in range(EMB_DIM)]
         ).alias("sx"),
+        F.count(F.lit(1)).alias("c"),
     )
-    return _gemm_assign(
-        a1.select("vec_id", "x", "sq"), m1, "rational", n_rows=n
+    return _assign(
+        a1.select("vec_id", "x", "sq"), m1, RATIONAL_L2, n
     ).withColumnRenamed("cid", "cluster_id")
 
 

@@ -66,11 +66,11 @@ KNN_QUERY_PRED = "vec_id % 100 = 0"
 # time (see q_knn_cosine), not with a driver-side count, so the
 # builder stays a pure plan.
 KNN_MAX_BROADCAST_QUERIES = 100_000
-# Fragment chunk for the GEMM kernels' running top-k merge: bounds
-# the per-chunk distance block (Q × chunk) regardless of how many
-# rows a hash group holds — the 100 TB case where one group is
-# millions of rows. Module-level so the multi-chunk merge path is
-# testable at fixture scale (test_gemm_chunked_merge_matches).
+# Candidates per score block of the nearest-neighbour selection
+# (:func:`_topm`): a block holds at most rows × GEMM_CHUNK_ROWS values
+# however many candidates a hash group holds — the 100 TB case where
+# one group is millions of rows. Module-level so the multi-chunk merge
+# is testable at fixture scale (test_gemm_chunked_merge_matches).
 GEMM_CHUNK_ROWS = 8192
 NEARDUP_COS_THRESHOLD = 0.45  # sits in a gap of the data's cosine distribution
 # Exact-path GEMM tiling: block count is DERIVED from the table's row
@@ -81,14 +81,14 @@ NEARDUP_COS_THRESHOLD = 0.45  # sits in a gap of the data's cosine distribution
 # bounded no matter how large the table grows.
 NEARDUP_TILE_ROWS = 32_768
 GEMM_CHUNK = 256
-# Fragment-replicate group size ceiling (r14, VERDICT r13 "What's
-# wrong" #1): a hash group materializes as one pandas DataFrame, so
-# cap it at the same ~16 MB of 64-dim int64 vectors the neardup tile
-# uses; P = max(parallelism floor, ceil(N / this)) keeps per-task
-# input memory constant in N. The replicated small side (≤ 2048
-# codebook rows / √N centroids / Q ≤ 100k queries) adds P·|small|
-# shuffle rows — at P = N/32768 that is N·|small|/32768 total, still
-# far below the N·|small| row set the frame exists to avoid.
+# Fragment-replicate group size ceiling: a hash group materializes as
+# one pandas DataFrame, so cap it at the same ~16 MB of 64-dim int64
+# vectors the neardup tile uses; P = max(parallelism floor,
+# ceil(N / this)) keeps per-task input memory constant in N. The
+# replicated small side (≤ 2048 codebook rows / √N centroids /
+# Q ≤ 100k queries) adds P·|small| shuffle rows — at P = N/32768 that
+# is N·|small|/32768 total, far below the N·|small| row set the frame
+# exists to avoid.
 FRAGMENT_GROUP_ROWS = 32_768
 
 
@@ -120,50 +120,36 @@ def _fragment_replicate(
     hash_col: str,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """The two-sided union frame every fragment-replicate GEMM here
-    shares (the ``_gemm_assign`` shape, operators/clustering.py): the
-    big side hashes into ≤ P groups on ``hash_col`` (salted so
-    unrelated kernels never correlate group skew), the small side
-    replicates to every group via a range cross join, and both sides
-    union under one (side, pid, …) schema with typed nulls for the
-    other side's columns. Consumers groupBy("pid").applyInPandas a
-    kernel that splits on ``side``. Shuffle is |big| + P·|small| rows;
-    no |big|·|small| row set ever exists.
+    """The two-sided union frame of every fragment-replicate GEMM: the
+    big side hashes into P groups on ``hash_col`` (salted so unrelated
+    kernels never correlate group skew), the small side replicates to
+    every group, and both sides union under one (side, pid, …) schema
+    with typed nulls for the other side's columns. Consumers
+    groupBy("pid").applyInPandas a kernel that splits on ``side``.
+    Shuffle is |big| + P·|small| rows; no |big|·|small| row set ever
+    exists.
 
-    P scales with the big side's row count (VERDICT r13 "What's
-    wrong" #1): ``applyInPandas`` materializes each group as ONE
-    pandas DataFrame, so with a fixed P the per-task input is N/P
-    rows × 64 int64 dims — linear in N on a fixed cluster even
-    though the kernels chunk their *distance* blocks. Same two
-    constraints as :func:`_neardup_blocks`: a memory ceiling of
-    ``FRAGMENT_GROUP_ROWS`` big rows per group (32,768 rows × 64
-    dims × 8 B ≈ 16 MB of vectors before pandas overhead) and a
-    parallelism floor of max(32, defaultParallelism). Callers pass
-    the same footer-derived ``n_rows`` that decides the regime gate;
-    None keeps the floor alone (micro-frames and tests — identical
-    to the pre-r14 behavior). Result-invariant by construction:
-    every consumer's merge is a per-key top-k/argmin over columns
-    that do not depend on the grouping, so P changes task shape,
-    never output rows (pinned by the four GEMM parity tests plus
-    test_fragment_replicate_group_count)."""
+    P = max(32, defaultParallelism), raised to
+    ceil(n_rows / FRAGMENT_GROUP_ROWS) when the caller passes the big
+    side's footer-derived row count: ``applyInPandas`` materializes a
+    group as one pandas DataFrame, so the ceiling keeps per-task input
+    constant in N (32,768 rows × 64 dims × 8 B ≈ 16 MB of vectors).
+    Result-invariant by construction: every consumer's merge is a
+    per-key top-k over columns that do not depend on the grouping, so
+    P changes task shape, never output rows."""
     spark = big.sparkSession
     p = max(32, spark.sparkContext.defaultParallelism)
     if n_rows is not None:
         p = max(p, -(-n_rows // FRAGMENT_GROUP_ROWS))
-    # selectExpr strings (r18 §4): one py4j round-trip per side instead
-    # of one per column/lit/cast — the union frame is rebuilt by every
-    # GEMM consumer on every builder invocation
+    # one selectExpr string per side: one py4j round-trip each
     v = big.selectExpr(
         "0 AS side",
         f"pmod(xxhash64('{salt}', {hash_col}), {p}) AS pid",
         *[n for n, _ in big_cols],
         *[f"CAST(NULL AS {t}) AS {n}" for n, t in small_cols],
     )
-    # replicate via explode(sequence(0..p-1)): a pure projection —
-    # same |small|·P output rows as the old crossJoin(range(p)) form,
-    # but no BroadcastNestedLoopJoin node and no broadcast-build job
-    # per GEMM call (r17 job-count measurement: every broadcast is its
-    # own AQE job at 40-450 ms of fixed latency)
+    # replicate via explode(sequence(0..p-1)): a pure projection, so no
+    # broadcast join node and no broadcast-build job per GEMM call
     c = small.selectExpr(
         "1 AS side",
         f"explode(sequence(CAST(0 AS BIGINT), CAST({p - 1} AS BIGINT)))"
@@ -172,6 +158,268 @@ def _fragment_replicate(
         *[n for n, _ in small_cols],
     )
     return v.unionByName(c)
+
+
+# ------------------------------------------------ nearest-neighbour kernel
+#
+# Exact kNN, the k-means and IVF assign, the IVF probe and the PQ
+# encode are one computation: score a block of rows against a block of
+# candidates under one metric and keep each row's best m. The metric
+# is a value (below), the selection is :func:`_topm`, and the Spark
+# side is :func:`_nn_gemm` over :func:`_fragment_replicate`.
+
+
+def _component_bound(terms: int, dim: int) -> int:
+    """The largest |component| B, rounded down to three significant
+    digits, for which ``terms`` int64 values of up to dim·B² each sum
+    below 2^63."""
+    b = math.isqrt((2**63 - 1) // (terms * max(1, dim)))
+    return b - b % 10 ** (len(str(b)) - 3)
+
+
+def _l2_block(X, xn, C, cn):
+    return xn[:, None] + cn[None, :] - 2 * (X @ C.T)
+
+
+def _cos_block(X, xn, C, cn):
+    import numpy as np
+
+    if not (xn.all() and cn.all()):
+        raise ArithmeticError("[DIVIDE_BY_ZERO] zero-norm vector in a cosine score")
+    return (X @ C.T).astype(np.float64) / np.sqrt(
+        xn.astype(np.float64)[:, None] * cn.astype(np.float64)[None, :]
+    )
+
+
+def _rational_block(X, xn, C, cn):
+    import numpy as np
+
+    t = X.astype(np.float64)[:, None, :] - (
+        C.astype(np.float64) / cn.astype(np.float64)[:, None]
+    )
+    return np.cumsum(t * t, axis=2)[:, :, -1]
+
+
+class Metric(NamedTuple):
+    """A nearest-neighbour score between a row and a candidate, each an
+    int64 vector with a norm. ``block`` scores an (n, d) row block
+    against a (k, d) candidate block in numpy; ``sql`` is the same score
+    as a Spark SQL expression over a (q_qv, q_sq) row and a (qv, sq)
+    candidate. Both run the same operations in the same order, so they
+    agree bit for bit with each other and with the DuckDB oracles.
+    ``desc`` ranks larger scores first. The score sums ``terms`` int64
+    values of up to d·B² each for components |v| ≤ B, which fixes the
+    component bound (:func:`_component_bound`); 0 means no int64
+    product is formed. ``wide`` blocks hold d values per pair. ``col``
+    and ``col_type`` name and type the score, ``emit`` projects it into
+    a result, and ``key`` tags hash salts and errors."""
+
+    key: str
+    col: str
+    col_type: str
+    desc: bool
+    terms: int
+    wide: bool
+    block: Callable
+    sql: str
+    emit: str
+
+    @property
+    def order(self) -> str:
+        return f"{self.col} {'DESC' if self.desc else 'ASC'}"
+
+
+# exact int64 |q|² + |c|² − 2⟨q,c⟩: four terms of up to d·B², so
+# B = 189,000,000 at 64 dims and 536,000,000 at a PQ subspace's 8
+L2 = Metric(
+    "l2", "l2sq", "long", False, 4, False, _l2_block,
+    f"(q_sq + sq - 2 * {dot_sql('q_qv', 'qv')})", "l2sq",
+)
+# the exact int64 dot, then the two IEEE ops of cosine_sql: one term,
+# so B = 379,000,000 at 64 dims; a zero norm fails like ANSI SQL
+COSINE = Metric(
+    "cos", "cos", "double", True, 1, False, _cos_block,
+    cosine_sql(dot_sql("q_qv", "qv"), "q_sq", "sq"), "round(cos, 6) AS cos",
+)
+# k-means round 2: Σ (x_i − s_i/c)² against a rational mean (int sums s
+# and count c, the candidate's vector and norm), folded left to right
+# in double — a cumsum, never np.sum's pairwise reassociation
+RATIONAL_L2 = Metric(
+    "rational", "d", "double", False, 0, True, _rational_block,
+    "aggregate(transform(zip_with(q_qv, qv, (x, s) -> CAST(x AS DOUBLE)"
+    " - CAST(s AS DOUBLE) / CAST(sq AS DOUBLE)), t -> t * t),"
+    " CAST(0 AS DOUBLE), (acc, t) -> acc + t)",
+    "d",
+)
+
+
+def _topm(metric, m, X, xn, C, cn, cids, chunk, rids=None):
+    """Each row's ``m`` best candidates under ``metric``: the one numpy
+    selection of every nearest-neighbour kernel. Rows are (X, xn),
+    candidates (C, cn) with ids ``cids`` in ascending order. Returns
+    (row index, candidate id, score) per kept pair, each row's pairs in
+    rank order.
+
+    - Parity: scores are ``metric.block``'s, the operations of
+      ``metric.sql``, so a ranking equals the SQL form's.
+    - Ties go to the lower candidate id. The running merge lexsorts
+      (key, id); a top-1 does not sort but takes the first extreme over
+      ascending ids and replaces the running best only when strictly
+      better.
+    - Headroom: a component on either side beyond the metric's int64
+      bound raises ARITHMETIC_OVERFLOW where numpy would wrap silently;
+      a zero cosine norm raises DIVIDE_BY_ZERO where a NaN would rank.
+    - Memory: candidates are scored ``chunk`` values per row at a time
+      (``chunk // d`` candidates for a wide metric) and merged into a
+      running rows × m best, so a block never exceeds
+      rows × ``chunk`` values whatever the group holds.
+    - ``rids`` excludes each row's own id; a row with fewer than ``m``
+      candidates keeps fewer pairs."""
+    import numpy as np
+
+    if metric.terms:
+        bound = _component_bound(metric.terms, X.shape[1])
+        if max(np.abs(X).max(initial=0), np.abs(C).max(initial=0)) > bound:
+            raise ArithmeticError(
+                f"[ARITHMETIC_OVERFLOW] {metric.key} components exceed "
+                f"the int64 headroom (|v| <= {bound})"
+            )
+    worst = np.inf if metric.col_type == "double" else np.iinfo(np.int64).max
+    best = np.full((len(X), m), worst)
+    best_id = np.full((len(X), m), np.iinfo(np.int64).max)
+    rows = np.arange(len(X))[:, None]
+    step = max(1, chunk // X.shape[1]) if metric.wide else chunk
+    for s in range(0, len(C), step):
+        ids = cids[s : s + step]
+        key = metric.block(X, xn, C[s : s + step], cn[s : s + step])
+        if metric.desc:
+            key = -key  # float negation is exact
+        if rids is not None:
+            key[rids[:, None] == ids[None, :]] = worst
+        if m == 1:
+            j = key.argmin(axis=1)
+            kj = key[rows[:, 0], j]
+            upd = kj < best[:, 0]
+            best[upd, 0], best_id[upd, 0] = kj[upd], ids[j[upd]]
+        else:
+            kk = np.concatenate([best, key], axis=1)
+            ki = np.concatenate([best_id, np.broadcast_to(ids, key.shape)], axis=1)
+            o = np.lexsort((ki, kk), axis=1)[:, :m]
+            best, best_id = kk[rows, o], ki[rows, o]
+    keep = best != worst
+    return np.nonzero(keep)[0], best_id[keep], (-best if metric.desc else best)[keep]
+
+
+def _nn_gemm(
+    rows: DataFrame,
+    cands: DataFrame,
+    metric: Metric,
+    m: int,
+    salt: str,
+    n_rows: int | None = None,
+    hash_rows: bool = True,
+) -> DataFrame:
+    """Each row's ``m`` best candidates under ``metric`` as a
+    fragment-replicate Arrow GEMM: one :func:`_topm` per hash group.
+    ``rows`` and ``cands`` are each (id, vector, norm) by position, with
+    distinct column names.
+
+    - ``hash_rows`` (the assign, the probe): rows hash into groups and
+      every candidate replicates, so each row meets every candidate
+      once and the result is final: the row's columns plus the
+      candidate id, m rows per row.
+    - otherwise (exact kNN): candidates hash and the rows replicate;
+      each group emits a partial top-m (row id, candidate id, score)
+      that skips the row's own id, and the caller ranks globally.
+
+    ``n_rows`` bounds the hashed side for the group count."""
+    import numpy as np
+    import pandas as pd
+
+    (rid, rv, rn), (cid, cv, cn) = rows.columns, cands.columns
+    r_cols = [(rid, "long"), (rv, "array<long>"), (rn, "long")]
+    c_cols = [(cid, "long"), (cv, "array<long>"), (cn, "long")]
+    if hash_rows:
+        union = _fragment_replicate(rows, cands, salt, r_cols, c_cols, rid, n_rows)
+        out = r_cols + [(cid, "long")]
+    else:
+        union = _fragment_replicate(cands, rows, salt, c_cols, r_cols, cid, n_rows)
+        out = [(rid, "long"), (cid, "long"), (metric.col, metric.col_type)]
+    r_side = 0 if hash_rows else 1
+    chunk = GEMM_CHUNK_ROWS  # read at plan time: the workers see its value
+    # object dtype: Arrow can't cast an empty float64 column to list<long>
+    dtypes = {"long": "int64", "double": "float64", "array<long>": "object"}
+    empty = pd.DataFrame({n: pd.Series([], dtype=dtypes[t]) for n, t in out})
+
+    def group(pdf: pd.DataFrame) -> pd.DataFrame:
+        rs = pdf[pdf["side"] == r_side]
+        if not len(rs) or len(rs) == len(pdf):
+            return empty
+        cs = pdf[pdf["side"] != r_side].sort_values(cid)
+        ids = rs[rid].to_numpy(np.int64)
+        norms = rs[rn].to_numpy(np.int64)
+        rr, best, score = _topm(
+            metric,
+            m,
+            np.stack(rs[rv].values).astype(np.int64),
+            norms,
+            np.stack(cs[cv].values).astype(np.int64),
+            cs[cn].to_numpy(np.int64),
+            cs[cid].to_numpy(np.int64),
+            chunk,
+            None if hash_rows else ids,
+        )
+        if hash_rows:
+            return pd.DataFrame(
+                {rid: ids[rr], rv: rs[rv].values[rr], rn: norms[rr], cid: best}
+            )
+        return pd.DataFrame({rid: ids[rr], cid: best, metric.col: score})
+
+    return union.groupBy("pid").applyInPandas(
+        group, ", ".join(f"{n} {t}" for n, t in out)
+    )
+
+
+def _assign(
+    vectors: DataFrame, cents: DataFrame, metric: Metric, n_rows: int | None = None
+) -> DataFrame:
+    """Each (id, vector, norm) row with the id of its best (id, vector,
+    norm) centroid appended: the k-means and IVF cell assignment."""
+    return _nn_gemm(vectors, cents, metric, 1, "kmassign:", n_rows)
+
+
+def _probe(
+    queries: DataFrame,
+    cents: DataFrame,
+    m: int,
+    metric: Metric,
+    n_queries: int | None = None,
+) -> DataFrame:
+    """(query_id, q_qv, q_sq, probe): each (vec_id, qv, sq) query's
+    ``m`` best (cent_id, c_qv, c_sq) centroids, m rows per query."""
+    return _nn_gemm(
+        queries.selectExpr("vec_id AS query_id", "qv AS q_qv", "sq AS q_sq"),
+        cents.selectExpr("cent_id AS probe", "c_qv", "c_sq"),
+        metric,
+        m,
+        "ivfprobe:",
+        n_queries,
+    )
+
+
+def _top_k(scored: DataFrame, order: str, k: int, *out: str) -> DataFrame:
+    """``out`` over each query_id's first ``k`` rows of ``scored`` by
+    ``order`` then neighbor_id, numbered from 1 in ``rnk``: the top-k
+    window every search ends with."""
+    return (
+        scored.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id"
+            f" ORDER BY {order}, neighbor_id ASC) AS rnk",
+        )
+        .filter(f"rnk <= {k}")
+        .selectExpr(*out)
+    )
 
 
 def _guarded_query_set(e: DataFrame, query_name: str, redirect: str) -> DataFrame:
@@ -325,175 +573,79 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The job fails fast with a pointer at q_ann_ivf when the query
     set outgrows the broadcast budget.
 
-    Same ``ANN_GEMM_MIN_ROWS`` regime gate as the L2 twin
-    (:func:`_knn_l2_topk`): above the gate the N·Q scored rows never
-    shuffle — a fragment-replicate GEMM keeps map-side partial top-k
-    per query (cosine mode: exact int64 dots cast to double, then the
-    same two IEEE ops as :func:`cosine`, the ``_gemm_assign`` parity
-    discipline), and the global window sees P·Q·k thin rows.
+    Above ``ANN_GEMM_MIN_ROWS`` rows the N·Q scored rows never
+    shuffle: :func:`knn_topk`'s GEMM regime keeps a map-side partial
+    top-k per query, and the global window sees P·Q·k thin rows.
     """
     e = _quantized(spark, sf_dir)
-    return _knn_cos_topk(
+    return knn_topk(
         e,
+        COSINE,
         "q_knn_cosine",
-        "q_ann_ivf",
         n_rows=table_row_count(spark, sf_dir, "embeddings"),
+        redirect="q_ann_ivf",
     )
 
 
-def _knn_cos_topk(
+# Regime gate of the dense exact kernels (exact kNN, PQ encode): below
+# this row count the whole-stage-codegen expression forms win — the
+# Arrow GEMM's action floor is ~0.9 s on local[32] (3-4 stage
+# boundaries + Arrow batch round-trips, measured flat from N=500 to
+# N=2000 warm) while the codegen forms finish in 0.3-0.7 s — and above
+# it the codegen row fan-outs take over: the encode scores N·K·M rows
+# (K=√N ⇒ N^1.5: 1.7 s at N=2k, 50-60 s at N=20k measured cold) and
+# the exact-kNN window shuffles N·Q = N²/100 scored rows (0.64 s at
+# N=2k; 6-38 s at N=20k, swinging with session state). At N=20k the
+# GEMM runs 10-16 s cold / 5-8 s warm with no session sensitivity.
+# The crossover sits near N≈4k on both curves; the decision reads
+# footer metadata, as the dedup-index regime gate does.
+ANN_GEMM_MIN_ROWS = 4096
+
+
+def knn_topk(
     e: DataFrame,
+    metric: Metric,
     guard_name: str,
-    redirect: str,
     n_rows: int | None = None,
+    redirect: str = "q_ann_ivf / q_pq_ann",
 ) -> DataFrame:
-    """Exact top-k cosine over any (vec_id, qv, sq) frame — the
-    cosine twin of :func:`_knn_l2_topk`, same two regimes, same
-    guard-survival and tie-rule contracts (pinned by
-    test_knn_cosine_gemm_equals_sql)."""
-    guarded_q = _guarded_query_set(e, guard_name, redirect)
+    """Exact top-k (query_id, neighbor_id, rnk, score) under ``metric``
+    of a (vec_id, qv, sq) frame's KNN_QUERY_PRED queries against every
+    other row, ranked by (score, neighbor_id). Two plans, gated on the
+    caller's footer-derived ``n_rows`` (None: the first):
+
+    - below ``ANN_GEMM_MIN_ROWS``: the broadcast query set joins one
+      corpus scan, ``metric.sql`` scores it, and the window ranks N·Q
+      rows;
+    - otherwise :func:`_nn_gemm` hashes the corpus, keeps each query's
+      map-side top-k per group, and the window ranks P·Q·k thin rows,
+      so no N·Q row set shuffles.
+
+    Both emit the same rows: the metric's block and SQL scores are
+    bit-identical and both break ties to the lower neighbor_id. The
+    lazy broadcast-budget guard rides query_id in both plans, so an
+    over-budget query set fails the job with the same message."""
+    q = _guarded_query_set(e, guard_name, redirect)
     if n_rows is None or n_rows < ANN_GEMM_MIN_ROWS:
         scored = (
-            F.broadcast(guarded_q)
+            F.broadcast(q)
             .join(e, F.expr("vec_id != query_id"))
             .selectExpr(
-                "query_id",
-                "vec_id AS neighbor_id",
-                f"{cosine_sql(dot_sql('q_qv', 'qv'), 'q_sq', 'sq')} AS cos",
+                "query_id", "vec_id AS neighbor_id", f"{metric.sql} AS {metric.col}"
             )
         )
-        return (
-            scored.selectExpr(
-                "*",
-                "row_number() OVER (PARTITION BY query_id"
-                " ORDER BY cos DESC, neighbor_id ASC) AS rnk",
-            )
-            .filter(f"rnk <= {KNN_K}")
-            .selectExpr(
-                "query_id", "neighbor_id", "rnk", "round(cos, 6) AS cos"
-            )
+    else:
+        scored = _nn_gemm(
+            q,
+            e.selectExpr("vec_id AS neighbor_id", "qv", "sq"),
+            metric,
+            KNN_K,
+            f"knn{metric.key}:",
+            n_rows,
+            hash_rows=False,
         )
-    return _knn_cos_topk_gemm(e, guarded_q, n_rows)
-
-
-def _knn_cos_topk_gemm(
-    e: DataFrame, guarded_q: DataFrame, n_rows: int | None = None
-) -> DataFrame:
-    """The corpus-scale cosine-kNN plan — see :func:`_knn_cos_topk`.
-
-    Parity notes: the per-pair cosine is the exact int64 dot cast to
-    double divided by sqrt(sq_q_double · sq_n_double) — the same
-    operand order and the same two IEEE ops as the ``cosine()``
-    expression, so every scored value is bit-identical to the codegen
-    form's. Rounding to 6 decimals happens in the FINAL JVM
-    projection (F.round), not in numpy, so even the emitted float
-    goes through the identical rounding path. Partial top-k merges by
-    (−cos, neighbor_id) lexsort — float negation is exact, and
-    corpus rows enter ascending so equal cosines keep the lower id,
-    matching the window's (cos DESC, neighbor_id ASC)."""
-    import numpy as np
-    import pandas as pd
-
-    union = _fragment_replicate(
-        e.select("vec_id", "qv", "sq"),
-        guarded_q,
-        "knncos:",
-        [("vec_id", "long"), ("qv", "array<long>"), ("sq", "long")],
-        [("query_id", "long"), ("q_qv", "array<long>"), ("q_sq", "long")],
-        "vec_id",
-        n_rows=n_rows,
-    )
-    id_sentinel = np.iinfo(np.int64).max
-    # int64 headroom for the dot product alone (the cosine divides by
-    # norms AFTER the integer matmul): |⟨q,x⟩| ≤ 64·B² < 2^63 requires
-    # |component| ≤ 3.796e8. Until r14 this kernel leaned on an
-    # implicit invariant (sq comes from the ANSI sq_norm codegen over
-    # the same vectors, so Cauchy–Schwarz bounds |dot| ≤ √(sq_q·sq_x)
-    # ≤ int64 max whenever the norms survived codegen) — true for
-    # every in-repo caller, but a caller supplying sq from elsewhere
-    # would wrap silently where codegen raises. Checked explicitly
-    # now, same class as the L2/encode siblings (ADVICE r13).
-    max_abs = 379_000_000
-
-    def topk_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        vec = pdf[pdf["side"] == 0].sort_values("vec_id")  # ties → low id
-        qs = pdf[pdf["side"] == 1]
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "cos": pd.Series([], dtype="float64"),
-            }
-        )
-        if not len(vec) or not len(qs):
-            return empty
-        qids = qs["query_id"].to_numpy(np.int64)
-        Q = np.stack(qs["q_qv"].values).astype(np.int64)
-        if Q.size and np.abs(Q).max() > max_abs:
-            raise ArithmeticError(
-                "[ARITHMETIC_OVERFLOW] cosine-kNN components exceed "
-                f"the int64 dot-product headroom (|v| <= {max_abs})"
-            )
-        qsqf = qs["q_sq"].to_numpy(np.int64).astype(np.float64)
-        if (qsqf == 0).any():
-            # parity with the codegen form under ANSI mode (the
-            # session default): cosine of a zero-norm vector is a
-            # DIVIDE_BY_ZERO job failure, not a NaN silently ranked
-            # or dropped (pinned by test_knn_cosine_zero_norm_fails
-            # on BOTH plans)
-            raise ArithmeticError(
-                "[DIVIDE_BY_ZERO] zero-norm query vector in cosine kNN"
-            )
-        nq = len(qids)
-        best_c = np.full((nq, KNN_K), -np.inf)
-        best_id = np.full((nq, KNN_K), id_sentinel, dtype=np.int64)
-        for s in range(0, len(vec), GEMM_CHUNK_ROWS):
-            blk = vec.iloc[s : s + GEMM_CHUNK_ROWS]
-            ids = blk["vec_id"].to_numpy(np.int64)
-            X = np.stack(blk["qv"].values).astype(np.int64)
-            if X.size and np.abs(X).max() > max_abs:
-                raise ArithmeticError(
-                    "[ARITHMETIC_OVERFLOW] cosine-kNN components exceed "
-                    f"the int64 dot-product headroom (|v| <= {max_abs})"
-                )
-            xsqf = blk["sq"].to_numpy(np.int64).astype(np.float64)
-            if (xsqf == 0).any():
-                raise ArithmeticError(
-                    "[DIVIDE_BY_ZERO] zero-norm corpus vector in cosine kNN"
-                )
-            cos = (Q @ X.T).astype(np.float64) / np.sqrt(
-                qsqf[:, None] * xsqf[None, :]
-            )
-            cos[qids[:, None] == ids[None, :]] = -np.inf  # exclude self
-            cc = np.concatenate([best_c, cos], axis=1)
-            cid = np.concatenate(
-                [best_id, np.broadcast_to(ids, (nq, len(ids)))], axis=1
-            )
-            order = np.lexsort((cid, -cc), axis=1)[:, :KNN_K]
-            rows = np.arange(nq)[:, None]
-            best_c = cc[rows, order]
-            best_id = cid[rows, order]
-        keep = np.isfinite(best_c)
-        qq, _ = np.nonzero(keep)
-        return pd.DataFrame(
-            {
-                "query_id": qids[qq],
-                "neighbor_id": best_id[keep],
-                "cos": best_c[keep],
-            }
-        )
-
-    partial = union.groupBy("pid").applyInPandas(
-        topk_group, "query_id long, neighbor_id long, cos double"
-    )
-    return (
-        partial.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cos DESC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {KNN_K}")
-        .selectExpr("query_id", "neighbor_id", "rnk", "round(cos, 6) AS cos")
+    return _top_k(
+        scored, metric.order, KNN_K, "query_id", "neighbor_id", "rnk", metric.emit
     )
 
 
@@ -547,33 +699,19 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded sign-LSH and runs this same exact GEMM only inside
     buckets.
     """
-    # footer-metadata count (ADVICE r5: the builder never re-counts).
-    # Block layout still varies with defaultParallelism —
-    # result-invariant, only the tiling changes.
+    import numpy as np
+    import pandas as pd
+
+    # footer-metadata count: the builder never re-counts. Block layout
+    # still varies with defaultParallelism — result-invariant, only the
+    # tiling changes.
     n_rows = table_row_count(spark, sf_dir, "embeddings")
     nb = _neardup_blocks(n_rows, spark.sparkContext.defaultParallelism)
     e = _quantized(spark, sf_dir).withColumn(
         "bid", (F.col("vec_id") % nb).cast("int")
     )
-    return _neardup_pairs_gemm(e, nb)
-
-
-def _neardup_pairs_gemm(e: DataFrame, nb: int) -> DataFrame:
-    """The tile fan-out + per-tile exact GEMM over a prepared
-    (vec_id, qv, sq, bid) frame — split from the registered builder
-    (r15) so the input frame can be staged or raw without duplicating
-    the tiling code (the A/B harness drives both through this one
-    body)."""
-    import numpy as np
-    import pandas as pd
-
-    # tile replication via explode(sequence(...)) — a pure projection
-    # emitting exactly the rows the old broadcast join against a
-    # parallelized (ba, bb) tile list produced (r18: the r17
-    # explode-replication fix applied to the tiling frame — two
-    # broadcast-build jobs and a driver-side createDataFrame gone per
-    # execution; rows identical by construction: a_side gets every
-    # bb in [bid, nb), b_side every ba in [0, bid])
+    # tile replication via explode(sequence(...)), a pure projection:
+    # a_side gets every bb in [bid, nb), b_side every ba in [0, bid]
     a_side = e.selectExpr(
         "CAST(bid AS INT) AS ba",
         f"explode(sequence(bid, {nb - 1})) AS bb",
@@ -1006,18 +1144,10 @@ def ann_topk(
         e, F.expr("bucket = probe AND vec_id != query_id")
     )
     scored = cand.selectExpr(
-        "query_id",
-        "vec_id AS neighbor_id",
-        f"{cosine_sql(dot_sql('q_qv', 'qv'), 'q_sq', 'sq')} AS cos",
+        "query_id", "vec_id AS neighbor_id", f"{COSINE.sql} AS cos"
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cos DESC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {k}")
-        .selectExpr("query_id", "neighbor_id", "rnk", "round(cos, 6) AS cos")
+    return _top_k(
+        scored, COSINE.order, k, "query_id", "neighbor_id", "rnk", COSINE.emit
     )
 
 
@@ -1073,99 +1203,6 @@ def _centroids(e: DataFrame, stride: int) -> DataFrame:
     )
 
 
-def _gemm_probe_topm(
-    queries: DataFrame,
-    cents: DataFrame,
-    m: int,
-    metric: str = "cosine",
-    n_queries: int | None = None,
-) -> DataFrame:
-    """Each query's ``m`` best centroids by (cos DESC, cent_id ASC)
-    — or, with ``metric="l2"``, by (squared L2 ASC, cent_id ASC) in
-    EXACT int64 (d = sq_q + sq_c − 2⟨q,c⟩ on the quantized grid, the
-    _gemm_assign "int" formula), the probe stage IVF+PQ uses —
-    as a fragment-replicate Arrow GEMM — the probe-stage twin of
-    ``_gemm_assign``'s cosine mode (top-m instead of top-1, same
-    bit-parity discipline: exact int64 dots, then the two IEEE ops of
-    the cosine() expression, ties to the lower cent_id via a stable
-    argsort over ascending-cid columns).
-
-    ``queries`` carries (vec_id, qv, sq); ``cents`` (cent_id, c_qv,
-    c_sq). Queries hash into ≤ P groups (parallelism floor, plus the
-    FRAGMENT_GROUP_ROWS memory ceiling when the caller passes its
-    ``n_queries`` bound — the big side here is the Q ≈ N/100 query
-    set, so the ceiling binds 100× later than on the corpus-side
-    kernels), the centroid table replicates to each; shuffle is
-    Q + P·C rows, and no Q·C row set ever materializes (the old
-    broadcast-join form fanned out Q·C rows with both ∝ N —
-    quadratic, the same regime the r5 verdict flagged on the assign
-    stage).
-    Returns (query_id, q_qv, q_sq, probe) — m rows per query.
-    """
-    import numpy as np
-    import pandas as pd
-
-    union = _fragment_replicate(
-        queries.select(F.col("vec_id").alias("query_id"), "qv", "sq"),
-        cents,
-        "ivfprobe:",
-        [("query_id", "long"), ("qv", "array<long>"), ("sq", "long")],
-        [("cent_id", "long"), ("c_qv", "array<long>"), ("c_sq", "long")],
-        "query_id",
-        n_rows=n_queries,
-    )
-
-    def probe_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        qs = pdf[pdf["side"] == 0]
-        cen = pdf[pdf["side"] == 1].sort_values("cent_id")  # ascending: ties
-        # array column dtype must be object, not the float64 an empty
-        # literal defaults to — Arrow can't cast float64 → list<int64>
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "q_qv": pd.Series([], dtype="object"),
-                "q_sq": pd.Series([], dtype="int64"),
-                "probe": pd.Series([], dtype="int64"),
-            }
-        )
-        if not len(qs) or not len(cen):
-            return empty
-        X = np.stack(qs["qv"].values).astype(np.int64)
-        cids = cen["cent_id"].to_numpy(np.int64)
-        C = np.stack(cen["c_qv"].values).astype(np.int64)
-        take = min(m, len(cen))
-        if metric == "l2":
-            # exact int64 squared distance — no float anywhere, so
-            # the ranking is bit-stable vs the SQL twin's
-            # (l2sq ASC, cent_id ASC)
-            sqi = qs["sq"].to_numpy(np.int64)
-            csi = cen["c_sq"].to_numpy(np.int64)
-            d = sqi[:, None] + csi[None, :] - 2 * (X @ C.T)
-            order = np.argsort(d, axis=1, kind="stable")[:, :take]
-        else:
-            sqf = qs["sq"].to_numpy(np.float64)
-            csf = cen["c_sq"].to_numpy(np.float64)
-            cos = (X @ C.T).astype(np.float64) / np.sqrt(
-                sqf[:, None] * csf[None, :]
-            )
-            # stable sort of -cos keeps equal cosines in ascending-cid
-            # order — the oracle's (cos DESC, cent_id) tie rule exactly
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :take]
-        nq = len(qs)
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(qs["query_id"].to_numpy(np.int64), take),
-                "q_qv": [v for v in qs["qv"].values for _ in range(take)],
-                "q_sq": np.repeat(qs["sq"].to_numpy(np.int64), take),
-                "probe": cids[order].reshape(nq * take),
-            }
-        )
-
-    return union.groupBy("pid").applyInPandas(
-        probe_group, "query_id long, q_qv array<long>, q_sq long, probe long"
-    )
-
-
 def ann_ivf(
     e: DataFrame,
     stride: int,
@@ -1180,17 +1217,12 @@ def ann_ivf(
 
     Three stages, each shaped for the 1000-executor case:
 
-    1. *Assign* — each vector keeps its argmax-cosine centroid via the
-       fragment-replicate Arrow GEMM (``_gemm_assign`` cosine mode,
-       operators/clustering.py): vectors hash into P groups, the
-       centroid table replicates per group, one in-task matmul per
-       group. Shuffle is N + P·C rows and no N·C row set ever
-       materializes — the r5 verdict flagged the old broadcast-join
-       form (N·C joined rows, C ∝ N) as quadratic; this is the same
-       fix the k-means assignment got, re-verified bit-identical
-       against the unchanged SQL oracle.
-    2. *Probe* — each query keeps its ``nprobe`` best lists via the
-       same GEMM shape with top-m selection (:func:`_gemm_probe_topm`).
+    1. *Assign* — each vector keeps its best-cosine centroid
+       (:func:`_assign`): vectors hash into P groups, the centroid
+       table replicates per group, one in-task matmul per group.
+       Shuffle is N + P·C rows; no N·C row set ever materializes.
+    2. *Probe* — each query keeps its ``nprobe`` best lists, the same
+       GEMM with rows hashed and top-m selection (:func:`_probe`).
     3. *Search* — the (query × probe) set is tiny, so it broadcasts
        against the assigned table: the inverted lists stream through
        unshuffled, only matching lists get scored, and the single
@@ -1214,40 +1246,28 @@ def ann_ivf(
     Tie-breaks everywhere are (cos DESC, id ASC) on exact-int-derived
     doubles, so ranks are bit-stable across engines.
     """
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-
     cents = _centroids(e, stride)
-    # staged (r17): q_ann_ivf and q_ivf_recall (which consumes the
-    # q_ann_ivf plan whole) both execute this assign — one cosine
-    # assign GEMM per (lineage, process) instead of one per execution
+    # staged: q_ann_ivf and q_ivf_recall (which consumes the q_ann_ivf
+    # plan whole) both execute this assign — one cosine assign GEMM per
+    # (lineage, process) instead of one per execution
     assigned = stage(
-        _gemm_assign(
+        _assign(
             e.selectExpr("vec_id", "qv AS x", "sq"),
-            cents.selectExpr(
-                "cent_id AS cid", "c_qv AS cx", "c_sq AS csq"
-            ),
-            "cosine",
-            n_rows=n_rows,
+            cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
+            COSINE,
+            n_rows,
         ),
         "ivf_assign_cos",
     ).selectExpr("vec_id", "x AS qv", "sq", "cid AS cluster")
-    probes = _gemm_probe_topm(e.filter(query_pred), cents, nprobe)
+    probes = _probe(e.filter(query_pred), cents, nprobe, COSINE)
     cand = F.broadcast(probes).join(
         assigned, F.expr("cluster = probe AND vec_id != query_id")
     )
     scored = cand.selectExpr(
-        "query_id",
-        "vec_id AS neighbor_id",
-        f"{cosine_sql(dot_sql('q_qv', 'qv'), 'q_sq', 'sq')} AS cos",
+        "query_id", "vec_id AS neighbor_id", f"{COSINE.sql} AS cos"
     )
-    return (
-        scored.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY cos DESC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {k}")
-        .selectExpr("query_id", "neighbor_id", "rnk", "round(cos, 6) AS cos")
+    return _top_k(
+        scored, COSINE.order, k, "query_id", "neighbor_id", "rnk", COSINE.emit
     )
 
 
@@ -1518,20 +1538,6 @@ def _pq_centroid_slices(e: DataFrame, k_cent: int, stride: int) -> DataFrame:
     )
 
 
-# Regime gate for the dense exact kernels (encode, exact kNN): below
-# this row count the whole-stage-codegen expression forms win — the
-# Arrow GEMM's action floor is ~0.9 s on local[32] (3-4 stage
-# boundaries + Arrow batch round-trips, measured flat from N=500 to
-# N=2000 warm) while the codegen forms finish in 0.3-0.7 s — and
-# above it the codegen row fan-outs take over: the encode scores
-# N·K·M rows (K=√N ⇒ N^1.5: 1.7 s at N=2k, 50-60 s at N=20k measured
-# cold) and the exact-kNN window shuffles N·Q = N²/100 scored rows
-# (0.64 s at N=2k; 6-38 s at N=20k, the spread being the r13
-# session-state watch item — see _knn_l2_topk). At N=20k the GEMM
-# runs 10-16 s cold / 5-8 s warm with no session sensitivity. The
-# crossover sits near N≈4k on both curves; the same decision-off-
-# footer-metadata grammar as the dedup-index regime gate.
-ANN_GEMM_MIN_ROWS = 4096
 
 
 def _pq_codes(
@@ -1549,18 +1555,13 @@ def _pq_codes(
     - *fixture scale* — the original crossJoin(broadcast) form: N·K·M
       scored rows through codegen, folded to one code per (vector,
       subspace) by a partial-aggregable min(struct(d, j)).
-    - *corpus scale* — a fragment-replicate Arrow GEMM, the same
-      shape ``_gemm_assign`` gave the k-means/IVF assign stages,
-      because the encode IS an assign done once per subspace: vectors
-      hash into ≤ P groups, the ≤ 256×8-slice codebook replicates to
-      each, and one in-task int64 matmul per (group, subspace)
-      computes every |slice − centroid|² via d = |x|² − 2⟨x,c⟩ + |c|²
-      — exact int64, so the argmin agrees bit-for-bit with the SQL
-      form and the DuckDB oracle, including ties (ascending-j columns
-      + first-min argmin ≡ the min(struct(d, j)) low-j rule; pinned
-      by test_pq_codes_gemm_equals_sql). Shuffle is N + P·K·M thin
-      rows; no N·K·M row set ever exists. r13 A/B at the sf1
-      rehearsal's N=20k: 50-60 s cold codegen → ~10 s GEMM.
+    - *corpus scale* — :func:`_pq_codes_gemm`: the encode IS an
+      assign done once per subspace, so vectors hash into P groups, the
+      ≤ 256×8-slice codebook replicates to each, and :func:`_topm`
+      picks each slice's exact-L2 top-1 per (group, subspace) — the
+      min(struct(d, j)) low-j rule, bit for bit. Shuffle is N + P·K·M
+      thin rows; no N·K·M row set ever exists. At the sf1 rehearsal's
+      N=20k: 50-60 s cold codegen → ~10 s GEMM.
     """
     if n_rows is not None and n_rows >= ANN_GEMM_MIN_ROWS:
         return stage(_pq_codes_gemm(e, cent_m, n_rows), "pq_codes")
@@ -1596,52 +1597,32 @@ def _pq_codes_gemm(
         n_rows=n_rows,
     )
 
+    chunk = GEMM_CHUNK_ROWS
+    empty = pd.DataFrame(
+        {
+            "vec_id": pd.Series([], dtype="int64"),
+            "m": pd.Series([], dtype="int32"),
+            "code": pd.Series([], dtype="int32"),
+        }
+    )
+
     def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
         vec = pdf[pdf["side"] == 0]
-        cen = pdf[pdf["side"] == 1].sort_values(["m", "j"])  # ties → low j
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series([], dtype="int64"),
-                "m": pd.Series([], dtype="int32"),
-                "code": pd.Series([], dtype="int32"),
-            }
-        )
-        if not len(vec) or not len(cen):
+        if not len(vec) or len(vec) == len(pdf):
             return empty
+        cen = pdf[pdf["side"] == 1].sort_values(["m", "j"])
         n_sub = int(cen["m"].max()) + 1
         X = np.stack(vec["qv"].values).astype(np.int64)
-        # int64 headroom over 8-dim subspaces (4·8·B² < 2^63): numpy
-        # would wrap where ANSI codegen fails loudly — check instead
-        if X.size and np.abs(X).max() > 536_000_000:
-            raise ArithmeticError(
-                "[ARITHMETIC_OVERFLOW] PQ encode components exceed the "
-                "int64 sub-distance headroom (|v| <= 536000000)"
-            )
         X = X.reshape(len(vec), n_sub, PQ_SUBDIM)
         codes = np.empty((len(vec), n_sub), dtype=np.int32)
         for m in range(n_sub):
             blk = cen[cen["m"] == m]
-            js = blk["j"].to_numpy(np.int32)
-            C = np.stack(blk["cv"].values).astype(np.int64)  # K × 8
-            # the same headroom check on the replicated codebook side
-            # (ADVICE r13): every in-repo caller samples centroids
-            # from the SAME frame, so an over-bound centroid's source
-            # row fails the X check in its own group — but that is a
-            # cross-function coupling, not a kernel guarantee; an
-            # externally-trained codebook would wrap silently without
-            # this. ≤ 256×8 values per group — negligible.
-            if C.size and np.abs(C).max() > 536_000_000:
-                raise ArithmeticError(
-                    "[ARITHMETIC_OVERFLOW] PQ codebook components exceed "
-                    "the int64 sub-distance headroom (|v| <= 536000000)"
-                )
-            Xm = X[:, m, :]
-            d = (
-                (Xm * Xm).sum(axis=1)[:, None]
-                - 2 * (Xm @ C.T)
-                + (C * C).sum(axis=1)[None, :]
-            )  # exact int64
-            codes[:, m] = js[d.argmin(axis=1)]  # first min = lowest j
+            Xm, C = X[:, m, :], np.stack(blk["cv"].values).astype(np.int64)
+            rr, code, _ = _topm(
+                L2, 1, Xm, (Xm * Xm).sum(axis=1), C, (C * C).sum(axis=1),
+                blk["j"].to_numpy(np.int64), chunk,
+            )
+            codes[rr, m] = code
         return pd.DataFrame(
             {
                 "vec_id": np.repeat(vec["vec_id"].to_numpy(np.int64), n_sub),
@@ -1713,20 +1694,18 @@ def adc_corpus(
     (the index append). The cell assignment, carrying what is
     encoded, and the codes are staged: the codebook and the encode
     both read the first, every consumer reads the second."""
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-
     k_cent = frozen.k_cent if frozen else _pq_k(n_rows)
     cents = frozen.cents if frozen else (
         _centroids(e, _ivf_stride(n_rows)) if spec.cells else None
     )
     src = e.select("vec_id", "qv")
     if spec.cells:
-        src = _gemm_assign(
-            e.selectExpr("vec_id", "qv AS x", "sq"),
-            cents.selectExpr("cent_id AS cid", "c_qv AS cx", "c_sq AS csq"),
-            "int",
-            n_rows=n_rows,
-        ).selectExpr("vec_id", "cid AS cluster", "x AS qv")
+        src = _assign(
+            e.select("vec_id", "qv", "sq"),
+            cents.selectExpr("cent_id AS cluster", "c_qv", "c_sq"),
+            L2,
+            n_rows,
+        ).select("vec_id", "cluster", "qv")
         if spec.residual:
             src = src.join(
                 F.broadcast(cents.selectExpr("cent_id AS cluster", "c_qv")),
@@ -1767,9 +1746,9 @@ def adc_topk(
     codes, on, n_tab = corpus.codes, "d_m = m AND d_j = code", n_queries
     if spec.cells:
         probes = _stage(
-            _gemm_probe_topm(
-                queries, corpus.cents, nprobe, metric="l2", n_queries=n_queries
-            ).select("query_id", "q_qv", "probe"),
+            _probe(queries, corpus.cents, nprobe, L2, n_queries).select(
+                "query_id", "q_qv", "probe"
+            ),
             "adc_probes",
         )
         if callable(codes):
@@ -1809,15 +1788,7 @@ def adc_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.expr("sum(d) AS adc"))
     )
-    return (
-        adc.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY adc ASC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {k}")
-        .select("query_id", "neighbor_id", "rnk", "adc")
-    )
+    return _top_k(adc, "adc ASC", k, "query_id", "neighbor_id", "rnk", "adc")
 
 
 def adc_search(
@@ -2008,8 +1979,9 @@ def q_knn_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     budget guard; distances are pure int64 (sq_q + sq_n - 2·dot on
     the quantized grid), so even the emitted distance hash-matches.
     """
-    return _knn_l2_topk(
+    return knn_topk(
         _quantized(spark, sf_dir),
+        L2,
         "q_knn_l2",
         n_rows=table_row_count(spark, sf_dir, "embeddings"),
     )
@@ -2019,162 +1991,6 @@ def _l2_exact_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The q_knn_l2 result staged once per process — the isotropic
     ground truth every PQ recall evaluation compares against."""
     return slot(spark, "knn_l2_topk", sf_dir, lambda: q_knn_l2(spark, sf_dir))
-
-
-def _knn_l2_topk(
-    e: DataFrame, guard_name: str, n_rows: int | None = None
-) -> DataFrame:
-    """Exact top-k L2 over any (vec_id, qv, sq) frame — shared by
-    q_knn_l2 and every recall eval's ground-truth slot (base,
-    normalized, aniso, aniso-normalized).
-
-    Two regimes (gate: ``ANN_GEMM_MIN_ROWS`` against the caller's
-    footer-derived row count; None → the small-N plan):
-
-    - *fixture scale* — broadcast query set joined to one corpus
-      scan, scored by the int64 expression, global top-k window. The
-      window shuffles N·Q scored rows: fine at N=2k (0.64 s), but at
-      the sf1 rehearsal's N=20k this plan's wall swung 6-38 s with
-      SESSION STATE (the r13 watch item: q_pq_rerank_recall 50.6 s
-      inside rehearsal sessions vs 27.6 s isolated, reproduced this
-      round as 13 s ↔ 38 s for the same staging work depending on
-      which queries ran first) — the 4M-row shuffle+sort sits exactly
-      where JVM/codegen/GC warm-state variance bites.
-    - *corpus scale* — fragment-replicate Arrow GEMM with MAP-SIDE
-      partial top-k: the corpus hashes into ≤ P groups, the
-      (guard-wrapped, ≤ budget) query set replicates to each, one
-      in-task int64 matmul per group scores its fragment against
-      every query keeping each query's local top-k by (l2sq,
-      neighbor_id), and the global top-k is a window over P·Q·k THIN
-      rows. Same N·Q distances, no N·Q shuffle — at 100 TB that is
-      the difference between a ground-truth eval that runs and one
-      that doesn't; at N=20k it is 10-16 s cold / 5-8 s warm with no
-      session sensitivity (measured across three session shapes,
-      NOTES_r13). Distances stay pure int64, so ranks and emitted
-      distances are bit-identical to the SQL form and the DuckDB
-      oracle; per-group ties resolve to the lower neighbor_id because
-      corpus rows sort ascending before a STABLE argsort on distance
-      (pinned by test_knn_l2_gemm_equals_sql).
-
-    The broadcast-budget guard (``_guarded_query_set``) rides both
-    plans unchanged: query_id carries the folded raise_error, so an
-    over-budget query set fails the job at the same point with the
-    same message."""
-    guarded_q = _guarded_query_set(e, guard_name, "q_ann_ivf / q_pq_ann")
-    if n_rows is None or n_rows < ANN_GEMM_MIN_ROWS:
-        scored = (
-            F.broadcast(guarded_q)
-            .join(e, F.expr("vec_id != query_id"))
-            .selectExpr(
-                "query_id",
-                "vec_id AS neighbor_id",
-                f"(q_sq + sq - 2 * {dot_sql('q_qv', 'qv')}) AS l2sq",
-            )
-        )
-        return (
-            scored.selectExpr(
-                "*",
-                "row_number() OVER (PARTITION BY query_id"
-                " ORDER BY l2sq ASC, neighbor_id ASC) AS rnk",
-            )
-            .filter(f"rnk <= {KNN_K}")
-            .select("query_id", "neighbor_id", "rnk", "l2sq")
-        )
-    return _knn_l2_topk_gemm(e, guarded_q, n_rows)
-
-
-def _knn_l2_topk_gemm(
-    e: DataFrame, guarded_q: DataFrame, n_rows: int | None = None
-) -> DataFrame:
-    """The corpus-scale exact-kNN plan — see :func:`_knn_l2_topk`."""
-    import numpy as np
-    import pandas as pd
-
-    union = _fragment_replicate(
-        e.select("vec_id", "qv", "sq"),
-        guarded_q,
-        "knnl2:",
-        [("vec_id", "long"), ("qv", "array<long>"), ("sq", "long")],
-        [("query_id", "long"), ("q_qv", "array<long>"), ("q_sq", "long")],
-        "vec_id",
-        n_rows=n_rows,
-    )
-    sentinel = np.iinfo(np.int64).max
-    # int64 headroom for d = sq_q + sq_n − 2⟨q,n⟩ over 64 dims:
-    # |each term| ≤ 64·B², three terms ⇒ 4·64·B² < 2^63 requires
-    # |component| ≤ 1.898e8. The codegen form fails loudly past this
-    # (ANSI overflow); numpy would WRAP silently — so the kernel
-    # checks and raises the same class of error instead.
-    max_abs = 189_000_000
-
-    def topk_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        vec = pdf[pdf["side"] == 0].sort_values("vec_id")  # ties → low id
-        qs = pdf[pdf["side"] == 1]
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series([], dtype="int64"),
-                "neighbor_id": pd.Series([], dtype="int64"),
-                "l2sq": pd.Series([], dtype="int64"),
-            }
-        )
-        if not len(vec) or not len(qs):
-            return empty
-        qids = qs["query_id"].to_numpy(np.int64)
-        Q = np.stack(qs["q_qv"].values).astype(np.int64)
-        if Q.size and np.abs(Q).max() > max_abs:
-            raise ArithmeticError(
-                "[ARITHMETIC_OVERFLOW] exact-kNN components exceed the "
-                f"int64 distance headroom (|v| <= {max_abs})"
-            )
-        qsq = qs["q_sq"].to_numpy(np.int64)
-        nq = len(qids)
-        best_d = np.full((nq, KNN_K), sentinel, dtype=np.int64)
-        best_id = np.full((nq, KNN_K), sentinel, dtype=np.int64)
-        # chunk the fragment so the distance block stays bounded
-        # regardless of fragment size (the 100 TB case: a group may
-        # hold millions of rows; Q × 8192 int64 ≈ 13 MB at Q=201)
-        for s in range(0, len(vec), GEMM_CHUNK_ROWS):
-            blk = vec.iloc[s : s + GEMM_CHUNK_ROWS]
-            ids = blk["vec_id"].to_numpy(np.int64)
-            X = np.stack(blk["qv"].values).astype(np.int64)
-            if X.size and np.abs(X).max() > max_abs:
-                raise ArithmeticError(
-                    "[ARITHMETIC_OVERFLOW] exact-kNN components exceed "
-                    f"the int64 distance headroom (|v| <= {max_abs})"
-                )
-            xsq = blk["sq"].to_numpy(np.int64)
-            d = qsq[:, None] + xsq[None, :] - 2 * (Q @ X.T)  # exact int64
-            d[qids[:, None] == ids[None, :]] = sentinel  # exclude self
-            cd = np.concatenate([best_d, d], axis=1)
-            cid = np.concatenate(
-                [best_id, np.broadcast_to(ids, (nq, len(ids)))], axis=1
-            )
-            order = np.lexsort((cid, cd), axis=1)[:, :KNN_K]
-            rows = np.arange(nq)[:, None]
-            best_d = cd[rows, order]
-            best_id = cid[rows, order]
-        keep = best_d != sentinel
-        qq, _ = np.nonzero(keep)
-        return pd.DataFrame(
-            {
-                "query_id": qids[qq],
-                "neighbor_id": best_id[keep],
-                "l2sq": best_d[keep],
-            }
-        )
-
-    partial = union.groupBy("pid").applyInPandas(
-        topk_group, "query_id long, neighbor_id long, l2sq long"
-    )
-    return (
-        partial.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY l2sq ASC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {KNN_K}")
-        .select("query_id", "neighbor_id", "rnk", "l2sq")
-    )
 
 
 # The production PQ pattern: codes give a cheap shortlist, full
@@ -2227,28 +2043,14 @@ def q_pq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qside = e.filter(KNN_QUERY_PRED).selectExpr(
         "vec_id AS query_id", "qv AS q_qv", "sq AS q_sq"
     )
-    nside = e.selectExpr(
-        "vec_id AS neighbor_id", "qv AS n_qv", "sq AS n_sq"
-    )
+    nside = e.selectExpr("vec_id AS neighbor_id", "qv", "sq")
     rer = (
         cand.select("query_id", "neighbor_id")
         .join(broadcast_if_small(qside, n_queries), "query_id")
         .join(nside, "neighbor_id")
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"(q_sq + n_sq - 2 * {dot_sql('q_qv', 'n_qv')}) AS l2sq",
-        )
+        .selectExpr("query_id", "neighbor_id", f"{L2.sql} AS l2sq")
     )
-    rer10 = (
-        rer.selectExpr(
-            "*",
-            "row_number() OVER (PARTITION BY query_id"
-            " ORDER BY l2sq ASC, neighbor_id ASC) AS rnk",
-        )
-        .filter(f"rnk <= {KNN_K}")
-        .select("query_id", "neighbor_id")
-    )
+    rer10 = _top_k(rer, L2.order, KNN_K, "query_id", "neighbor_id")
     return _recall_vs(_l2_exact_slot(spark, sf_dir), rer10)
 
 
@@ -2474,8 +2276,9 @@ def _aniso_exact_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "knn_l2_aniso_topk",
         sf_dir,
-        lambda: _knn_l2_topk(
+        lambda: knn_topk(
             _aniso(spark, sf_dir),
+            L2,
             "knn_l2_aniso",
             n_rows=table_row_count(spark, sf_dir, "embeddings"),
         ),
@@ -2584,8 +2387,9 @@ def _aniso_norm_exact_slot(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "knn_l2_aniso_norm_topk",
         sf_dir,
-        lambda: _knn_l2_topk(
+        lambda: knn_topk(
             _aniso_norm(spark, sf_dir),
+            L2,
             "knn_l2_aniso_norm",
             n_rows=table_row_count(spark, sf_dir, "embeddings"),
         ),

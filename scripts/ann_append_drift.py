@@ -124,9 +124,10 @@ def main() -> None:
     )
     from mapreduceapp_spark.operators.similarity import (
         KNN_QUERY_PRED,
+        L2,
         _aniso,
-        _knn_l2_topk,
         _opq_permute,
+        knn_topk,
     )
     from mapreduceapp_spark.session import get_spark
     from mapreduceapp_spark.sources.parquet import table_row_count
@@ -154,8 +155,8 @@ def main() -> None:
                 batch, n_b = _batch(spark, sf_dir, ratio, drift, id_offset)
                 key = f"{ratio}:{'drift' if drift else 'control'}"
                 union = corpus.unionByName(batch)
-                exact = _knn_l2_topk(
-                    union, f"drift_exact_{key}", n_rows=n + n_b
+                exact = knn_topk(
+                    union, L2, f"drift_exact_{key}", n_rows=n + n_b
                 )
                 queries = batch.filter(KNN_QUERY_PRED)
                 # appended path: copy base, append the batch

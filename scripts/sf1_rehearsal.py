@@ -126,6 +126,7 @@ DEFAULT_QUERIES = [
     # lineage allows): its cold_wall is build + first probe — the
     # corpus-compaction event — and best_wall the steady-state probe;
     # the dedicated build/probe split is ann_index_split_r15.json
+    # (scripts/ann_index_split.py, last in commit 31f09d1)
     "q_ann_index_probe",
 ]
 

@@ -144,12 +144,12 @@ def test_probe_prunes_partitions(spark, tmp_path, monkeypatch):
     assert before
 
     # re-derive the probed cell from the probe GEMM the index uses
-    from mapreduceapp_spark.operators.similarity import _gemm_probe_topm
+    from mapreduceapp_spark.operators.similarity import L2, _probe
 
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     cells = sorted(
         r["probe"]
-        for r in _gemm_probe_topm(queries, cents, 1, metric="l2")
+        for r in _probe(queries, cents, 1, L2)
         .select("probe")
         .distinct()
         .collect()
@@ -296,8 +296,7 @@ def test_append_placement_and_consistency(spark, sf_dir, tmp_path):
     independently of the append path; sidecar and meta stay
     consistent (every on-disk file covered, counts agree)."""
     from mapreduceapp_spark.operators.ann_index import append_ann_index
-    from mapreduceapp_spark.operators.clustering import _gemm_assign
-    from mapreduceapp_spark.operators.similarity import _pq_codes
+    from mapreduceapp_spark.operators.similarity import L2, _assign, _pq_codes
 
     e_p = _lineage(spark, sf_dir)
     corpus = e_p.filter("vec_id % 10 < 8")
@@ -324,14 +323,14 @@ def test_append_placement_and_consistency(spark, sf_dir, tmp_path):
     # independent frozen-artifact recomputation
     cents = spark.read.parquet(os.path.join(path, "centroids"))
     cent_m = spark.read.parquet(os.path.join(path, "codebook"))
-    assigned = _gemm_assign(
+    assigned = _assign(
         batch.select("vec_id", F.col("qv").alias("x"), "sq"),
         cents.select(
             F.col("cent_id").alias("cid"),
             F.col("c_qv").alias("cx"),
             F.col("c_sq").alias("csq"),
         ),
-        "int",
+        L2,
     ).select("vec_id", "x", F.col("cid").alias("cluster"))
     resid = assigned.join(
         F.broadcast(cents.select(F.col("cent_id").alias("cluster"), "c_qv")),

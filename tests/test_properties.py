@@ -491,21 +491,28 @@ tie_vec = st.lists(
 )
 
 
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
 @given(vecs=st.lists(tie_vec, min_size=3, max_size=24))
 @SETTINGS
 @pytest.mark.slow
-def test_knn_gemm_parity_law(spark, vecs):
+def test_knn_gemm_parity_law(spark, metric, vecs):
     """GEMM exact-kNN ≡ broadcast-join + window form on random tied
-    vector sets (every 100th vec_id is a query by the engine's
-    predicate, so seed vec_ids across the 0/100/200… boundary)."""
+    vector sets, under both kNN metrics (every 100th vec_id is a query
+    by the engine's predicate, so seed vec_ids across the 0/100/200…
+    boundary). Cosine draws exclude the all-zero vector, whose cosine
+    fails on both plans (test_knn_cosine_zero_norm_fails_on_both_plans)."""
+    from hypothesis import assume
     from pyspark.sql import functions as F
 
+    import mapreduceapp_spark.operators.similarity as sim
     from mapreduceapp_spark.functions.vectors import sq_norm_sql
-    from mapreduceapp_spark.operators.similarity import _knn_l2_topk
 
+    m = sim.COSINE if metric == "cosine" else sim.L2
+    if m is sim.COSINE:
+        assume(all(any(v) for v in vecs))
     rows = [(i * 50, v) for i, v in enumerate(vecs)]  # half are queries
     df = spark.createDataFrame(rows, "vec_id long, qv array<long>")
     e = df.withColumn("sq", F.expr(sq_norm_sql("qv")))
-    a = sorted(map(tuple, _knn_l2_topk(e, "prop_sql", n_rows=None).collect()))
-    b = sorted(map(tuple, _knn_l2_topk(e, "prop_gemm", n_rows=10**9).collect()))
+    a = sorted(map(tuple, sim.knn_topk(e, m, "prop_sql", n_rows=None).collect()))
+    b = sorted(map(tuple, sim.knn_topk(e, m, "prop_gemm", n_rows=10**9).collect()))
     assert a == b
