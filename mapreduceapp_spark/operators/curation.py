@@ -256,23 +256,16 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     or broadcast work.
     """
     from mapreduceapp_spark.functions.text import token_count_sql
-    from mapreduceapp_spark.operators.dedup import q_minhash_neardup
-    from mapreduceapp_spark.plans.staging import slot
+    from mapreduceapp_spark.operators.dedup import minhash_pairs
 
     t = tables(spark, sf_dir)
     filtered = t.documents.selectExpr(
         "doc_id", "lang", f"{token_count_sql('text')} AS ntok"
     ).filter(f"ntok >= {MIN_TOKENS}")
 
-    # same stage slot+plan as q_dedup_clusters: whichever runs first
-    # materializes the LSH pair detection; the other reads it (slot():
-    # repeat invocations skip constructing the whole minhash plan)
-    pairs = slot(
-        spark,
-        "minhash_pairs",
-        sf_dir,
-        lambda: q_minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"),
-    )
+    # the pair slot q_dedup_clusters reads: whichever runs first
+    # materializes the LSH pair detection; the other reads it
+    pairs = minhash_pairs(spark, sf_dir)
     # a pair only kills doc_b if its earlier endpoint survived quality
     live_a = filtered.selectExpr("doc_id AS doc_a")
     drop = (

@@ -157,10 +157,10 @@ SIMHASH_BITS = 60
 SIMHASH_MAX_HAMMING = 3
 SIMHASH_BANDS = SIMHASH_MAX_HAMMING + 1  # pigeonhole: ≥1 band equal
 
-# Per-band-bucket size cap for BOTH LSH candidate generators (VERDICT
-# r5 ask #2). An LSH band bucket's pair fan-out is g²/2; on uniform
-# data g is tiny by construction, but adversarially dense data (the r5
-# sf1 rehearsal measured 39x MinHash / 1250x SimHash candidate growth
+# Per-band-bucket size cap for BOTH LSH candidate generators. An LSH
+# band bucket's pair fan-out is g²/2; on uniform data g is tiny by
+# construction, but adversarially dense data (the sf1 rehearsal
+# measured 39x MinHash / 1250x SimHash candidate growth
 # at 10x rows on this 31-token-vocabulary corpus) can concentrate an
 # unbounded share of the corpus into one bucket — the stopword-shingle
 # failure mode. Buckets larger than the cap are DROPPED from candidate
@@ -173,59 +173,29 @@ SIMHASH_BANDS = SIMHASH_MAX_HAMMING + 1  # pigeonhole: ≥1 band equal
 # the bench scale, asserted in tests/test_dedup.py.
 LSH_BUCKET_CAP = 1024
 
-# How the cap is ENFORCED (VERDICT r6 ask #2). Default False = fold
-# the cap into the band-entry pass itself: a window ``count(*) over
-# (partition by band key)`` + filter, computed on the shuffle the
-# candidate self-join needs anyway (same partitioning key; under AQE
-# the smaller capped side often broadcasts), so the cap costs no
-# standalone aggregate + anti-join pass. That removed the separate
-# count-aggregate + anti-join whose measured price was the only real
-# >2x per-query regression of round 6 (q_simhash_neardup 1.57 ->
-# 3.29 s at sf0.1; window form: 2.0 s, and 0.9-1.6 s for the sf1
-# candidate stage vs 60+ s for a collect_list-based fold whose
-# in-row pair expansion degrades quadratically with bucket size —
-# both forms A/B-measured this round). An over-cap bucket's rows
-# co-locate in ONE window partition as plain rows (spill-safe
-# external sort, never a single giant array). Flip to True for
-# corpora with truly degenerate buckets (~10^8 rows on one key, where
-# even a spilling single-partition sort is a straggler): the
-# two-pass count + anti-join (:func:`_cap_band_buckets`) then drops
-# over-cap buckets without ever co-locating them.
-LSH_CAP_TWO_PASS = False
-
-
 def _capped_band_entries(
     entries: DataFrame, keys: list[str], cap: int
 ) -> DataFrame:
-    """Band entries minus over-cap buckets, by the strategy above."""
-    if LSH_CAP_TWO_PASS:
-        return _cap_band_buckets(entries, keys, cap)
+    """Band entries minus every bucket (rows sharing ``keys``) larger
+    than ``cap`` — the one bucket cap of both LSH families, the band
+    index build and its probe.
+
+    The cap is a window ``count(*) over (partition by keys)`` plus a
+    filter, computed on the shuffle the candidate self-join needs
+    anyway (same key), so it costs no standalone aggregate. Measured
+    alternatives: a count aggregate + anti-join took q_simhash_neardup
+    from 1.57 to 3.29 s at sf0.1 (this form: 2.0 s); a collect_list
+    fold took 60+ s on the sf1 candidate stage, its in-row pair
+    expansion being quadratic in bucket size. An over-cap bucket's
+    rows co-locate in one window partition as plain rows (spill-safe
+    external sort, never a single giant array); only a bucket of
+    ~10^8 rows on one key would make that partition a straggler."""
     w = Window.partitionBy(*keys)
     return (
         entries.withColumn("__g", F.count(F.lit(1)).over(w))
         .filter(F.col("__g") <= cap)
         .drop("__g")
     )
-
-
-def _cap_band_buckets(entries: DataFrame, keys: list[str], cap: int) -> DataFrame:
-    """Drop every row of a band bucket larger than ``cap`` members —
-    the bounded-memory two-pass used when ``LSH_CAP_TWO_PASS`` is on.
-
-    Two-pass so an over-dense bucket is never materialized anywhere:
-    a map-side-partial count per key (shuffle carries one small row
-    per distinct key), then an anti-join of the entries against the
-    over-cap key list. At sane scales that list is empty-to-tiny and
-    AQE turns the anti-join into a broadcast; the entries side is
-    never shuffled. The default single-pass fold (see
-    ``LSH_CAP_TWO_PASS``) bounds the PAIR work identically but builds
-    each over-cap bucket as one in-memory row before filtering it —
-    this path never does, which is worth the extra aggregate pass
-    exactly when buckets can grow past task memory.
-    """
-    sizes = entries.groupBy(*keys).agg(F.count(F.lit(1)).alias("g"))
-    over = sizes.filter(F.col("g") > cap).select(*keys)
-    return entries.join(over, keys, "left_anti")
 
 
 def _band_stats(entries: DataFrame, keys: list[str], cap: int) -> DataFrame:
@@ -539,6 +509,142 @@ def minhash_signatures_for(docs: DataFrame, drop_bc) -> DataFrame:
     )
 
 
+# The MinHash near-dup chain. Four callers compose it: the self-join
+# (q_minhash_neardup), the batch-vs-corpus query (q_incremental_dedup),
+# the persisted band-index probe (dedup_index.probe_band_index) and the
+# streaming probe (streaming/probe.py). Each keeps its own exchanges,
+# broadcasts and regime gate; the steps below are shared:
+# signature slot → band expansion → bucket cap → band join →
+# signature-agreement prefilter → distinct → exact-Jaccard verify.
+
+
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's staged (doc_id, sh, sig) table — the one
+    ``minhash_signatures`` slot. One Arrow pass feeds the banding, both
+    prefilter sides and both verification sides of every consumer, so
+    the corpus is scanned and signed once per process; on a hit the
+    producer plan is not even constructed (:func:`slot`)."""
+    return slot(
+        spark,
+        "minhash_signatures",
+        sf_dir,
+        lambda: _doc_shingles_with_minhash(spark, sf_dir),
+    )
+
+
+def minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q_minhash_neardup's (doc_a, doc_b) pairs as the one staged
+    ``minhash_pairs`` slot: clusters, survivors, degree, per-source
+    rate and the curation pipeline read the same bytes, so pair
+    detection runs once per process."""
+    return slot(
+        spark,
+        "minhash_pairs",
+        sf_dir,
+        lambda: q_minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"),
+    )
+
+
+# Incremental split: docs with doc_id % 10 >= 8 play the "freshly
+# crawled batch" (~20% of the corpus); the rest are the already-
+# ingested corpus. Deterministic in both engines — pure integer
+# arithmetic on the key.
+INCR_BATCH_MOD = 10
+INCR_BATCH_RESIDUE = 8
+
+
+def batch_split(sh: DataFrame, new: bool) -> DataFrame:
+    """The new-batch side (``new``) or the corpus side of the
+    incremental split. The constants are read at call time."""
+    pred = f"doc_id % {INCR_BATCH_MOD} >= {INCR_BATCH_RESIDUE}"
+    return sh.filter(pred if new else f"NOT ({pred})")
+
+
+def band_key_array():
+    """The 16-element band-key column over a ``sig`` column: the LSH
+    band family as one expression, so every caller's band keys are
+    bit-identical to the index's. One F.expr string: 16 xxhash64(slice)
+    Column constructions cost ~100 py4j round-trips per call; the
+    string parses in one."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"xxhash64({b}, slice(sig, {b * LSH_ROWS + 1}, {LSH_ROWS}))"
+            for b in range(LSH_BANDS)
+        )
+        + ")"
+    )
+
+
+def _minhash_band_entries(sh: DataFrame, *cols) -> DataFrame:
+    """(doc_id, band_key) rows — 16 per doc — from a signature table.
+    The band key folds the band index into the hash so one long column
+    keys the shuffle. ``cols`` replace ``doc_id`` as the carried
+    columns: the streaming probe carries its renamed key, shingles and
+    signature through the band join, since a stream cannot join back
+    to a staged table."""
+    return sh.select(
+        *(cols or ("doc_id",)), F.explode(band_key_array()).alias("band_key")
+    )
+
+
+# The chain's two pair shapes, as (left key, right key, left suffix,
+# right suffix): the self-join emits doc_a < doc_b; the batch-vs-corpus
+# probes pair an ingested corpus doc with a new one.
+SELF_PAIR = ("doc_a", "doc_b", "a", "b")
+CROSS_PAIR = ("corpus_doc", "new_doc", "c", "n")
+
+
+def _side(sh: DataFrame, pair: tuple, left: bool, *cols: str) -> DataFrame:
+    """Columns ``cols`` of a signature table keyed and suffixed as one
+    side of ``pair`` (left of SELF_PAIR: doc_id → doc_a, sig → sig_a)."""
+    key, sfx = (pair[0], pair[2]) if left else (pair[1], pair[3])
+    return sh.selectExpr(f"doc_id AS {key}", *(f"{c} AS {c}_{sfx}" for c in cols))
+
+
+def _join_sides(pairs: DataFrame, sh: DataFrame, pair: tuple, col: str) -> DataFrame:
+    """Both sides' ``col`` joined onto key pairs, left key first."""
+    return pairs.join(_side(sh, pair, True, col), pair[0]).join(
+        _side(sh, pair, False, col), pair[1]
+    )
+
+
+def _sig_prefilter(cand: DataFrame, pair: tuple) -> DataFrame:
+    """Candidate rows whose two signatures agree on at least
+    MINHASH_PERMS // 2 positions. The fraction of agreeing positions
+    estimates Jaccard; a 64-int compare per pair instead of a
+    ~|shingles|-string array_intersect. Cutting at est ≥ 0.5 keeps
+    every true ≥ 0.8 pair (binomial tail P[agree < 32 | j = 0.8] ≈
+    3e-7) and drops effectively all background collisions: a single
+    4-row band collides for ~0.4% of background (j ≈ 0.25) pairs.
+    Measured on q_minhash_neardup at sf0.1: 21 s → ~7 s."""
+    a, b = pair[2], pair[3]
+    return cand.withColumn(
+        "sig_agree",
+        F.expr(
+            f"aggregate(zip_with(sig_{a}, sig_{b},"
+            " (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
+            " 0, (acc, x) -> acc + x)"
+        ),
+    ).filter(F.col("sig_agree") >= MINHASH_PERMS // 2)
+
+
+def _jaccard_verify(pairs: DataFrame, pair: tuple) -> DataFrame:
+    """Exact Jaccard over the full shingle sets ``sh_<suffix>`` of each
+    pair: (left key, right key, inter, uni, jac) rows with
+    inter / uni ≥ JACCARD_THRESHOLD. Integer math up to the one double
+    division of the cut; ``jac`` is :func:`_int_round4`."""
+    ka, kb, a, b = pair
+    inter = f"size(array_intersect(sh_{a}, sh_{b})) AS inter"
+    uni = f"(size(sh_{a}) + size(sh_{b}) - inter) AS uni"
+    return (
+        pairs.selectExpr(ka, kb, inter, f"sh_{a}", f"sh_{b}")
+        .selectExpr(ka, kb, "inter", uni)
+        .filter(f"CAST(inter AS DOUBLE) / uni >= {JACCARD_THRESHOLD}")
+        .select(ka, kb, "inter", "uni", _int_round4("inter", "uni").alias("jac"))
+    )
+
+
 @register(
     "q_exact_dedup",
     oracle="""
@@ -794,12 +900,7 @@ def q_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction; no LSH-style cap (and therefore no cap headroom
     condition) is needed for correctness.
     """
-    sh = slot(
-        spark,
-        "minhash_signatures",
-        sf_dir,
-        lambda: _doc_shingles_with_minhash(spark, sf_dir),
-    )
+    sh = minhash_signatures(spark, sf_dir)
     posting = sh.select(
         "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("s")
     )
@@ -854,65 +955,31 @@ def q_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def band_key_array():
-    """The 16-element band-key column over a ``sig`` column — the
-    LSH band family as one expression, shared by the batch candidate
-    generators here and the streaming probe (streaming/probe.py), so
-    a probe's band keys are bit-identical to the index's. One F.expr
-    string (r18 §4): the 16 xxhash64(slice) Column constructions cost
-    ~100 py4j round-trips per call; the string parses in one."""
-    return F.expr(
-        "array("
-        + ", ".join(
-            f"xxhash64({b}, slice(sig, {b * LSH_ROWS + 1}, {LSH_ROWS}))"
-            for b in range(LSH_BANDS)
-        )
-        + ")"
-    )
-
-
-def _minhash_band_entries(sh: DataFrame) -> DataFrame:
-    """(doc_id, band_key) rows — 16 per doc — from the signature
-    table. Band key folds the band index into the hash so one long
-    column keys the shuffle."""
-    return sh.select("doc_id", F.explode(band_key_array()).alias("band_key"))
-
-
 def minhash_candidates(sh: DataFrame, cap: int = LSH_BUCKET_CAP) -> DataFrame:
     """(doc_a, doc_b) LSH candidate pairs with the bucket cap — NOT
     deduplicated: a pair colliding in several bands appears once per
     colliding band.
 
-    Shape: equi-self-join of the band entries on the band key, with
-    the cap folded in as a window count over that SAME key
-    (:func:`_capped_band_entries`) — the window rides the band-key
-    shuffle the join needs anyway, so capping costs no standalone
-    aggregate + anti-join pass (the r6 two-pass form doubled the
-    sf0.1 record; VERDICT r6 ask #2). A/B-measured this round
-    against a collect_list +
-    in-row pair-expansion fold: the expansion's slice-copies grow
-    quadratically with bucket size (2.9 s vs 0.65 s at sf1 for this
-    generator; 22x worse for SimHash's denser buckets), so the join
-    form wins at every scale. Per-key pair fan-out stays ≤ cap²/2 no
-    matter how degenerate the corpus.
+    Shape: equi-self-join of the capped band entries on the band key;
+    the cap's window rides the band-key shuffle the join needs anyway.
+    Per-key pair fan-out stays ≤ cap²/2 however degenerate the corpus.
+    A collect_list + in-row pair-expansion fold was measured against
+    this join: its slice-copies grow quadratically with bucket size
+    (2.9 s vs 0.65 s at sf1 for this generator; 22x worse for
+    SimHash's denser buckets).
 
-    Deduplication is deliberately the CONSUMER's job, placed after
-    its cheapest per-pair filter: a ``distinct`` here shuffles the
-    full candidate volume (the r6 sf1 rehearsal measured ~40 s for a
-    10M-pair distinct — the single largest slice of the query), while
-    q_minhash_neardup's signature prefilter cuts those 10M rows to
-    thousands with a map-side filter first, making the later distinct
-    ~free. Multi-band duplication is small anyway (measured 4% on the
-    rehearsal corpus), so filtering duplicates costs nothing extra.
+    Deduplication is the CONSUMER's job, placed after its cheapest
+    per-pair filter: a ``distinct`` here shuffles the full candidate
+    volume (~40 s for a 10M-pair distinct on the sf1 rehearsal corpus,
+    the largest slice of the query), while the signature prefilter cuts
+    those rows to thousands map-side first. Multi-band duplication is
+    small anyway (4% on the rehearsal corpus).
 
-    r18: the capped band-entry table is STAGED before the self-join.
-    Left lazy, BOTH join sides re-derived it — two band expansions,
-    two band-key exchanges, two sorts, two cap windows per execution
-    (plans/r18/q_minhash_neardup_before.txt nodes 1-7 vs 8-14).
-    Staged, the expansion+cap runs once and the join reads thin
-    (doc_id, band_key) bytes twice — same rows by construction, and
-    at corpus scale one write+2 reads of the entry table beats two
-    expand+shuffle+sort+window passes over it.
+    The capped band-entry table is staged before the self-join. Left
+    lazy, BOTH join sides re-derive it — two band expansions, two
+    band-key exchanges, two sorts, two cap windows per execution.
+    Staged, expansion and cap run once and the join reads thin
+    (doc_id, band_key) bytes twice.
     """
     bands = stage(
         _capped_band_entries(_minhash_band_entries(sh), ["band_key"], cap),
@@ -934,13 +1001,9 @@ def minhash_band_stats(
 ) -> DataFrame:
     """Bucket-layout diagnostics for the MinHash bands over a corpus
     (kept/skipped candidate pairs, over-cap bucket count)."""
-    sh = slot(
-        spark,
-        "minhash_signatures",
-        sf_dir,
-        lambda: _doc_shingles_with_minhash(spark, sf_dir),
+    return _band_stats(
+        _minhash_band_entries(minhash_signatures(spark, sf_dir)), ["band_key"], cap
     )
-    return _band_stats(_minhash_band_entries(sh), ["band_key"], cap)
 
 
 @register(
@@ -958,132 +1021,42 @@ def minhash_band_stats(
     doc="MinHash + banded LSH candidates, exact-Jaccard verified (C2).",
 )
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via MinHash-LSH, the 100 TB-shaped path.
+    """Near-dup pairs via MinHash-LSH, the 100 TB-shaped path: the
+    shared chain as a self-join over the staged signature table.
 
-    Stages:
     1. signature: per doc, 64 minhashes, computed in the same Arrow
-       pass as shingling (vectorized — see
-       :func:`_doc_shingles_with_minhash`); map-only, no shuffle;
-    2. banding: 16 bands of 4 rows; band key = xxhash64 of the band's
-       slice of the signature; explode to (band_id, band_key, doc_id)
-       — shuffle keyed by (band_id, band_key), whose groups are tiny
-       by construction;
-    3. candidates: same-bucket pairs, distinct;
-    4. verification: join candidates back to shingle sets, exact
-       Jaccard filter (array_intersect on the two docs only — no
-       posting-list join).
+       pass as shingling (:func:`minhash_signatures`); map-only;
+    2. banding: 16 bands of 4 rows, band key = xxhash64 of the band's
+       slice of the signature; self-join on the band key, whose
+       buckets are tiny by construction and capped
+       (:func:`minhash_candidates`);
+    3. signature-agreement prefilter, then distinct;
+    4. exact Jaccard verification on the two docs' shingle sets only
+       — no posting-list join.
 
     Contrast with q_ngram_jaccard: that shuffles the full posting
     list (O(total shingles) rows, skew-prone); this shuffles one row
     per (doc, band) — 16 rows per doc regardless of document size.
-
-    100 TB note — staged signature table: the shingle+signature
-    Arrow pass is consumed by five branches (banding, two prefilter
-    sides, two verification sides). Left lazy, each branch re-runs
-    the full corpus scan. The pass runs ONCE via temp-parquet
-    ``stage()`` (plans/staging.py): one corpus scan instead of five,
-    a bounded on-disk slot instead of an unreleased session cache,
-    and — unlike MEMORY_AND_DISK persist — no CacheManager plan
-    substitution into unrelated queries. On a cluster the staging
-    dir points at shared storage, so the table also survives
-    executor loss without lineage recompute.
     """
-    sh = slot(
-        spark,
-        "minhash_signatures",
-        sf_dir,
-        lambda: _doc_shingles_with_minhash(spark, sf_dir),
-    )
-    cand = minhash_candidates(sh)
-    # Stage 3.5 — signature prefilter. A single 4-row band collides
-    # for ~0.4% of background (j≈0.25) pairs, which at N² pair scale
-    # is hundreds of thousands of false candidates, each paying a
-    # ~|shingles|-string array_intersect in stage 4. Estimated
-    # Jaccard = fraction of agreeing signature elements is a 64-int
-    # compare; pruning at est ≥ 0.5 keeps every true ≥0.8 pair
-    # (binomial tail P[agree < 32 | j=0.8] ≈ 3e-7) while dropping
-    # effectively all background collisions. Measured: 21s → ~7s.
-    siga = sh.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sigb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = (
-        # rebalance the THIN candidate pairs before the prefilter
-        # (r18, guide §2.5): hot band buckets emit up to cap²/2 pairs
-        # from one bucket, so the single stage that runs band join +
-        # sig joins + the 64-element agreement fold was task-skewed
-        # (calm A/B at sf0.1: est stage 2.76 → 1.70 s from this
-        # rebalance alone, 0.99 s with the staged band table). The
-        # exchange moves 16-byte pair rows only — the same
-        # thin-rows-before-compute-dense-work argument as the r17
-        # verify-stage spread below. At corpus scale this is one extra
-        # exchange of 16-byte rows ahead of a join that shuffles the
-        # candidates regardless — bounded overhead, never a new
-        # payload shuffle.
-        cand.repartition(sh.sparkSession.sparkContext.defaultParallelism)
-        .join(siga, "doc_a")
-        .join(sigb, "doc_b")
-        .withColumn(
-            "sig_agree",
-            F.expr(
-                "aggregate(zip_with(sig_a, sig_b,"
-                " (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
-                " 0, (acc, x) -> acc + x)"
-            ),
-        )
-        .filter(F.col("sig_agree") >= MINHASH_PERMS // 2)
-        # distinct HERE, after the prefilter: candidates arrive once
-        # per colliding band (see minhash_candidates), and deduping
-        # the full candidate volume first was the query's single
-        # largest cost at rehearsal scale (~40 s for a 10M-pair
-        # shuffle). Post-prefilter the survivor set is thousands of
-        # rows, so the same distinct is ~free — and verification must
-        # not double-verify or double-emit a pair.
+    sh = minhash_signatures(spark, sf_dir)
+    n_parts = spark.sparkContext.defaultParallelism
+    # Rebalance the thin candidate pairs before the prefilter: a hot
+    # band bucket emits up to cap²/2 pairs, so the one stage running
+    # band join + sig joins + the 64-element agreement fold was
+    # task-skewed (calm A/B at sf0.1: that stage 2.76 → 1.70 s). The
+    # exchange moves 16-byte pair rows only. After the distinct the
+    # survivors are a few KB, which AQE would coalesce to ONE
+    # partition (verification ran as a single 1.5 s task on an idle
+    # 32-core host); an explicit round-robin repartition is exempt
+    # from coalescing, so verification fans out.
+    cand = minhash_candidates(sh).repartition(n_parts)
+    surv = (
+        _sig_prefilter(_join_sides(cand, sh, SELF_PAIR, "sig"), SELF_PAIR)
         .select("doc_a", "doc_b")
         .distinct()
-        # spread the survivors (r17): the distinct's output is a few
-        # KB, so AQE coalesces it to ONE partition — and the exact-
-        # Jaccard verification downstream (array_intersect over
-        # ~|shingles|-string arrays per pair) then ran as a single
-        # 1.5 s task on an idle 32-core host. An explicit round-robin
-        # repartition is exempt from AQE coalescing, so verification
-        # fans out; the exchange itself moves only thin (doc_a, doc_b)
-        # pairs — harmless at any scale.
-        .repartition(spark.sparkContext.defaultParallelism)
+        .repartition(n_parts)
     )
-    # verification reads the shingle sets from the SAME staged table
-    # (pre-staging this was a separate plain-shingle derivation so the
-    # signature work wasn't recomputed per branch; with the table
-    # staged, one combined pass serves every branch)
-    sa = sh.selectExpr("doc_id AS doc_a", "sh AS sh_a")
-    sb = sh.selectExpr("doc_id AS doc_b", "sh AS sh_b")
-    verified = (
-        est.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .selectExpr(
-            "doc_a",
-            "doc_b",
-            "size(array_intersect(sh_a, sh_b)) AS inter",
-            "sh_a",
-            "sh_b",
-        )
-        .selectExpr(
-            "doc_a",
-            "doc_b",
-            "inter",
-            "(size(sh_a) + size(sh_b) - inter) AS uni",
-        )
-        .filter(f"CAST(inter AS DOUBLE) / uni >= {JACCARD_THRESHOLD}")
-    )
-    return verified.select(
-        "doc_a", "doc_b", "inter", "uni", _int_round4("inter", "uni").alias("jac")
-    )
-
-
-# Incremental split: docs with doc_id % 10 >= 8 play the "freshly
-# crawled batch" (~20% of the corpus); the rest are the already-
-# ingested corpus. Deterministic in both engines — pure integer
-# arithmetic on the key.
-INCR_BATCH_MOD = 10
-INCR_BATCH_RESIDUE = 8
+    return _jaccard_verify(_join_sides(surv, sh, SELF_PAIR, "sh"), SELF_PAIR)
 
 
 # The cross-split exact-Jaccard ground truth: q_incremental_dedup's
@@ -1129,85 +1102,34 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-join dedup on the batch alone first — that operator is
     q_minhash_neardup).
 
-    Stages: shared staged signature pass → split by the batch
-    predicate → band both sides → equi-join batch bands against
-    CORPUS bands (bucket cap applied to the corpus side, where
+    The shared chain over the split: band both sides, equi-join batch
+    bands against CORPUS bands (bucket cap on the corpus side, where
     degenerate buckets live; a batch band with no corpus twin dies
-    map-side in the join) → signature-agreement prefilter → exact
-    Jaccard verification on the full shingle sets. Output re-keyed
-    (corpus_doc, new_doc) — the consumer drops or links new docs,
-    never corpus ones.
+    map-side in the join), signature-agreement prefilter, distinct,
+    exact Jaccard verify. Output keyed (corpus_doc, new_doc) — the
+    consumer drops or links new docs, never corpus ones.
     """
-    sh = slot(
-        spark,
-        "minhash_signatures",
-        sf_dir,
-        lambda: _doc_shingles_with_minhash(spark, sf_dir),
-    )
-    new_pred = f"doc_id % {INCR_BATCH_MOD} >= {INCR_BATCH_RESIDUE}"
+    sh = minhash_signatures(spark, sf_dir)
     corpus_bands = _capped_band_entries(
-        _minhash_band_entries(sh.filter(f"NOT ({new_pred})")),
+        _minhash_band_entries(batch_split(sh, new=False)),
         ["band_key"],
         LSH_BUCKET_CAP,
     ).selectExpr("doc_id AS corpus_doc", "band_key")
-    batch_bands = _minhash_band_entries(sh.filter(new_pred)).selectExpr(
+    batch_bands = _minhash_band_entries(batch_split(sh, new=True)).selectExpr(
         "doc_id AS new_doc", "band_key"
     )
-    cand = batch_bands.join(corpus_bands, "band_key").select(
-        "corpus_doc", "new_doc"
+    # the same thin-pair rebalance as q_minhash_neardup's
+    cand = (
+        batch_bands.join(corpus_bands, "band_key")
+        .select("corpus_doc", "new_doc")
+        .repartition(spark.sparkContext.defaultParallelism)
     )
-    sig_c = sh.selectExpr("doc_id AS corpus_doc", "sig AS sig_c")
-    sig_n = sh.selectExpr("doc_id AS new_doc", "sig AS sig_n")
-    est = (
-        # rebalance the thin candidate pairs before the prefilter —
-        # the same hot-band-bucket skew fix as q_minhash_neardup (r18,
-        # guide §2.5): the band join + 64-element agreement fold ran
-        # in one skewed stage; the exchange moves 16-byte rows only
-        cand.repartition(spark.sparkContext.defaultParallelism)
-        .join(sig_c, "corpus_doc")
-        .join(sig_n, "new_doc")
-        .withColumn(
-            "sig_agree",
-            F.expr(
-                "aggregate(zip_with(sig_c, sig_n,"
-                " (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
-                " 0, (acc, x) -> acc + x)"
-            ),
-        )
-        .filter(F.col("sig_agree") >= MINHASH_PERMS // 2)
-        # distinct after the prefilter, same ordering argument as
-        # q_minhash_neardup: candidates arrive once per colliding
-        # band and the prefilter survivor set is tiny.
+    surv = (
+        _sig_prefilter(_join_sides(cand, sh, CROSS_PAIR, "sig"), CROSS_PAIR)
         .select("corpus_doc", "new_doc")
         .distinct()
     )
-    sa = sh.selectExpr("doc_id AS corpus_doc", "sh AS sh_c")
-    sb = sh.selectExpr("doc_id AS new_doc", "sh AS sh_n")
-    return (
-        est.join(sa, "corpus_doc")
-        .join(sb, "new_doc")
-        .selectExpr(
-            "corpus_doc",
-            "new_doc",
-            "size(array_intersect(sh_c, sh_n)) AS inter",
-            "sh_c",
-            "sh_n",
-        )
-        .selectExpr(
-            "corpus_doc",
-            "new_doc",
-            "inter",
-            "(size(sh_c) + size(sh_n) - inter) AS uni",
-        )
-        .filter(f"CAST(inter AS DOUBLE) / uni >= {JACCARD_THRESHOLD}")
-        .select(
-            "corpus_doc",
-            "new_doc",
-            "inter",
-            "uni",
-            _int_round4("inter", "uni").alias("jac"),
-        )
-    )
+    return _jaccard_verify(_join_sides(surv, sh, CROSS_PAIR, "sh"), CROSS_PAIR)
 
 
 # MATERIALIZED pair CTEs are essential here: inside WITH RECURSIVE a
@@ -1320,10 +1242,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine tables, the fixpoint is deterministic, so one process
     never needs to run it twice. This is what makes downstream
     consumers (q_dedup_survivors) marginal-cost: detect → cluster
-    runs once, survivor selection adds only its linear tail
-    (VERDICT r5 ask #6).
+    runs once, survivor selection adds only its linear tail.
 
-    r17 regime gate: when the staged pair slot is driver-bounded
+    Regime gate: when the staged pair slot is small
     (footer row count ≤ CLUSTERS_LOCAL_MAX_PAIRS), components come
     from driver union-find over one Arrow collect instead of the
     fixpoint — same labels by construction, ~15 orchestration jobs
@@ -1332,8 +1253,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     memo = _CLUSTERS_MEMO.get(sf_dir)
     if memo is not None and memo.sparkSession is spark:
         return memo
-    # Small-graph regime (r17, guide §1.2 "the distributed algorithm"):
-    # when the staged pair slot is driver-bounded, run union-find on
+    # Small-graph regime: when the staged pair slot is small, run union-find on
     # the driver instead of the distributed fixpoint. The gate decides
     # off parquet-footer metadata the stage write just produced (zero
     # jobs); ≤ CLUSTERS_LOCAL_MAX_PAIRS edges of two int64s is ≤ 32 MB
@@ -1349,25 +1269,22 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distributed fixpoint below remains the 100 TB path.
     from mapreduceapp_spark.plans.staging import staged_row_count
 
-    pairs_early = slot(
-        spark,
-        "minhash_pairs",
-        sf_dir,
-        lambda: q_minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"),
-    )
-    n_pairs = staged_row_count(pairs_early)
+    # the pair slot, not a checkpoint: q_curation_pipeline and the
+    # other pair consumers read the same bytes, and the fixpoint's
+    # fan-out reads parquet instead of re-deriving the detection per
+    # branch
+    pairs = minhash_pairs(spark, sf_dir)
+    n_pairs = staged_row_count(pairs)
     if n_pairs is not None and n_pairs <= CLUSTERS_LOCAL_MAX_PAIRS:
-        result = _union_find_labels(spark, pairs_early)
+        result = _union_find_labels(spark, pairs)
         _CLUSTERS_MEMO[sf_dir] = result
         return result
     # edges come from the LSH path (scales; output proven equal to
     # the exact pairs — see q_minhash_neardup), so clustering at
     # 100 TB never touches the quadratic posting-list join the
-    # recursive-CTE oracle uses at sf0.01. Checkpoint the pair
-    # detection ONCE before fanning out: edges (both directions) and
-    # the initial labels all re-derive from it, and without the
-    # checkpoint each branch would re-run the whole detection
-    # pipeline (measured 23s vs 6s at sf0.1).
+    # recursive-CTE oracle uses at sf0.01. Edges (both directions) and
+    # the initial labels all read the staged pair slot; re-running the
+    # detection per branch measured 23 s vs 6 s at sf0.1.
     #
     # RELIABLE checkpoints (not localCheckpoint): localCheckpoint
     # stores blocks in executor storage with no lineage left to
@@ -1379,18 +1296,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cut it provides is the same one that took the sf0.1 run from
     # 23 s to 6 s when first introduced.
     _ensure_checkpoint_dir(spark)
-    # staged, not checkpointed: the SAME pair slot feeds
-    # q_curation_pipeline (identical plan → identical stage() key),
-    # so LSH detection runs once per process for all its consumers,
-    # and the fixpoint's fan-out reads parquet instead of re-deriving
-    # the detection per branch (same lineage-cut effect as the old
-    # checkpoint, plus cross-query reuse).
-    pairs = slot(
-        spark,
-        "minhash_pairs",
-        sf_dir,
-        lambda: q_minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"),
-    )
     edges = pairs.unionByName(
         pairs.select(
             F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
@@ -1612,28 +1517,10 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits in an over-cap bucket is skipped. At the oracle scales the
     cap never binds (max bucket 28/238 at sf0.01/sf0.1 vs cap 1024),
     so the brute-force equality and the SQL oracle stay exact; on an
-    adversarially dense corpus it bounds the candidate volume the r5
-    rehearsal measured at 1250x for 10x rows.
+    adversarially dense corpus it bounds the candidate volume, which
+    uncapped grew 1250x for 10x rows on the sf1 rehearsal corpus.
     """
-    from mapreduceapp_spark.functions.text import tokens_sql
-
-    d = spread_table(spark, sf_dir, "documents")
-    # one row per token OCCURRENCE with weight 1: summing ±1 votes
-    # over occurrences equals summing cnt-weighted votes over
-    # distinct tokens, so the (doc, tok) pre-aggregation shuffle a
-    # first cut had bought nothing — dropped
-    doc_tokens = d.selectExpr(
-        "doc_id", f"explode({tokens_sql('text')}) AS tok", "1 AS cnt"
-    )
-    # stage the fingerprints: both sides of the banded self-join
-    # consume them, and without materialization Spark computes the
-    # full token-vote aggregation once PER SIDE (verified: 0
-    # ReusedExchange in the executed plan — the band projections
-    # differ per side, so the exchanges aren't equal subtrees). The
-    # staged table is N rows of (doc_id, int64) — trivial to write,
-    # and the corpus-scan-sized vote aggregation runs exactly once.
-    fp = slot(spark, "simhash_fp", sf_dir, lambda: _simhash(doc_tokens))
-    cand = simhash_candidates(fp)
+    cand = simhash_candidates(_simhash_fp(spark, sf_dir))
     return (
         cand.selectExpr(
             "doc_a", "doc_b", "bit_count(sh_a ^ sh_b) AS hamming"
@@ -1646,9 +1533,31 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's staged (doc_id, simhash) table — the one producer
+    of the ``simhash_fp`` slot. Staged because both sides of the banded
+    self-join consume it: lazy, Spark computes the full token-vote
+    aggregation once PER SIDE (0 ReusedExchange in the executed plan —
+    the band projections differ per side). The table is N rows of
+    (doc_id, int64), and the corpus-sized vote aggregation runs once."""
+    from mapreduceapp_spark.functions.text import tokens_sql
+
+    def fingerprints() -> DataFrame:
+        # one row per token OCCURRENCE with weight 1: summing ±1 votes
+        # over occurrences equals summing cnt-weighted votes over
+        # distinct tokens, so no (doc, tok) pre-aggregation shuffle
+        return _simhash(
+            spread_table(spark, sf_dir, "documents").selectExpr(
+                "doc_id", f"explode({tokens_sql('text')}) AS tok", "1 AS cnt"
+            )
+        )
+
+    return slot(spark, "simhash_fp", sf_dir, fingerprints)
+
+
 def _simhash_band_entries(fp: DataFrame) -> DataFrame:
     """(doc_id, simhash, band_id, band_bits) rows — SIMHASH_BANDS per
-    doc — from the fingerprint table. One selectExpr (r18 §4)."""
+    doc — from the fingerprint table, as one selectExpr."""
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     arr = ", ".join(
@@ -1667,22 +1576,17 @@ def simhash_candidates(fp: DataFrame, cap: int = LSH_BUCKET_CAP) -> DataFrame:
     bucket cap: pairs agreeing on some (band_id, band_bits) whose
     bucket holds ≤ ``cap`` docs — NOT deduplicated (a pair agreeing
     on several bands appears once per band; near-identical
-    fingerprints agree on all 4). The r5 sf1 rehearsal measured THIS
-    generator's uncapped candidate volume at 1250x for 10x rows
-    (half-salted replicas keep fingerprints within banding distance)
-    — the cap bounds any single bucket's fan-out at cap²/2.
+    fingerprints agree on all 4). Uncapped, this generator's candidate
+    volume grew 1250x for 10x rows on the sf1 rehearsal corpus
+    (half-salted replicas keep fingerprints within banding distance);
+    the cap bounds any single bucket's fan-out at cap²/2.
 
-    Shape (reworked for VERDICT r6 ask #2): equi-self-join on
-    (band_id, band_bits) with the cap folded in as a window count
-    over the same key (:func:`_capped_band_entries`) — replacing r6's
-    separate count+anti-join pass, whose measured price was the 2.1x
-    sf0.1 regression. Measured: full query 3.29 → 2.0 s at sf0.1, and
-    the sf1 candidate stage 0.9-1.6 s (a collect_list+expansion fold,
-    also tried, degraded to 60+ s there — its in-row pair expansion
-    is quadratic in bucket size, which SimHash's dense buckets hit
-    hardest). Deduplication belongs AFTER the consumer's hamming
-    filter, where the survivor set is tiny, not on the full candidate
-    stream (the minhash_candidates note has the measured cost)."""
+    Shape: equi-self-join on (band_id, band_bits) with the shared
+    window cap (:func:`_capped_band_entries`) over the same key; the
+    sf1 candidate stage takes 0.9-1.6 s this way. Deduplication
+    belongs AFTER the consumer's hamming filter, where the survivor
+    set is tiny, not on the full candidate stream (the
+    minhash_candidates note has the measured cost)."""
     bands = _capped_band_entries(
         _simhash_band_entries(fp), ["band_id", "band_bits"], cap
     )
@@ -1701,15 +1605,10 @@ def simhash_band_stats(
 ) -> DataFrame:
     """Bucket-layout diagnostics for the SimHash pigeonhole bands
     over a corpus (kept/skipped candidate pairs, over-cap buckets)."""
-    from mapreduceapp_spark.functions.text import tokens
-
-    d = tables(spark, sf_dir).documents
-    doc_tokens = d.select(
-        "doc_id", F.explode(tokens("text")).alias("tok"), F.lit(1).alias("cnt")
-    )
-    fp = slot(spark, "simhash_fp", sf_dir, lambda: _simhash(doc_tokens))
     return _band_stats(
-        _simhash_band_entries(fp), ["band_id", "band_bits"], cap
+        _simhash_band_entries(_simhash_fp(spark, sf_dir)),
+        ["band_id", "band_bits"],
+        cap,
     )
 
 
@@ -1745,12 +1644,7 @@ def q_dup_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution — LSH-vs-exact equality is inherited from the
     verified pair detection.
     """
-    pairs = slot(
-        spark,
-        "minhash_pairs",
-        sf_dir,
-        lambda: q_minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"),
-    )
+    pairs = minhash_pairs(spark, sf_dir)
     both = pairs.select(F.col("doc_a").alias("doc_id")).unionAll(
         pairs.select(F.col("doc_b").alias("doc_id"))
     )
@@ -1790,12 +1684,7 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalized with least/greatest so (a,b) and (b,a) land in one
     bucket on any engine.
     """
-    pairs = slot(
-        spark,
-        "minhash_pairs",
-        sf_dir,
-        lambda: q_minhash_neardup(spark, sf_dir).select("doc_a", "doc_b"),
-    )
+    pairs = minhash_pairs(spark, sf_dir)
     d = tables(spark, sf_dir).documents
     sa = d.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
     sb = d.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))

@@ -57,17 +57,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceapp_spark.operators.dedup import (
-    INCR_BATCH_MOD,
-    INCR_BATCH_RESIDUE,
+    CROSS_PAIR,
     INCREMENTAL_DEDUP_ORACLE,
-    JACCARD_THRESHOLD,
     LSH_BANDS,
     LSH_BUCKET_CAP,
-    MINHASH_PERMS,
     _capped_band_entries,
-    _doc_shingles_with_minhash,
-    _int_round4,
-    band_key_array,
+    _jaccard_verify,
+    _minhash_band_entries,
+    _side,
+    _sig_prefilter,
+    batch_split,
+    minhash_signatures,
 )
 from mapreduceapp_spark.operators.index_layout import (
     SIDECAR_MIN_FILES_PER_BUCKET,
@@ -85,19 +85,13 @@ from mapreduceapp_spark.operators.index_layout import (
 )
 from mapreduceapp_spark.plans.hints import broadcast_if_small
 from mapreduceapp_spark.plans.registry import register
-from mapreduceapp_spark.plans.staging import slot, stage
+from mapreduceapp_spark.plans.staging import stage
 
 # Rows per sigs/ data file: the point-skipping grid below the bucket
 # directory. ~16k rows × ~2-4 KB/row (sig + shingle arrays) ≈ 32-64 MB
 # files, the healthy scan unit; tests and the scaling script pass
 # smaller values to make the skipping observable at fixture scale.
 SIG_ROWS_PER_FILE = 16_384
-
-
-def _band_entries(sh: DataFrame) -> DataFrame:
-    """(doc_id, band_key) — one thin row per (doc, band), without the
-    sig/sh payload (signatures live once per doc in ``sigs/``)."""
-    return sh.select("doc_id", F.explode(band_key_array()).alias("band_key"))
 
 
 def _write_tables(
@@ -108,8 +102,9 @@ def _write_tables(
     mode: str,
     sig_rows_per_file: int,
 ) -> None:
-    """Write band entries under ``bands/`` and signature rows under
-    ``sigs/`` in the index's bucket layout."""
+    """Write thin (doc_id, band_key) entries under ``bands/`` and
+    signature rows under ``sigs/`` (once per doc) in the index's
+    bucket layout."""
     write_bucketed(
         entries, os.path.join(path, "bands"), "band_key", "bucket",
         n_buckets, ("band_key",), mode,
@@ -144,10 +139,12 @@ def write_band_index(
     n_buckets = bucket_count(
         n_docs * LSH_BANDS, spark.sparkContext.defaultParallelism
     )
-    sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
+    sh = minhash_signatures(spark, sf_dir)
     if corpus_only:
-        sh = sh.filter((F.col("doc_id") % INCR_BATCH_MOD) < INCR_BATCH_RESIDUE)
-    entries = _capped_band_entries(_band_entries(sh), ["band_key"], LSH_BUCKET_CAP)
+        sh = batch_split(sh, new=False)
+    entries = _capped_band_entries(
+        _minhash_band_entries(sh), ["band_key"], LSH_BUCKET_CAP
+    )
     _write_tables(path, entries, sh, n_buckets, "overwrite", sig_rows_per_file)
     n_sig_files = _write_sig_ranges(spark, path)
     write_meta(
@@ -225,7 +222,7 @@ def append_band_index(
     # any raise below leaves the marker in place for the next heal
     before = list_files(spark, index_path, "sigs")
     _write_tables(
-        index_path, _band_entries(new_sh), new_sh, meta["n_buckets"],
+        index_path, _minhash_band_entries(new_sh), new_sh, meta["n_buckets"],
         "append", sig_rows_per_file,
     )
     new_files = list_files(spark, index_path, "sigs") - before
@@ -339,10 +336,10 @@ def probe_band_index(
 ) -> DataFrame:
     """Probe signature rows (doc_id, sig, sh) against a persisted band
     index; emit exact-verified (corpus_doc, new_doc, inter, uni, jac)
-    pairs — the same chain (band join → signature-agreement prefilter
-    → exact Jaccard verify → post-verify dedup) as the batch and
-    streaming twins, with the corpus side read through pruning instead
-    of re-derived.
+    pairs — dedup.py's shared chain (band join → signature-agreement
+    prefilter → distinct → exact Jaccard verify) as the batch and
+    streaming twins compose it, with the corpus side read through
+    pruning instead of re-derived.
 
     The band join is key-only; the arrays join in afterwards by doc
     key. Both index scans are pruned with plan-time literals: the band
@@ -351,7 +348,7 @@ def probe_band_index(
     build-time bucket cap."""
     heal_band_index(spark, index_path)  # steady-state cost: one stat
     meta = read_meta(index_path)
-    probe_bands = _band_entries(probe_sh).select(
+    probe_bands = _minhash_band_entries(probe_sh).select(
         F.col("doc_id").alias("new_doc"),
         "band_key",
         bucket_of("band_key", meta["n_buckets"]).alias("bucket"),
@@ -394,71 +391,27 @@ def probe_band_index(
     # Same row set either side; pinned by
     # test_probe_prefilter_regimes_row_equal.
     thin = n_cand >= THIN_PREFILTER_MIN_CAND
+    payload = () if thin else ("sh",)
+    sig_c = _side(sigs, CROSS_PAIR, True, "sig", *payload)
+    sig_n = _side(probe_sh, CROSS_PAIR, False, "sig", *payload)
     if thin:
-        sig_c = sigs.selectExpr("doc_id AS corpus_doc", "sig AS sig_c")
-        sig_n = broadcast_if_small(
-            probe_sh.selectExpr("doc_id AS new_doc", "sig AS sig_n"),
-            n_batch_est,
-        )
-    else:
-        sig_c = sigs.selectExpr(
-            "doc_id AS corpus_doc", "sig AS sig_c", "sh AS sh_c"
-        )
-        sig_n = probe_sh.selectExpr(
-            "doc_id AS new_doc", "sig AS sig_n", "sh AS sh_n"
-        )
+        sig_n = broadcast_if_small(sig_n, n_batch_est)
     surv = (
-        sig_c.join(cand, "corpus_doc")
-        .join(sig_n, "new_doc")
-        .withColumn(
-            "sig_agree",
-            F.expr(
-                "aggregate(zip_with(sig_c, sig_n,"
-                " (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
-                " 0, (acc, x) -> acc + x)"
-            ),
+        _sig_prefilter(
+            sig_c.join(cand, "corpus_doc").join(sig_n, "new_doc"), CROSS_PAIR
         )
-        .filter(F.col("sig_agree") >= MINHASH_PERMS // 2)
         # distinct AFTER the prefilter (multi-band collisions arrive
         # once per band) and BEFORE the exact verify, so the
         # |shingles|-wide intersect runs once per surviving pair.
-        .select(
-            "corpus_doc", "new_doc", *([] if thin else ["sh_c", "sh_n"])
-        )
+        .select("corpus_doc", "new_doc", *([] if thin else ["sh_c", "sh_n"]))
         .dropDuplicates(["corpus_doc", "new_doc"])
     )
     if thin:
-        sh_c = sigs.selectExpr("doc_id AS corpus_doc", "sh AS sh_c")
-        sh_n = broadcast_if_small(
-            probe_sh.selectExpr("doc_id AS new_doc", "sh AS sh_n"),
-            n_batch_est,
+        sh_n = _side(probe_sh, CROSS_PAIR, False, "sh")
+        surv = surv.join(_side(sigs, CROSS_PAIR, True, "sh"), "corpus_doc").join(
+            broadcast_if_small(sh_n, n_batch_est), "new_doc"
         )
-        est = surv.join(sh_c, "corpus_doc").join(sh_n, "new_doc")
-    else:
-        est = surv
-    return (
-        est.selectExpr(
-            "corpus_doc",
-            "new_doc",
-            "size(array_intersect(sh_c, sh_n)) AS inter",
-            "sh_c",
-            "sh_n",
-        )
-        .selectExpr(
-            "corpus_doc",
-            "new_doc",
-            "inter",
-            "(size(sh_c) + size(sh_n) - inter) AS uni",
-        )
-        .filter(f"CAST(inter AS DOUBLE) / uni >= {JACCARD_THRESHOLD}")
-        .select(
-            "corpus_doc",
-            "new_doc",
-            "inter",
-            "uni",
-            _int_round4("inter", "uni").alias("jac"),
-        )
-    )
+    return _jaccard_verify(surv, CROSS_PAIR)
 
 
 @register(
@@ -475,16 +428,6 @@ def q_dedup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse) the corpus split's band index, then probe the batch split
     against it. Equals ``q_incremental_dedup`` row-for-row — pinned
     by the shared oracle AND tests/test_dedup_index.py."""
-    # slot(), not bare stage(): the (name, sf_dir) memo skips
-    # constructing the shingle+signature producer plan on repeat calls
-    sh = slot(
-        spark,
-        "minhash_signatures",
-        sf_dir,
-        lambda: _doc_shingles_with_minhash(spark, sf_dir),
-    )
-    batch = sh.filter(
-        f"doc_id % {INCR_BATCH_MOD} >= {INCR_BATCH_RESIDUE}"
-    )
+    batch = batch_split(minhash_signatures(spark, sf_dir), new=True)
     path = index_slot(spark, "band_index", sf_dir, "documents", write_band_index)
     return probe_band_index(spark, path, batch)

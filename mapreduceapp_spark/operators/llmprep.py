@@ -306,8 +306,8 @@ PASSAGE_MIN_SHARED = 5
 # df can reach the millions (10¹² pairs from one window). Over-cap
 # windows are dropped from pairing in BOTH engines, so the oracle
 # hash check stays exact. Enforced as a window count over the same
-# gh partitioning the self-join shuffles on anyway (the SimHash
-# bucket-cap discipline, dedup.py LSH_CAP_TWO_PASS notes — no
+# gh partitioning the self-join shuffles on anyway (the LSH
+# bucket-cap discipline, dedup.py ``_capped_band_entries`` — no
 # standalone aggregate pass). Never binds at test scales: measured
 # max df is 3 at sf0.01 and 4 at sf0.1 (256× headroom, asserted in
 # tests/test_llmprep.py).

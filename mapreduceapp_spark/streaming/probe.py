@@ -6,7 +6,8 @@ This is the streaming twin of ``q_incremental_dedup``
 continuously instead of nightly: documents arrive on a stream, each
 micro-batch computes MinHash signatures with the SAME hash family,
 shingle drop-set, and band keys the corpus index was built with
-(``minhash_signatures_for`` / ``band_key_array`` are shared code, not
+(``minhash_signatures_for`` and dedup.py's MinHash chain — band
+expansion, bucket cap, prefilter, verify — are shared code, not
 re-implementations), probes the index's band buckets, and emits
 exact-verified (corpus_doc, new_doc) near-dup pairs. tests/
 test_streaming.py asserts the drained stream equals the batch twin's
@@ -39,18 +40,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduceapp_spark.operators.dedup import (
-    JACCARD_THRESHOLD,
+    CROSS_PAIR,
     LSH_BUCKET_CAP,
-    MINHASH_PERMS,
     _capped_band_entries,
-    _doc_shingles_with_minhash,
-    _int_round4,
+    _jaccard_verify,
     _minhash_band_entries,
     _shingle_dropset_broadcast,
-    band_key_array,
+    _side,
+    _sig_prefilter,
+    batch_split,
+    minhash_signatures,
     minhash_signatures_for,
 )
-from mapreduceapp_spark.plans.staging import stage
 from mapreduceapp_spark.sources import load_table
 
 
@@ -83,14 +84,7 @@ def incremental_dedup_stream(
     stream; the batch plan instead joins back to the staged table,
     which a stream cannot).
     """
-    from mapreduceapp_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        INCR_BATCH_RESIDUE,
-    )
-
-    corpus_sh = stage(
-        _doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures"
-    ).filter((F.col("doc_id") % INCR_BATCH_MOD) < INCR_BATCH_RESIDUE)
+    corpus_sh = batch_split(minhash_signatures(spark, sf_dir), new=False)
     # Deliberately NOT staged to its own slot: A/B-measured in one
     # process (4-batch drain at sf0.1, alternating builds), staging
     # the capped band index made the drain ~2x SLOWER (12.5-14.5 s
@@ -104,53 +98,22 @@ def incremental_dedup_stream(
     corpus_bands = _capped_band_entries(
         _minhash_band_entries(corpus_sh), ["band_key"], LSH_BUCKET_CAP
     ).withColumnRenamed("doc_id", "corpus_doc")
-    sig_c = corpus_sh.select(
-        F.col("doc_id").alias("corpus_doc"),
-        F.col("sig").alias("sig_c"),
-        F.col("sh").alias("sh_c"),
-    )
-
-    drop_bc = _shingle_dropset_broadcast(spark, sf_dir)
-    probe_sh = minhash_signatures_for(docs_stream, drop_bc)
-    probe_bands = probe_sh.select(
+    probe_bands = _minhash_band_entries(
+        minhash_signatures_for(docs_stream, _shingle_dropset_broadcast(spark, sf_dir)),
         F.col("doc_id").alias("new_doc"),
         F.col("sh").alias("sh_n"),
         F.col("sig").alias("sig_n"),
-        F.explode(band_key_array()).alias("band_key"),
     )
-    cand = probe_bands.join(corpus_bands, "band_key")
-    verified = (
-        cand.join(sig_c, "corpus_doc")
-        .withColumn(
-            "sig_agree",
-            F.aggregate(
-                F.zip_with(
-                    "sig_c",
-                    "sig_n",
-                    lambda x, y: F.when(x == y, 1).otherwise(0),
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        .filter(F.col("sig_agree") >= MINHASH_PERMS // 2)
-        .withColumn("inter", F.size(F.array_intersect("sh_c", "sh_n")))
-        .withColumn("uni", F.size("sh_c") + F.size("sh_n") - F.col("inter"))
-        .withColumn("jacc", F.col("inter").cast("double") / F.col("uni"))
-        .filter(F.col("jacc") >= JACCARD_THRESHOLD)
-        .select(
-            "corpus_doc",
-            "new_doc",
-            "inter",
-            "uni",
-            _int_round4("inter", "uni").alias("jac"),
-        )
+    cand = probe_bands.join(corpus_bands, "band_key").join(
+        _side(corpus_sh, CROSS_PAIR, True, "sig", "sh"), "corpus_doc"
     )
     # multi-band collisions emit a pair once per colliding band;
     # dedup AFTER the exact verify (survivor set = true pairs only),
     # so dropDuplicates state is one row per emitted pair — bounded
     # by duplicate volume, not traffic.
-    return verified.dropDuplicates(["corpus_doc", "new_doc"])
+    return _jaccard_verify(_sig_prefilter(cand, CROSS_PAIR), CROSS_PAIR).dropDuplicates(
+        ["corpus_doc", "new_doc"]
+    )
 
 
 def indexed_ingest_dedup(

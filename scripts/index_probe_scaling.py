@@ -78,11 +78,10 @@ def main() -> None:
     from mapreduceapp_spark.operators import dedup_index as DI
     from mapreduceapp_spark.operators import index_layout as L
     from mapreduceapp_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        INCR_BATCH_RESIDUE,
-        _doc_shingles_with_minhash,
+        _minhash_band_entries,
+        batch_split,
+        minhash_signatures,
     )
-    from mapreduceapp_spark.plans.staging import stage
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
@@ -160,10 +159,8 @@ def main() -> None:
     big_bands_bytes = _tree_bytes(os.path.join(big_idx, "bands"))
     big_sigs_bytes = _tree_bytes(os.path.join(big_idx, "sigs"))
 
-    sh = stage(_doc_shingles_with_minhash(spark, sf_dir), "minhash_signatures")
-    batch_split = sh.filter(
-        (F.col("doc_id") % INCR_BATCH_MOD) >= INCR_BATCH_RESIDUE
-    )
+    sh = minhash_signatures(spark, sf_dir)
+    new_batch = batch_split(sh, new=True)
 
     def bucket_bytes(sub: str, prefix: str, ids) -> int:
         total = 0
@@ -180,7 +177,7 @@ def main() -> None:
         matched sig files (read off the probe plan's own input-file
         list). The behavioral tests prove unmatched files are never
         read, so matched-bytes IS the probe's sigs IO."""
-        bands = DI._band_entries(probe_sh).withColumn(
+        bands = _minhash_band_entries(probe_sh).withColumn(
             "bucket", L.bucket_of("band_key", n_buckets)
         )
         # the probe's own pruning literals (patched by the no-prune
@@ -256,7 +253,7 @@ def main() -> None:
     staged_batches = {}
     for n_docs in (1, 4, 16):
         bpath = os.path.join(tmp, f"batch_{n_docs}")
-        batch_split.orderBy("doc_id").limit(n_docs).write.mode(
+        new_batch.orderBy("doc_id").limit(n_docs).write.mode(
             "overwrite"
         ).parquet(bpath)
         staged_batches[n_docs] = spark.read.parquet(bpath)

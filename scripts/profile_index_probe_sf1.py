@@ -34,12 +34,10 @@ SF1_DIR = "/tmp/sf1_rehearsal_data"
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
-    from pyspark.sql import functions as F
-
     from mapreduceapp_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        INCR_BATCH_RESIDUE,
-        _doc_shingles_with_minhash,
+        _minhash_band_entries,
+        batch_split,
+        minhash_signatures,
     )
     from mapreduceapp_spark.operators.dedup_index import (
         probe_band_index,
@@ -50,7 +48,6 @@ def main() -> None:
         index_slot,
         read_meta,
     )
-    from mapreduceapp_spark.plans.staging import stage
     from mapreduceapp_spark.session import get_spark
 
     spark = get_spark(
@@ -62,7 +59,7 @@ def main() -> None:
     out: dict = {"sf": "10x sf0.1 synthetic", "cpus": cpus}
 
     t0 = time.perf_counter()
-    sh = stage(_doc_shingles_with_minhash(spark, SF1_DIR), "minhash_signatures")
+    sh = minhash_signatures(spark, SF1_DIR)
     sh.write.format("noop").mode("overwrite").save()
     out["stage_minhash_signatures_sec"] = round(time.perf_counter() - t0, 2)
 
@@ -73,7 +70,7 @@ def main() -> None:
     out["index_build_sec"] = round(time.perf_counter() - t0, 2)
     out["index_prebuilt"] = out["index_build_sec"] < 1.0
 
-    batch = sh.filter((F.col("doc_id") % INCR_BATCH_MOD) >= INCR_BATCH_RESIDUE)
+    batch = batch_split(sh, new=True)
     # steady-state probe: signatures staged, index built. Two reps —
     # the first may still pay plan/JIT warm-in; both recorded.
     probe_walls = []
@@ -86,10 +83,8 @@ def main() -> None:
     out["probe_walls_sec"] = probe_walls
 
     # proportionality evidence: candidate volume and emitted pairs
-    from mapreduceapp_spark.operators.dedup_index import _band_entries
-
     meta = read_meta(idx_path)
-    probe_bands = _band_entries(batch).withColumn(
+    probe_bands = _minhash_band_entries(batch).withColumn(
         "bucket", bucket_of("band_key", meta["n_buckets"])
     )
     idx_bands = (

@@ -146,12 +146,9 @@ def dedup_index_regimes(spark) -> dict:
     BOTH plans are live at sf1 data volumes and agree."""
     import time as _time
 
-    from pyspark.sql import functions as F
-
     from mapreduceapp_spark.operators.dedup import (
-        INCR_BATCH_MOD,
-        INCR_BATCH_RESIDUE,
-        _doc_shingles_with_minhash,
+        batch_split,
+        minhash_signatures,
     )
     from mapreduceapp_spark.operators.dedup_index import (
         SIG_ROWS_PER_FILE,
@@ -162,10 +159,9 @@ def dedup_index_regimes(spark) -> dict:
         SIDECAR_MIN_FILES_PER_BUCKET,
         read_meta,
     )
-    from mapreduceapp_spark.plans.staging import stage, staging_root
+    from mapreduceapp_spark.plans.staging import staging_root
 
-    sh = stage(_doc_shingles_with_minhash(spark, OUT_DIR), "minhash_signatures")
-    batch = sh.filter((F.col("doc_id") % INCR_BATCH_MOD) >= INCR_BATCH_RESIDUE)
+    batch = batch_split(minhash_signatures(spark, OUT_DIR), new=True)
     out: dict[str, dict] = {}
     rows_by_regime: dict[str, list] = {}
     for label, rows_per_file in (

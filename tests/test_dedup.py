@@ -477,29 +477,61 @@ def test_dup_rate_by_source_counts_all_pairs(spark, sf_dir):
     assert all(r["source_a"] <= r["source_b"] for r in per_src)
 
 
-def test_cap_two_pass_flag_is_result_identical(spark):
-    """Flipping LSH_CAP_TWO_PASS (the never-materialize count+anti-join
-    posture for degenerate-bucket corpora) must produce the identical
-    candidate set as the default window-fold — on a planted corpus
-    where the cap actually binds."""
-    import mapreduceapp_spark.operators.dedup as dd
+def test_minhash_chain_prefilter_and_verify_boundaries(spark):
+    """The shared chain's two cuts, on planted rows and for both pair
+    shapes, so the self-join, the batch-vs-corpus query, the band-index
+    probe and the streaming probe are all pinned: signature agreement
+    of exactly MINHASH_PERMS // 2 is kept and one less is dropped;
+    shingle sets with Jaccard exactly 4/5 are kept and 399/500 is
+    dropped; jac equals _int_round4(inter, uni)."""
+    from mapreduceapp_spark.operators.dedup import (
+        CROSS_PAIR,
+        MINHASH_PERMS,
+        SELF_PAIR,
+        _int_round4,
+        _jaccard_verify,
+        _sig_prefilter,
+    )
 
-    rows = [(i, ["aa"], [7] * 64) for i in range(30)] + [
-        (100 + i, ["bb"], [9] * 64) for i in range(4)
-    ]
-    sh = spark.createDataFrame(
-        rows, "doc_id bigint, sh array<string>, sig array<bigint>"
-    )
-    fp = spark.createDataFrame(
-        [(i, 0x0F0F0F0F0F0F0F0) for i in range(30)]
-        + [(100 + i, 0x123456789ABCDE0) for i in range(4)],
-        "doc_id bigint, simhash bigint",
-    )
-    base_mh = sorted(map(tuple, dd.minhash_candidates(sh, cap=8).collect()))
-    base_sh = sorted(map(tuple, dd.simhash_candidates(fp, cap=8).collect()))
-    dd.LSH_CAP_TWO_PASS = True
-    try:
-        assert sorted(map(tuple, dd.minhash_candidates(sh, cap=8).collect())) == base_mh
-        assert sorted(map(tuple, dd.simhash_candidates(fp, cap=8).collect())) == base_sh
-    finally:
-        dd.LSH_CAP_TWO_PASS = False
+    half = MINHASH_PERMS // 2
+    base = list(range(MINHASH_PERMS))
+
+    def agreeing(n):  # equals ``base`` at exactly n positions
+        return base[:n] + [-1 - i for i in range(MINHASH_PERMS - n)]
+
+    def shingles(n, tag=""):
+        return [f"{tag}{i:05d}" for i in range(n)]
+
+    for pair in (SELF_PAIR, CROSS_PAIR):
+        ka, kb, a, b = pair
+        sigs = spark.createDataFrame(
+            [(1, 2, base, agreeing(half)), (3, 4, base, agreeing(half - 1))],
+            f"{ka} bigint, {kb} bigint, sig_{a} array<bigint>, sig_{b} array<bigint>",
+        )
+        kept = {
+            (r[ka], r[kb], r["sig_agree"])
+            for r in _sig_prefilter(sigs, pair).collect()
+        }
+        assert kept == {(1, 2, half)}, pair
+
+        sets = spark.createDataFrame(
+            [
+                (1, 2, shingles(4), shingles(5)),  # 4/5: kept
+                (3, 4, shingles(399), shingles(399) + shingles(101, "x")),
+                (5, 6, shingles(10), shingles(9) + shingles(2, "y")),  # 9/12
+                (7, 8, shingles(9), shingles(9) + shingles(2, "z")),  # 9/11
+            ],
+            f"{ka} bigint, {kb} bigint, sh_{a} array<string>, sh_{b} array<string>",
+        )
+        got = {tuple(r) for r in _jaccard_verify(sets, pair).collect()}
+        want = {
+            (k1, k2, i, u, (2 * i * 10_000 + u) // (2 * u) / 10_000.0)
+            for k1, k2, i, u in ((1, 2, 4, 5), (7, 8, 9, 11))
+        }
+        assert got == want, pair
+        rounded = spark.createDataFrame(
+            [(i, u) for _, _, i, u, _ in want], "inter bigint, uni bigint"
+        ).select("inter", "uni", _int_round4("inter", "uni").alias("jac"))
+        assert {tuple(r) for r in rounded.collect()} == {
+            (i, u, j) for _, _, i, u, j in got
+        }

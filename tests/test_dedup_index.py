@@ -9,9 +9,8 @@ import pyspark.sql.functions as F
 import pytest
 
 import mapreduceapp_spark.operators.dedup_index as DI
-from mapreduceapp_spark.operators.dedup import LSH_BANDS
+from mapreduceapp_spark.operators.dedup import LSH_BANDS, _minhash_band_entries
 from mapreduceapp_spark.operators.dedup_index import (
-    _band_entries,
     probe_band_index,
     write_band_index,
 )
@@ -31,7 +30,9 @@ def _pairs(rows):
 def _bucketed_bands(sh, n_buckets):
     """A batch's band entries with their index bucket, and the sorted
     distinct buckets they touch."""
-    bands = _band_entries(sh).withColumn("bucket", bucket_of("band_key", n_buckets))
+    bands = _minhash_band_entries(sh).withColumn(
+        "bucket", bucket_of("band_key", n_buckets)
+    )
     touched = sorted(
         r["bucket"] for r in bands.select("bucket").distinct().collect()
     )
@@ -602,7 +603,7 @@ def test_band_append_equals_full_rebuild(spark, sf_dir, tmp_path, monkeypatch):
     """With every band under the cap (the fixture's regime), probing
     an appended index ≡ probing a full rebuild whose corpus includes
     the appended docs — the rebuild-equivalence contract."""
-    import mapreduceapp_spark.operators.dedup_index as dmod
+    import mapreduceapp_spark.operators.dedup as dedup
     from mapreduceapp_spark.operators.dedup_index import append_band_index
 
     _, sh8, sh9 = _split_sigs(spark, sf_dir)
@@ -610,10 +611,10 @@ def test_band_append_equals_full_rebuild(spark, sf_dir, tmp_path, monkeypatch):
     write_band_index(spark, sf_dir, appended)
     append_band_index(spark, appended, sh8)
     rebuilt = str(tmp_path / "rebuilt")
-    # corpus_only's filter is %10 < INCR_BATCH_RESIDUE: widening the
-    # residue to 9 makes the rebuild's corpus = standard corpus ∪ the
-    # appended %10==8 docs
-    monkeypatch.setattr(dmod, "INCR_BATCH_RESIDUE", 9)
+    # corpus_only's filter is dedup.batch_split's %10 < INCR_BATCH_RESIDUE:
+    # widening the residue to 9 makes the rebuild's corpus = standard
+    # corpus ∪ the appended %10==8 docs
+    monkeypatch.setattr(dedup, "INCR_BATCH_RESIDUE", 9)
     write_band_index(spark, sf_dir, rebuilt)
     monkeypatch.undo()
     r_app = _pairs(probe_band_index(spark, appended, sh9).collect())

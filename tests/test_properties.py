@@ -219,14 +219,14 @@ def test_word_grams_strategies_agree(spark, words, n):
 )
 @SETTINGS
 def test_bucket_cap_law(spark, entries, cap):
-    """_cap_band_buckets ≡ 'drop every row of any key whose group is
-    larger than cap' — the spec, set-checked against a Python fold."""
-    from mapreduceapp_spark.operators.dedup import _cap_band_buckets
+    """_capped_band_entries ≡ 'drop every row of any key whose group
+    is larger than cap' — the spec, set-checked against a Python fold."""
+    from mapreduceapp_spark.operators.dedup import _capped_band_entries
 
     df = spark.createDataFrame(entries, "doc_id bigint, band_key bigint")
     got = {
         (r["doc_id"], r["band_key"])
-        for r in _cap_band_buckets(df, ["band_key"], cap).collect()
+        for r in _capped_band_entries(df, ["band_key"], cap).collect()
     }
     sizes = Counter(k for _, k in entries)
     want = {(d, k) for d, k in entries if sizes[k] <= cap}

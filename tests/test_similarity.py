@@ -842,6 +842,7 @@ def test_knn_l2_gemm_equals_sql(spark, sf_dir):
     groups also exercises fragments smaller than k (sentinel rows
     must be dropped, not emitted)."""
     from mapreduceapp_spark.operators.similarity import (
+        ANN_GEMM_MIN_ROWS,
         L2,
         _aniso,
         _quantized,
@@ -854,7 +855,10 @@ def test_knn_l2_gemm_equals_sql(spark, sf_dir):
             map(tuple, knn_topk(e, L2, "gate_sql", n_rows=None).collect())
         )
         gemm_rows = sorted(
-            map(tuple, knn_topk(e, L2, "gate_gemm", n_rows=10**9).collect())
+            map(
+                tuple,
+                knn_topk(e, L2, "gate_gemm", n_rows=ANN_GEMM_MIN_ROWS).collect(),
+            )
         )
         assert sql_rows == gemm_rows and sql_rows, mk.__name__
 
@@ -865,6 +869,7 @@ def test_pq_codes_gemm_equals_sql(spark, sf_dir):
     crossJoin + min(struct(d, j)) form — first-min argmin over
     ascending-j columns reproduces the low-j tie rule exactly."""
     from mapreduceapp_spark.operators.similarity import (
+        ANN_GEMM_MIN_ROWS,
         _pq_centroid_slices,
         _pq_codes,
         _pq_k,
@@ -878,7 +883,7 @@ def test_pq_codes_gemm_equals_sql(spark, sf_dir):
     cent_m = _pq_centroid_slices(e, k, max(1, n // k))
     sql_rows = sorted(map(tuple, _pq_codes(e, cent_m, n_rows=None).collect()))
     gemm_rows = sorted(
-        map(tuple, _pq_codes(e, cent_m, n_rows=10**9).collect())
+        map(tuple, _pq_codes(e, cent_m, n_rows=ANN_GEMM_MIN_ROWS).collect())
     )
     assert sql_rows == gemm_rows and sql_rows
 
@@ -894,7 +899,10 @@ def test_knn_l2_gemm_budget_guard(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(sim, "KNN_MAX_BROADCAST_QUERIES", 1)
     over = sim.knn_topk(
-        sim._quantized(spark, sf_dir), sim.L2, "gate_guard", n_rows=10**9
+        sim._quantized(spark, sf_dir),
+        sim.L2,
+        "gate_guard",
+        n_rows=sim.ANN_GEMM_MIN_ROWS,
     )  # builds fine: guard is lazy
     with pytest.raises(Exception, match="broadcast budget"):
         over.count()
@@ -907,6 +915,7 @@ def test_knn_cosine_gemm_equals_sql(spark, sf_dir):
     defer the 6-decimal round to the same final JVM projection — so
     even the emitted float is bit-identical, not just the ranking."""
     from mapreduceapp_spark.operators.similarity import (
+        ANN_GEMM_MIN_ROWS,
         COSINE,
         _quantized,
         knn_topk,
@@ -919,7 +928,7 @@ def test_knn_cosine_gemm_equals_sql(spark, sf_dir):
     gemm_rows = sorted(
         map(
             tuple,
-            knn_topk(e, COSINE, "cgate_gemm", n_rows=10**9).collect(),
+            knn_topk(e, COSINE, "cgate_gemm", n_rows=ANN_GEMM_MIN_ROWS).collect(),
         )
     )
     assert sql_rows == gemm_rows and sql_rows
