@@ -70,6 +70,7 @@ from mapreduceapp_spark.operators.index_layout import (
     write_bucketed,
     write_file_ranges,
     write_meta,
+    written_rows,
 )
 from mapreduceapp_spark.operators.similarity import (
     _ANISO_OPQ,
@@ -370,7 +371,7 @@ def write_ann_index(
         .write.mode("overwrite")
         .parquet(os.path.join(path, "centroids"))
     )
-    n_cells = spark.read.parquet(os.path.join(path, "centroids")).count()
+    n_cells = written_rows(spark, os.path.join(path, "centroids"))
     corpus.book.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "codebook")
     )

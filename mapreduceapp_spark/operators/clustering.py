@@ -34,7 +34,14 @@ from mapreduceapp_spark.functions.vectors import (
     quantize_sql,
     sq_norm_sql,
 )
-from mapreduceapp_spark.operators.similarity import L2, RATIONAL_L2, _assign
+from mapreduceapp_spark.operators.similarity import (
+    L2,
+    RATIONAL_L2,
+    _assign,
+    _threshold_pairs,
+    _tile_keys,
+    _tile_owner,
+)
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.plans.staging import slot, stage
 from mapreduceapp_spark.sources import tables
@@ -255,103 +262,37 @@ SEM_CLUSTER_CAP = 1024
 
 
 def _replicate_cells(assigned: DataFrame, cap: int) -> DataFrame:
-    """Fragment-replicate expansion for the within-cluster triangle
-    join (the skew mitigation q_semantic_prune's round-2 docstring
-    promised — same salting discipline as AQE's skew-join, but for a
-    self-join's pair space).
-
-    Each member of a cluster of size n_c gets m = ⌈n_c / cap⌉ hash
-    cells; a member in cell i is replicated to the m unordered cell
-    pairs {(min(i,t), max(i,t)) : t < m}. Every unordered member
-    pair with cells (i, j) then co-locates on EXACTLY one join key —
-    (cluster, min(i,j), max(i,j)) for i≠j, (cluster, i, i) for i=j
-    once the consumer filters off-diagonal same-cell rows — so pair
-    work per key is ≤ (2·n_c/m)² ≈ (2·cap)², spread over m(m+1)/2
-    keys. Normal-size clusters (n_c ≤ cap) degenerate to m=1 with a
-    constant (0,0) key: the plan is unchanged where there is no skew.
-    """
+    """(cluster_id, vec_id, qv, sq, cell, k1, k2): the within-cluster
+    tiling (:func:`~mapreduceapp_spark.operators.similarity._tile_keys`)
+    of the (vec_id, x, sq, cluster_id) assignment, the skew mitigation
+    for a self-join's pair space (AQE's skew-join salting, applied to
+    pairs). A cluster of n_c members hashes into m = ⌈n_c / cap⌉ cells,
+    so a (cluster, k1, k2) key holds ≤ 2·n_c/m ≈ 2·cap rows and
+    ~(2·cap)² pair work over m(m+1)/2 keys. A cluster of at most cap
+    members is one (0, 0) key: the plan is unchanged where there is no
+    skew."""
     sizes = assigned.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_c"))
-    member = (
-        assigned.join(F.broadcast(sizes), "cluster_id")
-        .withColumn("m", F.ceil(F.col("n_c") / cap).cast("int"))
-        .withColumn(
-            "cell",
-            F.pmod(F.xxhash64(F.lit("semcell:"), F.col("vec_id")), F.col("m")).cast(
-                "int"
-            ),
-        )
+    member = assigned.join(F.broadcast(sizes), "cluster_id").selectExpr(
+        "cluster_id", "vec_id", "x AS qv", "sq", f"ceil(n_c / {cap}) AS m"
     )
-    pair_keys = F.transform(
-        F.sequence(F.lit(0), F.col("m") - 1),
-        lambda t: F.struct(
-            F.least(F.col("cell"), t).alias("k1"),
-            F.greatest(F.col("cell"), t).alias("k2"),
-        ),
-    )
-    return member.select(
-        "cluster_id",
-        "vec_id",
-        "cell",
-        "x",
-        "sq",
-        F.explode(pair_keys).alias("k"),
-    ).select("cluster_id", "vec_id", "cell", "x", "sq", "k.k1", "k.k2")
+    return _tile_keys(member, "pmod(xxhash64('semcell:', vec_id), m)", "m").drop("m")
 
 
 def _within_cluster_pruned(assigned: DataFrame, cap: int = SEM_CLUSTER_CAP) -> DataFrame:
     """Distinct vec_ids with a lower-id same-cluster member at cosine
-    ≥ SEM_COS_THRESHOLD, via the sub-bucketed triangle GEMM.
-
-    The pair space is identical to the former self-join on
-    (cluster, k1, k2) keys, but scoring runs as one Arrow GEMM per
-    key instead of a 64-term expression fold per joined row — the r5
-    sf1 rehearsal measured the join form as roughly half of
-    q_semantic_prune's 35× growth at 10× data. Per-key work is still
-    bounded at ~(2·cap)² by :func:`_replicate_cells`, and the cosine
-    is the same exact-int64-dot / √(sq·sq) double the SQL oracle
-    computes, so results are bit-identical.
-    """
-    import numpy as np
-    import pandas as pd
-
-    rep = _replicate_cells(assigned, cap)
-    thr = SEM_COS_THRESHOLD
-
-    def prune_cell(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        _cl, k1, k2 = key
-        empty = pd.DataFrame({"vec_id": []}).astype({"vec_id": "int64"})
-        if len(pdf) < 2:
-            return empty
-        X = np.stack(pdf["x"].values).astype(np.int64)
-        sq = pdf["sq"].to_numpy(np.float64)
-        ids = pdf["vec_id"].to_numpy(np.int64)
-        cell = pdf["cell"].to_numpy(np.int64)
-        pos = np.arange(len(X))
-        pruned: list[np.ndarray] = []
-        for s in range(0, len(X), 256):
-            t = min(s + 256, len(X))
-            cos = (X[s:t] @ X.T).astype(np.float64) / np.sqrt(
-                sq[s:t, None] * sq[None, :]
-            )
-            # each unordered pair once (positional triangle)
-            mask = (cos >= thr) & (pos[s:t, None] < pos[None, :])
-            if k1 != k2:
-                # off-diagonal key: same-cell pairs belong to their
-                # diagonal key — scoring them here would double-count
-                mask &= cell[s:t, None] != cell[None, :]
-            ra, rb = np.nonzero(mask)
-            if len(ra):
-                # prune the HIGHER id of each close pair
-                pruned.append(np.maximum(ids[s + ra], ids[rb]))
-        if not pruned:
-            return empty
-        return pd.DataFrame(
-            {"vec_id": np.unique(np.concatenate(pruned)).astype(np.int64)}
-        )
-
+    ≥ SEM_COS_THRESHOLD: the higher id of every pair the cosine
+    threshold join (similarity ``_threshold_pairs``) finds on the
+    :func:`_replicate_cells` tiling. Its cosine is the exact-int64-dot
+    / √(sq·sq) double the SQL oracle computes, so results are
+    bit-identical."""
     return (
-        rep.groupBy("cluster_id", "k1", "k2")
-        .applyInPandas(prune_cell, "vec_id long")
+        _threshold_pairs(
+            _replicate_cells(assigned, cap),
+            ["cluster_id", "k1", "k2"],
+            SEM_COS_THRESHOLD,
+            _tile_owner,
+        )
+        .selectExpr("vec_b AS vec_id")
         .distinct()
     )
 

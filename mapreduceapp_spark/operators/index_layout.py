@@ -296,7 +296,16 @@ def write_file_ranges(
         ranges = ranges.withColumn("seg", F.lit(seg))
     out = os.path.join(root, sidecar)
     ranges.coalesce(1).write.mode("overwrite" if files is None else "append").parquet(out)
-    return len(files) if files is not None else spark.read.parquet(out).count()
+    return len(files) if files is not None else written_rows(spark, out)
+
+
+def written_rows(spark: SparkSession, path: str) -> int:
+    """Rows of the parquet directory a build just wrote at ``path``:
+    its footers (zero jobs), or a Spark count on a remote root."""
+    from mapreduceapp_spark.sources.parquet import footer_row_count
+
+    n = footer_row_count(path)
+    return spark.read.parquet(path).count() if n is None else n
 
 
 def scan_files(

@@ -28,8 +28,13 @@ Scale posture (100 TB):
   tiled so per-task memory is constant in N (compute is inherently
   N²/2 — the moderate-N ground truth); ``q_embedding_neardup_lsh``
   is its 100 TB sibling: banded sign-LSH candidate buckets, the same
-  exact GEMM only within buckets, and a SQL oracle that recomputes
+  exact verify only within buckets, and a SQL oracle that recomputes
   the identical signatures so the driver check is deterministic.
+  Both, and clustering's q_semantic_prune, are one cosine threshold
+  join: one tiling expansion (:func:`_tile_keys`), one pair kernel
+  (:func:`_cos_pairs` under :func:`_threshold_pairs`) and, for the
+  two LSH queries, one sign-LSH family (:func:`_hyperplane_signs`,
+  :func:`_sign_pack`, :func:`_oracle_sig`).
 """
 
 from __future__ import annotations
@@ -73,40 +78,33 @@ KNN_MAX_BROADCAST_QUERIES = 100_000
 # is testable at fixture scale (test_gemm_chunked_merge_matches).
 GEMM_CHUNK_ROWS = 8192
 NEARDUP_COS_THRESHOLD = 0.45  # sits in a gap of the data's cosine distribution
-# Exact-path GEMM tiling: block count is DERIVED from the table's row
-# count so one tile side never exceeds NEARDUP_TILE_ROWS rows
-# (32768 rows × 64 dims × 8 B ≈ 16 MB per side per task, constant in
-# N). Inside a task the matmul runs in GEMM_CHUNK-row slices so the
-# dense (chunk × tile) score matrix is ~16 MB too — task memory is
-# bounded no matter how large the table grows.
-NEARDUP_TILE_ROWS = 32_768
-GEMM_CHUNK = 256
-# Fragment-replicate group size ceiling: a hash group materializes as
-# one pandas DataFrame, so cap it at the same ~16 MB of 64-dim int64
-# vectors the neardup tile uses; P = max(parallelism floor,
-# ceil(N / this)) keeps per-task input memory constant in N. The
-# replicated small side (≤ 2048 codebook rows / √N centroids /
-# Q ≤ 100k queries) adds P·|small| shuffle rows — at P = N/32768 that
-# is N·|small|/32768 total, far below the N·|small| row set the frame
-# exists to avoid.
+# Rows of one Arrow GEMM's input that a task holds: a group materializes
+# as one pandas DataFrame, so it is capped at ~16 MB of 64-dim int64
+# vectors (32,768 rows × 64 × 8 B), constant in N. The fragment-
+# replicate frame hashes into P = max(parallelism floor, ceil(N / this))
+# groups; its replicated small side (≤ 2048 codebook rows / √N
+# centroids / Q ≤ 100k queries) adds P·|small| shuffle rows, far below
+# the N·|small| row set the frame exists to avoid. The exact near-dup
+# tiling sizes a cell at this many rows (:func:`_neardup_blocks`).
 FRAGMENT_GROUP_ROWS = 32_768
+# Rows per score slice of the cosine threshold join (:func:`_cos_pairs`):
+# a slice's dense score matrix is GEMM_CHUNK × group rows.
+GEMM_CHUNK = 256
 
 
 def _neardup_blocks(n_rows: int, parallelism: int = 64) -> int:
-    """Block count for the exact GEMM's (ba ≤ bb) tiling.
+    """Cell count of the exact near-dup join's (k1 ≤ k2) tiling.
 
     Two constraints, take the binding one:
-    - memory ceiling: a tile side ≤ NEARDUP_TILE_ROWS rows;
+    - memory ceiling: a cell ≤ FRAGMENT_GROUP_ROWS rows;
     - parallelism floor: ~nb²/2 tiles should cover the cluster's
       cores, or a mid-size table degenerates to one serial task
-      (measured in the r5 sf1 rehearsal: 20k vectors → nb=1 → a
-      53 s single-task GEMM that 36 tiles run in a few seconds).
+      (20k vectors at nb=1 ran one 53 s single-task GEMM that 36
+      tiles run in a few seconds).
 
-    Never exceeds n_rows blocks (a block must hold ≥ 1 row).
+    Never exceeds n_rows cells (a cell must hold ≥ 1 row).
     """
-    import math
-
-    mem_floor = -(-n_rows // NEARDUP_TILE_ROWS)
+    mem_floor = -(-n_rows // FRAGMENT_GROUP_ROWS)
     par_floor = math.ceil(math.sqrt(2 * max(1, parallelism)))
     return max(1, min(max(mem_floor, par_floor), n_rows))
 
@@ -181,14 +179,20 @@ def _l2_block(X, xn, C, cn):
     return xn[:, None] + cn[None, :] - 2 * (X @ C.T)
 
 
-def _cos_block(X, xn, C, cn):
+def _cosine(X, xn, C, cn):
+    """The exact int64 dot, then cosine_sql's two IEEE ops: the one
+    numpy cosine. A zero norm gives NaN, which no threshold keeps."""
     import numpy as np
 
-    if not (xn.all() and cn.all()):
-        raise ArithmeticError("[DIVIDE_BY_ZERO] zero-norm vector in a cosine score")
     return (X @ C.T).astype(np.float64) / np.sqrt(
         xn.astype(np.float64)[:, None] * cn.astype(np.float64)[None, :]
     )
+
+
+def _cos_block(X, xn, C, cn):
+    if not (xn.all() and cn.all()):
+        raise ArithmeticError("[DIVIDE_BY_ZERO] zero-norm vector in a cosine score")
+    return _cosine(X, xn, C, cn)
 
 
 def _rational_block(X, xn, C, cn):
@@ -649,6 +653,112 @@ def knn_topk(
     )
 
 
+# ------------------------------------------------ cosine threshold join
+#
+# The exact near-dup join, its banded-LSH sibling and SemDeDup's
+# within-cluster prune are one computation: shuffle rows to a key,
+# then score every pair of a key's group once and keep cos ≥ a
+# threshold (map → shuffle by key → reduce per key). Keys come from
+# :func:`_tile_keys` (a replicated triangle tiling) or straight from a
+# column (the LSH bucket); :func:`_threshold_pairs` runs
+# :func:`_cos_pairs` per group under the caller's ownership rule, so
+# a pair that meets on several keys is emitted by one.
+
+
+def _tile_keys(df: DataFrame, cell: str, m: str) -> DataFrame:
+    """``df`` with its ``cell`` in [0, m) (SQL over ``df``'s columns)
+    and one row per cell pair (k1, k2) = (min(cell, t), max(cell, t)),
+    t < m: N·m shuffle rows, never pairs. Every unordered row pair with
+    cells (i, j) meets on exactly one key owned by :func:`_tile_owner`
+    — (min(i,j), max(i,j)), a diagonal key (i, i) for a same-cell pair
+    — so a key scores at most its two cells, (2·N/m)² pair work."""
+    return df.selectExpr("*", f"CAST({cell} AS INT) AS cell").selectExpr(
+        "*",
+        f"inline(transform(sequence(0, CAST({m} AS INT) - 1),"
+        " t -> named_struct('k1', least(cell, t), 'k2', greatest(cell, t))))",
+    )
+
+
+def _tile_owner(key: tuple, pdf):
+    """Ownership rule of a :func:`_tile_keys` group keyed (…, k1, k2):
+    a diagonal key owns its cell's pairs, an off-diagonal key only its
+    cross-cell pairs: row i's first partner is row i+1 on the diagonal,
+    and off it, with rows sorted by cell, the next cell's first row."""
+    import numpy as np
+
+    if key[-2] == key[-1]:
+        return pdf, np.arange(1, len(pdf) + 1), None
+    pdf = pdf.sort_values("cell", kind="stable")
+    cell = pdf["cell"].to_numpy()
+    return pdf, np.searchsorted(cell, cell, "right"), None
+
+
+def _cos_pairs(V, sq, thr: float, lo, keep, chunk: int):
+    """(a, b, cos) over the row pairs a < b of one group whose cosine
+    is ≥ ``thr``, with b ≥ ``lo[a]`` (non-decreasing: the positional
+    triangle is lo = a + 1) and ``keep(a, b)`` true unless it is None.
+
+    Rows are scored ``chunk`` at a time against the columns from the
+    slice's first ``lo`` on, so a slice's score matrix is at most
+    chunk × group rows and no pair below ``lo`` is computed. Cosines
+    are :func:`_cosine`'s, the SQL cosine bit for bit; a zero-norm row
+    scores NaN and pairs with nothing, as the oracle's NULL does."""
+    import numpy as np
+
+    n = len(V)
+    cols = np.arange(n)
+    out = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    for s in range(0, n, chunk):
+        c0 = lo[s]
+        if c0 >= n:
+            break
+        t = min(s + chunk, n)
+        cos = _cosine(V[s:t], sq[s:t], V[c0:], sq[c0:])
+        ra, rb = np.nonzero((cos >= thr) & (cols[None, c0:] >= lo[s:t, None]))
+        a, b, c = s + ra, c0 + rb, cos[ra, rb]
+        if keep is not None:
+            k = keep(a, b)
+            a, b, c = a[k], b[k], c[k]
+        out.append((a, b, c))
+    return tuple(np.concatenate(x) for x in zip(*out))
+
+
+def _threshold_pairs(
+    rows: DataFrame, keys: list[str], thr: float, own: Callable
+) -> DataFrame:
+    """(vec_a, vec_b, cos): the pairs of (vec_id, qv, sq) ``rows``
+    sharing a ``keys`` group with cosine ≥ ``thr``, vec_a < vec_b and
+    cos rounded to 6 places. ``own(key, pdf)`` returns the group in
+    scoring order with :func:`_cos_pairs`' ``lo`` and ``keep``: the
+    rule that emits a pair meeting on several keys once."""
+    import numpy as np
+    import pandas as pd
+
+    chunk = GEMM_CHUNK  # read at plan time: the workers see its value
+
+    def group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf, lo, keep = own(key, pdf)
+        a, b, cos = _cos_pairs(
+            np.stack(pdf["qv"].values).astype(np.int64),
+            pdf["sq"].to_numpy(np.int64),
+            thr,
+            lo,
+            keep,
+            chunk,
+        )
+        ids = pdf["vec_id"].to_numpy(np.int64)
+        va, vb = ids[a], ids[b]
+        return pd.DataFrame(
+            {"vec_a": np.minimum(va, vb), "vec_b": np.maximum(va, vb), "cos": cos}
+        )
+
+    return (
+        rows.groupBy(*keys)
+        .applyInPandas(group, "vec_a long, vec_b long, cos double")
+        .selectExpr("vec_a", "vec_b", "round(cos, 6) AS cos")
+    )
+
+
 @register(
     "q_embedding_neardup",
     oracle=f"""
@@ -666,146 +776,79 @@ def knn_topk(
 )
 def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs cosine ≥ threshold — the embedding analog of near-dup
-    detection, executed as a *blocked GEMM over the shuffle*.
+    detection, executed as a *tiled GEMM over the shuffle*.
 
     A row-pair cross join evaluates the 64-dim dot product one
     expression tree at a time; dense linear algebra is the hot loop
     where Arrow + numpy matmul beats codegen by an order of
     magnitude (measured: 24.9s → ~1s at sf0.1). Shape:
 
-    1. derive the block count from the table's row count (a
-       metadata-cheap parquet count) and the cluster parallelism —
-       a tile side is at most ``NEARDUP_TILE_ROWS`` rows AND the
-       tile count covers the cores (see :func:`_neardup_blocks`) —
-       then assign each vector a block id (vec_id % NB);
-    2. replicate rows to their (block_a ≤ block_b) tiles via a
-       broadcast join against the tiny tile list — shuffle volume is
-       N·(NB+1) small rows, never N² pairs;
-    3. per tile, ``applyInPandas`` stacks both sides into int64
-       matrices and computes A·Bᵀ *exactly* in ``GEMM_CHUNK``-row
-       slices (integer matmul on the quantized vectors — no float
-       drift, so the result still hash-matches the SQL oracle),
-       filtering by threshold before emitting — only matches leave
-       Python. Input sides and the per-slice score matrix are each
-       O(NEARDUP_TILE_ROWS·dim), independent of N.
+    1. derive the cell count from the table's footer row count and
+       the cluster parallelism (:func:`_neardup_blocks`): a cell holds
+       at most ``FRAGMENT_GROUP_ROWS`` rows and the ~nb²/2 tiles cover
+       the cores; a vector's cell is vec_id mod nb;
+    2. replicate each row to its cell's nb tiles (:func:`_tile_keys`,
+       one scan, a pure projection): N·nb small shuffle rows, never
+       N² pairs;
+    3. per tile, :func:`_threshold_pairs` scores the exact int64
+       A·Bᵀ in ``GEMM_CHUNK``-row slices (integer matmul on the
+       quantized vectors, so the result hash-matches the SQL oracle)
+       and only matches leave Python.
 
-    Honest scale statement: per-task MEMORY is bounded by the derived
-    tiling, but exact all-pairs COMPUTE is inherently N²/2 dot
-    products — at 10⁹ vectors that is ~10¹⁸ multiply-adds no matter
-    how it is tiled, which is not a runnable query on any engine.
-    This operator is the exact ground truth for moderate N (and for
-    per-bucket verification); the 100 TB near-duplicate path is
-    :func:`q_embedding_neardup_lsh`, which generates candidates with
-    banded sign-LSH and runs this same exact GEMM only inside
-    buckets.
+    Per-task MEMORY is bounded by the derived tiling, but exact
+    all-pairs COMPUTE is inherently N²/2 dot products — at 10⁹
+    vectors ~10¹⁸ multiply-adds however it is tiled. This operator is
+    the exact ground truth for moderate N; the 100 TB near-duplicate
+    path is :func:`q_embedding_neardup_lsh`, which generates
+    candidates with banded sign-LSH and runs the same pair kernel
+    only inside buckets.
     """
-    import numpy as np
-    import pandas as pd
-
-    # footer-metadata count: the builder never re-counts. Block layout
-    # still varies with defaultParallelism — result-invariant, only the
-    # tiling changes.
-    n_rows = table_row_count(spark, sf_dir, "embeddings")
-    nb = _neardup_blocks(n_rows, spark.sparkContext.defaultParallelism)
-    e = _quantized(spark, sf_dir).withColumn(
-        "bid", (F.col("vec_id") % nb).cast("int")
+    # footer-metadata count: the builder runs no job. The tiling varies
+    # with defaultParallelism; the rows do not.
+    nb = _neardup_blocks(
+        table_row_count(spark, sf_dir, "embeddings"),
+        spark.sparkContext.defaultParallelism,
     )
-    # tile replication via explode(sequence(...)), a pure projection:
-    # a_side gets every bb in [bid, nb), b_side every ba in [0, bid]
-    a_side = e.selectExpr(
-        "CAST(bid AS INT) AS ba",
-        f"explode(sequence(bid, {nb - 1})) AS bb",
-        "0 AS side",
-        "vec_id",
-        "qv",
-        "sq",
-    )
-    b_side = e.selectExpr(
-        "explode(sequence(0, bid)) AS ba",
-        "CAST(bid AS INT) AS bb",
-        "1 AS side",
-        "vec_id",
-        "qv",
-        "sq",
-    )
-    both = a_side.unionByName(b_side)
-
-    thr = NEARDUP_COS_THRESHOLD
-
-    def gemm_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ba, bb = key
-        left = pdf[pdf["side"] == 0]
-        right = pdf[pdf["side"] == 1]
-        if not len(left) or not len(right):
-            return pd.DataFrame(
-                {"vec_a": [], "vec_b": [], "cos": []}
-            ).astype({"vec_a": "int64", "vec_b": "int64", "cos": "float64"})
-        A = np.stack(left["qv"].values).astype(np.int64)
-        B = np.stack(right["qv"].values).astype(np.int64)
-        sa = left["sq"].to_numpy(dtype=np.float64)
-        sb = right["sq"].to_numpy(dtype=np.float64)
-        ia = left["vec_id"].to_numpy()
-        ib = right["vec_id"].to_numpy()
-        outs = []
-        # slice the left side so the dense score matrix is at most
-        # GEMM_CHUNK × tile rows, independent of tile size
-        for s in range(0, len(A), GEMM_CHUNK):
-            t = min(s + GEMM_CHUNK, len(A))
-            dots = A[s:t] @ B.T  # exact int64 — quantized, no float error
-            # cast to double exactly as the SQL expression does:
-            # dot::DOUBLE / sqrt(sq_a::DOUBLE * sq_b::DOUBLE)
-            cos = dots.astype(np.float64) / np.sqrt(
-                sa[s:t, None] * sb[None, :]
-            )
-            mask = cos >= thr
-            if ba == bb:
-                # diagonal tile: both orders present — keep one triangle
-                mask &= ia[s:t, None] < ib[None, :]
-            ra, rb = np.nonzero(mask)
-            va, vb = ia[s:t][ra], ib[rb]
-            # an off-diagonal pair may have its lower id in the higher
-            # block — normalize to (min, max) for a canonical pair key
-            lo, hi = np.minimum(va, vb), np.maximum(va, vb)
-            outs.append(
-                pd.DataFrame({"vec_a": lo, "vec_b": hi, "cos": cos[ra, rb]})
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    found = both.groupBy("ba", "bb").applyInPandas(
-        gemm_tile, "vec_a long, vec_b long, cos double"
-    )
-    return found.select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
+    tiles = _tile_keys(_quantized(spark, sf_dir), f"pmod(vec_id, {nb})", str(nb))
+    return _threshold_pairs(tiles, ["k1", "k2"], NEARDUP_COS_THRESHOLD, _tile_owner)
 
 
-# ------------------------------------------------- banded-LSH near-dup
-
-# Banded sign-LSH candidate generation for the 100 TB near-dup path:
-# EMB_LSH_BANDS independent bands, each hashing a vector to an
-# r-bit signature of hyperplane signs; two vectors are candidates iff
-# they agree on SOME band's full signature. r is derived from the
-# table's row count so an expected bucket holds at most
-# EMB_LSH_TARGET_BUCKET rows (random data: N/2^r per band bucket) —
-# per-bucket GEMM work stays bounded as N grows by deepening the
-# signatures instead of widening the buckets.
+# ------------------------------------------------------------ sign-LSH
+#
+# Random-hyperplane sign LSH (P[sign agrees] = 1 − θ/π). A family is a
+# tuple of band prefixes: plane p of a band has ±1 component i from
+# sha256(f"{prefix}:{p}:{i}"), so no engine hash is involved, Spark and
+# the DuckDB oracle share the literal matrix, and plane (band, p) is
+# the same vector at every signature depth. A band's signature packs
+# its planes' signs ⟨v, h_p⟩ ≥ 0 into bit p. The banded near-dup join
+# uses EMB_LSH_BANDS bands of a depth derived from N; q_ann_lsh's
+# bucket is the one band of ANN_LSH_FAMILY.
 EMB_DIM = 64
 EMB_LSH_BANDS = 16
+EMB_LSH_FAMILY = tuple(f"emb-lsh:{b}" for b in range(EMB_LSH_BANDS))
 EMB_LSH_MIN_ROWS = 4
+# r is derived from the table's row count so an expected bucket holds
+# at most EMB_LSH_TARGET_BUCKET rows (random data: N/2^r per band
+# bucket): per-bucket GEMM work stays bounded as N grows by deepening
+# the signatures instead of widening the buckets.
 EMB_LSH_TARGET_BUCKET = 65_536
 # Depth ceiling: the oracle renders a masked term per possible bit,
 # so r is capped where the rendering stops. 24 bits covers N up to
 # 65_536 * 2^24 ≈ 1.1e12 vectors — past that, expected bucket size
 # resumes linear growth (documented cap, identical on both engines).
 EMB_LSH_R_MAX = 24
+LSH_BITS = 8  # q_ann_lsh's hyperplane count → 2^8 buckets
+ANN_LSH_FAMILY = ("ann-lsh",)
 
 
 def _emb_lsh_rows(n_rows: int) -> int:
     """Bits per band: smallest r with N/2^r ≤ target, floored at
     EMB_LSH_MIN_ROWS and capped at EMB_LSH_R_MAX.
 
-    Pure INTEGER derivation (ADVICE r7): with m = ceil(N/target),
-    the smallest r with 2^r ≥ m is (m-1).bit_length() — no log2/ceil
-    float chain, so the SQL oracle's printf('%b')-length twin is
-    bit-identical at every N by construction, not by IEEE luck."""
+    Pure integer derivation: with m = ceil(N/target), the smallest r
+    with 2^r ≥ m is (m-1).bit_length() — no log2/ceil float chain, so
+    the SQL oracle's printf('%b')-length twin is bit-identical at
+    every N by construction, not by IEEE luck."""
     m = max(1, (n_rows + EMB_LSH_TARGET_BUCKET - 1) // EMB_LSH_TARGET_BUCKET)
     return max(EMB_LSH_MIN_ROWS, min(EMB_LSH_R_MAX, (m - 1).bit_length()))
 
@@ -820,73 +863,77 @@ _EMB_LSH_ROWS_SQL = (
 )
 
 
-def _hyperplane_signs(
-    bands: int, rows: int, dim: int = EMB_DIM, prefix: str = "emb-lsh"
-):
-    """±1 hyperplane components, deterministic from sha256 so Spark
-    and the DuckDB oracle share the exact same literal matrix (no
-    engine-specific hash function is involved — both sides consume
-    these Python-computed literals). ``prefix`` salts the family so
-    the near-dup banding and the ANN signature use independent
-    hyperplanes. Returns (bands·rows, dim)."""
+def _hyperplane_signs(prefixes: tuple[str, ...], rows: int, dim: int = EMB_DIM):
+    """``rows`` ±1 hyperplanes per band prefix, band-major:
+    (len(prefixes)·rows, dim) lists."""
     import hashlib
 
-    planes = []
-    for p in range(bands * rows):
-        row = []
-        for i in range(dim):
-            h = hashlib.sha256(f"{prefix}:{p}:{i}".encode()).digest()
-            row.append(1 if h[0] % 2 == 0 else -1)
-        planes.append(row)
-    return planes
+    return [
+        [
+            1 if hashlib.sha256(f"{pre}:{p}:{i}".encode()).digest()[0] % 2 == 0 else -1
+            for i in range(dim)
+        ]
+        for pre in prefixes
+        for p in range(rows)
+    ]
 
 
-def _band_hyperplane_signs(bands: int, rows: int, dim: int = EMB_DIM):
-    """±1 hyperplane components for the banded near-dup family,
-    indexed by (band, bit-within-band) — sha256("emb-lsh:{b}:{p}:{i}")
-    — so plane (b, p) is the SAME vector at every signature depth.
-    (:func:`_hyperplane_signs` flat-indexes by b·rows+p, which made
-    the family depth-dependent: the oracle could only be rendered for
-    one pre-known depth — ADVICE r7.) Returns (bands·rows, dim) in
-    flat band-major order."""
-    import hashlib
+def _sign_pack(V, H, rows: int):
+    """(n, bands) signatures of int64 vectors ``V`` under band-major
+    planes ``H``: bit p of band b is ⟨v, H[b·rows + p]⟩ ≥ 0, on exact
+    int64 dots."""
+    import numpy as np
 
-    planes = []
-    for b in range(bands):
-        for p in range(rows):
-            row = []
-            for i in range(dim):
-                h = hashlib.sha256(f"emb-lsh:{b}:{p}:{i}".encode()).digest()
-                row.append(1 if h[0] % 2 == 0 else -1)
-            planes.append(row)
-    return planes
+    bits = (V @ H.T >= 0).astype(np.int64)
+    return bits.reshape(len(V), -1, rows) @ (1 << np.arange(rows, dtype=np.int64))
 
 
-def _emb_lsh_oracle(bands: int) -> str:
+def _signatures(prefixes: tuple[str, ...], rows: int):
+    """Arrow UDF: qv → the array of its band signatures under the
+    family, one (n × dim)·(dim × bands·rows) integer matmul per batch."""
+    import numpy as np
+    import pandas as pd
+
+    H = np.array(_hyperplane_signs(prefixes, rows), dtype=np.int64)
+
+    def sigs(qv):  # pd.Series -> pd.Series (Arrow-batched)
+        return pd.Series(list(_sign_pack(np.stack(qv.values).astype(np.int64), H, rows)))
+
+    return F.pandas_udf(sigs, "array<long>")
+
+
+def _oracle_sig(planes, depth_guard: bool = False) -> str:
+    """DuckDB twin of one band of :func:`_sign_pack` over ``qv``: a
+    CASE term per plane. ``depth_guard`` masks plane p unless p < r,
+    so a band rendered at EMB_LSH_R_MAX planes packs the first r."""
+    guard = "{p} < r AND " if depth_guard else ""
+    return " + ".join(
+        f"(CASE WHEN {guard.format(p=p)}list_dot_product(qv, "
+        f"[{', '.join(str(s) for s in h)}]) >= 0 THEN {1 << p} ELSE 0 END)"
+        for p, h in enumerate(planes)
+    )
+
+
+def _emb_lsh_oracle() -> str:
     """DuckDB twin of the banded signature join, valid at ANY table
     scale: the signature depth r is derived INSIDE the SQL from
     count(*) (the integer _EMB_LSH_ROWS_SQL twin — same discipline
     as the IVF stride CTE), and every band signature is rendered as
     EMB_LSH_R_MAX masked bit terms of which only the first r
     contribute. Nothing about this oracle depends on the import
-    environment, a filesystem path, or an env var (ADVICE r7): a
-    driver checking any scale gets the depth the Spark builder
-    derives there, by construction. Pairs that agree on at least one
-    band are joined and the exact cosine threshold verified."""
-    signs = _band_hyperplane_signs(bands, EMB_LSH_R_MAX)
-    sig_cols = []
-    for b in range(bands):
-        bits = []
-        for p in range(EMB_LSH_R_MAX):
-            lit = "[" + ", ".join(
-                str(s) for s in signs[b * EMB_LSH_R_MAX + p]
-            ) + "]"
-            bits.append(
-                f"(CASE WHEN {p} < r AND list_dot_product(qv, {lit}) >= 0 "
-                f"THEN {1 << p} ELSE 0 END)"
-            )
-        sig_cols.append(" + ".join(bits) + f" AS sig{b}")
-    band_match = " OR ".join(f"a.sig{b} = b.sig{b}" for b in range(bands))
+    environment, a filesystem path, or an env var: a driver checking
+    any scale gets the depth the Spark builder derives there, by
+    construction. Pairs that agree on at least one band are joined
+    and the exact cosine threshold verified."""
+    signs = _hyperplane_signs(EMB_LSH_FAMILY, EMB_LSH_R_MAX)
+    sig_cols = [
+        _oracle_sig(signs[b * EMB_LSH_R_MAX : (b + 1) * EMB_LSH_R_MAX], True)
+        + f" AS sig{b}"
+        for b in range(EMB_LSH_BANDS)
+    ]
+    band_match = " OR ".join(
+        f"a.sig{b} = b.sig{b}" for b in range(EMB_LSH_BANDS)
+    )
     cos = oracle_cosine("list_dot_product(a.qv, b.qv)", "a.sq", "b.sq")
     return f"""
         WITH q AS ({_ORACLE_QUANTIZED}),
@@ -903,9 +950,24 @@ def _emb_lsh_oracle(bands: int) -> str:
     """
 
 
+def _first_band_owner(key: tuple, pdf):
+    """Ownership rule of a (band, sig) bucket: an in-bucket pair is
+    emitted only by the first band on which the two signatures agree
+    (each row carries all its signatures, so the rule needs no extra
+    shuffle or distinct)."""
+    import numpy as np
+
+    S = np.stack(pdf["sigs"].values)
+    return (
+        pdf,
+        np.arange(1, len(pdf) + 1),
+        lambda a, b: (S[a] == S[b]).argmax(axis=1) == key[0],
+    )
+
+
 @register(
     "q_embedding_neardup_lsh",
-    oracle=_emb_lsh_oracle(EMB_LSH_BANDS),
+    oracle=_emb_lsh_oracle(),
     doc="Banded sign-LSH near-duplicate pairs with exact in-bucket verify "
     "(C2 family, the 100 TB-scale candidate generation).",
 )
@@ -917,147 +979,47 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape (B = EMB_LSH_BANDS bands, r bits derived from N):
 
     1. one Arrow pass computes all B·r hyperplane signs per vector
-       (a single (N×dim)·(dim×B·r) integer matmul — dense linear
-       algebra, the measured-faster-than-codegen regime) and packs
-       them into B band signatures;
+       and packs them into B band signatures (:func:`_signatures`);
     2. ``posexplode`` fans each vector to its B (band, signature)
        bucket keys — shuffle volume is B small rows per vector,
        never pairs;
-    3. per bucket, the same exact chunked int64 GEMM as the exact
-       path scores all in-bucket pairs and keeps cos ≥ threshold —
-       precision is exact (verify), only candidate *generation* is
-       approximate;
-    4. a pair colliding in several bands is emitted only by its
-       first matching band (both rows carry their full signature
-       vector, so the rule needs no extra shuffle or distinct).
+    3. per bucket, :func:`_threshold_pairs` scores all in-bucket
+       pairs exactly and keeps cos ≥ threshold — precision is exact
+       (verify), only candidate *generation* is approximate; a pair
+       colliding in several bands is emitted by its first.
 
     Exactness contract: the SQL oracle recomputes the identical
-    signatures from the same sha256-derived literal hyperplanes —
-    the (band, bit)-indexed family, identical at every depth — and
-    derives the identical signature depth r from count(*) inside the
-    SQL (pure integer bit-length arithmetic, the IVF-stride
-    discipline), so Spark and DuckDB agree on the candidate set
-    bit-for-bit AT ANY SCALE and the driver hash-check is
-    deterministic — recall is a *documented property*, not a hidden
-    test flake, and no import-time path/env dependency exists
-    (ADVICE r7).
+    signatures from the same sha256-derived literal hyperplanes and
+    derives the identical depth r from count(*) inside the SQL (pure
+    integer bit-length arithmetic, the IVF-stride discipline), so
+    Spark and DuckDB agree on the candidate set bit-for-bit AT ANY
+    SCALE — recall is a *documented property*, not a hidden test
+    flake.
 
     Recall (sign-LSH: P[plane agrees] = 1 − θ/π): for true near-dups
     (cos ≥ 0.9, θ ≤ 26°) a 4-bit band matches with p⁴ ≈ 0.54 and 16
     bands give recall 1−(1−p⁴)¹⁶ ≈ 99.9998%. At this synthetic
     table's loose 0.45 threshold (θ ≈ 63°, the tail of a continuous
     cosine distribution rather than planted duplicates) per-pair
-    recall is ≈ 95% — stated honestly: a threshold this far from 1
-    is not an LSH-friendly regime, and the exact path is the ground
-    truth there. At 10⁹ rows the derived r ≈ 14 keeps expected
-    bucket size ≤ 64k rows, so per-bucket GEMM work is bounded and
-    total compute is Σ_bucket m² ≪ N².
+    recall is ≈ 95% — a threshold this far from 1 is not an
+    LSH-friendly regime, and the exact path is the ground truth
+    there. At 10⁹ rows the derived r ≈ 14 keeps expected bucket size
+    ≤ 64k rows, so per-bucket GEMM work is bounded and total compute
+    is Σ_bucket m² ≪ N².
     """
-    import numpy as np
-    import pandas as pd
-
-    n_rows = table_row_count(spark, sf_dir, "embeddings")  # footer, no job
-    r = _emb_lsh_rows(n_rows)
-    bands = EMB_LSH_BANDS
-    H = np.array(_band_hyperplane_signs(bands, r), dtype=np.int64)  # (B·r, dim)
-    weights = (1 << np.arange(r)).astype(np.int64)
-    thr = NEARDUP_COS_THRESHOLD
-
-    def _band_sigs(qv):  # pd.Series -> pd.Series (Arrow-batched)
-        V = np.stack(qv.values).astype(np.int64)  # m × dim
-        bits = (V @ H.T >= 0).astype(np.int64)  # m × B·r sign bits
-        sigs = bits.reshape(len(V), bands, r) @ weights  # m × B
-        return pd.Series(list(sigs))
-
-    band_sigs = F.pandas_udf(_band_sigs, "array<long>")
-
-    e = _quantized(spark, sf_dir).withColumn("sigs", band_sigs("qv"))
-    exploded = e.select(
-        "vec_id", "qv", "sq", "sigs",
-        F.posexplode("sigs").alias("band", "sig"),
+    r = _emb_lsh_rows(table_row_count(spark, sf_dir, "embeddings"))
+    e = _quantized(spark, sf_dir).withColumn(
+        "sigs", _signatures(EMB_LSH_FAMILY, r)("qv")
     )
-
-    def bucket_gemm(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        band = key[0]
-        empty = pd.DataFrame({"vec_a": [], "vec_b": [], "cos": []}).astype(
-            {"vec_a": "int64", "vec_b": "int64", "cos": "float64"}
-        )
-        if len(pdf) < 2:
-            return empty
-        V = np.stack(pdf["qv"].values).astype(np.int64)
-        sq = pdf["sq"].to_numpy(dtype=np.float64)
-        ids = pdf["vec_id"].to_numpy()
-        S = np.stack(pdf["sigs"].values)  # m × B
-        outs = []
-        pos = np.arange(len(V))
-        for s in range(0, len(V), GEMM_CHUNK):
-            t = min(s + GEMM_CHUNK, len(V))
-            dots = V[s:t] @ V.T  # exact int64
-            cos = dots.astype(np.float64) / np.sqrt(
-                sq[s:t, None] * sq[None, :]
-            )
-            # positional triangle: each unordered in-bucket pair once
-            mask = (cos >= thr) & (pos[s:t, None] < pos[None, :])
-            ra, rb = np.nonzero(mask)
-            if not len(ra):
-                continue
-            ga, gb = s + ra, rb
-            # emit only in the FIRST band where the pair collides
-            first = (S[ga] == S[gb]).argmax(axis=1)
-            keep = first == band
-            if not keep.any():
-                continue
-            va, vb = ids[ga[keep]], ids[gb[keep]]
-            lo, hi = np.minimum(va, vb), np.maximum(va, vb)
-            outs.append(
-                pd.DataFrame(
-                    {"vec_a": lo, "vec_b": hi, "cos": cos[ra, rb][keep]}
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    found = exploded.groupBy("band", "sig").applyInPandas(
-        bucket_gemm, "vec_a long, vec_b long, cos double"
+    buckets = e.select(
+        "vec_id", "qv", "sq", "sigs", F.posexplode("sigs").alias("band", "sig")
     )
-    return found.select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
+    return _threshold_pairs(
+        buckets, ["band", "sig"], NEARDUP_COS_THRESHOLD, _first_band_owner
+    )
 
 
 # ---------------------------------------------------------------- ANN / LSH
-
-LSH_BITS = 8  # hyperplane count → 2^8 buckets
-
-
-def _ann_signature_udf():
-    """Deterministic random-hyperplane signature of a quantized
-    vector, as one Arrow-batched integer GEMM.
-
-    Hyperplane p's i-th component is ±1 from sha256("ann-lsh:p:i") —
-    the same literal-matrix convention as the banded near-dup LSH
-    (:func:`_hyperplane_signs`), which is what makes the signature
-    recomputable in ANSI SQL: no engine hash function is involved, so
-    the DuckDB oracle derives bit-identical buckets (VERDICT r5 ask
-    #5 — this replaced an xxhash64-derived family that existed only
-    inside Spark). sign_p = ⟨±1 row, v⟩ ≥ 0 on exact int64 dots; the
-    signature packs the LSH_BITS signs into an integer.
-
-    For sign-random-projection LSH, P[sign_p(a) = sign_p(b)] =
-    1 − angle(a,b)/π, so near-identical vectors collide in all bits
-    with high probability.
-    """
-    import numpy as np
-    import pandas as pd
-
-    H = np.array(
-        _hyperplane_signs(1, LSH_BITS, prefix="ann-lsh"), dtype=np.int64
-    )
-    w = (1 << np.arange(LSH_BITS)).astype(np.int64)
-
-    def _sig(qv):  # pd.Series -> pd.Series (Arrow-batched)
-        V = np.stack(qv.values).astype(np.int64)
-        bits = (V @ H.T >= 0).astype(np.int64)
-        return pd.Series(bits @ w)
-
-    return F.pandas_udf(_sig, "long")
 
 
 def _ann_lsh_oracle() -> str:
@@ -1067,15 +1029,7 @@ def _ann_lsh_oracle() -> str:
     bit flip each), score matches with the exact cosine, rank. The
     approximation lives entirely in WHICH buckets are probed — both
     engines derive identical buckets, so the check is deterministic."""
-    signs = _hyperplane_signs(1, LSH_BITS, prefix="ann-lsh")
-    bits = []
-    for p in range(LSH_BITS):
-        lit = "[" + ", ".join(str(s) for s in signs[p]) + "]"
-        bits.append(
-            f"(CASE WHEN list_dot_product(qv, {lit}) >= 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-        )
-    sig = " + ".join(bits)
+    sig = _oracle_sig(_hyperplane_signs(ANN_LSH_FAMILY, LSH_BITS))
     flips = ", ".join(str(f) for f in [0] + [1 << j for j in range(LSH_BITS)])
     cos = oracle_cosine("list_dot_product(p.q_qv, b.qv)", "p.q_sq", "b.sq")
     return f"""
@@ -1128,7 +1082,7 @@ def ann_topk(
     exact path (q_knn_cosine) or IVF-style coarse quantization;
     stated honestly rather than tuned around.
     """
-    e = e.withColumn("bucket", _ann_signature_udf()(F.col("qv")))
+    e = e.withColumn("bucket", _signatures(ANN_LSH_FAMILY, LSH_BITS)("qv")[0])
     probe_exprs = ["bucket"]
     if probe_radius >= 1:
         probe_exprs += [f"bucket ^ {1 << j}" for j in range(LSH_BITS)]
@@ -1156,9 +1110,8 @@ def ann_topk(
     # Approximate in RECALL, deterministic in RESULT: the oracle
     # recomputes the identical signatures from the shared sha256
     # literals, so the probed bucket set — and therefore the output —
-    # is bit-identical across engines (the q_embedding_neardup_lsh
-    # technique, applied to the ANN twin per VERDICT r5 ask #5).
-    # Planted-duplicate recall stays pytest-asserted separately.
+    # is bit-identical across engines. Planted-duplicate recall stays
+    # pytest-asserted separately.
     oracle=_ann_lsh_oracle(),
     doc="Approximate top-k cosine via multi-probe random-hyperplane LSH (C3 scale path).",
 )

@@ -256,11 +256,12 @@ def spread_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df.repartition(par)
 
 
-@lru_cache(maxsize=256)
-def _footer_row_count(path: str) -> int | None:
-    """Sum of footer ``num_rows`` over a parquet file or directory —
-    a driver-side metadata read, zero Spark jobs. None when any
-    footer is unreadable (caller falls back to a Spark count)."""
+def footer_row_count(path: str) -> int | None:
+    """Sum of footer ``num_rows`` over a parquet file or the top-level
+    files of a directory — a driver-side metadata read, zero Spark
+    jobs. None when there is no local file or any footer is unreadable
+    (caller falls back to a Spark count). Uncached: a rewritten path
+    reads its new footers."""
     import glob
 
     import pyarrow.parquet as pq
@@ -278,6 +279,10 @@ def _footer_row_count(path: str) -> int | None:
         return None
 
 
+# source tables are immutable engine inputs: their counts memoize by path
+_source_row_count = lru_cache(maxsize=256)(footer_row_count)
+
+
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Row count of a source table, from parquet footers when local
     (memoized, no job) or a Spark count otherwise.
@@ -292,7 +297,7 @@ def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if "://" not in path:
-        n = _footer_row_count(path)
+        n = _source_row_count(path)
         if n is not None:
             return n
     return load_table(spark, sf_dir, name).count()

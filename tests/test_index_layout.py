@@ -42,6 +42,13 @@ KINDS = {
     "winnow": ("winnow_index", "documents", write_winnow_index, probe_winnow_index),
     "ann": ("ann_index", "embeddings", write_fixture_ann_index, probe_ann_index),
 }
+# kind → (meta key, table) pairs: counts the build records of the
+# tables it wrote
+COUNTED = {
+    "band": [("n_sig_files", "sig_files")],
+    "winnow": [],
+    "ann": [("n_cells", "centroids"), ("n_code_files", "code_files")],
+}
 
 
 @pytest.mark.parametrize(
@@ -206,7 +213,9 @@ def test_slot_staleness_fingerprint_forces_rebuild(
     the same sf_dir: the slot compares the recorded source_rows with
     the source table's footer count (zero jobs) and rebuilds on a
     mismatch instead of serving the stale index. A matching
-    fingerprint must NOT rebuild."""
+    fingerprint must NOT rebuild. The counts the meta records of the
+    written tables equal a Spark count of them, also after a rebuild
+    rewrote the same paths."""
     path = _slot(spark, sf_dir, kind)
     built_at = os.path.getmtime(meta_path(path))
     assert _slot(spark, sf_dir, kind) == path
@@ -215,9 +224,14 @@ def test_slot_staleness_fingerprint_forces_rebuild(
     meta = read_meta(path)
     true_rows = meta["source_rows"]
     meta["source_rows"] = true_rows + 7  # simulate a regenerated fixture
+    for key, _ in COUNTED[kind]:
+        meta[key] = -1
     _rewrite_meta(path, meta)
     assert _slot(spark, sf_dir, kind) == path
-    assert read_meta(path)["source_rows"] == true_rows, "stale slot kept"
+    rebuilt = read_meta(path)
+    assert rebuilt["source_rows"] == true_rows, "stale slot kept"
+    for key, table in COUNTED[kind]:
+        assert rebuilt[key] == spark.read.parquet(os.path.join(path, table)).count() > 0, key
 
 
 @pytest.mark.parametrize("kind", list(KINDS))

@@ -30,14 +30,14 @@ def test_ann_lsh_oracle(spark, sf_dir):
 
 
 def test_neardup_tiling_derives_from_row_count():
-    """The exact path's block count must respect both constraints:
-    a tile side never exceeds NEARDUP_TILE_ROWS rows (the r4
-    memory-grows-with-N finding) and the tile count covers the
-    available cores (the r5 sf1 rehearsal's serial-GEMM finding)."""
+    """The exact path's cell count must respect both constraints: a
+    cell never exceeds FRAGMENT_GROUP_ROWS rows, so task memory stays
+    constant in N, and the tile count covers the available cores, so
+    a mid-size table does not run one serial GEMM."""
     import math
 
     from mapreduceapp_spark.operators.similarity import (
-        NEARDUP_TILE_ROWS,
+        FRAGMENT_GROUP_ROWS,
         _neardup_blocks,
     )
 
@@ -45,9 +45,9 @@ def test_neardup_tiling_derives_from_row_count():
     assert _neardup_blocks(3, 64) == 3
     for n, p in ((500, 8), (20_000, 32), (10**6, 32), (10**9, 1000)):
         nb = _neardup_blocks(n, p)
-        assert -(-n // nb) <= NEARDUP_TILE_ROWS  # memory ceiling
+        assert -(-n // nb) <= FRAGMENT_GROUP_ROWS  # memory ceiling
         assert nb * (nb + 1) // 2 >= p or nb == n  # parallelism floor
-        assert nb >= math.ceil(n / NEARDUP_TILE_ROWS)
+        assert nb >= math.ceil(n / FRAGMENT_GROUP_ROWS)
 
 
 def test_ivf_stride_sqrt_balance_and_cross_engine_parity():
@@ -151,11 +151,12 @@ def test_emb_lsh_plane_family_is_depth_independent():
     depth — the property that lets ONE rendered oracle serve all
     scales (the flat-indexed family broke this)."""
     from mapreduceapp_spark.operators.similarity import (
-        _band_hyperplane_signs,
+        EMB_LSH_FAMILY,
+        _hyperplane_signs,
     )
 
-    shallow = _band_hyperplane_signs(3, 2)
-    deep = _band_hyperplane_signs(3, 5)
+    shallow = _hyperplane_signs(EMB_LSH_FAMILY[:3], 2)
+    deep = _hyperplane_signs(EMB_LSH_FAMILY[:3], 5)
     for b in range(3):
         for p in range(2):
             assert shallow[b * 2 + p] == deep[b * 5 + p], (b, p)
@@ -203,32 +204,22 @@ def test_embedding_neardup_lsh_bucket_bound(spark, sf_dir):
     """The banded fan-out must keep per-(band, signature) bucket sizes
     near N/2^r — the bound that makes per-bucket GEMM work scale.
     With r=4 and random-ish data no bucket should hold more than a
-    small multiple of the expected N/16."""
-    import numpy as np
-    import pandas as pd
+    small multiple of the expected N/16. The buckets are the query's
+    own: its plane family and sign kernel."""
     from pyspark.sql import functions as F
 
     from mapreduceapp_spark.operators.similarity import (
-        EMB_LSH_BANDS,
+        EMB_LSH_FAMILY,
         _emb_lsh_rows,
-        _hyperplane_signs,
         _quantized,
+        _signatures,
     )
 
     e = _quantized(spark, sf_dir)
     n = e.count()
     r = _emb_lsh_rows(n)
-    H = np.array(_hyperplane_signs(EMB_LSH_BANDS, r), dtype=np.int64)
-    weights = (1 << np.arange(r)).astype(np.int64)
-
-    def _sigs(qv):
-        V = np.stack(qv.values).astype(np.int64)
-        bits = (V @ H.T >= 0).astype(np.int64)
-        return pd.Series(list(bits.reshape(len(V), EMB_LSH_BANDS, r) @ weights))
-
-    sigs = F.pandas_udf(_sigs, "array<long>")
     counts = (
-        e.withColumn("sigs", sigs("qv"))
+        e.withColumn("sigs", _signatures(EMB_LSH_FAMILY, r)("qv"))
         .select(F.posexplode("sigs").alias("band", "sig"))
         .groupBy("band", "sig")
         .count()
@@ -236,6 +227,65 @@ def test_embedding_neardup_lsh_bucket_bound(spark, sf_dir):
         .collect()[0]["mx"]
     )
     assert counts <= 6 * max(1, n // 2**r), counts
+
+
+
+def _planted_with_zero_vector(spark, tmp_path) -> str:
+    """An embeddings table of 160 vectors (120 random, 40 near-twins of
+    the first 40) plus one all-zero vector; returns its sf_dir."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.RandomState(5)
+    base = rng.normal(size=(120, 64))
+    twin = base[:40] + rng.normal(scale=0.05, size=(40, 64))
+    vecs = np.concatenate([base, twin, np.zeros((1, 64))]).astype("float32")
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(len(vecs))], pa.int32()),
+        }
+    )
+    pq.write_table(table, f"{tmp_path}/embeddings.parquet")
+    return str(tmp_path)
+
+
+def test_threshold_joins_drop_zero_vector_pairs_like_oracle(spark, tmp_path):
+    """An all-zero vector has no cosine: the threshold join scores its
+    pairs NaN and keeps none of them, as DuckDB's NULL cosine does, in
+    all three queries that share the pair kernel."""
+    from mapreduceapp_spark.plans.registry import get_query
+
+    sf_dir = _planted_with_zero_vector(spark, tmp_path)
+    for name in (
+        "q_embedding_neardup",
+        "q_embedding_neardup_lsh",
+        "q_semantic_prune",
+    ):
+        assert_matches_oracle(spark, name, sf_dir)
+    pairs = get_query("q_embedding_neardup").builder(spark, sf_dir).collect()
+    assert {(i, 120 + i) for i in range(40)} <= {(r.vec_a, r.vec_b) for r in pairs}
+    assert all(160 not in (r.vec_a, r.vec_b) for r in pairs)
+    prune = get_query("q_semantic_prune").builder(spark, sf_dir).collect()
+    assert len(prune) == 161
+    assert [r.pruned for r in prune if r.vec_id == 160] == [0]
+
+
+def test_neardup_rows_are_tiling_invariant(spark, tmp_path, monkeypatch):
+    """The tiling changes the task shape, never the rows: each pair is
+    owned by exactly one tile whatever the cell count."""
+    from mapreduceapp_spark.operators import similarity
+    from mapreduceapp_spark.plans.registry import get_query
+
+    sf_dir = _planted_with_zero_vector(spark, tmp_path)
+    got = {}
+    for nb in (1, 3, 7):
+        monkeypatch.setattr(similarity, "_neardup_blocks", lambda n, p, nb=nb: nb)
+        df = get_query("q_embedding_neardup").builder(spark, sf_dir)
+        got[nb] = sorted(tuple(r) for r in df.collect())
+    assert got[1] and got[1] == got[3] == got[7]
 
 
 def _quantized_vectors(spark, sf_dir):
