@@ -1,76 +1,49 @@
-"""Text column expressions — all JVM-side built-ins, no Python UDFs.
+"""Text primitives as Spark SQL strings, each with its DuckDB renderer.
 
 These are the Spark analogs of the reference sample client's
 per-string map logic (char classification loop,
 ``SampleClient.cpp:34-50``), generalized to word granularity and
 reused across the text-analysis / dedup operator families.
+
+One form per primitive: callers splice the SQL string into
+``selectExpr``/``F.expr`` (one py4j round-trip per projection, not one
+per Column op), and every oracle renders the word tokenizer through
+:func:`oracle_tokens`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-# Word tokenizer: lowercase, split on non-alphanumeric runs. Kept
-# deliberately simple and regex-identical to the DuckDB oracle
-# (regexp_split_to_array) so both engines tokenize byte-identically.
+# Word tokenizer: lowercase, split on non-alphanumeric runs, drop
+# empties. Spark (Java regex over ``lower``) and DuckDB (RE2 over
+# ``lower``) return the same tokens on ASCII, Latin-1, CJK and emoji
+# text; they differ where the two ``lower`` functions differ, e.g.
+# U+0130 'İ' lowers to 'i' + U+0307 in Spark (tokens 'i', 'stanbul'
+# for 'İstanbul') and to 'i' in DuckDB ('istanbul'). Pinned by
+# tests/test_tokenizer_contract.py.
 TOKEN_SPLIT_RE = r"[^a-z0-9]+"
 
 
-def chars(text: Column | str) -> Column:
+def chars_sql(text: str) -> str:
     """Array of single characters of ``text`` (empty strings dropped).
 
     ``split(text, '')`` stays inside whole-stage codegen; the filter
-    guards against engine-specific empty-edge tokens.
-    """
-    c = F.split(F.col(text) if isinstance(text, str) else text, "")
-    return F.filter(c, lambda x: x != F.lit(""))
-
-
-def tokens(text: Column | str) -> Column:
-    """Array of lowercase word tokens (empty tokens dropped)."""
-    t = F.col(text) if isinstance(text, str) else text
-    arr = F.split(F.lower(t), TOKEN_SPLIT_RE)
-    return F.filter(arr, lambda x: x != F.lit(""))
-
-
-def token_count(text: Column | str) -> Column:
-    """Number of word tokens — whitespace/punct-delimited."""
-    return F.size(tokens(text))
-
-
-# SQL-string twins (r18 §4 — one py4j round-trip instead of one per
-# Column op; see functions/vectors.py for the rationale and the
-# schema/value-parity pin in tests/test_sql_forms.py).
-
-
-def chars_sql(text: str) -> str:
-    """SQL twin of :func:`chars`."""
+    guards against engine-specific empty-edge tokens."""
     return f"filter(split({text}, ''), x -> x != '')"
 
 
 def tokens_sql(text: str) -> str:
-    """SQL twin of :func:`tokens`."""
+    """Array of lowercase word tokens (empty tokens dropped)."""
     return f"filter(split(lower({text}), '{TOKEN_SPLIT_RE}'), x -> x != '')"
 
 
 def token_count_sql(text: str) -> str:
-    """SQL twin of :func:`token_count`."""
+    """Number of word tokens of ``text``."""
     return f"size({tokens_sql(text)})"
 
 
-def shingles(text: Column | str, k: int = 5) -> Column:
-    """k-gram character shingles (distinct) of the lowercased text —
-    pure-expression form.
-
-    NOTE: measured at bench scale, this JVM expression is the SLOW
-    path — ``substring(t, i, k)`` restarts its UTF-8 scan per call,
-    O(len²) per document. The dedup operators use the Arrow-batched
-    equivalent (``operators/dedup._doc_shingles``, ~4× faster); this
-    column form remains for small-string/ad-hoc use where plugging
-    into a larger expression tree matters more than throughput.
-    """
-    t = F.lower(F.col(text) if isinstance(text, str) else text)
-    n = F.length(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, k)))
+def oracle_tokens(text: str) -> str:
+    """DuckDB twin of :func:`tokens_sql`: the token list of ``text``."""
+    return (
+        f"list_filter(regexp_split_to_array(lower({text}), "
+        f"'{TOKEN_SPLIT_RE}'), x -> x <> '')"
+    )

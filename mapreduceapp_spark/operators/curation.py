@@ -22,9 +22,14 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceapp_spark.functions.text import (
+    oracle_tokens,
+    token_count_sql,
+    tokens_sql,
+)
 from mapreduceapp_spark.operators.text import BPE_TOKEN_RE
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.sources import spread_table, tables
@@ -33,8 +38,10 @@ from mapreduceapp_spark.sources import spread_table, tables
 TRAIN_CUT, VAL_CUT = 80, 90
 
 
-def hash_bucket(key: Column, buckets: int = 100, salt: str = "") -> Column:
-    """Deterministic cross-engine bucket in [0, buckets) from a key.
+def hash_bucket_sql(key: str, buckets: int = 100, salt: str = "") -> str:
+    """Deterministic cross-engine bucket in [0, buckets) from a key —
+    the one Spark form, a SQL string spliced into ``selectExpr`` or
+    ``F.expr``; :func:`oracle_hash_bucket` is its DuckDB renderer.
 
     sha2-256 of the (salted) key string, then the first three hex
     chars combined via their ascii codes. Both halves are chosen for
@@ -48,16 +55,6 @@ def hash_bucket(key: Column, buckets: int = 100, salt: str = "") -> Column:
     The salt gives independent bucketings (e.g. split assignment vs
     ablation sampling) from the same key.
     """
-    h = F.sha2(F.concat(F.lit(salt), key.cast("string")), 256)
-    code = (
-        F.ascii(F.substring(h, 1, 1)) * 31 + F.ascii(F.substring(h, 2, 1))
-    ) * 31 + F.ascii(F.substring(h, 3, 1))
-    return code % buckets
-
-
-def hash_bucket_sql(key: str, buckets: int = 100, salt: str = "") -> str:
-    """Spark SQL twin of :func:`hash_bucket` (r18 §4) — identical
-    hash, substring positions, char-code arithmetic and modulus."""
     h = f"sha2(concat('{salt}', CAST({key} AS STRING)), 256)"
     return (
         f"((ascii(substring({h}, 1, 1)) * 31"
@@ -67,10 +64,21 @@ def hash_bucket_sql(key: str, buckets: int = 100, salt: str = "") -> str:
 
 
 def oracle_hash_bucket(key: str, buckets: int = 100, salt: str = "") -> str:
+    """DuckDB twin of :func:`hash_bucket_sql`."""
     h = f"sha256(concat('{salt}', CAST({key} AS VARCHAR)))"
     return (
         f"((ascii(({h})[1:1])*31 + ascii(({h})[2:2]))*31 "
         f"+ ascii(({h})[3:3])) % {buckets}"
+    )
+
+
+def _split_sql(bucket: str) -> str:
+    """The train/val/test ``split`` column of a bucket expression, in
+    SQL both engines parse."""
+    return (
+        f"CASE WHEN {bucket} < {TRAIN_CUT} THEN 'train'"
+        f" WHEN {bucket} < {VAL_CUT} THEN 'val'"
+        " ELSE 'test' END AS split"
     )
 
 
@@ -79,9 +87,7 @@ def oracle_hash_bucket(key: str, buckets: int = 100, salt: str = "") -> str:
     oracle=f"""
         SELECT doc_id, lang,
                {oracle_hash_bucket('doc_id')} AS bucket,
-               CASE WHEN {oracle_hash_bucket('doc_id')} < {TRAIN_CUT} THEN 'train'
-                    WHEN {oracle_hash_bucket('doc_id')} < {VAL_CUT} THEN 'val'
-                    ELSE 'test' END AS split,
+               {_split_sql(oracle_hash_bucket('doc_id'))},
                CASE WHEN {oracle_hash_bucket('doc_id', 10, 'ablate:')} = 0
                     THEN 1 ELSE 0 END AS in_ablation
         FROM documents
@@ -102,19 +108,14 @@ def q_sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes nothing at the scan, but downstream operators see a
     consistent ~80% sample forever).
     """
-    t = tables(spark, sf_dir)
-    b = hash_bucket(F.col("doc_id"))
-    return t.documents.select(
+    b = hash_bucket_sql("doc_id")
+    return tables(spark, sf_dir).documents.selectExpr(
         "doc_id",
         "lang",
-        b.alias("bucket"),
-        F.when(b < TRAIN_CUT, "train")
-        .when(b < VAL_CUT, "val")
-        .otherwise("test")
-        .alias("split"),
-        F.when(hash_bucket(F.col("doc_id"), 10, "ablate:") == 0, 1)
-        .otherwise(0)
-        .alias("in_ablation"),
+        f"{b} AS bucket",
+        _split_sql(b),
+        f"CASE WHEN {hash_bucket_sql('doc_id', 10, 'ablate:')} = 0"
+        " THEN 1 ELSE 0 END AS in_ablation",
     )
 
 
@@ -195,18 +196,13 @@ def _pipeline_oracle() -> str:
     # dedup's constants are imported lazily here (not at module top)
     # purely to keep this module's header focused; there is no cycle —
     # dedup never imports curation.
-    from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE
     from mapreduceapp_spark.operators.dedup import ORACLE_JACCARD_PAIR_CTES
 
-    bucket = oracle_hash_bucket("doc_id")
     return f"""
         WITH {ORACLE_JACCARD_PAIR_CTES},
         flt AS MATERIALIZED (
             SELECT doc_id, lang, ntok FROM (
-                SELECT doc_id, lang,
-                       len(list_filter(
-                           regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                           x -> x <> '')) AS ntok
+                SELECT doc_id, lang, len({oracle_tokens('text')}) AS ntok
                 FROM documents
             ) WHERE ntok >= {MIN_TOKENS}
         ),
@@ -218,10 +214,7 @@ def _pipeline_oracle() -> str:
                 WHERE p.doc_b = f.doc_id
             )
         )
-        SELECT lang,
-               CASE WHEN {bucket} < {TRAIN_CUT} THEN 'train'
-                    WHEN {bucket} < {VAL_CUT} THEN 'val'
-                    ELSE 'test' END AS split,
+        SELECT lang, {_split_sql(oracle_hash_bucket('doc_id'))},
                count(*) AS n_docs,
                CAST(sum(ntok) AS BIGINT) AS total_tokens
         FROM kept
@@ -242,7 +235,7 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition, not re-implementation: near-dup pairs come from the
     LSH detection path (``q_minhash_neardup`` — proven equal to exact
-    Jaccard output), the split from :func:`hash_bucket`, token counts
+    Jaccard output), the split from :func:`hash_bucket_sql`, token counts
     from the same word tokenizer the quality UDF uses. The oracle
     recomputes every stage in SQL, so the *composition* is
     hash-checked too, not just the pieces.
@@ -255,7 +248,6 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH detection it composes — everything this query *adds* is scan
     or broadcast work.
     """
-    from mapreduceapp_spark.functions.text import token_count_sql
     from mapreduceapp_spark.operators.dedup import minhash_pairs
 
     t = tables(spark, sf_dir)
@@ -275,14 +267,8 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = filtered.join(F.broadcast(drop), "doc_id", "left_anti")
 
-    b = hash_bucket_sql("doc_id")
     return (
-        kept.selectExpr(
-            "*",
-            f"CASE WHEN {b} < {TRAIN_CUT} THEN 'train'"
-            f" WHEN {b} < {VAL_CUT} THEN 'val'"
-            " ELSE 'test' END AS split",
-        )
+        kept.selectExpr("*", _split_sql(hash_bucket_sql("doc_id")))
         .groupBy("lang", "split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -454,15 +440,9 @@ CHUNK_STRIDE = 48  # overlap = CHUNK_SIZE - CHUNK_STRIDE = 16 tokens
 
 
 def _chunk_oracle() -> str:
-    from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE
-
     return f"""
         WITH toks AS (
-            SELECT doc_id,
-                   list_filter(
-                       regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                       x -> x <> '') AS w
-            FROM documents
+            SELECT doc_id, {oracle_tokens('text')} AS w FROM documents
         )
         SELECT doc_id,
                s // {CHUNK_STRIDE} AS chunk_idx,
@@ -494,10 +474,10 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(ntok/stride) rows per doc, each carrying only its own
     window's text.
     """
-    from mapreduceapp_spark.functions.text import tokens
-
     d = spread_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", tokens("text").alias("w")).filter(F.size("w") > 0)
+    toks = d.selectExpr("doc_id", f"{tokens_sql('text')} AS w").filter(
+        F.size("w") > 0
+    )
     starts = F.sequence(
         F.lit(0), F.size("w") - 1, F.lit(CHUNK_STRIDE)
     )

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from mapreduceapp_spark.functions.text import oracle_tokens, tokens_sql
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.plans.staging import slot, stage
 from mapreduceapp_spark.sources import spread_table, tables
@@ -1466,10 +1467,7 @@ def _simhash(doc_tokens: DataFrame) -> DataFrame:
     # tests/test_dedup.py.
     oracle=f"""
         WITH toks AS MATERIALIZED (
-            SELECT doc_id,
-                   unnest(list_filter(
-                       regexp_split_to_array(lower(text), '[^a-z0-9]+'),
-                       x -> x <> '')) AS tok
+            SELECT doc_id, unnest({oracle_tokens('text')}) AS tok
             FROM documents
         ),
         th AS (
@@ -1540,7 +1538,6 @@ def _simhash_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation once PER SIDE (0 ReusedExchange in the executed plan —
     the band projections differ per side). The table is N rows of
     (doc_id, int64), and the corpus-sized vote aggregation runs once."""
-    from mapreduceapp_spark.functions.text import tokens_sql
 
     def fingerprints() -> DataFrame:
         # one row per token OCCURRENCE with weight 1: summing ±1 votes

@@ -21,22 +21,18 @@ Shared determinism rules (see memory of functions/numeric.py):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE, tokens_sql
+from mapreduceapp_spark.functions.text import oracle_tokens, tokens_sql
 from mapreduceapp_spark.operators.curation import oracle_hash_bucket
+from mapreduceapp_spark.operators.text import PROBE_MOD
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.plans.staging import slot
 from mapreduceapp_spark.sources import spread_table, tables
 
 # ---------------------------------------------------------------- helpers
 
-# Every 7th doc plays the held-out benchmark; everything else is the
-# training corpus to be decontaminated against it. (Chosen so the
-# overlap set is non-empty at every test SF — an empty result would
-# make the oracle hash check vacuous.)
-PROBE_MOD = 7
 CONTAM_NGRAM = 8  # word 8-grams: standard decontamination unit
 
 BM25_TERMS = ("spark", "join", "window", "vector")
@@ -44,16 +40,18 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 10
 
-MIX_BUCKETS = 100  # house hash_bucket granularity (±1% rate resolution)
+MIX_BUCKETS = 100  # house hash_bucket_sql granularity (±1% rate resolution)
 MIX_BUDGET_NUM, MIX_BUDGET_DEN = 1, 2  # keep ~half the corpus tokens
 
 REP_NGRAM = 3
 REP_MAX_PCT = 5  # flag docs with >5% repeated 3-grams
 
 
-def word_grams(words: Column, n: int) -> Column:
-    """Space-joined word n-grams of an array<string> column (empty
-    when the doc has fewer than n words). Pure codegen, no UDF.
+def word_grams_sql(w: str, n: int) -> str:
+    """Space-joined word n-grams of the array<string> column ``w``
+    (empty when the doc has fewer than n words) — the one Spark form,
+    a SQL string spliced into ``selectExpr``; :func:`_oracle_grams`
+    is its DuckDB renderer. Pure codegen, no UDF.
 
     Two codegen strategies, picked by n (both measured at sf0.1):
 
@@ -72,38 +70,8 @@ def word_grams(words: Column, n: int) -> Column:
     Both ``zip_with`` and ``arrays_zip`` pad to the LONGEST input
     with nulls (``concat_ws`` skips them), so the tail of the zipped
     array carries partial grams — correctness relies on the final
-    ``slice(grams, 1, size − n + 1)`` below trimming that tail to
-    exactly the len−n+1 full grams."""
-    if n >= 4:
-        shifted = [
-            F.slice(words, k + 1, F.greatest(F.size(words) - k, F.lit(0)))
-            for k in range(n)
-        ]
-        grams = F.transform(
-            F.arrays_zip(*shifted),
-            lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]),
-        )
-    else:
-        grams = words
-        for k in range(1, n):
-            # words shifted left by k, zipped onto the growing prefix
-            # gram. zip_with pads the shorter side with nulls
-            # (concat_ws skips them), so the tail carries partial
-            # grams — sliced off below.
-            shifted = F.slice(words, k + 1, F.greatest(F.size(words) - k, F.lit(0)))
-            grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(
-        F.size(words) >= n, F.slice(grams, 1, F.size(words) - n + 1)
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def word_grams_sql(w: str, n: int) -> str:
-    """SQL-string twin of :func:`word_grams` over a named array
-    column ``w`` (r18 §4 — one py4j round-trip instead of one per
-    Column op/lambda; schema+value parity pinned by
-    tests/test_sql_forms.py::test_word_grams_sql_matches_column_form).
-    Same two codegen strategies, same null-padding + tail-slice
-    semantics."""
+    ``slice(grams, 1, size − n + 1)`` trimming that tail to exactly
+    the len−n+1 full grams."""
     if n >= 4:
         shifted = [
             f"slice({w}, {k + 1}, greatest(size({w}) - {k}, 0))"
@@ -126,15 +94,12 @@ def word_grams_sql(w: str, n: int) -> str:
     )
 
 
-def _oracle_words(src: str = "documents") -> str:
-    return (
-        f"SELECT doc_id, list_filter(regexp_split_to_array(lower(text), "
-        f"'{TOKEN_SPLIT_RE}'), x -> x <> '') AS w FROM {src}"
-    )
+# (doc_id, w) token lists: the ``toks`` CTE the gram oracles read
+_ORACLE_WORDS = f"SELECT doc_id, {oracle_tokens('text')} AS w FROM documents"
 
 
 def _oracle_grams(n: int) -> str:
-    """DuckDB twin of :func:`word_grams` + unnest, over CTE ``toks``."""
+    """DuckDB twin of :func:`word_grams_sql` + unnest, over CTE ``toks``."""
     return f"""
         SELECT doc_id,
                unnest(list_transform(
@@ -150,7 +115,7 @@ def _oracle_grams(n: int) -> str:
 @register(
     "q_contamination",
     oracle=f"""
-        WITH toks AS MATERIALIZED ({_oracle_words()}),
+        WITH toks AS MATERIALIZED ({_ORACLE_WORDS}),
         g AS MATERIALIZED ({_oracle_grams(CONTAM_NGRAM)}),
         probe AS (SELECT DISTINCT gram FROM g WHERE doc_id % {PROBE_MOD} = 0),
         corpus AS (SELECT DISTINCT doc_id, gram FROM g
@@ -231,7 +196,7 @@ NGRAM_TOPK = 20
 @register(
     "q_ngram_counts",
     oracle=f"""
-        WITH toks AS MATERIALIZED ({_oracle_words()}),
+        WITH toks AS MATERIALIZED ({_ORACLE_WORDS}),
         g2 AS ({_oracle_grams(2)}),
         g3 AS ({_oracle_grams(3)}),
         counts AS (
@@ -361,7 +326,7 @@ def duplicate_passage_pairs(
 @register(
     "q_duplicate_passages",
     oracle=f"""
-        WITH toks AS MATERIALIZED ({_oracle_words()}),
+        WITH toks AS MATERIALIZED ({_ORACLE_WORDS}),
         g AS (
             SELECT doc_id, gh FROM (
                 SELECT DISTINCT doc_id, sha256(gram) AS gh
@@ -413,7 +378,7 @@ def q_duplicate_passages(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_bm25",
     oracle=f"""
-        WITH toks AS MATERIALIZED ({_oracle_words()}),
+        WITH toks AS MATERIALIZED ({_ORACLE_WORDS}),
         tf AS MATERIALIZED (
             SELECT doc_id, term, count(*) AS tf
             FROM (SELECT doc_id, unnest(w) AS term FROM toks)
@@ -545,8 +510,7 @@ def _mix_weight_sql(src: str) -> str:
     oracle=f"""
         WITH doc_tok AS MATERIALIZED (
             SELECT doc_id, source,
-                   len(list_filter(regexp_split_to_array(lower(text),
-                       '{TOKEN_SPLIT_RE}'), x -> x <> '')) AS ntok
+                   len({oracle_tokens('text')}) AS ntok
             FROM documents
         ),
         per_src AS MATERIALIZED (
@@ -637,7 +601,7 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_repetition_filter",
     oracle=f"""
-        WITH toks AS MATERIALIZED ({_oracle_words()}),
+        WITH toks AS MATERIALIZED ({_ORACLE_WORDS}),
         g AS (
             SELECT doc_id,
                    list_transform(
@@ -817,12 +781,9 @@ UNIGRAM_KEEP_MICRO = -3_450_000
 @register(
     "q_unigram_logprob",
     oracle=f"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}')) AS w
-            FROM documents
+        WITH t2 AS (
+            SELECT doc_id, unnest({oracle_tokens('text')}) AS w FROM documents
         ),
-        t2 AS (SELECT doc_id, w FROM toks WHERE w <> ''),
         counts AS (SELECT w, count(*) AS cnt FROM t2 GROUP BY w),
         tot AS (SELECT sum(cnt) AS total FROM counts),
         lp AS (
@@ -920,7 +881,7 @@ ZIPF_MICRO = 1_000_000
 @register(
     "q_zipf_fit",
     oracle=f"""
-        WITH toks AS ({_oracle_words()}),
+        WITH toks AS ({_ORACLE_WORDS}),
         t2 AS (SELECT doc_id, unnest(w) AS w FROM toks),
         counts AS (SELECT w, count(*) AS cnt FROM t2 GROUP BY w),
         topk AS (

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE
+from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE, oracle_tokens
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.sources import spread_table
 
@@ -125,9 +125,7 @@ STOPWORDS = ("the", "a", "of", "is", "and")
     "q_udf_quality",
     oracle=f"""
         WITH toks AS (
-            SELECT doc_id, n_chars,
-                   list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                               x -> x <> '') AS tk
+            SELECT doc_id, n_chars, {oracle_tokens('text')} AS tk
             FROM documents
         )
         SELECT doc_id,

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE, tokens
+from mapreduceapp_spark.functions.text import oracle_tokens, tokens_sql
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.sources import tables
 
@@ -33,12 +33,7 @@ from mapreduceapp_spark.sources import tables
                list_contains(toks, 'spark') AS has_spark,
                toks[1] AS first_token,
                array_to_string(list_sort(list_distinct(toks)), ' ') AS sorted_vocab
-        FROM (
-            SELECT doc_id,
-                   list_filter(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                               x -> x <> '') AS toks
-            FROM documents
-        )
+        FROM (SELECT doc_id, {oracle_tokens('text')} AS toks FROM documents)
     """,
     doc="Array higher-order functions over tokenized text (B19).",
 )
@@ -48,7 +43,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python). The reference could only do this inside opaque C++
     client values; here the optimizer sees through every step."""
     t = tables(spark, sf_dir)
-    toks = tokens("text")
+    toks = F.expr(tokens_sql("text"))
     return t.documents.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),

@@ -22,7 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceapp_spark.functions.text import TOKEN_SPLIT_RE, chars, tokens
+from mapreduceapp_spark.functions.text import (
+    chars_sql,
+    oracle_tokens,
+    token_count_sql,
+    tokens_sql,
+)
 from mapreduceapp_spark.plans.registry import register
 from mapreduceapp_spark.sources import spread_table, tables
 
@@ -39,9 +44,8 @@ from mapreduceapp_spark.sources import spread_table, tables
 )
 def q_charcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        spread_table(spark, sf_dir, "documents").select(
-            F.explode(chars("text")).alias("c")
-        )
+        spread_table(spark, sf_dir, "documents")
+        .selectExpr(f"explode({chars_sql('text')}) AS c")
         .groupBy("c")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -51,37 +55,32 @@ def q_charcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_wordcount",
     oracle=f"""
         SELECT w, count(*) AS cnt
-        FROM (
-            SELECT unnest(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}')) AS w
-            FROM documents
-        )
-        WHERE w <> ''
+        FROM (SELECT unnest({oracle_tokens('text')}) AS w FROM documents)
         GROUP BY w
     """,
     doc="Canonical MapReduce word count at word granularity (B2).",
 )
 def q_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        spread_table(spark, sf_dir, "documents").select(
-            F.explode(tokens("text")).alias("w")
-        )
+        spread_table(spark, sf_dir, "documents")
+        .selectExpr(f"explode({tokens_sql('text')}) AS w")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
+# Sorted distinct postings per token: q_inverted_index's ground truth,
+# registered by q_inverted_index_salted too.
+INVERTED_INDEX_ORACLE = f"""
+        SELECT w, array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS postings
+        FROM (SELECT doc_id, unnest({oracle_tokens('text')}) AS w FROM documents)
+        GROUP BY w
+    """
+
+
 @register(
     "q_inverted_index",
-    oracle=f"""
-        SELECT w, array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS postings
-        FROM (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}')) AS w
-            FROM documents
-        )
-        WHERE w <> ''
-        GROUP BY w
-    """,
+    oracle=INVERTED_INDEX_ORACLE,
     doc="Inverted index: token -> sorted distinct posting list (B21).",
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,9 +99,8 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     postings = F.sort_array(F.collect_set("doc_id"))
     return (
-        spread_table(spark, sf_dir, "documents").select(
-            F.col("doc_id"), F.explode(tokens("text")).alias("w")
-        )
+        spread_table(spark, sf_dir, "documents")
+        .selectExpr("doc_id", f"explode({tokens_sql('text')}) AS w")
         .groupBy("w")
         .agg(
             F.array_join(
@@ -114,19 +112,9 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_inverted_index_salted",
-    # same result as q_inverted_index — sorted distinct postings per
-    # token — so it shares that oracle's shape verbatim; only the
-    # Spark-side aggregation strategy differs.
-    oracle=f"""
-        SELECT w, array_to_string(list_sort(list(DISTINCT doc_id)), ',') AS postings
-        FROM (
-            SELECT doc_id,
-                   unnest(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}')) AS w
-            FROM documents
-        )
-        WHERE w <> ''
-        GROUP BY w
-    """,
+    # same result as q_inverted_index; only the Spark-side aggregation
+    # strategy differs
+    oracle=INVERTED_INDEX_ORACLE,
     doc="Inverted index via two-phase salted aggregation — the skew-safe "
     "build for Zipf token distributions (B21 scale variant).",
 )
@@ -158,8 +146,8 @@ def q_inverted_index_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mapreduceapp_spark.functions.skew import salted_agg
 
-    toks = spread_table(spark, sf_dir, "documents").select(
-        F.col("doc_id"), F.explode(tokens("text")).alias("w")
+    toks = spread_table(spark, sf_dir, "documents").selectExpr(
+        "doc_id", f"explode({tokens_sql('text')}) AS w"
     )
     merged = salted_agg(
         toks,
@@ -205,12 +193,8 @@ _SEG_HASH_RANGE = 4_294_967_296  # 2^32
     "q_inverted_index_segmented",
     oracle=f"""
         WITH toks AS (
-            SELECT DISTINCT doc_id, w FROM (
-                SELECT doc_id,
-                       unnest(regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}')) AS w
-                FROM documents
-            )
-            WHERE w <> ''
+            SELECT DISTINCT doc_id, unnest({oracle_tokens('text')}) AS w
+            FROM documents
         ),
         df AS (SELECT w, count(*) AS df FROM toks GROUP BY w),
         seg AS (
@@ -259,9 +243,8 @@ def q_inverted_index_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     involved); ids are non-negative by the data contract.
     """
     toks = (
-        spread_table(spark, sf_dir, "documents").select(
-            F.col("doc_id"), F.explode(tokens("text")).alias("w")
-        )
+        spread_table(spark, sf_dir, "documents")
+        .selectExpr("doc_id", f"explode({tokens_sql('text')}) AS w")
         .distinct()
     )
     df_tab = toks.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
@@ -297,9 +280,7 @@ def q_inverted_index_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         SELECT lang,
                count(*) AS n_docs,
-               CAST(sum(len(list_filter(
-                   regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                   x -> x <> ''))) AS BIGINT) AS total_tokens,
+               CAST(sum(len({oracle_tokens('text')})) AS BIGINT) AS total_tokens,
                round(avg(length(text)), 4) AS avg_chars,
                max(length(text)) AS max_chars
         FROM documents
@@ -316,10 +297,8 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (partition, lang).
     """
     return (
-        spread_table(spark, sf_dir, "documents").select(
-            "lang",
-            F.size(tokens("text")).alias("ntok"),
-            F.length("text").alias("nchar"),
+        spread_table(spark, sf_dir, "documents").selectExpr(
+            "lang", f"{token_count_sql('text')} AS ntok", "length(text) AS nchar"
         )
         .groupBy("lang")
         .agg(
@@ -392,7 +371,7 @@ BPE_TOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]+"
     oracle=f"""
         SELECT doc_id,
                len(regexp_extract_all(lower(text), '{BPE_TOKEN_RE}')) AS n_bpe_tokens,
-               len(list_filter(regexp_split_to_array(lower(text), '\\s+'),
+               len(list_filter(string_split_regex(lower(text), '\\s+'),
                                x -> x <> '')) AS n_ws_tokens,
                len(regexp_extract_all(lower(text), '[0-9]+')) AS n_number_runs,
                len(regexp_extract_all(lower(text), '[^a-z0-9\\s]+')) AS n_punct_runs
@@ -447,7 +426,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 math in any engine (overflow semantics never triggered).
     """
     fp = F.aggregate(
-        chars("text"),
+        F.expr(chars_sql("text")),
         F.lit(0).cast("long"),
         lambda acc, c: (acc * FP_BASE + F.ascii(c)) % FP_MOD,
     )
@@ -503,7 +482,7 @@ def winnow_fingerprints(docs: DataFrame, n_docs: int | None = None) -> DataFrame
     test_winnow_fps_gemm_equals_codegen."""
     if n_docs is not None and n_docs >= WINNOW_GEMM_MIN_DOCS:
         return _winnow_fps_gemm(docs)
-    codes = F.transform(chars("text"), lambda c: F.ascii(c).cast("long"))
+    codes = F.transform(F.expr(chars_sql("text")), lambda c: F.ascii(c).cast("long"))
     d = docs.select("doc_id", codes.alias("codes"))
     n_grams = F.size(F.col("codes")) - (WINNOW_K - 1)
     gram_hash = lambda i: F.aggregate(  # noqa: E731
@@ -753,17 +732,14 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
         WITH scored AS (
             SELECT doc_id, lang AS actual_lang,
                    {scores}
-            FROM (SELECT doc_id, lang,
-                         list_filter(regexp_split_to_array(lower(text), '{re}'),
-                                     x -> x <> '') AS tk
-                  FROM documents)
+            FROM (SELECT doc_id, lang, {tk} AS tk FROM documents)
         )
         SELECT doc_id, actual_lang,
                CASE {argmax} END AS pred_lang,
                greatest({score_cols}) AS best_score
         FROM scored
     """.format(
-        re=TOKEN_SPLIT_RE,
+        tk=oracle_tokens("text"),
         scores=", ".join(
             f"len(list_filter(tk, x -> x IN {m!r})) AS s_{lang}"
             for lang, m in sorted(LANG_MARKERS.items())
@@ -786,8 +762,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL CASE chain and the Spark ``when`` chain agree exactly).
     Map-only — no shuffle; at 100 TB this runs at scan speed.
     """
-    from mapreduceapp_spark.functions.text import tokens_sql
-
     langs = sorted(LANG_MARKERS)
     scores = [
         f"size(filter(tk, x -> x IN ("
@@ -822,10 +796,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_vocab_stats",
     oracle=f"""
         WITH toks AS (
-            SELECT lang,
-                   unnest(list_filter(
-                       regexp_split_to_array(lower(text), '{TOKEN_SPLIT_RE}'),
-                       x -> x <> '')) AS tok
+            SELECT lang, unnest({oracle_tokens('text')}) AS tok
             FROM documents
         ),
         tc AS (
@@ -861,7 +832,7 @@ def q_vocab_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = spread_table(spark, sf_dir, "documents")
     tc = (
-        d.select("lang", F.explode(tokens("text")).alias("tok"))
+        d.selectExpr("lang", f"explode({tokens_sql('text')}) AS tok")
         .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -942,6 +913,14 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Decontamination probe split, shared with llmprep's q_contamination:
+# every 7th doc plays the held-out benchmark, everything else is the
+# training corpus checked against it. (Chosen so the overlap set is
+# non-empty at every test SF — an empty result would make the oracle
+# hash check vacuous.)
+PROBE_MOD = 7
+
+
 # Winnowing-based decontamination: the q_contamination split applied
 # at the SUBSTRING level. Token 8-gram overlap (q_contamination)
 # misses leaks that tokenize differently (whitespace/punctuation
@@ -949,7 +928,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared run >= WINNOW_K + WINNOW_W - 1 chars regardless of token
 # boundaries, at ~2/(W+1) of the gram-index storage. Same CTE shape
 # as q_winnowing's oracle (shared constants keep the two in sync).
-_WINNOW_PROBE_MOD = 7  # the q_contamination probe-split convention
 
 
 @register(
@@ -983,9 +961,9 @@ _WINNOW_PROBE_MOD = 7  # the q_contamination probe-split convention
             ) WHERE wn = {WINNOW_W}
         ),
         probe AS (SELECT DISTINCT fp FROM mins
-                  WHERE doc_id % {_WINNOW_PROBE_MOD} = 0),
+                  WHERE doc_id % {PROBE_MOD} = 0),
         corpus AS (SELECT doc_id, fp FROM mins
-                   WHERE doc_id % {_WINNOW_PROBE_MOD} <> 0)
+                   WHERE doc_id % {PROBE_MOD} <> 0)
         SELECT doc_id, count(*) AS n_fp_overlap
         FROM corpus JOIN probe USING (fp)
         GROUP BY doc_id
@@ -1029,12 +1007,12 @@ def q_winnowing_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "winnow_probe_fps",
         sf_dir,
-        lambda: idx.filter(F.col("doc_id") % _WINNOW_PROBE_MOD == 0)
+        lambda: idx.filter(F.col("doc_id") % PROBE_MOD == 0)
         .select("fp")
         .distinct(),
     )
     corpus = probe_winnow_index(spark, idx_path, probe).filter(
-        F.col("doc_id") % _WINNOW_PROBE_MOD != 0
+        F.col("doc_id") % PROBE_MOD != 0
     )
     # the broadcast is size-GATED, not assumed: the stage write's own
     # footers measure the probe fingerprint set for free, so a

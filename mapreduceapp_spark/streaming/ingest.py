@@ -4,7 +4,7 @@ scrub → exactly-once TxLog appends.
 The batch curation surface (operators/curation.py) runs nightly; this
 runner is its continuous form — the crawl topic lands directly in a
 queryable, time-travelable table. Composition, not re-implementation:
-the quality floor is the SAME ``token_count``/``MIN_TOKENS`` the
+the quality floor is the SAME ``token_count_sql``/``MIN_TOKENS`` the
 batch pipeline applies, the scrub the SAME regex constants
 ``q_pii_scrub`` oracles, and the sink is
 ``txlog_foreach_batch_append`` (sources/txlog.py), whose (app,
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduceapp_spark.functions.text import token_count
+from mapreduceapp_spark.functions.text import token_count_sql
 from mapreduceapp_spark.operators.curation import (
     MIN_TOKENS,
     PII_EMAIL_RE,
@@ -55,7 +55,7 @@ def curate_documents(docs: DataFrame) -> DataFrame:
         PII_PHONE_TOKEN,
     )
     return (
-        docs.withColumn("ntok", token_count("text"))
+        docs.withColumn("ntok", F.expr(token_count_sql("text")))
         .filter(F.col("ntok") >= MIN_TOKENS)
         .select("doc_id", "lang", "source", scrubbed.alias("text"), "ntok")
     )

@@ -38,6 +38,8 @@ interpretable):
   threshold join's OUTPUT quadratically instead of scaling its input.
 
 Usage: python scripts/sf1_rehearsal.py [n_replicas] [query ...]
+With no query list it times DEFAULT_QUERIES and runs the candidate-growth
+and dedup-index regime sweeps; with one it times only those queries.
 Prints one JSON line; writes sf1_rehearsal_r{N}.json at the repo root.
 """
 
@@ -433,8 +435,11 @@ def main() -> None:
 
     out = {"sf": f"{n_replicas}x sf0.1 synthetic", "queries": timings}
     out["walls"] = walls  # per-query {cold_wall, best_wall} — ask r13 #5
-    out["candidates"] = candidate_growth(spark)
-    out["dedup_index_regimes"] = dedup_index_regimes(spark)
+    if not sys.argv[2:]:
+        # the two scaling sweeps belong to the default rehearsal; a
+        # named query list times only those queries
+        out["candidates"] = candidate_growth(spark)
+        out["dedup_index_regimes"] = dedup_index_regimes(spark)
     out["cpu_probes"] = probes  # per-query sampled {n,min,mean,max}
     out["cpu_probe_sec"] = _cpu_probe()
     if retried:

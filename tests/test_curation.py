@@ -83,7 +83,7 @@ def test_curation_pipeline_conserves_docs(spark, sf_dir):
     the composition)."""
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.text import token_count
+    from mapreduceapp_spark.functions.text import token_count_sql
     from mapreduceapp_spark.operators.curation import MIN_TOKENS
     from mapreduceapp_spark.operators.dedup import q_minhash_neardup
     from mapreduceapp_spark.plans.registry import get_query
@@ -93,7 +93,7 @@ def test_curation_pipeline_conserves_docs(spark, sf_dir):
     n_out = sum(r["n_docs"] for r in out)
 
     docs = tables(spark, sf_dir).documents.select(
-        "doc_id", token_count("text").alias("ntok")
+        "doc_id", F.expr(token_count_sql("text")).alias("ntok")
     )
     survivors = {
         r["doc_id"] for r in docs.filter(F.col("ntok") >= MIN_TOKENS).collect()
@@ -196,16 +196,15 @@ def test_chunk_documents_covers_and_overlaps(spark, sf_dir):
     doc overlap by exactly CHUNK_SIZE - CHUNK_STRIDE tokens except
     possibly the last (truncated) one."""
     from mapreduceapp_spark.operators.curation import CHUNK_SIZE, CHUNK_STRIDE
-    from mapreduceapp_spark.functions.text import tokens
+    from mapreduceapp_spark.functions.text import token_count_sql
     from mapreduceapp_spark.plans.registry import get_query
     from mapreduceapp_spark.sources import tables
-    from pyspark.sql import functions as F
 
     rows = get_query("q_chunk_documents").builder(spark, sf_dir).collect()
     ntok = {
         r.doc_id: r.n
         for r in tables(spark, sf_dir)
-        .documents.select("doc_id", F.size(tokens("text")).alias("n"))
+        .documents.selectExpr("doc_id", f"{token_count_sql('text')} AS n")
         .collect()
     }
     by_doc: dict[int, list] = {}

@@ -77,13 +77,13 @@ def test_simhash_banded_join_equals_brute_force(spark, sf_dir):
         _simhash,
         q_simhash_neardup,
     )
-    from mapreduceapp_spark.functions.text import tokens
+    from mapreduceapp_spark.functions.text import tokens_sql
     from mapreduceapp_spark.sources import tables
     from pyspark.sql import functions as F
 
     d = tables(spark, sf_dir).documents
     doc_tokens = (
-        d.select("doc_id", F.explode(tokens("text")).alias("tok"))
+        d.selectExpr("doc_id", f"explode({tokens_sql('text')}) AS tok")
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )

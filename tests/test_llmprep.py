@@ -79,7 +79,7 @@ def test_domain_mix_budget(spark, sf_dir):
     aggressively than lower-weight ones of similar size."""
     from mapreduceapp_spark.plans.registry import get_query
     from mapreduceapp_spark.sources import tables
-    from mapreduceapp_spark.functions.text import tokens as tok
+    from mapreduceapp_spark.functions.text import token_count_sql
     import pyspark.sql.functions as F
 
     kept = {
@@ -89,7 +89,9 @@ def test_domain_mix_budget(spark, sf_dir):
     d = tables(spark, sf_dir).documents
     totals = {
         r["source"]: r["t"]
-        for r in d.groupBy("source").agg(F.sum(F.size(tok("text"))).alias("t")).collect()
+        for r in d.groupBy("source")
+        .agg(F.sum(F.expr(token_count_sql("text"))).alias("t"))
+        .collect()
     }
     total_tok = sum(totals.values())
     kept_tok = sum(r["tok_kept"] for r in kept.values())
@@ -235,20 +237,20 @@ def test_passage_df_cap_headroom(spark, sf_dir):
     """PASSAGE_DF_CAP must never bind at oracle/bench scales (so the
     hash check stays exact): assert ≥4× headroom on the measured max
     window df, the LSH_BUCKET_CAP discipline."""
-    from mapreduceapp_spark.functions.text import tokens
+    from mapreduceapp_spark.functions.text import tokens_sql
     from mapreduceapp_spark.operators.llmprep import (
         PASSAGE_DF_CAP,
         PASSAGE_NGRAM,
-        word_grams,
+        word_grams_sql,
     )
     from mapreduceapp_spark.sources import tables
     from pyspark.sql import functions as F
 
     max_df = (
         tables(spark, sf_dir)
-        .documents.select(
-            "doc_id",
-            F.explode(word_grams(tokens("text"), PASSAGE_NGRAM)).alias("g"),
+        .documents.selectExpr("doc_id", f"{tokens_sql('text')} AS w")
+        .selectExpr(
+            "doc_id", f"explode({word_grams_sql('w', PASSAGE_NGRAM)}) AS g"
         )
         .distinct()
         .groupBy("g")

@@ -82,12 +82,12 @@ def test_charcount_matches_python_oracle(spark, texts):
     on arbitrary unicode strings, against collections.Counter."""
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.text import chars
+    from mapreduceapp_spark.functions.text import chars_sql
 
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     got = {
         r["c"]: r["cnt"]
-        for r in df.select(F.explode(chars("text")).alias("c"))
+        for r in df.selectExpr(f"explode({chars_sql('text')}) AS c")
         .groupBy("c")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .collect()
@@ -103,12 +103,12 @@ def test_fingerprint_matches_python_oracle(spark, s):
     plain Python over codepoints."""
     from pyspark.sql import functions as F
 
-    from mapreduceapp_spark.functions.text import chars
+    from mapreduceapp_spark.functions.text import chars_sql
     from mapreduceapp_spark.operators.text import FP_BASE, FP_MOD
 
     df = spark.createDataFrame([(s,)], "text string")
     fp_col = F.aggregate(
-        chars("text"),
+        F.expr(chars_sql("text")),
         F.lit(0).cast("long"),
         lambda acc, c: (acc * FP_BASE + F.ascii(c)) % FP_MOD,
     )
@@ -127,16 +127,14 @@ def test_hash_bucket_law(spark, ids):
     pure in the key (same key ⇒ same bucket, twice), and salted
     bucketings differ from unsalted ones somewhere on any non-trivial
     id set (independence smoke)."""
-    from pyspark.sql import functions as F
-
-    from mapreduceapp_spark.operators.curation import hash_bucket
+    from mapreduceapp_spark.operators.curation import hash_bucket_sql
 
     df = spark.createDataFrame([(i,) for i in ids], "k long")
-    out = df.select(
+    out = df.selectExpr(
         "k",
-        hash_bucket(F.col("k")).alias("b1"),
-        hash_bucket(F.col("k")).alias("b2"),
-        hash_bucket(F.col("k"), salt="s:").alias("bs"),
+        f"{hash_bucket_sql('k')} AS b1",
+        f"{hash_bucket_sql('k')} AS b2",
+        f"{hash_bucket_sql('k', salt='s:')} AS bs",
     ).collect()
     for r in out:
         assert 0 <= r["b1"] < 100
@@ -189,16 +187,15 @@ def test_pack_bins_monotone_law(spark, toks):
 )
 @SETTINGS
 def test_word_grams_strategies_agree(spark, words, n):
-    """word_grams picks one of two codegen strategies by n (zip_with
-    chain vs arrays_zip single pass); both must equal the Python
+    """word_grams_sql picks one of two codegen strategies by n
+    (zip_with chain for n <= 3, arrays_zip single pass for n >= 4;
+    n is drawn on both sides); both must equal the Python
     sliding-window definition on arbitrary token arrays — guarding
     the dual-strategy split at its semantic boundary."""
-    from pyspark.sql import functions as F
-
-    from mapreduceapp_spark.operators.llmprep import word_grams
+    from mapreduceapp_spark.operators.llmprep import word_grams_sql
 
     df = spark.createDataFrame([(words,)], "w array<string>")
-    got = df.select(word_grams(F.col("w"), n).alias("g")).first()["g"]
+    got = df.selectExpr(f"{word_grams_sql('w', n)} AS g").first()["g"]
     want = [
         " ".join(words[i : i + n]) for i in range(len(words) - n + 1)
     ] if len(words) >= n else []

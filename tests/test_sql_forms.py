@@ -1,10 +1,11 @@
-"""r18 §4 rewrite guard: the SQL-string expression forms that replaced
-the hot Column-API constructions (functions/vectors.py SQL twins,
-_aniso_from, _opq_permute, _l2_normalize, band_key_array) must stay
-schema- AND value-identical to the Column forms they replaced. The
-Column originals are reconstructed verbatim here so a future edit to
-either side that breaks parity fails loudly instead of silently
-shifting an oracle hash.
+"""Rewrite guard: the SQL-string expression forms that replaced the
+hot Column-API constructions (functions/vectors.py SQL forms,
+_aniso_from, _opq_permute, _l2_normalize, band_key_array,
+word_grams_sql, hash_bucket_sql) must stay schema- AND value-identical
+to the Column forms they replaced. The Column originals are
+reconstructed verbatim here so a future edit to either side that
+breaks parity fails loudly instead of silently shifting an oracle
+hash.
 """
 
 from __future__ import annotations
@@ -61,6 +62,34 @@ def pq_sub_dist(vec, m):
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
+
+
+def word_grams(words, n):
+    if n >= 4:
+        shifted = [
+            F.slice(words, k + 1, F.greatest(F.size(words) - k, F.lit(0)))
+            for k in range(n)
+        ]
+        grams = F.transform(
+            F.arrays_zip(*shifted),
+            lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]),
+        )
+    else:
+        grams = words
+        for k in range(1, n):
+            shifted = F.slice(words, k + 1, F.greatest(F.size(words) - k, F.lit(0)))
+            grams = F.zip_with(grams, shifted, lambda a, b: F.concat_ws(" ", a, b))
+    return F.when(
+        F.size(words) >= n, F.slice(grams, 1, F.size(words) - n + 1)
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def hash_bucket(key, buckets=100, salt=""):
+    h = F.sha2(F.concat(F.lit(salt), key.cast("string")), 256)
+    code = (
+        F.ascii(F.substring(h, 1, 1)) * 31 + F.ascii(F.substring(h, 2, 1))
+    ) * 31 + F.ascii(F.substring(h, 3, 1))
+    return code % buckets
 
 
 def _rows(df):
@@ -204,10 +233,7 @@ def test_band_key_sql_form_matches_column_form(spark, sf_dir):
 
 def test_word_grams_sql_matches_column_form(spark):
     from mapreduceapp_spark.functions.text import tokens_sql
-    from mapreduceapp_spark.operators.llmprep import (
-        word_grams,
-        word_grams_sql,
-    )
+    from mapreduceapp_spark.operators.llmprep import word_grams_sql
 
     df = spark.createDataFrame(
         [("a b c d e f g h i j",), ("x y",), ("",), ("one",)],
@@ -222,10 +248,7 @@ def test_word_grams_sql_matches_column_form(spark):
 
 
 def test_hash_bucket_sql_matches_column_form(spark, sf_dir):
-    from mapreduceapp_spark.operators.curation import (
-        hash_bucket,
-        hash_bucket_sql,
-    )
+    from mapreduceapp_spark.operators.curation import hash_bucket_sql
 
     d = tables(spark, sf_dir).documents.limit(200)
     old = d.select(
