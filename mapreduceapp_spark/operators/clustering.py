@@ -73,20 +73,6 @@ def _km_stride(n_rows: int) -> int:
     return max(KM_MIN_STRIDE, int(math.floor(math.sqrt(n_rows))))
 
 
-def _oracle_fold_dist(x: str, mean_num: str, cnt: str) -> str:
-    """Σ_i (x_i − s_i/c)² folded in index order (DuckDB twin of the
-    Spark ``aggregate(zip_with(...))`` fold)."""
-    term = (
-        f"(({x})[i]::DOUBLE - ({mean_num})[i]::DOUBLE / ({cnt}))"
-        f" * (({x})[i]::DOUBLE - ({mean_num})[i]::DOUBLE / ({cnt}))"
-    )
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(generate_series(1, {EMB_DIM}), i -> {term})), "
-        f"(a, b) -> a + b)"
-    )
-
-
 # Shared oracle CTE chain ending at a2(vec_id, cid) — the two-round
 # assignment. Reused by q_kmeans (membership stats) and
 # q_semantic_prune (within-cluster dedup).
@@ -100,6 +86,7 @@ ORACLE_ASSIGN_CTES = f"""
         q AS MATERIALIZED (
             SELECT vec_id, {oracle_quantize('embedding')} AS x
             FROM embeddings
+            WHERE embedding IS NOT NULL
         ),
         qs AS MATERIALIZED (
             SELECT vec_id, x,
@@ -143,11 +130,12 @@ ORACLE_ASSIGN_CTES = f"""
             GROUP BY msum.cid, cnt.c
         ),
         d2 AS (
-            SELECT a1.vec_id, m1.cid,
-                   row_number() OVER (PARTITION BY a1.vec_id
-                                      ORDER BY {_oracle_fold_dist('a1.x', 'm1.sx', 'm1.c')},
-                                               m1.cid) AS rn
-            FROM a1 CROSS JOIN m1
+            SELECT v.vec_id, c.cid,
+                   row_number() OVER (PARTITION BY v.vec_id
+                                      ORDER BY {RATIONAL_L2.duck.format(a='v', b='c')},
+                                               c.cid) AS rn
+            FROM (SELECT vec_id, x AS qv FROM a1) v
+            CROSS JOIN (SELECT cid, sx AS qv, c AS sq FROM m1) c
         ),
         a2 AS MATERIALIZED (
             SELECT vec_id, cid FROM d2 WHERE rn = 1
@@ -223,7 +211,8 @@ def kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n = table_row_count(spark, sf_dir, "embeddings")
     stride = _km_stride(n)
-    e = tables(spark, sf_dir).embeddings
+    # a NULL embedding is not a vector: dropped here as in the oracle
+    e = tables(spark, sf_dir).embeddings.filter("embedding IS NOT NULL")
     qs = e.selectExpr(
         "vec_id", f"{quantize_sql('embedding')} AS x"
     ).selectExpr("*", f"{sq_norm_sql('x')} AS sq")

@@ -23,7 +23,8 @@ it. Properties:
 - zero CacheManager involvement — other queries' plans are untouched;
 - bounded footprint — each (query, name) stages to a deterministic
   path with ``overwrite``, so re-invocations reuse the slot instead
-  of stacking; the root is removed at interpreter exit;
+  of stacking, and a named :func:`slot` keeps one path per (name,
+  key) across processes; the root is removed at interpreter exit;
 - cluster story: point ``SPARK_GRAFT_STAGING_DIR`` at durable shared
   storage (HDFS/object store) and staged tables survive executor
   loss without lineage recompute — strictly stronger than
@@ -37,6 +38,7 @@ scale-aware analog of its phase-output vectors.
 from __future__ import annotations
 
 import atexit
+import hashlib
 import os
 import shutil
 import sys
@@ -82,7 +84,7 @@ def staging_root() -> str:
     return _STAGING_ROOT
 
 
-def stage(df: DataFrame, name: str) -> DataFrame:
+def stage(df: DataFrame, name: str, key: str | None = None) -> DataFrame:
     """Materialize ``df`` to staged parquet and return a scan over it.
 
     The write is an eager Spark job (snappy parquet, the engine's
@@ -109,14 +111,18 @@ def stage(df: DataFrame, name: str) -> DataFrame:
     (observed: a two-sf process returning sf0.001 pairs for an sf0.01
     query). With per-plan paths, data identity always flows through
     the path, so equal downstream hashes imply equal upstream data —
-    inductively, through any depth of stage() composition.
+    inductively, through any depth of stage() composition. A named
+    :func:`slot` passes its ``key`` instead, and (name, key) names the
+    path whatever the producer plan hashes to.
     """
     plan_hash = df._jdf.queryExecution().analyzed().semanticHash()
-    path = os.path.join(
-        staging_root(), f"{name}_{plan_hash & 0xFFFFFFFFFFFFFFFF:016x}"
+    tag = (
+        f"{plan_hash & 0xFFFFFFFFFFFFFFFF:016x}"
+        if key is None
+        else "k" + hashlib.sha256(key.encode()).hexdigest()[:16]
     )
-    key = (name, plan_hash)
-    cached = _STAGED_PLANS.get(key)
+    path = os.path.join(staging_root(), f"{name}_{tag}")
+    cached = _STAGED_PLANS.get((name, plan_hash))
     # existence re-check is local-fs only; for a remote staging root
     # ("hdfs://...", "s3a://...") the process-local map alone decides
     # — it is only populated after a successful write.
@@ -139,7 +145,7 @@ def stage(df: DataFrame, name: str) -> DataFrame:
     df.write.mode("overwrite").parquet(path)
     scan = df.sparkSession.read.schema(df.schema).parquet(path)
     scan._mrapp_staged_path = path  # enables staged_row_count()
-    _STAGED_PLANS[key] = scan
+    _STAGED_PLANS[(name, plan_hash)] = scan
     return scan
 
 
@@ -161,9 +167,11 @@ def slot(spark, name: str, key: str, make_df) -> DataFrame:
     engine's NAMED per-corpus slots (one producer function per name,
     parameterized by sf_dir only) the (name, sf_dir) pair IS the plan
     identity, so the producer is deferred behind a thunk and never
-    constructed on a hit. The result is the same stage() scan object
-    the plan-hash path would return — data identity still flows
-    through the hash-embedding slot path on first use.
+    constructed on a hit. The slot's path is derived from (name, key)
+    too, not from the producer's plan hash, which differs between
+    processes for some producers (the Arrow UDF plans): under a
+    persistent ``SPARK_GRAFT_STAGING_DIR`` a new process overwrites
+    the slot's one directory instead of adding another.
 
     CONTRACT: ``key`` must capture every input that changes the
     producer's plan (for the engine's per-corpus slots: the sf_dir).
@@ -184,7 +192,7 @@ def slot(spark, name: str, key: str, make_df) -> DataFrame:
             if os.environ.get("SPARK_GRAFT_STAGE_VERBOSE"):
                 print(f"[stage] slot hit {name}", file=sys.stderr)
             return hit
-    scan = stage(make_df(), name)
+    scan = stage(make_df(), name, key)
     _SLOT_MEMO[k] = scan
     return scan
 

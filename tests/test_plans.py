@@ -181,6 +181,32 @@ def test_stage_is_idempotent_per_plan(spark, sf_dir, tmp_path, monkeypatch):
     assert out.count() == nat.count()  # first slot unharmed
 
 
+def test_named_slot_path_is_its_name_and_key(spark, tmp_path, monkeypatch):
+    """A named slot's directory is derived from its (name, key)
+    identity, not from the producer's plan hash: two producer plans
+    under one key, each staged from a fresh root as a new process
+    would, land in the same directory name, so a persistent staging
+    root keeps one directory per slot."""
+    import os
+
+    from mapreduceapp_spark.plans import staging
+
+    producers = (
+        lambda: spark.range(5),
+        lambda: spark.range(7).selectExpr("id * 2 AS id"),
+    )
+    dirs = []
+    for i, make_df in enumerate(producers):
+        root = tmp_path / f"process{i}"
+        monkeypatch.setattr(staging, "_STAGING_ROOT", str(root))
+        monkeypatch.setattr(staging, "_STAGED_PLANS", {})
+        monkeypatch.setattr(staging, "_SLOT_MEMO", {})
+        scan = staging.slot(spark, "named_slot", "corpus-key", make_df)
+        assert scan.count() == make_df().count()
+        dirs.append(sorted(os.listdir(root)))
+    assert dirs[0] == dirs[1] and len(dirs[0]) == 1, dirs
+
+
 def test_no_query_plans_a_cartesian_product(spark, sf_dir, tmp_path, monkeypatch):
     """Global anti-pattern gate over the ENTIRE registered surface:
     no query may plan a CartesianProduct, and BroadcastNestedLoopJoin
@@ -207,12 +233,8 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir, tmp_path, monkeypatch
     bnlj_ok = {
         "q_knn_cosine",      # plan-level budget-guard join
         "q_training_order",  # global count broadcast
-        "q_ann_ivf",         # corpus stats broadcast
         "q_bm25",            # idf/length stats broadcast
         "q_domain_mix",      # token budget broadcast
-        "q_knn_classify",    # consumes the q_knn_cosine plan (guard join)
-        "q_ivf_recall",      # consumes q_knn_cosine + q_ann_ivf plans
-        "q_lsh_recall",      # consumes q_knn_cosine + q_ann_lsh plans
         "q_unigram_logprob", # 1-row total-token-count broadcast
         "q_temperature_resample",  # 1-row (w_total, n_total) stats broadcast
         "q_tpch_q22",        # 1-row (cnt, tot) balance-average broadcast
@@ -221,28 +243,15 @@ def test_no_query_plans_a_cartesian_product(spark, sf_dir, tmp_path, monkeypatch
         "q_copurchase_triangles",  # three 1-row global counts combined
         "q_quantile_rollup",  # 1-row (lo, width) domain broadcast
         "q_knn_l2",           # plan-level budget-guard join (knn twin)
-        "q_pq_ann",           # ≤2048-row centroid-slice broadcast
-        "q_pq_rerank_recall", # consumes q_pq_ann + q_knn_l2 plans
-        # (q_pq_recall_normalized retired from the registry in r14,
-        # q_pq_recall in r15 — their entries left with them)
-        "q_ivfpq_recall",     # centroid-slice broadcast + guard join
-        "q_ivfpq_residual_recall",  # same class, residual lineage
-        # aniso fixture twins (r12): same bounded guard/centroid/stats
-        # classes as the non-aniso names above — fresh-session plans
-        # carry 1/3/5/1 BNLJs respectively (adjudicated VERDICT r12)
-        "q_pq_recall_aniso",            # guard join (q_pq_recall twin)
-        "q_ivfpq_recall_aniso",         # centroid-slice broadcast + guard
-        "q_ivfpq_residual_recall_aniso",  # residual lineage, 5 bounded BNLJs
-        "q_pq_recall_normalized_aniso",  # normalized lineage, guard join
-        "q_opq_recall_aniso",  # guard join (permuted q_pq_recall_aniso twin)
-        # r14: residual lineage over the OPQ-permuted source — same 5
-        # bounded BNLJs as q_ivfpq_residual_recall_aniso (the
-        # permutation is a map-side projection, no new join classes)
-        "q_opq_residual_recall_aniso",
-        # r15: the persisted-index probe of that same lineage — the
-        # corpus side becomes pruned reads, but the query-side guard
-        # join, dtab crossJoin and exact-slot classes are unchanged
-        "q_ann_index_probe",
+        # the ≤2048-row codebook-slice crossJoin of an ADC distance
+        # table that is not staged (the residual rows stage theirs)
+        "q_pq_ann",
+        "q_pq_rerank_recall",
+        "q_ivfpq_recall",
+        "q_pq_recall_aniso",
+        "q_ivfpq_recall_aniso",
+        "q_pq_recall_normalized_aniso",
+        "q_opq_recall_aniso",
     }
     for name, builder in all_queries().items():
         if name in skip:

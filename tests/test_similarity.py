@@ -304,7 +304,12 @@ def test_ann_lsh_recall_on_planted_duplicates(spark, tmp_path):
     scanning a small fraction of buckets."""
     import numpy as np
 
-    from mapreduceapp_spark.operators.similarity import ann_topk, _quantized
+    from mapreduceapp_spark.operators.similarity import (
+        ANN_LSH,
+        _quantized,
+        adc_corpus,
+        adc_topk,
+    )
 
     rng = np.random.RandomState(7)
     base = rng.normal(size=(200, 64)).astype("float32")
@@ -320,8 +325,9 @@ def test_ann_lsh_recall_on_planted_duplicates(spark, tmp_path):
     sf_dir = str(tmp_path)
     df.write.parquet(f"{sf_dir}/embeddings.parquet")
 
-    out = ann_topk(
-        _quantized(spark, sf_dir), query_pred="vec_id < 200", k=5
+    e = _quantized(spark, sf_dir)
+    out = adc_topk(
+        e.filter("vec_id < 200"), adc_corpus(e, 400, ANN_LSH), k=5
     ).collect()
     found = {
         r["query_id"]
@@ -336,10 +342,16 @@ def test_ann_lsh_returns_true_cosines_and_valid_ranks(spark, sf_dir):
     recall), but every returned (pair, cos, rank) must be internally
     exact: the cosine equals the true cosine, and ranks are dense
     from 1 within each query."""
-    from mapreduceapp_spark.plans.registry import get_query
+    from mapreduceapp_spark.operators.similarity import (
+        ANN_LSH,
+        _quantized,
+        adc_search,
+    )
+    from mapreduceapp_spark.sources.parquet import table_row_count
 
     vecs = _quantized_vectors(spark, sf_dir)
-    out = get_query("q_ann_lsh").builder(spark, sf_dir).collect()
+    n = table_row_count(spark, sf_dir, "embeddings")
+    out = adc_search(_quantized(spark, sf_dir), n, ANN_LSH).collect()
     assert len(out) > 0
     by_query: dict[int, list[int]] = {}
     for r in out:
@@ -360,47 +372,61 @@ def test_ann_ivf_oracle(spark, sf_dir):
 
 def test_ann_ivf_full_probe_equals_exact_knn(spark, sf_dir):
     """With nprobe = C (probe every inverted list) IVF degenerates to
-    exact brute-force search — output must equal q_knn_cosine row for
-    row. This pins the assignment/probe/search plumbing to the exact
-    baseline; the default-nprobe approximation is then *only* about
-    which lists get scanned."""
+    exact brute-force search — under either metric the exact-encoder
+    search must equal knn_topk row for row. This pins the
+    assignment/probe/search plumbing to the exact baseline; the
+    default-nprobe approximation is then *only* about which lists get
+    scanned."""
     from mapreduceapp_spark.operators.similarity import (
+        COSINE,
+        KNN_QUERY_PRED,
+        L2,
+        AdcSpec,
         _centroids,
         _ivf_stride,
         _quantized,
-        ann_ivf,
+        adc_corpus,
+        adc_topk,
+        knn_topk,
     )
-    from mapreduceapp_spark.plans.registry import get_query
     from mapreduceapp_spark.sources.parquet import table_row_count
 
-    stride = _ivf_stride(table_row_count(spark, sf_dir, "embeddings"))
+    n = table_row_count(spark, sf_dir, "embeddings")
     e = _quantized(spark, sf_dir)
-    n_cents = _centroids(e, stride).count()
-    full = ann_ivf(e, stride, nprobe=n_cents).collect()
-    exact = get_query("q_knn_cosine").builder(spark, sf_dir).collect()
-    assert sorted(map(tuple, full), key=lambda t: (t[0], t[2])) == sorted(
-        map(tuple, exact), key=lambda t: (t[0], t[2])
-    )
-    assert len(full) == len(exact) > 0
+    n_cents = _centroids(e, _ivf_stride(n)).count()
+    for metric in (COSINE, L2):
+        corpus = adc_corpus(e, n, AdcSpec("ivf", metric, "exact"))
+        full = adc_topk(e.filter(KNN_QUERY_PRED), corpus, nprobe=n_cents).collect()
+        exact = knn_topk(e, metric, "full_probe_law", n_rows=n).collect()
+        assert sorted(map(tuple, full), key=lambda t: (t[0], t[2])) == sorted(
+            map(tuple, exact), key=lambda t: (t[0], t[2])
+        ), metric.key
+        assert len(full) == len(exact) > 0
 
 
 def test_ann_ivf_scans_a_fraction(spark, sf_dir):
     """Default-nprobe IVF must actually prune: candidate rows scored
     per query ≤ nprobe lists' worth of vectors, not the full table."""
     from mapreduceapp_spark.operators.similarity import (
+        ANN_IVF,
         IVF_NPROBE,
+        KNN_QUERY_PRED,
         _centroids,
         _ivf_stride,
         _quantized,
-        ann_ivf,
+        adc_corpus,
+        adc_topk,
     )
     from mapreduceapp_spark.sources.parquet import table_row_count
 
-    stride = _ivf_stride(table_row_count(spark, sf_dir, "embeddings"))
+    n_rows = table_row_count(spark, sf_dir, "embeddings")
     e = _quantized(spark, sf_dir)
     n = e.count()
-    c = _centroids(e, stride).count()
-    out = ann_ivf(e, stride, k=n).collect()  # k=n => every scored candidate returned
+    c = _centroids(e, _ivf_stride(n_rows)).count()
+    # k=n => every scored candidate returned
+    out = adc_topk(
+        e.filter(KNN_QUERY_PRED), adc_corpus(e, n_rows, ANN_IVF), k=n
+    ).collect()
     by_query: dict[int, int] = {}
     for r in out:
         by_query[r["query_id"]] = by_query.get(r["query_id"], 0) + 1
@@ -1344,3 +1370,41 @@ def test_adc_family_pinned_results(spark, sf_dir, name):
     rows = get_query(name).builder(spark, sf_dir).collect()
     col = "adc" if name == "q_pq_ann" else "n_hit"
     assert (len(rows), sum(r[col] for r in rows)) == _ADC_FAMILY_SF0001[name]
+
+
+# Cold Spark jobs of each query the search spec builds, at sf0.001 from
+# a fresh staging root: staged slot writes, broadcasts and the collect.
+# A change to the composers that adds a job fails here.
+_SPEC_COLD_JOBS = {
+    "q_ann_ivf": 6,
+    "q_ann_lsh": 3,
+    "q_pq_ann": 10,
+    "q_ivf_recall": 14,
+    "q_lsh_recall": 11,
+    "q_pq_rerank_recall": 21,
+    "q_ivfpq_recall": 24,
+    "q_ivfpq_residual_recall": 27,
+    "q_pq_recall_aniso": 18,
+    "q_pq_recall_normalized_aniso": 18,
+    "q_ivfpq_recall_aniso": 24,
+    "q_ivfpq_residual_recall_aniso": 27,
+    "q_opq_recall_aniso": 18,
+    "q_opq_residual_recall_aniso": 27,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SPEC_COLD_JOBS))
+def test_spec_queries_cold_job_count(spark, sf_dir, tmp_path, monkeypatch, name):
+    from mapreduceapp_spark.plans import staging
+    from mapreduceapp_spark.plans.registry import get_query
+    from tests.conftest import jobs_run
+
+    if not sf_dir.rstrip("/").endswith("sf0.001"):
+        pytest.skip("pins are recorded at sf0.001")
+    monkeypatch.setattr(staging, "_STAGING_ROOT", str(tmp_path / "cold"))
+    monkeypatch.setattr(staging, "_STAGED_PLANS", {})
+    monkeypatch.setattr(staging, "_SLOT_MEMO", {})
+    build = get_query(name).builder
+    assert jobs_run(spark, lambda: build(spark, sf_dir).collect()) == (
+        _SPEC_COLD_JOBS[name]
+    )

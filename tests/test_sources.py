@@ -234,8 +234,8 @@ def test_stage_slots_match_pinned_manifest(spark, sf_dir, monkeypatch):
     recorded: dict[str, dict[str, str]] = {}
     orig = staging.stage
 
-    def recording_stage(df, name):
-        scan = orig(df, name)
+    def recording_stage(df, name, key=None):
+        scan = orig(df, name, key)
         recorded[name] = {
             f.name: f.dataType.simpleString() for f in scan.schema.fields
         }
